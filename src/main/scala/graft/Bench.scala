@@ -1,11 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import SparkEntry.registry
 
-/** Benchmark main: times the headline queries at SPARK_GRAFT_SF_DIR and
-  * prints one JSON line (driver contract). Each query is fully materialized
+/** Benchmark main: times the headline queries (the registry's timed
+  * entries, [[SparkEntry.registry]]) at SPARK_GRAFT_SF_DIR and prints one
+  * JSON line (driver contract). Each query is fully materialized
   * via the noop sink ([[Bench.materialize]]) after a shared session
   * warm-up. The same line is also written to BENCH_LAST.json so the
   * result survives log truncation.
@@ -13,333 +14,6 @@ import org.apache.spark.sql.functions._
   * Failed queries are reported as null (never as their short elapsed time)
   * and excluded from the total, with an "errors" list naming them. */
 object Bench {
-  private val headline = Seq(
-    "q1_pricing", "q3_shipping", "q5_local", "q_window_running", "q_topk_parts",
-    "q17_small_qty", "q7_volume_shipping", "q13_custdist",
-    "q21_waiting_suppliers", "q8_market_share", "q9_profit_nation", "q_cube",
-    "ev_sliding_counts", "qa_orphans",
-    "ev_dedup_first", "ev_rate_limit", "ev_sessionize", "ev_enrich_join", "ev_zscore_alert",
-    "ev_asof_join", "ev_counts_salted", "ev_quantiles_exact", "ev_bloom_join", "ev_hll_rollup",
-    "ev_range_join", "ev_histogram", "ev_session_window", "ev_top_paths",
-    "ev_inactive_users", "ev_moving_avg", "ev_type_cooccur", "doc_top_bigrams",
-    "doc_dedup_exact", "doc_dedup_minhash", "doc_dedup_simhash",
-    "doc_ngram_jaccard", "doc_ngram_auto",
-    "doc_token_count", "doc_quality", "doc_tfidf_top", "doc_sample",
-    "doc_entropy", "doc_pii_scrub", "doc_strat_sample", "doc_bpe_pairs",
-    "doc_shard_assign", "doc_vocab", "doc_dedup_incr", "doc_neardup_incr",
-    "doc_pack", "emb_quantize", "doc_mixture", "doc_epoch", "doc_chunk",
-    "doc_len_deciles", "doc_curate", "doc_para_dedup", "doc_token_budget",
-    "doc_unigram_ll", "emb_project", "doc_source_stats",
-    // doc_bpe_train_fast left the headline in r12 (VERDICT r11 #3): the
-    // production-merge-count trainer now runs once into the cached C53d
-    // store and doc_bpe_store benches the SERVING path; the sequential
-    // 20-merge reference trainer stays measured
-    "doc_bpe_train", "doc_dup_spans", "doc_quality_model",
-    "doc_dup_spans_incr", "doc_quality_incr",
-    "emb_cosine_topk", "emb_neardup_pairs", "emb_ivf_topk", "emb_lsh_pairs",
-    "emb_lsh_auto",
-    "emb_ivf_query", "emb_ivf_q", "emb_ivfpq", "emb_pq_query", "emb_hard_negatives", "emb_clusters",
-    // round-8 additions
-    "emb_mips_topk", "emb_mips_ivf", "emb_semdedup",
-    "doc_dsir", "doc_ppl_buckets", "doc_mixture_temp",
-    "emb_knn_graph_ivf", "emb_prototypes", "emb_d4", "ev_pattern",
-    "emb_label_prop", "doc_gopher_rules", "doc_c4_clean", "doc_rep_fractions",
-    "ev_dropout", "ev_sequence",
-    // round-9 additions
-    "ev_markov", "ev_decay_counts", "doc_fineweb_rules", "doc_bigram_ll",
-    "emb_pca", "doc_span_corrupt", "emb_ivf_ingest",
-    "doc_bm25", "emb_pagerank", "emb_ivf_delete", "qa_constraints",
-    "ev_orc_roundtrip", "ev_bursts", "doc_bm25_store", "ev_hll_sliding",
-    "ev_hourly_profile", "ev_stickiness", "ev_mad_alert", "ev_forecast",
-    "ev_wow_change", "ev_l28", "ev_gap_stats", "ev_silence", "ev_trending",
-    "ev_rollup_store", "ev_cusum", "ev_attribution", "ev_attribution_linear",
-    "ev_scd2_join", "ev_rfm", "ev_survival", "ev_experiment",
-    "ev_concentration", "ev_gini", "ev_new_returning", "ev_cohort_ltv",
-    "ev_ttc", "ev_dow_anomaly", "ev_bounded_retention", "ev_slo_burn",
-    "emb_drift", "ev_session_features", "doc_drift", "ev_funnel_latency",
-    "ev_value_trend", "ev_funnel_stages", "ev_bounce_rate",
-    "ev_purchase_cadence", "ev_streaks", "doc_dup_rate",
-    "doc_lang_confusion", "ev_audience_overlap", "ev_growth",
-    "doc_compress_ratio", "ev_retention_triangle",
-    "ev_bitmap_daily", "ev_bitmap_rollup", "ev_bitmap_sliding",
-    "ev_bitmap_overlap", "ev_bitmap_store",
-    "doc_kn_ll", "doc_fertility", "doc_containment",
-    "emb_hamming_topk", "emb_mmr",
-    // round-10 additions
-    "doc_containment_auto", "doc_quality_auc", "doc_vocab_coverage",
-    "emb_trunc_audit", "emb_ood", "doc_quality_calibration", "qa_key_skew",
-    "ev_user_ll", "doc_quality_quantiles", "ev_concurrency",
-    "doc_boilerplate", "doc_source_overlap", "doc_novelty",
-    // round-11 additions
-    "ev_cuped", "doc_qlm", "doc_hybrid_rrf", "doc_zipf", "doc_heaps",
-    "ev_power", "ev_changepoint",
-    "ev_msprt", "doc_rank_tau", "doc_weighted_sample", "qa_snapshot_diff",
-    "ev_heavy_hitters", "ev_hw_forecast",
-    // doc_unigram_encode trained per call (2.9 s of re-proving training
-    // every rep); as of r12 the serving path doc_unigram_store benches
-    // from the cached store (the BPE/wordpiece protocol) and the trainer
-    // stays measured once
-    "doc_unigram_train", "doc_unigram_store",
-    "qa_reconcile", "doc_metric_corr", "doc_readability", "doc_pmi",
-    "ev_forecast_backtest", "ev_its", "doc_heldout_ppl", "ev_retention_fit",
-    "ev_hh_store", "ev_experiment_segments",
-    "ev_bitmap_forget", "doc_minhash_recall", "doc_filter_agreement",
-    // round-12 additions. The tokenizer-TRAINING and image-DECODE paths
-    // (doc_tok_compare, doc_wordpiece, mm_phash_pairs) were benched through
-    // r9 and are dropped from the headline as of r10: their determinism is
-    // spec-pinned and their store/serving twins below are what a deployment
-    // re-runs (VERDICT r9 #1b — ~17 s/rep of re-proving training, ~100 s of
-    // scale10 wall). Re-measure on demand with SPARK_GRAFT_ONLY.
-    "mm_phash_store", "doc_tok_compare_store",
-    "ev_seasonal_decompose", "qa_benford",
-    "doc_cdc_dedup", "ev_quantile_sketch",
-    "ev_seasonal_strength", "ev_acf",
-    "ev_quantile_store", "doc_wordpiece_store", "doc_cdc_store", "qa_psi",
-    "ev_seasonal_anomaly", "ev_pacf", "emb_range_query", "emb_range_ivf", "doc_bloom_store", "qa_benford_mad", "ev_acf_bands", "doc_cdc_stats",
-    // round-13 additions (triangles bench the IVF-blocked scale path;
-    // the brute form is the oracle base, quadratic by construction)
-    "ev_ccf", "ev_mean_shift", "qa_psi_calendar", "qa_chi2", "qa_ks",
-    "ev_theta_overlap", "ev_theta_rollup", "doc_cbloom_store",
-    "emb_triangles_ivf", "ev_assoc_rules", "ev_user_entropy", "ev_ewma",
-    "ev_tail_index", "doc_lexical_diversity", "ev_stationary",
-    "ev_absorption", "doc_rouge_pairs",
-    // round-14 additions (r11 session): the decontam family, the CDC
-    // lifecycle, and the LSH recall floor (itself an exact-enumeration
-    // instrument — cheap at gate SF, measured so a recall-gate cost
-    // regression is visible)
-    "doc_decontam_report", "doc_decontam_exact", "doc_decontam_keep",
-    "doc_cdc_forget", "emb_lsh_recall",
-    // round-15 additions (r12 session): the band-cap recall sweep (exact-
-    // enumeration instrument like emb_lsh_recall — benched so its cost is
-    // visible, skipped at scale10 as documented-quadratic) and the C53d
-    // BPE store serving path
-    "emb_lsh_band_curve", "doc_bpe_store",
-    "qa_k_anonymity", "emb_centroid_quality", "emb_mmr_select",
-  )
-
-  /** Bench overrides for entries whose `queries` shape exists only for the
-    * correctness harness: emb_project's gate entry posexplodes the
-    * projection to scalar rows (pandas can't sort an array column), which
-    * 16×es the row count — the operator a user runs returns the array.
-    * The bench times the user-facing operator. */
-  // Store-backed entries bench their SERVING path: the store builds once
-  // per (store, sfDir) on first touch (amortized exactly as a deployment
-  // amortizes it), and min-of-reps then measures serving — the gate
-  // wrappers rebuild per call because correctness must cover the write.
-  private val storeCache = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def cachedStore(key: String, build: String => Unit): String =
-    storeCache.getOrElseUpdate(key, {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bench-store")
-      build(tmp.toString); tmp.toString
-    })
-
-  /** The 80%-of-id-range cut the incremental gate entries split on,
-    * cached per table dir — the lookup is one driver job re-proving a
-    * constant of the dataset every rep otherwise. */
-  private val cutCache = scala.collection.concurrent.TrieMap.empty[String, Long]
-  private def cachedCut(key: String, df: => org.apache.spark.sql.DataFrame,
-                        idCol: String): Long =
-    cutCache.getOrElseUpdate(key,
-      df.agg(org.apache.spark.sql.functions.expr(s"max($idCol) * 8 div 10"))
-        .head().getLong(0))
-
-  /** Copy a store directory tree (for per-rep isolation of MUTATING store
-    * ops): the op appends/tombstones into the copy, so every rep performs
-    * the real mutation on identical input — min-of-reps can never select a
-    * "steady-state" rep whose append writes zero rows (the doc_cdc_forget
-    * critique, VERDICT r12 #8). Store dirs at bench SF are a few MB; the
-    * copy is milliseconds of the timed rep and is declared in
-    * OPTIMIZATION_r13.md. */
-  private def copyDir(src: String, dst: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val s = Paths.get(src); val t = Paths.get(dst)
-    Files.walk(s).iterator.asScala.foreach { p =>
-      val q = t.resolve(s.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(q)
-      else Files.copy(p, q, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-  private def deleteDir(dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    try Files.walk(Paths.get(dir)).iterator.asScala.toSeq.reverse
-      .foreach(p => Files.deleteIfExists(p))
-    catch { case _: Throwable => }
-  }
-
-  /** Overrides that BUILD a cachedStore on first touch — kept as their own
-    * map so the scale10 pre-touch set derives from it structurally (a new
-    * store-backed override can't silently reproduce the 284× first-rep
-    * build artifact by being forgotten in a hand-maintained name list). */
-  private val storeOverrides: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    Map("mm_phash_store" -> ((s, d) => {
-        val dir = cachedStore(s"phash:$d", tmp =>
-          graft.multimodal.Multimodal.writePhashStore(
-            graft.multimodal.Multimodal.mediaTable(s, d), tmp))
-        graft.multimodal.Multimodal.phashPairsFromStore(s, dir)
-      }),
-      "doc_tok_compare_store" -> ((s, d) => {
-        val dir = cachedStore(s"toks:$d", tmp => {
-          val docs = graft.Tables.documents(s, d)
-          graft.operators.TextOps.writeBpeStore(docs, s"$tmp/bpe", nMerges = 64)
-          graft.operators.TextOps.writeUnigramStore(docs, s"$tmp/uni")
-        })
-        graft.operators.TextOps.tokCompareFromStores(s, d, s"$dir/bpe", s"$dir/uni")
-      }),
-      "ev_quantile_store" -> ((s, d) => {
-        val dir = cachedStore(s"qsk:$d", tmp =>
-          graft.operators.Sketches.writeQuantileStore(s, d, tmp))
-        graft.operators.Sketches.quantilesFromStore(s, dir)
-      }),
-      "doc_wordpiece_store" -> ((s, d) => {
-        val dir = cachedStore(s"wps:$d", tmp =>
-          graft.operators.TextOps.writeWordpieceStore(
-            graft.Tables.documents(s, d), tmp))
-        graft.operators.TextOps.wordpieceEncodeFromStore(s, d, dir)
-      }),
-      "doc_bpe_store" -> ((s, d) => {
-        val dir = cachedStore(s"bpes:$d", tmp =>
-          graft.operators.TextOps.writeBpeStoreFast(
-            graft.Tables.documents(s, d), tmp))
-        graft.operators.TextOps.bpeEncodeFromStore(s, d, dir)
-      }),
-      "doc_unigram_store" -> ((s, d) => {
-        val dir = cachedStore(s"unis:$d", tmp =>
-          graft.operators.TextOps.writeUnigramStore(
-            graft.Tables.documents(s, d), tmp))
-        graft.operators.TextOps.unigramEncodeFromStore(s, d, dir)
-      }),
-      // r12 (VERDICT r11 #4): the gate entry keeps the FULL lifecycle
-      // (write+forget+ingest+compact+ingest — correctness must cover every
-      // transition); the bench measures the post-compact ingest SERVE
-      // against a cached compacted store. r13 (VERDICT r12 #8): each rep
-      // now ingests into a fresh COPY of the compacted store, so the
-      // appended odd chunks are genuinely new EVERY rep — min-of-reps can
-      // no longer select a steady-state rep whose append writes zero rows.
-      "doc_cdc_forget" -> ((s, d) => {
-        val dir = cachedStore(s"cdcf:$d", tmp => {
-          val docs = graft.Tables.documents(s, d)
-          graft.operators.TextOps.writeCdcStore(
-            docs.filter(col("doc_id") % 2 === 0), tmp)
-          graft.operators.TextOps.cdcForget(
-            docs.filter(col("doc_id") % 4 === 0), tmp)
-          graft.operators.TextOps.cdcIngest(
-            docs.filter(col("doc_id") % 4 === 0), tmp)
-          graft.operators.TextOps.cdcCompact(s, tmp)
-        })
-        val work = Files.createTempDirectory("graft-bench-cdcwork").toString
-        copyDir(dir, work)
-        try graft.operators.TextOps.cdcIngest( // result checkpointed inside
-          graft.Tables.documents(s, d).filter(col("doc_id") % 2 === 1), work)
-        finally deleteDir(work)
-      }),
-      // r13 serving-protocol extension (the r11-endorsed store/bench split,
-      // VERDICT r12 "most expensive untouched" family): the one-time base
-      // store/index/model BUILD runs once into a cachedStore; every timed
-      // rep performs the RECURRING operation a deployment repeats — score/
-      // ingest/delete a fresh batch + serve. Mutating ops run against a
-      // per-rep COPY of the base store (real rows written every rep); the
-      // full build-per-call lifecycle stays oracle-gated in
-      // SparkEntry.queries and re-measurable via the gate. Old build-per-
-      // call numbers are retained in OPTIMIZATION_r13.md.
-      "doc_quality_incr" -> ((s, d) => {
-        val docs = graft.Tables.documents(s, d)
-        val cut = cachedCut(s"doccut:$d", docs, "doc_id")
-        val dir = cachedStore(s"qmodel:$d", tmp =>
-          graft.operators.QualityModel.writeQualityModel(
-            docs.filter(col("doc_id") < cut), tmp))
-        // scoring is read-only on the model store — no copy needed
-        graft.operators.QualityModel.qualityScoreIncremental(
-          docs.filter(col("doc_id") >= cut), dir)
-      }),
-      "doc_dup_spans_incr" -> ((s, d) => {
-        val docs = graft.Tables.documents(s, d)
-        val cut = cachedCut(s"doccut:$d", docs, "doc_id")
-        val base = cachedStore(s"gram:$d", tmp =>
-          graft.operators.Dedup.writeGramStore(
-            docs.filter(col("doc_id") < cut), tmp))
-        val work = Files.createTempDirectory("graft-bench-gramwork").toString
-        copyDir(base, work)
-        try graft.operators.Dedup.dupSpansIncremental( // checkpointed inside
-          docs.filter(col("doc_id") >= cut), work, batchId = 1L)
-        finally deleteDir(work)
-      }),
-      "emb_ivf_ingest" -> ((s, d) => {
-        val emb = graft.Tables.embeddings(s, d)
-        val cut = cachedCut(s"embcut:$d", emb, "vec_id")
-        val base = cachedStore(s"ivfing:$d", tmp =>
-          graft.operators.Similarity.writeIvfIndexFrom(
-            emb.filter(col("vec_id") < cut), tmp,
-            nQueries = 10, nlist = 8, lloydIters = 1))
-        val work = Files.createTempDirectory("graft-bench-ivfingwork").toString
-        copyDir(base, work)
-        try {
-          graft.operators.Similarity.ivfIngest(
-            s, emb.filter(col("vec_id") >= cut), work)
-          graft.operators.Similarity.ivfTopKFromIndex(s, d, work,
-            nprobe = Int.MaxValue).localCheckpoint(true)
-        } finally deleteDir(work)
-      }),
-      "emb_ivf_delete" -> ((s, d) => {
-        val emb = graft.Tables.embeddings(s, d)
-        val base = cachedStore(s"ivfdel:$d", tmp =>
-          graft.operators.Similarity.writeIvfIndexFrom(emb, tmp,
-            nQueries = 10, nlist = 8, lloydIters = 1))
-        val work = Files.createTempDirectory("graft-bench-ivfdelwork").toString
-        copyDir(base, work)
-        try {
-          graft.operators.Similarity.ivfDelete(
-            s, emb.filter(col("vec_id") % 10 === 3).select(col("vec_id")), work)
-          graft.operators.Similarity.ivfTopKFromIndex(s, d, work,
-            nprobe = Int.MaxValue).localCheckpoint(true)
-        } finally deleteDir(work)
-      }),
-      "doc_bm25_store" -> ((s, d) => {
-        val dir = cachedStore(s"bm25s:$d", tmp =>
-          graft.operators.TextOps.writeBm25Store(
-            graft.Tables.documents(s, d), tmp))
-        // serving is read-only on the postings store — no copy needed
-        graft.operators.TextOps.bm25FromStore(s, dir)
-      }),
-      "ev_bitmap_forget" -> ((s, d) => {
-        import org.apache.spark.sql.functions.expr
-        val ev = graft.Tables.events(s, d)
-        val base = cachedStore(s"bmf:$d", tmp =>
-          graft.operators.BitmapOps.bitmapStoreWrite(ev, tmp, 0L))
-        // the takedown id list and the serve range are INPUTS of the op
-        // (a deployment receives them with the request) — derived from the
-        // events table once per dataset, not re-proved every rep
-        val ids = idsCache.getOrElseUpdate(s"bmf:$d",
-          ev.select(col("user_id")).distinct()
-            .filter(col("user_id") % 7 === 3)
-            .collect().map(_.getLong(0)).toSeq)
-        val (d0, d1) = rangeCache.getOrElseUpdate(s"bmf:$d", {
-          val b = ev.agg(
-            expr("min(unix_millis(cast(ts as timestamp_ltz))) div 86400000").as("d0"),
-            expr("max(unix_millis(cast(ts as timestamp_ltz))) div 86400000").as("d1"))
-            .head()
-          if (b.isNullAt(0)) (0L, 0L)
-          else (b.getAs[Long]("d0"), b.getAs[Long]("d1"))
-        })
-        val work = Files.createTempDirectory("graft-bench-bmfwork").toString
-        copyDir(base, work)
-        try {
-          graft.operators.BitmapOps.bitmapStoreForget(s, work, ids)
-          graft.operators.BitmapOps.bitmapStoreServe(s, work, d0, d1)
-            .localCheckpoint(true)
-        } finally deleteDir(work)
-      }))
-
-  private val idsCache = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
-  private val rangeCache = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-
-  private val benchOverrides: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    storeOverrides ++
-      Map("emb_project" -> ((s, d) => graft.operators.Similarity.randomProject(s, d)),
-        "emb_pca" -> ((s, d) => graft.operators.Similarity.embPca(s, d)))
-
-  private[graft] def benchFn(name: String): Option[(SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    benchOverrides.get(name).orElse(SparkEntry.queries.get(name))
-
   /** Materialize a bench query via the noop sink, NOT `count()`: count()
     * lets Catalyst prune every un-referenced projection, so a map-only
     * query (doc_token_count, emb_quantize, …) collapses to a parquet
@@ -347,236 +21,8 @@ object Bench {
     * 100× rehearsal (doc_token_count ratio 1.0 at 100× data); the noop
     * write evaluates every output column and discards rows executor-side
     * — no driver collect, no disk. */
-  private[graft] def materialize(df: org.apache.spark.sql.DataFrame): Unit =
+  private[graft] def materialize(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
-
-  /** Drain a started streaming query and collapse its progress into
-    * (wall sec, sorted trigger durations ms, p50 ms). Shared by the
-    * headline reps, the batch-size matrix, and the doc-gate block so the
-    * percentile definition can never diverge between them. */
-  private def drainAndMeasure(q: org.apache.spark.sql.streaming.StreamingQuery,
-                              t0: Long): (Double, Seq[Long], Long) = {
-    q.processAllAvailable()
-    val wall = (System.nanoTime() - t0) / 1e9
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach(p => System.err.println(s"[stream-debug] ${p.json}"))
-    val tm = q.recentProgress.toSeq.flatMap(p =>
-      Option(p.durationMs.get("triggerExecution")).map(_.toLong))
-      .filter(_ > 0).sorted
-    val p50 = if (tm.nonEmpty) tm(tm.length / 2) else 0L
-    (wall, tm, p50)
-  }
-
-  /** Streaming throughput: the reference topology (dedup → stateful per-user
-    * rate limit → admitted filter → trailing z-score anomaly alerts) over
-    * the staged events table as a bounded file-source stream; reports
-    * end-to-end rows/sec, per-batch latency, and PER-OPERATOR state rows
-    * from the progress metrics — three chained stateful operators
-    * (dropDuplicatesWithinWatermark, flatMapGroupsWithState,
-    * transformWithState ring buffer), the full alerting pipeline a user
-    * deploys.
-    *
-    * State partitioning is sized to the topology's key cardinality (~150
-    * users / bounded event-id horizon), NOT the batch default: at 32 shuffle
-    * partitions the three stateful operators commit 96 state stores per
-    * 12.5k-row trigger — pure per-trigger overhead. RocksDB is the state
-    * store (transformWithState requires it; also the provider a cluster
-    * deployment runs). The conf is scoped to this query (set before start,
-    * restored after); a real deployment sizes it per stream the same way. */
-  private[graft] def streamingBench(spark: SparkSession, sfDir: String): String = {
-    import spark.implicits._
-    import graft.streaming.EventPipeline
-    // stage + checkpoints on tmpfs when available: the bench measures the
-    // engine's per-trigger latency, not this VM's ext4 fsync (a deployment
-    // puts stream checkpoints on fast storage); the source listing and the
-    // offset/commit logs are on the trigger's critical path
-    val fastTmp = if (Files.isDirectory(Paths.get("/dev/shm")))
-      Some(Paths.get("/dev/shm")) else None
-    def tmpDir(prefix: String): String =
-      fastTmp.fold(Files.createTempDirectory(prefix))(
-        base => Files.createTempDirectory(base, prefix)).toString
-    val stage = tmpDir("graft-stream-bench")
-    val ev = Tables.events(spark, sfDir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-    val nRows = ev.count()
-    // 8 staged files × maxFilesPerTrigger=1 → 8 micro-batches, so the
-    // duration metrics reflect per-trigger latency, not one giant batch
-    ev.repartition(8).write.mode("overwrite").parquet(stage)
-    // state-store knobs via the shipped facade (partitions sized to the
-    // topology's key cardinality, RocksDB provider, changelog
-    // checkpointing) — the bench tunes exactly what a deployment would
-    // partitions: re-swept r8 after the driver's testdata regen raised key
-    // cardinality ~150→1500 users: {1,2,4,8} → 16.5/17.2/18.5/18.0k
-    // rows/s (quiet host), so the knee moved 2→4 (the r5 sweep at 150
-    // keys measured 19.6/20.0/18.2/12.8k — more keys buy parallelism up
-    // to the state-commit overhead crossover). The residual gap to the
-    // r4/r5 ~25k envelope is the 10× state cardinality paying per-trigger
-    // fixed cost: the fpt matrix (SPARK_GRAFT_STREAM_MATRIX) puts the
-    // same topology at 32/40/51k rows/s with 2/4/8 files per trigger —
-    // the fpt=1 headline is the latency-biased point of that curve, kept
-    // so p50_batch_ms stays a per-trigger latency metric
-    // trackTotalNumberOfRows=false (r13): RocksDB's row-count maintenance
-    // does a point lookup per put/delete purely to keep the numRowsTotal
-    // metric — measured 26% throughput on this topology (14.6k → 18.4k
-    // rows/s, p50 742 → 528 ms, min-of-3 fresh-JVM @32). The same knob is
-    // the documented Spark production tuning for update-heavy state; the
-    // artifact carries "track_state_rows" so the zeroed numRowsTotal
-    // metrics can't be misread as empty state. Re-measure the old way with
-    // SPARK_GRAFT_STREAM_TRACKROWS=1.
-    val trackRows = sys.env.getOrElse("SPARK_GRAFT_STREAM_TRACKROWS", "0") == "1"
-    val tuning = graft.streaming.StateTuning(
-      statePartitions = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4").toInt,
-      trackTotalRows = trackRows)
-    val savedTuning = tuning(spark)
-    // the bounded run emits everything from data batches (Append from
-    // flatMapGroups, no window finalization) — the trailing watermark-only
-    // batch is pure overhead here
-    val savedNoData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val savedCkpt = spark.conf.getOption("spark.sql.streaming.checkpointLocation")
-    spark.conf.set("spark.sql.streaming.checkpointLocation", tmpDir("graft-stream-ckpt"))
-    try {
-      val filesPerTrigger = sys.env.getOrElse("SPARK_GRAFT_STREAM_FPT", "1")
-      def run(dir: String, name: String, fpt: String = filesPerTrigger) = {
-        val in = spark.readStream.schema(EventPipeline.eventSchema)
-          .option("maxFilesPerTrigger", fpt).parquet(dir)
-        val limited = EventPipeline
-          .rateLimited(EventPipeline.deduped(in, "2 hours").as[EventPipeline.Event], limit = 1000)
-          .filter(_.admitted)
-        val scored = EventPipeline.zscoreAlertStream(limited.map(a =>
-          EventPipeline.Event(a.event_id, a.ts, a.user_id, a.event_type, a.value)))
-        scored.toDF().writeStream.format("memory").queryName(name)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-      }
-      // untimed warm-up on the smallest SF (same treatment as the batch
-      // queries): pays WSCG compilation + state-store init once, so the
-      // timed run measures steady-state per-trigger latency
-      val warmStage = Files.createTempDirectory("graft-stream-warm").toString
-      Tables.events(spark, "/root/testdata/sf0.001")
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        .repartition(2).write.mode("overwrite").parquet(warmStage)
-      val wq = run(warmStage, s"bench_stream_warm_${System.nanoTime()}")
-      wq.processAllAvailable(); wq.stop()
-
-      // min-of-reps wall like the batch queries: a fresh query + checkpoint
-      // per rep (no state reuse), steady-state latency robust to host
-      // noise. CALIB-BRACKETED like the batch queries as of r11 (VERDICT
-      // r10 #4): the headline rows_per_sec swung 25.6k → 15.5k between two
-      // same-code runs and nothing in the artifact could adjudicate it —
-      // each rep now carries fixed-work spins on both sides, the min is
-      // taken over QUIET reps when any exist, and "degraded":true marks a
-      // streaming number no quiet rep backed.
-      val streamGateMs =
-        sys.env.getOrElse("SPARK_GRAFT_CALIB_GATE_MS", "58").toDouble
-      val streamReps = sys.env.getOrElse("SPARK_GRAFT_STREAM_REPS", "3").toInt
-      var streamSpin = calibMs()
-      val repsRun = (1 to streamReps).map { _ =>
-        val pre = streamSpin
-        val name = s"bench_stream_${System.nanoTime()}"
-        val t0 = System.nanoTime()
-        val q = run(stage, name)
-        val (wallSec, trigMs, _) = drainAndMeasure(q, t0)
-        // state-store footprint PER OPERATOR (dedup / rate-limit / zscore)
-        val opRows = q.recentProgress.toSeq.lastOption.toSeq
-          .flatMap(_.stateOperators.toSeq)
-          .map(op => op.operatorName -> op.numRowsTotal)
-        q.stop()
-        val outRows = spark.table(name).count()
-        spark.catalog.dropTempView(name)
-        streamSpin = calibMs()
-        val quiet = pre <= streamGateMs && streamSpin <= streamGateMs
-        (wallSec, trigMs, opRows, outRows, quiet)
-      }
-      val quietReps = repsRun.filter(_._5)
-      val streamDegraded = quietReps.isEmpty
-      val (wallSec, trigMs, opRows, outRows, _) =
-        (if (streamDegraded) repsRun else quietReps).minBy(_._1)
-      val stateRows = opRows.map(_._2).sum
-      val stateJson = opRows.map { case (k, v) => "\"" + k + s"""\":$v""" }
-        .mkString("{", ",", "}")
-      val rps = if (wallSec > 0) nRows / wallSec else 0.0
-      val p50 = if (trigMs.nonEmpty) trigMs(trigMs.length / 2) else 0L
-      val maxTrig = if (trigMs.nonEmpty) trigMs.max else 0L
-      // optional batch-size sweep (latency vs throughput trade): one rep per
-      // files-per-trigger setting, off by default so the headline run stays
-      // cheap. The staged 8 files make fpt ∈ {1,2,4,8} = 8..1 micro-batches.
-      val matrixJson = if (sys.env.get("SPARK_GRAFT_STREAM_MATRIX").contains("1")) {
-        val entries = Seq("1", "2", "4", "8").map { fpt =>
-          val name = s"bench_stream_m${fpt}_${System.nanoTime()}"
-          val t0 = System.nanoTime()
-          val q = run(stage, name, fpt)
-          val (wall, tm, mp50) = drainAndMeasure(q, t0)
-          q.stop(); spark.catalog.dropTempView(name)
-          val mrps = if (wall > 0) nRows / wall else 0.0
-          f"""{"files_per_trigger":$fpt,"n_batches":${tm.length},"p50_batch_ms":$mp50,"rows_per_sec":$mrps%.0f}"""
-        }
-        entries.mkString(""","batch_size_matrix":[""", ",", "]")
-      } else ""
-      // optional document-ingest gate throughput (DocPipeline.curatedStream:
-      // fingerprint dedup state + map-side policy/quality/split), off by
-      // default so the headline streaming number stays the event topology
-      val docJson = if (sys.env.get("SPARK_GRAFT_DOC_STREAM").contains("1")) {
-        val dstage = tmpDir("graft-docstream")
-        val docs = Tables.documents(spark, sfDir)
-          .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
-        val dn = docs.count()
-        docs.repartition(8).write.mode("overwrite").parquet(dstage)
-        val name = s"bench_docgate_${System.nanoTime()}"
-        val t0 = System.nanoTime()
-        val q = graft.streaming.DocPipeline.curatedStream(
-          spark.readStream.schema(graft.streaming.DocPipeline.docSchema)
-            .option("maxFilesPerTrigger", filesPerTrigger).parquet(dstage))
-          .writeStream.format("memory").queryName(name)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-        val (wall, tm, dp50) = drainAndMeasure(q, t0)
-        q.stop()
-        val admitted = spark.table(name).count()
-        spark.catalog.dropTempView(name)
-        val drps = if (wall > 0) dn / wall else 0.0
-        f""","doc_gate":{"input_docs":$dn,"admitted":$admitted,"wall_sec":$wall%.3f,"docs_per_sec":$drps%.0f,"n_batches":${tm.length},"p50_batch_ms":$dp50}"""
-      } else ""
-      // optional FOUR-stage topology (the standing fourth-stage question,
-      // measured): dedup → rate-limit → theta distinct-enrich → z-score —
-      // the enrichment stage passes events through carrying the type's
-      // live distinct estimate. Off by default; the headline stays the
-      // reference three-stage chain so rounds compare
-      val stage4Json = if (sys.env.get("SPARK_GRAFT_STREAM_STAGE4").contains("1")) {
-        val name = s"bench_stream_s4_${System.nanoTime()}"
-        val t0 = System.nanoTime()
-        val in = spark.readStream.schema(EventPipeline.eventSchema)
-          .option("maxFilesPerTrigger", filesPerTrigger).parquet(stage)
-        val limited = EventPipeline
-          .rateLimited(EventPipeline.deduped(in, "2 hours")
-            .as[EventPipeline.Event], limit = 1000)
-          .filter(_.admitted)
-        val enriched = EventPipeline.distinctEnrichedStream(limited.map(a =>
-          EventPipeline.Event(a.event_id, a.ts, a.user_id, a.event_type, a.value)))
-        val scored = EventPipeline.zscoreAlertStream(enriched.map(e =>
-          EventPipeline.Event(e.event_id, e.ts, e.user_id, e.event_type, e.value)))
-        val q = scored.toDF().writeStream.format("memory").queryName(name)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-        val (wall, tm, sp50) = drainAndMeasure(q, t0)
-        q.stop(); spark.catalog.dropTempView(name)
-        val srps = if (wall > 0) nRows / wall else 0.0
-        f""","stage4":{"rows_per_sec":$srps%.0f,"n_batches":${tm.length},"p50_batch_ms":$sp50}"""
-      } else ""
-      f"""{"input_rows":$nRows,"output_rows":$outRows,"wall_sec":$wallSec%.3f,"rows_per_sec":$rps%.0f,"n_batches":${trigMs.length},"p50_batch_ms":$p50,"max_batch_ms":$maxTrig,"track_state_rows":$trackRows,"state_rows":$stateRows,"state_rows_by_operator":$stateJson,"reps":$streamReps,"quiet_reps":${quietReps.length},"degraded":$streamDegraded$matrixJson$docJson$stage4Json}"""
-    } finally {
-      val ckpt = spark.conf.get("spark.sql.streaming.checkpointLocation")
-      tuning.restore(spark, savedTuning)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
-      savedCkpt.fold(spark.conf.unset("spark.sql.streaming.checkpointLocation"))(
-        spark.conf.set("spark.sql.streaming.checkpointLocation", _))
-      // tmpfs is RAM — drop the staged files + checkpoints when done
-      Seq(stage, ckpt).foreach { d =>
-        try {
-          import scala.jdk.CollectionConverters._
-          Files.walk(Paths.get(d)).iterator.asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        } catch { case _: Throwable => }
-      }
-    }
-  }
 
   /** Between-rep hygiene (r13, VERDICT r12 #1): `clearCache()` only drops
     * CacheManager entries — the block-manager blocks behind every
@@ -653,25 +99,20 @@ object Bench {
     Seq(spin(), spin(), spin()).min
   }
 
-  /** One timed pass: batch min-of-reps + streaming, bracketed by calib
-    * spins. `quiet` means neither bracket saw CPU steal — only a quiet
-    * attempt is recorded as non-degraded. */
+  /** One timed pass: batch min-of-reps, bracketed by calib spins. `quiet`
+    * means neither bracket saw CPU steal — only a quiet attempt is
+    * recorded as non-degraded. */
   private case class Attempt(results: Seq[(String, Option[Double])],
-                             wallTimed: Double, streaming: String,
+                             wallTimed: Double,
                              calibStart: Double, calibEnd: Double,
                              decadeCalib: Seq[Double] = Nil) {
     def quiet(gateMs: Double): Boolean = calibStart <= gateMs && calibEnd <= gateMs
     def total: Double = results.flatMap(_._2).sum
   }
 
-  // NOT tmpfs for spark.local.dir: measured A/B (r7, interleaved ×2) put
-  // /dev/shm scratch ~15% SLOWER for the streaming topology — the commit
-  // critical path is the changelog on the tmpfs CHECKPOINT dir already,
-  // and local-dir writes ride ext4's page cache without fsync.
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.defaultCores
     // GraftSession: AQE + shuffle partitions = cores + graft extensions
     // (AutoBarrierExplode etc.) — benches the session a user would run.
     val spark = GraftSession.local(cpus, Map("spark.driver.maxResultSize" -> "4g"))
@@ -679,22 +120,22 @@ object Bench {
     // JVM + whole-stage-codegen warm-up per query shape on the smallest SF
     // (not timed): measures steady-state throughput, not Janino compilation.
     // SPARK_GRAFT_ONLY=a,b,c restricts the run (targeted re-measurement) —
-    // resolved against benchFn, NOT intersected with the headline, so
+    // resolved against the registry, NOT intersected with the headline, so
     // entries deliberately dropped from the default list (the tokenizer-
     // training / image-decode paths) stay re-measurable on demand; the
     // full headline stays the default so round benches are comparable
     val picked = sys.env.get("SPARK_GRAFT_ONLY")
       .map { raw =>
         val asked = raw.split(",").map(_.trim).toSeq.distinct
-        val (ok, unknown) = asked.partition(n => benchFn(n).isDefined)
+        val (ok, unknown) = asked.partition(n => registry.benchFn(n).isDefined)
         // a typo must not silently shrink a targeted run (ADVICE r10)
         unknown.foreach(n => System.err.println(
           s"[bench] SPARK_GRAFT_ONLY name does not resolve, skipping: $n"))
         ok
       }
-      .getOrElse(headline)
+      .getOrElse(registry.timed)
     picked.foreach { name =>
-      benchFn(name).foreach { fn =>
+      registry.benchFn(name).foreach { fn =>
         try { materialize(fn(spark, "/root/testdata/sf0.001")) }
         catch { case _: Throwable => }
       }
@@ -711,7 +152,7 @@ object Bench {
     // quiet window is still recorded (driver contract: one JSON line) but
     // carries "degraded":true — three rounds of adjudicating host noise
     // by hand is what this field replaces.
-    // Gate re-derived 2026-08-14 (CalibProbe): a FRESH JVM's first spins
+    // Gate re-derived 2026-08-14 (SURVEY.md): a FRESH JVM's first spins
     // read ~43-48 ms, but any long-lived JVM settles at ~53-56 ms on a
     // PROVABLY idle host (pre-session, idle-session, post-query and
     // post-stop all read 53-56 while a concurrently-launched fresh JVM
@@ -747,7 +188,7 @@ object Bench {
       val decadeCalib = scala.collection.mutable.ArrayBuffer[Double]()
       val results: Seq[(String, Option[Double])] = picked.zipWithIndex.flatMap { case (name, qi) =>
         if (qi % 10 == 0 && qi > 0) decadeCalib += calibMs()
-        benchFn(name).map { fn =>
+        registry.benchFn(name).map { fn =>
           val times = (1 to reps).map { _ =>
             releaseLeaked(spark)
             val t0 = System.nanoTime()
@@ -762,14 +203,7 @@ object Bench {
         }
       }
       val wallTimed = (System.nanoTime() - wallStart) / 1e9
-      val streaming =
-        if (!recording) "null" // targeted run
-        else try streamingBench(spark, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] streaming failed: ${e.getMessage}")
-          "null"
-        }
-      Attempt(results, wallTimed, streaming, calibStart, calibMs(),
+      Attempt(results, wallTimed, calibStart, calibMs(),
         decadeCalib.toSeq)
     }
 
@@ -799,45 +233,11 @@ object Bench {
         // Default 1 rep per query as of r10 (VERDICT r9 #1c): the quiet
         // brackets have been stable ≥2 rounds for every family, and the
         // 2-rep protocol was ~950 s of the wall that killed the r9 driver
-        // bench at its 60-min cap. Min-of-2 is kept only for the WATCH
-        // list — queries with super-linear 10× ratios still under active
-        // adjudication — because one noisy sample on those is not a usable
-        // regression surface.
+        // bench at its 60-min cap. Each entry's treatment (one rep, watch,
+        // skip, first-touch build) is its registry row's `scale10`.
         val scaleRepsEnv = sys.env.get("SPARK_GRAFT_SCALE10_REPS")
         val scaleReps = scaleRepsEnv.map(_.toInt).getOrElse(1)
-        val watch = Set("emb_lsh_auto", "q_cube", "doc_ngram_auto",
-          "doc_containment_auto", "doc_minhash_recall", "doc_ngram_jaccard",
-          // 14.5× in the r10 first pass for a map-only scrub — min-of-2
-          // until adjudicated (the other super-linear readings that round
-          // were all first-touch index builds, now pre-touched)
-          "doc_pii_scrub")
-        // DOCUMENTED quadratic twins stay out of scale10 (their scaling
-        // laws are measured and pinned in SURVEY §5; re-proving them every
-        // round only keeps the worst-list noisy — VERDICT r10 #3): the
-        // fixed-param LSH baseline (92× at 10×, r10 removal), and as of
-        // r11 the broadcast-queries×corpus range filter and the
-        // within-block exact pair enumeration (both ~8× at 10× in the
-        // quiet record, quadratic by construction, with linear production
-        // paths emb_range_ivf / emb_lsh_auto still measured), and the
-        // emb_lsh_recall gate instrument (11.4× measured at 10× in the r11
-        // close — it embeds the exact O(n²) pair enumeration by design;
-        // the production path it floors, emb_lsh_auto, stays measured).
-        // All stay in the sf0.1 rep pass; re-measure via BenchScale.
-        val scale10Skip = Set("emb_lsh_pairs", "emb_range_query",
-          "emb_neardup_pairs", "emb_lsh_recall", "emb_lsh_band_curve")
-        // Entries whose FIRST call against a new data dir builds a
-        // persisted store/index (the benchOverrides cachedStore entries and
-        // the tmp-dir ANN indexes): at the base SF min-of-3 absorbs the
-        // build; at scale10's 1 rep the build IS the measurement — the r10
-        // first run recorded mm_phash_store at 284× because the one timed
-        // rep decoded the whole 10× corpus into the store. Pre-touch them
-        // untimed so the timed rep measures SERVING, the number the base
-        // column holds (a deployment builds at ingest, serves many).
-        // storeOverrides (structurally) + the disk-cached ANN indexes; NOT
-        // all of benchOverrides — emb_project/emb_pca build no store, and
-        // sweeping them in would buy each a free warm 10× run
-        val firstTouchBuilds = storeOverrides.keySet ++
-          Set("emb_pq_query", "emb_ivf_query", "emb_ivf_q", "emb_ivfpq")
+        def scale10Of(name: String): Scale10 = registry(name).bench.scale10
         val dst = s"/tmp/graft_bench_scale${copies}_distinct"
         val genT0 = System.nanoTime()
         ScaleUp.generate(spark, sfDir, dst, copies, "distinct")
@@ -859,9 +259,9 @@ object Bench {
         // THEN a cap/deadline readjudication skip) — the artifact must list
         // it once
         val busyQs = scala.collection.mutable.LinkedHashSet[String]()
-        val timed = picked.filterNot(scale10Skip).flatMap { name =>
-          benchFn(name).map { fn =>
-            if (firstTouchBuilds(name)) {
+        val timed = picked.filterNot(scale10Of(_) == Scale10.Skip).flatMap { name =>
+          registry.benchFn(name).map { fn =>
+            if (scale10Of(name) == Scale10.FirstTouch) {
               try materialize(fn(spark, dst))
               catch { case _: Throwable => () } // the timed rep reports it
               // a build can run minutes — refresh the bracket so the first
@@ -873,7 +273,8 @@ object Bench {
             // request wins for them too (ADVICE r10: a silent override
             // makes the recorded rep count unexplainable from the env)
             val wantReps =
-              if (watch(name) && scaleRepsEnv.isEmpty) math.max(scaleReps, 2)
+              if (scale10Of(name) == Scale10.Watch && scaleRepsEnv.isEmpty)
+                math.max(scaleReps, 2)
               else scaleReps
             var quietTimes = List.empty[Double]
             var allTimes = List.empty[Option[Double]]
@@ -962,7 +363,7 @@ object Bench {
           if (System.nanoTime() >= adjDeadline) {
             System.err.println(s"[bench] scale10 readjudication deadline: $name left un-retried")
             busyQs += name
-          } else benchFn(name).foreach { fn =>
+          } else registry.benchFn(name).foreach { fn =>
             var pre = calibMs()
             while (pre > gateMs && System.nanoTime() < adjDeadline) {
               System.err.println(f"[bench] scale10 readjudication of $name waiting for quiet window (calib $pre%.0f ms)")
@@ -1027,7 +428,7 @@ object Bench {
     val host =
       f"""{"reps":$reps,"wall_timed_sec":${best.wallTimed}%.1f,"sum_min_sec":$total%.3f,"calib_start_ms":${best.calibStart}%.0f,"calib_end_ms":${best.calibEnd}%.0f,"calib_gate_ms":$gateMs%.0f,"attempts":${attempts.length},"degraded":$degraded,"cpus_requested":$cpus,"available_processors":${Runtime.getRuntime.availableProcessors()},"cpu_quota_cores":$quotaJson,"effective_cores":$effCores%.1f,"decade_calib_ms":$decadesJson,"decades_busy":$decadesBusy}"""
     val fullLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errors,"streaming":${best.streaming},"host":$host,"scale10":$scale10,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errors,"host":$host,"scale10":$scale10,"sf":"$sfDir"}"""
     if (recording) // don't clobber full-run record
       try {
         Files.writeString(Paths.get("BENCH_LAST.json"), fullLine + "\n")
@@ -1042,15 +443,7 @@ object Bench {
     // tracked full record. Budget ≤1700 chars, enforced by dropping query
     // entries if ever exceeded.
     val resMap = best.results.toMap
-    val coreNames = Seq(
-      "q1_pricing", "q3_shipping", "q5_local", "q17_small_qty",
-      "q7_volume_shipping", "q21_waiting_suppliers", "q8_market_share",
-      "q9_profit_nation", "q_cube", "ev_dedup_first", "ev_sessionize",
-      "ev_zscore_alert", "ev_asof_join", "ev_sliding_counts", "ev_bloom_join",
-      "doc_dedup_exact", "doc_dedup_minhash", "doc_ngram_auto", "doc_tfidf_top",
-      "doc_bpe_pairs", "doc_token_budget", "doc_neardup_incr", "doc_dup_spans",
-      "doc_pack", "doc_curate", "emb_cosine_topk", "emb_ivf_topk",
-      "emb_ivf_query", "emb_lsh_auto", "emb_ivfpq")
+    val coreNames = registry.slotted(_.core)
     def compactLine(nCore: Int): String = {
       // a targeted run's picked set is small by construction — emit it all
       // (the core subset exists to fit the driver's 2000-char stdout tail)
@@ -1059,13 +452,6 @@ object Bench {
         case (k, Some(v)) => "\"" + k + f"""\":$v%.3f"""
         case (k, None)    => "\"" + k + "\":null"
       }.mkString("{", ",", "}")
-      val streamCompact = best.streaming match {
-        case "null" => "null"
-        case s => // pull the two headline numbers back out of the full block
-          def field(n: String): String =
-            ("\"" + n + "\":(-?[0-9.]+)").r.findFirstMatchIn(s).map(_.group(1)).getOrElse("null")
-          s"""{"rows_per_sec":${field("rows_per_sec")},"p50_batch_ms":${field("p50_batch_ms")}}"""
-      }
       val scaleCompact = scale10 match {
         case "null" => "null"
         case s =>
@@ -1083,23 +469,11 @@ object Bench {
       }
       val hostCompact =
         f"""{"calib_start_ms":${best.calibStart}%.0f,"calib_end_ms":${best.calibEnd}%.0f,"degraded":$degraded,"effective_cores":$effCores%.1f,"decades_busy":$decadesBusy}"""
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${best.results.length},"queries":$coreQs,"errors":$errors,"streaming":$streamCompact,"host":$hostCompact,"scale10":$scaleCompact,"full":"BENCH_FULL.json","sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${best.results.length},"queries":$coreQs,"errors":$errors,"host":$hostCompact,"scale10":$scaleCompact,"full":"BENCH_FULL.json","sf":"$sfDir"}"""
     }
     val line = (coreNames.length to 5 by -5).map(compactLine)
       .find(_.length <= 1700).getOrElse(compactLine(5))
     println(line)
-    spark.stop()
-  }
-}
-
-/** Streaming-section-only runner for latency tuning (same code path the full
-  * Bench reports). */
-object BenchStream {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus)
-    println(Bench.streamingBench(spark, sfDir))
     spark.stop()
   }
 }
@@ -1119,20 +493,14 @@ object BenchStream {
   * so a stolen host window is visible in the artifact. Emits one JSON
   * line: per-query base/scaled seconds and the ratio vs `copies`. */
 object BenchScale {
-  private val defaultQueries = Seq(
-    "q1_pricing", "q3_shipping", "q18_large_orders", "q_window_rank",
-    "ev_sessionize", "ev_counts_salted", "ev_sliding_counts", "ev_asof_join",
-    "doc_token_count", "doc_dedup_exact", "doc_dedup_minhash", "doc_ngram_auto",
-    "doc_pack", "doc_vocab", "emb_lsh_auto", "emb_ivf_topk")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "100").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
     val names = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
-      .map(_.split(",").map(_.trim).toSeq).getOrElse(defaultQueries)
-    val spark = GraftSession.local(cpus, Map("spark.driver.maxResultSize" -> "4g"))
+      .map(_.split(",").map(_.trim).toSeq)
+      .getOrElse(registry.slotted(_.scaleUp))
+    val spark = GraftSession.local(extraConf = Map("spark.driver.maxResultSize" -> "4g"))
     val dst = s"/tmp/graft_bench_scale${copies}_distinct"
     val genT0 = System.nanoTime()
     if (!sys.env.get("SPARK_GRAFT_SCALE_REUSE").contains("1") ||
@@ -1140,7 +508,7 @@ object BenchScale {
       ScaleUp.generate(spark, sfDir, dst, copies, "distinct")
     val genSec = (System.nanoTime() - genT0) / 1e9
     def timed(dir: String, name: String): Option[Double] = {
-      val fn = Bench.benchFn(name).getOrElse(
+      val fn = registry.benchFn(name).getOrElse(
         sys.error(s"unknown bench query: $name"))
       val times = (1 to reps).map { _ =>
         Bench.releaseLeaked(spark)
@@ -1155,7 +523,7 @@ object BenchScale {
     }
     // warm once per shape (codegen + catalog), then base and scaled passes
     names.foreach { n =>
-      Bench.benchFn(n).foreach(fn =>
+      registry.benchFn(n).foreach(fn =>
         try Bench.materialize(fn(spark, "/root/testdata/sf0.001"))
         catch { case _: Throwable => () })
     }
@@ -1171,36 +539,6 @@ object BenchScale {
     val ratios = rows.collect { case (_, Some(b), Some(s)) => s / b }.sorted
     val medR = if (ratios.isEmpty) Double.NaN else ratios(ratios.length / 2)
     println(f"""{"metric":"scale$copies","copies":$copies,"reps":$reps,"gen_sec":$genSec%.1f,"median_ratio":$medR%.1f,"calib_start_ms":$cal0%.0f,"calib_end_ms":$cal1%.0f,"queries":${parts.mkString("{", ",", "}")},"sf":"$sfDir"}""")
-    spark.stop()
-  }
-}
-
-/** LSH-auto volume probe: prints (n, bits, bands, candidate pairs, output
-  * pairs) per dir — the measured form of the occupancy-pinning linearity
-  * claim (SURVEY §5). Usage: runMain graft.LshProbe <dir> [dir2 ...]
-  * [-t threshold] */
-object LshProbe {
-  def main(args: Array[String]): Unit = {
-    val t = args.sliding(2).collectFirst { case Array("-t", v) => v.toDouble }
-      .getOrElse(0.4)
-    val dirs = args.filter(a => a != "-t" && a != "-recall" && !a.matches("[0-9.]+"))
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    val mb = sys.env.getOrElse("SPARK_GRAFT_LSH_MAX_BANDS", "32").toInt
-    val withRecall = args.contains("-recall")
-    dirs.foreach { dir =>
-      val (n, bits, bands, cand, out, recall) =
-        graft.operators.Similarity.lshAutoStats(spark, dir, threshold = t,
-          maxBands = mb)
-      val emp =
-        if (!withRecall) """"""
-        else {
-          val (nt, found, r, _, _) = graft.operators.Similarity
-            .lshEmpiricalRecall(spark, dir, t, maxBands = mb)
-          f""","true_pairs":$nt,"found_true":$found,"empirical_recall":$r%.4f"""
-        }
-      println(f"""{"probe":"lsh_auto","dir":"$dir","threshold":$t,"max_bands":$mb,"n":$n,"bits":$bits,"bands":$bands,"cand_pairs":$cand,"out_pairs":$out,"recall_at_threshold":$recall%.4f$emp}""")
-    }
     spark.stop()
   }
 }

@@ -9,10 +9,9 @@ object Explain {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val mode = if (args.length > 2) args(2) else "time"
     val reps = if (args.length > 3) args(3).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // GraftSession: same extensions (AutoBarrierExplode, native functions)
     // the shipped sessions run with — explain what users actually execute.
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     val fn = SparkEntry.queries(name)
     if (mode == "explain") {
       fn(spark, sfDir).explain("formatted")

@@ -10,7 +10,12 @@ import org.apache.spark.sql.SparkSession
   * registered via extensions.
   */
 object GraftSession {
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
+  /** Local cores for the mains: `SPARK_GRAFT_CPUS` when set, else every
+    * processor the JVM sees. */
+  val defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def local(cores: Int = defaultCores,
             extraConf: Map[String, String] = Map.empty): SparkSession = {
     var b = SparkSession.builder()
       .master(s"local[$cores]")

@@ -25,9 +25,8 @@ object JobProfile {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus)
-    val fn = Bench.benchFn(name).getOrElse(sys.error(s"unknown query: $name"))
+    val spark = GraftSession.local()
+    val fn = SparkEntry.registry.benchFn(name).getOrElse(sys.error(s"unknown query: $name"))
 
     // warm-up: codegen + catalog, same as the bench protocol
     try Bench.materialize(fn(spark, "/root/testdata/sf0.001"))

@@ -96,8 +96,7 @@ object ScaleUp {
     val (src, dst) = (args(0), args(1))
     val copies = if (args.length > 2) args(2).toInt else 10
     val mode = if (args.length > 3) args(3) else "replicate"
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local()
     generate(spark, src, dst, copies, mode)
     spark.stop()
   }

@@ -305,9 +305,9 @@ object Similarity {
     * the measured recall is 0.45 (theory floor 0.40). At the θ=0.85
     * production default the 32 cap holds target recall to n ≈ 1M vectors
     * (34 bands needed at 1M, 62 at 10M, 244 at 1B). Size a deployment with
-    * [[lshAutoStats]] / `runMain graft.LshProbe <dir> -t θ [-recall]` —
-    * it prints the chosen scheme, candidate volume, theoretical recall at
-    * the threshold, and (−recall) the measured recall; raise `maxBands`
+    * [[lshAutoStats]] — the chosen scheme, candidate volume and
+    * theoretical recall at the threshold — and [[lshEmpiricalRecall]], the
+    * recall measured against the exact pair enumeration; raise `maxBands`
     * when the corpus and recall SLO warrant the linear-in-bands wall. */
   def lshNeardupPairsAuto(spark: SparkSession, dir: String,
                           threshold: Double = 0.85,

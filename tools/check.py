@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: run graft.Verify output
 against the DuckDB oracle and diff exactly (columns sorted by name, rows
-sorted, values compared exactly — stricter than any sane driver hash)."""
+sorted, values compared exactly — stricter than any sane driver hash).
+
+Every entry Verify lists in entries.json is declared: one that wrote no
+output (it threw) fails as MISSING_OUTPUT, and an empty declared set fails
+the run."""
 import sys, os, json, glob
 import duckdb
 import pandas as pd
@@ -16,8 +20,12 @@ for t in TABLES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+declared = set(json.load(open(f"{out_dir}/entries.json"))) | set(oracle)
+if not declared:
+    print("no entries declared: nothing was checked")
+    sys.exit(1)
 results = {}
-for name in sorted(os.listdir(out_dir)):
+for name in sorted(declared):
     d = os.path.join(out_dir, name)
     if not os.path.isdir(d):
         continue
@@ -63,8 +71,7 @@ for name in sorted(os.listdir(out_dir)):
         status += f" [dtype {[(c, str(s[c].dtype), str(d[c].dtype)) for c in schema_mismatch]}]"
     results[name] = f"{status} rows={len(s)}"
 
-declared = set(oracle) | {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
-w = max(len(n) for n in declared) if declared else 10
+w = max(len(n) for n in declared)
 nok = 0
 for name in sorted(declared):
     r = results.get(name, "MISSING_OUTPUT")
