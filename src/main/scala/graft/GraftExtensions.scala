@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{GraftShims, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import graft.functions.{BitmapAggExpr, BitmapAndAggExpr, BitmapAndExpr,
@@ -13,9 +14,12 @@ import graft.functions.{BitmapAggExpr, BitmapAndAggExpr, BitmapAndExpr,
   *   - at session build time: `.withExtensions(new GraftExtensions)` or
   *     `.config("spark.sql.extensions", "graft.GraftExtensions")`
   *   - on a live session: `GraftFunctions.register(spark)`
+  * Neither path ever replaces a Spark built-in ([[absentFromBuiltins]]).
   */
 object GraftFunctions {
-  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+  type Fn = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  val all: Seq[Fn] = absentFromBuiltins(Seq(
     (new FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[DotProductExpr].getName, "vec_dot"),
       (children: Seq[Expression]) => DotProductExpr(children.head, children(1))),
@@ -51,14 +55,16 @@ object GraftFunctions {
     (new FunctionIdentifier("bitmap_agg"),
       new ExpressionInfo(classOf[BitmapAggExpr].getName, "bitmap_agg"),
       (c: Seq[Expression]) => BitmapAggExpr(c.head)),
-    (new FunctionIdentifier("bitmap_or_agg"),
-      new ExpressionInfo(classOf[BitmapOrAggExpr].getName, "bitmap_or_agg"),
+    // Spark 4 ships bitmap_or_agg / bitmap_and_agg / bitmap_count over its
+    // own bitmap format, hence the roaring_ names
+    (new FunctionIdentifier("roaring_or_agg"),
+      new ExpressionInfo(classOf[BitmapOrAggExpr].getName, "roaring_or_agg"),
       (c: Seq[Expression]) => BitmapOrAggExpr(c.head)),
-    (new FunctionIdentifier("bitmap_and_agg"),
-      new ExpressionInfo(classOf[BitmapAndAggExpr].getName, "bitmap_and_agg"),
+    (new FunctionIdentifier("roaring_and_agg"),
+      new ExpressionInfo(classOf[BitmapAndAggExpr].getName, "roaring_and_agg"),
       (c: Seq[Expression]) => BitmapAndAggExpr(c.head)),
-    (new FunctionIdentifier("bitmap_count"),
-      new ExpressionInfo(classOf[BitmapCountExpr].getName, "bitmap_count"),
+    (new FunctionIdentifier("roaring_count"),
+      new ExpressionInfo(classOf[BitmapCountExpr].getName, "roaring_count"),
       (c: Seq[Expression]) => BitmapCountExpr(c.head)),
     (new FunctionIdentifier("bitmap_contains"),
       new ExpressionInfo(classOf[BitmapContainsExpr].getName, "bitmap_contains"),
@@ -68,7 +74,16 @@ object GraftFunctions {
       (c: Seq[Expression]) => BitmapAndExpr(c.head, c(1))),
     (new FunctionIdentifier("bitmap_or"),
       new ExpressionInfo(classOf[BitmapOrExpr].getName, "bitmap_or"),
-      (c: Seq[Expression]) => BitmapOrExpr(c.head, c(1))))
+      (c: Seq[Expression]) => BitmapOrExpr(c.head, c(1)))))
+
+  /** `fns`, after checking that none takes a name Spark already ships —
+    * registering it would silently replace the built-in in the session. */
+  private[graft] def absentFromBuiltins(fns: Seq[Fn]): Seq[Fn] = {
+    val taken = fns.map(_._1).filter(FunctionRegistry.builtin.functionExists)
+    require(taken.isEmpty,
+      s"graft functions would replace Spark built-ins: ${taken.mkString(", ")}")
+    fns
+  }
 
   private def intArg(c: Seq[Expression], i: Int, dflt: Int): Int =
     if (c.length > i) c(i) match {

@@ -505,11 +505,19 @@ object SparkEntry {
       else Files.copy(p, q, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
   }
-  private def deleteDir(dir: String): Unit = {
+  private[graft] def deleteDir(dir: String): Unit = {
     import scala.jdk.CollectionConverters._
     try Files.walk(Paths.get(dir)).iterator.asScala.toSeq.reverse
       .foreach(p => Files.deleteIfExists(p))
     catch { case _: Throwable => }
+  }
+
+  /** Run `body` on a fresh temp directory, deleted when it returns: a
+    * store-backed entry's result must be materialized (checkpointed)
+    * inside `body`. */
+  private def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = Files.createTempDirectory(prefix).toString
+    try body(dir) finally deleteDir(dir)
   }
 
   /** A. event-stream operators: the reference consumer's dedup, rate
@@ -557,8 +565,7 @@ object SparkEntry {
     // double, and timestamp columns all cross the ORC writer+reader)
     Entry("ev_orc_roundtrip", (s, d) => {
       import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("graft-orc")
-      try {
+      withTempDir("graft-orc") { tmp =>
         graft.Tables.events(s, d).write.mode("overwrite").orc(s"$tmp/events.orc")
         s.read.orc(s"$tmp/events.orc")
           .groupBy("event_type")
@@ -567,9 +574,6 @@ object SparkEntry {
             graft.functions.Cols.dsum(col("value")).as("sum_value"),
             graft.functions.Cols.tsMs(max(col("ts"))).as("max_ts_ms"))
           .localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
       }
     }, timed,
       s"""SELECT event_type, count(*) AS n_events, count(DISTINCT user_id) AS n_users,
@@ -1058,9 +1062,7 @@ object SparkEntry {
     Entry("ev_bitmap_forget", (s, d) => {
       import org.apache.spark.sql.functions._
       val ev = graft.Tables.events(s, d)
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-bmforget").toString
-      try {
+      withTempDir("graft-bmforget") { store =>
         graft.operators.BitmapOps.bitmapStoreWrite(ev, store, 0L)
         val ids = ev.select(col("user_id")).distinct()
           .filter(col("user_id") % 7 === 3)
@@ -1074,9 +1076,6 @@ object SparkEntry {
           else (b.getAs[Long]("d0"), b.getAs[Long]("d1"))
         graft.operators.BitmapOps.bitmapStoreServe(s, store, d0, d1)
           .localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(new java.io.File(store)).deleteRecursively()
       }
     },
       storeServed((s, d) => {
@@ -1099,13 +1098,12 @@ object SparkEntry {
           if (b.isNullAt(0)) (0L, 0L)
           else (b.getAs[Long]("d0"), b.getAs[Long]("d1"))
         })
-        val work = Files.createTempDirectory("graft-bench-bmfwork").toString
-        copyDir(base, work)
-        try {
+        withTempDir("graft-bench-bmfwork") { work =>
+          copyDir(base, work)
           graft.operators.BitmapOps.bitmapStoreForget(s, work, ids)
           graft.operators.BitmapOps.bitmapStoreServe(s, work, d0, d1)
             .localCheckpoint(true)
-        } finally deleteDir(work)
+        }
       }),
       // A80g: id-attributable counts masked, anonymous aggregates untouched
       """SELECT event_type,
@@ -2626,13 +2624,9 @@ object SparkEntry {
     // A89c: store-served full-range top-k must equal the exact twin's
     // oracle (under-capacity regime: merged partials are provably exact)
     Entry("ev_hh_store", (s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-hhs")
-      try {
-        Sketches.writeHeavyHitterStore(s, d, tmp.toString)
-        Sketches.heavyHittersFromStore(s, tmp.toString).localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
+      withTempDir("graft-hhs") { tmp =>
+        Sketches.writeHeavyHitterStore(s, d, tmp)
+        Sketches.heavyHittersFromStore(s, tmp).localCheckpoint(true)
       }
     }, timed,
       // A89c: the store-served full-range top-k must reproduce the same
@@ -2642,13 +2636,9 @@ object SparkEntry {
     // A96c: store-served full-range quantiles — under-capacity daily
     // partials merge to the exact multiset, sharing the A27 oracle
     Entry("ev_quantile_store", (s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-qsk")
-      try {
-        Sketches.writeQuantileStore(s, d, tmp.toString)
-        Sketches.quantilesFromStore(s, tmp.toString).localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
+      withTempDir("graft-qsk") { tmp =>
+        Sketches.writeQuantileStore(s, d, tmp)
+        Sketches.quantilesFromStore(s, tmp).localCheckpoint(true)
       }
     },
       storeServed((s, d) => {
@@ -3905,13 +3895,9 @@ object SparkEntry {
     // store — candidates from stored bands, zero re-shingling; must be
     // row-identical to doc_rouge_pairs (spec-pinned)
     Entry("doc_rouge_store", (s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-rgs")
-      try {
-        Dedup.writeSignatureStore(graft.Tables.documents(s, d), tmp.toString)
-        Dedup.rougePairsFromStore(s, d, tmp.toString).localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
+      withTempDir("graft-rgs") { tmp =>
+        Dedup.writeSignatureStore(graft.Tables.documents(s, d), tmp)
+        Dedup.rougePairsFromStore(s, d, tmp).localCheckpoint(true)
       }
     }),
     // C2m: measured minhash recall + estimator MAE vs the exact Jaccard
@@ -4643,13 +4629,9 @@ object SparkEntry {
     // VERDICT r11 #3) — the write is gate-covered here; the bench serves
     // from a cached store (train once, encode many)
     Entry("doc_bpe_store", (s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bpes")
-      try {
-        TextOps.writeBpeStoreFast(graft.Tables.documents(s, d), tmp.toString)
-        TextOps.bpeEncodeFromStore(s, d, tmp.toString).localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
+      withTempDir("graft-bpes") { tmp =>
+        TextOps.writeBpeStoreFast(graft.Tables.documents(s, d), tmp)
+        TextOps.bpeEncodeFromStore(s, d, tmp).localCheckpoint(true)
       }
     },
       storeServed((s, d) => {
@@ -4695,16 +4677,12 @@ object SparkEntry {
         Seq.empty[(Long, Double)].toDF("doc_id", "p_good")
       else {
         val cut = cutRow.getLong(0)
-        val store = java.nio.file.Files.createTempDirectory("graft-qstore")
-        try {
+        withTempDir("graft-qstore") { store =>
           QualityModel.writeQualityModel(docs.filter(col("doc_id") < cut),
-            store.toString)
+            store)
           QualityModel.qualityScoreIncremental(
-            docs.filter(col("doc_id") >= cut), store.toString)
+            docs.filter(col("doc_id") >= cut), store)
             .localCheckpoint(true) // materialize before the store dies
-        } finally {
-          import scala.reflect.io.Directory
-          new Directory(store.toFile).deleteRecursively()
         }
       }
     },
@@ -4728,15 +4706,11 @@ object SparkEntry {
           .toDF("doc_id", "n_tokens", "n_spans", "cut_tokens")
       else {
         val cut = cutRow.getLong(0)
-        val store = java.nio.file.Files.createTempDirectory("graft-gramstore")
-        try {
-          Dedup.writeGramStore(docs.filter(col("doc_id") < cut), store.toString)
+        withTempDir("graft-gramstore") { store =>
+          Dedup.writeGramStore(docs.filter(col("doc_id") < cut), store)
           // localCheckpoint'ed inside the ingest — safe to delete after
           Dedup.dupSpansIncremental(docs.filter(col("doc_id") >= cut),
-            store.toString, batchId = 1L)
-        } finally {
-          import scala.reflect.io.Directory
-          new Directory(store.toFile).deleteRecursively()
+            store, batchId = 1L)
         }
       }
     },
@@ -4746,11 +4720,11 @@ object SparkEntry {
         val base = cachedStore(s"gram:$d", tmp =>
           graft.operators.Dedup.writeGramStore(
             docs.filter(col("doc_id") < cut), tmp))
-        val work = Files.createTempDirectory("graft-bench-gramwork").toString
-        copyDir(base, work)
-        try graft.operators.Dedup.dupSpansIncremental( // checkpointed inside
-          docs.filter(col("doc_id") >= cut), work, batchId = 1L)
-        finally deleteDir(work)
+        withTempDir("graft-bench-gramwork") { work =>
+          copyDir(base, work)
+          graft.operators.Dedup.dupSpansIncremental( // checkpointed inside
+            docs.filter(col("doc_id") >= cut), work, batchId = 1L)
+        }
       }),
       // the incremental contract IS the full run restricted to the batch:
       // same census SQL, batch = the top-2-deciles doc_id cut
@@ -4869,15 +4843,10 @@ object SparkEntry {
         Seq.empty[(Long, Boolean, String, String)].toDF("doc_id", "keep", "drop_reason", "split")
       else {
         val cut = cutRow.getLong(0)
-        val store = java.nio.file.Files.createTempDirectory("graft-curstore")
-        try {
-          TextOps.writeCurateStore(docs.filter(col("doc_id") < cut), store.toString)
+        withTempDir("graft-curstore") { store =>
+          TextOps.writeCurateStore(docs.filter(col("doc_id") < cut), store)
           // localCheckpoint'ed inside — safe to delete the store after
-          TextOps.curateIncremental(docs.filter(col("doc_id") >= cut), store.toString)
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(store).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
+          TextOps.curateIncremental(docs.filter(col("doc_id") >= cut), store)
         }
       }
     }),
@@ -4893,15 +4862,10 @@ object SparkEntry {
         Seq.empty[(Long, Long, Long, Long)].toDF("doc_id", "seq_id", "seq_offset", "n_tokens")
       else {
         val cut = cutRow.getLong(0)
-        val store = java.nio.file.Files.createTempDirectory("graft-packstore")
-        try {
-          TextOps.writePackStore(docs.filter(col("doc_id") < cut), store.toString)
+        withTempDir("graft-packstore") { store =>
+          TextOps.writePackStore(docs.filter(col("doc_id") < cut), store)
           // localCheckpoint'ed inside — safe to delete the store after
-          TextOps.packIncremental(docs.filter(col("doc_id") >= cut), store.toString)
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(store).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
+          TextOps.packIncremental(docs.filter(col("doc_id") >= cut), store)
         }
       }
     }, notTimed,
@@ -5004,14 +4968,10 @@ object SparkEntry {
       if (cutRow.isNullAt(0)) Seq.empty[(Long, Double)].toDF("doc_id", "logw")
       else {
         val cut = cutRow.getLong(0)
-        val store = java.nio.file.Files.createTempDirectory("graft-dsirstore")
-        try {
-          Dsir.writeDsirStore(docs, col("source") === "src0", store.toString)
-          Dsir.dsirScoreIncremental(docs.filter(col("doc_id") >= cut), store.toString)
+        withTempDir("graft-dsirstore") { store =>
+          Dsir.writeDsirStore(docs, col("source") === "src0", store)
+          Dsir.dsirScoreIncremental(docs.filter(col("doc_id") >= cut), store)
             .localCheckpoint(true) // materialize before the store dies
-        } finally {
-          import scala.reflect.io.Directory
-          new Directory(store.toFile).deleteRecursively()
         }
       }
     }),
@@ -5278,15 +5238,10 @@ object SparkEntry {
         Seq.empty[(Long, Long, Double)].toDF("id_a", "id_b", "est_jaccard")
       else {
         val cut = cutRow.getLong(0)
-        val store = java.nio.file.Files.createTempDirectory("graft-sigstore")
-        try {
-          Dedup.writeSignatureStore(docs.filter(col("doc_id") < cut), store.toString)
+        withTempDir("graft-sigstore") { store =>
+          Dedup.writeSignatureStore(docs.filter(col("doc_id") < cut), store)
           // localCheckpoint'ed inside ingest — safe to delete the store after
-          Dedup.minhashLshIngest(docs.filter(col("doc_id") >= cut), store.toString)
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(store).iterator.asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
+          Dedup.minhashLshIngest(docs.filter(col("doc_id") >= cut), store)
         }
       }
     }),
@@ -5327,13 +5282,9 @@ object SparkEntry {
     // C103c: encode from the persisted piece table — must reproduce the
     // direct encode bit-for-bit (frozen-vocabulary contract)
     Entry("doc_unigram_store", (s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-unis")
-      try {
-        TextOps.writeUnigramStore(graft.Tables.documents(s, d), tmp.toString)
-        TextOps.unigramEncodeFromStore(s, d, tmp.toString).localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
+      withTempDir("graft-unis") { tmp =>
+        TextOps.writeUnigramStore(graft.Tables.documents(s, d), tmp)
+        TextOps.unigramEncodeFromStore(s, d, tmp).localCheckpoint(true)
       }
     },
       storeServed((s, d) => {
@@ -5354,14 +5305,10 @@ object SparkEntry {
     // C110c: encode from the persisted WordPiece vocabulary — must equal
     // the direct train+encode bit-for-bit (frozen-vocabulary contract)
     Entry("doc_wordpiece_store", (s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-wps")
-      try {
-        TextOps.writeWordpieceStore(graft.Tables.documents(s, d), tmp.toString)
-        TextOps.wordpieceEncodeFromStore(s, d, tmp.toString)
+      withTempDir("graft-wps") { tmp =>
+        TextOps.writeWordpieceStore(graft.Tables.documents(s, d), tmp)
+        TextOps.wordpieceEncodeFromStore(s, d, tmp)
           .localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
       }
     },
       storeServed((s, d) => {
@@ -5374,55 +5321,43 @@ object SparkEntry {
     // screened as a batch (organic exact dups land in n_seen; novel is
     // exact, seen may over-count by <= fpp)
     Entry("doc_bloom_store", (s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bloom")
-      try {
+      withTempDir("graft-bloom") { tmp =>
         val docs = graft.Tables.documents(s, d)
         graft.operators.Dedup.writeBloomStore(docs.filter(
-          org.apache.spark.sql.functions.col("doc_id") % 2 === 0), tmp.toString)
+          org.apache.spark.sql.functions.col("doc_id") % 2 === 0), tmp)
         graft.operators.Dedup.bloomIngest(docs.filter(
-          org.apache.spark.sql.functions.col("doc_id") % 2 === 1), tmp.toString)
+          org.apache.spark.sql.functions.col("doc_id") % 2 === 1), tmp)
           .localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
       }
     }, timed),
     // C113b: counting-Bloom lifecycle — build on the even docs, take the
     // id%4==0 slice DOWN (the deletion C113 can't do), then screen the
     // odd batch against the reduced store
     Entry("doc_cbloom_store", (s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-cbloom")
-      try {
+      withTempDir("graft-cbloom") { tmp =>
         import org.apache.spark.sql.functions.col
         val docs = graft.Tables.documents(s, d)
         graft.operators.Dedup.writeCountingBloomStore(
-          docs.filter(col("doc_id") % 2 === 0), tmp.toString)
+          docs.filter(col("doc_id") % 2 === 0), tmp)
         graft.operators.Dedup.countingBloomForget(
-          docs.filter(col("doc_id") % 4 === 0), tmp.toString)
+          docs.filter(col("doc_id") % 4 === 0), tmp)
           .localCheckpoint(true)
         graft.operators.Dedup.countingBloomIngest(
-          docs.filter(col("doc_id") % 2 === 1), tmp.toString)
+          docs.filter(col("doc_id") % 2 === 1), tmp)
           .localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
       }
     }, timed),
     // C111c: chunk store + incremental batch accounting — store built on
     // the even docs, the odd docs arrive as a crawl batch (organic dups
     // and shared boilerplate produce the known/new split)
     Entry("doc_cdc_store", (s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-cdcs")
-      try {
+      withTempDir("graft-cdcs") { tmp =>
         val docs = graft.Tables.documents(s, d)
         TextOps.writeCdcStore(docs.filter(
-          org.apache.spark.sql.functions.col("doc_id") % 2 === 0), tmp.toString)
+          org.apache.spark.sql.functions.col("doc_id") % 2 === 0), tmp)
         TextOps.cdcIngest(docs.filter(
-          org.apache.spark.sql.functions.col("doc_id") % 2 === 1), tmp.toString)
+          org.apache.spark.sql.functions.col("doc_id") % 2 === 1), tmp)
           .localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
       }
     }, timed),
     // C111e store lifecycle (r11, VERDICT r10 #8): takedown tombstone →
@@ -5430,19 +5365,15 @@ object SparkEntry {
     // compact (fold + clear) → a fresh odd-docs ingest against the
     // rewritten store; returns the final ingest report
     Entry("doc_cdc_forget", (s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-cdcf")
-      try {
+      withTempDir("graft-cdcf") { tmp =>
         import org.apache.spark.sql.functions.col
         val docs = graft.Tables.documents(s, d)
-        TextOps.writeCdcStore(docs.filter(col("doc_id") % 2 === 0), tmp.toString)
-        TextOps.cdcForget(docs.filter(col("doc_id") % 4 === 0), tmp.toString)
-        TextOps.cdcIngest(docs.filter(col("doc_id") % 4 === 0), tmp.toString)
-        TextOps.cdcCompact(s, tmp.toString)
-        TextOps.cdcIngest(docs.filter(col("doc_id") % 2 === 1), tmp.toString)
+        TextOps.writeCdcStore(docs.filter(col("doc_id") % 2 === 0), tmp)
+        TextOps.cdcForget(docs.filter(col("doc_id") % 4 === 0), tmp)
+        TextOps.cdcIngest(docs.filter(col("doc_id") % 4 === 0), tmp)
+        TextOps.cdcCompact(s, tmp)
+        TextOps.cdcIngest(docs.filter(col("doc_id") % 2 === 1), tmp)
           .localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
       }
     },
       // r12 (VERDICT r11 #4): the gate entry keeps the FULL lifecycle
@@ -5463,11 +5394,11 @@ object SparkEntry {
             docs.filter(col("doc_id") % 4 === 0), tmp)
           graft.operators.TextOps.cdcCompact(s, tmp)
         })
-        val work = Files.createTempDirectory("graft-bench-cdcwork").toString
-        copyDir(dir, work)
-        try graft.operators.TextOps.cdcIngest( // result checkpointed inside
-          graft.Tables.documents(s, d).filter(col("doc_id") % 2 === 1), work)
-        finally deleteDir(work)
+        withTempDir("graft-bench-cdcwork") { work =>
+          copyDir(dir, work)
+          graft.operators.TextOps.cdcIngest( // result checkpointed inside
+            graft.Tables.documents(s, d).filter(col("doc_id") % 2 === 1), work)
+        }
       })),
     // C102 Efraimidis–Spirakis weighted sample (exponential keys, n_chars)
     Entry("doc_weighted_sample", (s, d) => TextOps.weightedSample(s, d), timed,
@@ -5755,13 +5686,9 @@ object SparkEntry {
     // C76 persisted postings store: serve-from-store must be bit-equal to
     // the direct path (same oracle)
     Entry("doc_bm25_store", (s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bm25s")
-      try {
-        TextOps.writeBm25Store(graft.Tables.documents(s, d), tmp.toString)
-        TextOps.bm25FromStore(s, tmp.toString).localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
+      withTempDir("graft-bm25s") { tmp =>
+        TextOps.writeBm25Store(graft.Tables.documents(s, d), tmp)
+        TextOps.bm25FromStore(s, tmp).localCheckpoint(true)
       }
     },
       storeServed((s, d) => {
@@ -5801,16 +5728,12 @@ object SparkEntry {
     // (train once at store-write, compare without retraining) — must be
     // bit-equal to doc_tok_compare under the same training parameters.
     Entry("doc_tok_compare_store", (s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-toks")
-      try {
+      withTempDir("graft-toks") { tmp =>
         val docs = graft.Tables.documentsSpread(s, d)
         graft.operators.TextOps.writeBpeStore(docs, s"$tmp/bpe", nMerges = 64)
         graft.operators.TextOps.writeUnigramStore(docs, s"$tmp/uni")
         graft.operators.TextOps.tokCompareFromStores(
           s, d, s"$tmp/bpe", s"$tmp/uni").localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
       }
     },
       storeServed((s, d) => {
@@ -6077,16 +6000,12 @@ object SparkEntry {
         Seq.empty[(Long, Long, Long, Double)].toDF("q_id", "vec_id", "rank", "cos_sim")
       else {
         val cut = cutRow.getLong(0)
-        val idx = java.nio.file.Files.createTempDirectory("graft-ivfingest")
-        try {
+        withTempDir("graft-ivfingest") { idx =>
           Similarity.writeIvfIndexFrom(emb.filter(col("vec_id") < cut),
-            idx.toString, nQueries = 10, nlist = 8, lloydIters = 1)
-          Similarity.ivfIngest(s, emb.filter(col("vec_id") >= cut), idx.toString)
-          Similarity.ivfTopKFromIndex(s, d, idx.toString,
+            idx, nQueries = 10, nlist = 8, lloydIters = 1)
+          Similarity.ivfIngest(s, emb.filter(col("vec_id") >= cut), idx)
+          Similarity.ivfTopKFromIndex(s, d, idx,
             nprobe = Int.MaxValue).localCheckpoint(true)
-        } finally {
-          import scala.reflect.io.Directory
-          new Directory(idx.toFile).deleteRecursively()
         }
       }
     },
@@ -6097,14 +6016,13 @@ object SparkEntry {
           graft.operators.Similarity.writeIvfIndexFrom(
             emb.filter(col("vec_id") < cut), tmp,
             nQueries = 10, nlist = 8, lloydIters = 1))
-        val work = Files.createTempDirectory("graft-bench-ivfingwork").toString
-        copyDir(base, work)
-        try {
+        withTempDir("graft-bench-ivfingwork") { work =>
+          copyDir(base, work)
           graft.operators.Similarity.ivfIngest(
             s, emb.filter(col("vec_id") >= cut), work)
           graft.operators.Similarity.ivfTopKFromIndex(s, d, work,
             nprobe = Int.MaxValue).localCheckpoint(true)
-        } finally deleteDir(work)
+        }
       }), bruteTopkSql),
     // C74: delete lifecycle — tombstone a deterministic corpus subset,
     // serve the MASKED index exhaustively (pre-compact, so this gates the
@@ -6117,18 +6035,14 @@ object SparkEntry {
       if (emb.take(1).isEmpty)
         Seq.empty[(Long, Long, Long, Double)].toDF("q_id", "vec_id", "rank", "cos_sim")
       else {
-        val idx = java.nio.file.Files.createTempDirectory("graft-ivfdel")
-        try {
-          Similarity.writeIvfIndexFrom(emb, idx.toString,
+        withTempDir("graft-ivfdel") { idx =>
+          Similarity.writeIvfIndexFrom(emb, idx,
             nQueries = 10, nlist = 8, lloydIters = 1)
           Similarity.ivfDelete(s,
             emb.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
-            idx.toString)
-          Similarity.ivfTopKFromIndex(s, d, idx.toString,
+            idx)
+          Similarity.ivfTopKFromIndex(s, d, idx,
             nprobe = Int.MaxValue).localCheckpoint(true)
-        } finally {
-          import scala.reflect.io.Directory
-          new Directory(idx.toFile).deleteRecursively()
         }
       }
     },
@@ -6137,14 +6051,13 @@ object SparkEntry {
         val base = cachedStore(s"ivfdel:$d", tmp =>
           graft.operators.Similarity.writeIvfIndexFrom(emb, tmp,
             nQueries = 10, nlist = 8, lloydIters = 1))
-        val work = Files.createTempDirectory("graft-bench-ivfdelwork").toString
-        copyDir(base, work)
-        try {
+        withTempDir("graft-bench-ivfdelwork") { work =>
+          copyDir(base, work)
           graft.operators.Similarity.ivfDelete(
             s, emb.filter(col("vec_id") % 10 === 3).select(col("vec_id")), work)
           graft.operators.Similarity.ivfTopKFromIndex(s, d, work,
             nprobe = Int.MaxValue).localCheckpoint(true)
-        } finally deleteDir(work)
+        }
       }), bruteTopkDeleteSql),
     // C56: MIPS — exact brute force (gated), the norm-augmented IVF probe
     // path (rows-only), and its exhaustive twin (every bucket probed, exact
@@ -6321,19 +6234,15 @@ object SparkEntry {
     // Must equal mm_phash_pairs row-for-row (spec-pinned; same planting).
     Entry("mm_phash_store", (s, d) => {
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft-phs")
-      try {
+      withTempDir("graft-phs") { tmp =>
         val m = graft.multimodal.Multimodal.mediaTable(s, d)
         val dup = m.filter(x =>
             (x.kind == "image" || x.kind == "video") && x.media_id % 5 == 0)
           .map(x => x.copy(media_id = x.media_id + 10000000L))
-        graft.multimodal.Multimodal.writePhashStore(m, tmp.toString)
-        graft.multimodal.Multimodal.ingestPhashes(dup, tmp.toString)
-        graft.multimodal.Multimodal.phashPairsFromStore(s, tmp.toString)
+        graft.multimodal.Multimodal.writePhashStore(m, tmp)
+        graft.multimodal.Multimodal.ingestPhashes(dup, tmp)
+        graft.multimodal.Multimodal.phashPairsFromStore(s, tmp)
           .localCheckpoint(true)
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively()
       }
     },
       storeServed((s, d) => {

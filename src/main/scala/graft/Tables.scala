@@ -102,19 +102,17 @@ object Tables {
   // listing per table VERSION (ADVICE r12: a plain path key served stale
   // sizes for the JVM's lifetime if a session regenerated or grew a table
   // in place, mis-sizing every later spread). The per-call cost is one
-  // getFileStatus stat — the same metadata the scan planner re-reads —
+  // StoreFiles.version stat — the same metadata the scan planner re-reads —
   // and a regeneration at the same path bumps the mtime, invalidating
   // naturally. The driver has in fact regenerated testdata mid-round
   // (r7, r13), so this is a live hazard, not a theoretical one.
   private val bytesCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-  private def dirBytes(s: SparkSession, path: String): Long = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-    val mtime =
-      try fs.getFileStatus(hp).getModificationTime
-      catch { case _: java.io.FileNotFoundException => return 0L }
-    bytesCache.computeIfAbsent((path, mtime),
-      _ => fs.getContentSummary(hp).getLength)
-  }
+  private def dirBytes(s: SparkSession, path: String): Long =
+    graft.sources.StoreFiles.version(s, path).fold(0L)(mtime =>
+      bytesCache.computeIfAbsent((path, mtime),
+        _ => {
+          val hp = new org.apache.hadoop.fs.Path(path)
+          hp.getFileSystem(s.sessionState.newHadoopConf()).getContentSummary(hp).getLength
+        }).longValue)
 }

@@ -22,7 +22,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     entries.foreach { e =>
       // a stale output from an earlier run must not pass for this one
-      new scala.reflect.io.Directory(new java.io.File(s"$outDir/${e.name}")).deleteRecursively()
+      SparkEntry.deleteDir(s"$outDir/${e.name}")
       try e.build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/${e.name}")
       catch { case t: Throwable =>

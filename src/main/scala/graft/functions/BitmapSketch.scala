@@ -470,7 +470,7 @@ case class BitmapAggExpr(
     copy(child = c)
 }
 
-/** bitmap_or_agg(bitmap): union of serialized bitmaps — the rollup merge. */
+/** roaring_or_agg(bitmap): union of serialized bitmaps — the rollup merge. */
 case class BitmapOrAggExpr(
     child: Expression,
     override val mutableAggBufferOffset: Int = 0,
@@ -480,7 +480,7 @@ case class BitmapOrAggExpr(
   override def inputTypes: Seq[GraftShims.AbstractType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
-  override def prettyName: String = "bitmap_or_agg"
+  override def prettyName: String = "roaring_or_agg"
   override def createAggregationBuffer(): LongBitmap = new LongBitmap
   override def update(b: LongBitmap, input: InternalRow): LongBitmap = {
     val v = child.eval(input)
@@ -500,7 +500,7 @@ case class BitmapOrAggExpr(
     copy(child = c)
 }
 
-/** bitmap_and_agg(bitmap): intersection of serialized bitmaps (exact common
+/** roaring_and_agg(bitmap): intersection of serialized bitmaps (exact common
   * audience). The empty-input identity is the `universe` marker buffer;
   * an all-null group evaluates to the EMPTY bitmap (SQL-friendly: no rows
   * in common is an empty audience, not "everyone"). */
@@ -513,7 +513,7 @@ case class BitmapAndAggExpr(
   override def inputTypes: Seq[GraftShims.AbstractType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
-  override def prettyName: String = "bitmap_and_agg"
+  override def prettyName: String = "roaring_and_agg"
   override def createAggregationBuffer(): LongBitmap = new LongBitmap(universe = true)
   override def update(b: LongBitmap, input: InternalRow): LongBitmap = {
     val v = child.eval(input)
@@ -536,12 +536,12 @@ case class BitmapAndAggExpr(
     copy(child = c)
 }
 
-/** bitmap_count(bitmap): exact cardinality of a serialized bitmap. */
+/** roaring_count(bitmap): exact cardinality of a serialized bitmap. */
 case class BitmapCountExpr(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[GraftShims.AbstractType] = Seq(BinaryType)
   override def dataType: DataType = LongType
-  override def prettyName: String = "bitmap_count"
+  override def prettyName: String = "roaring_count"
   override def nullSafeEval(input: Any): Any =
     BitmapKernel.count(input.asInstanceOf[Array[Byte]])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

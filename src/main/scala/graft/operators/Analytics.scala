@@ -455,11 +455,12 @@ object Analytics {
     // late-join twice (plans/r13/q21_waiting_suppliers_before.txt). At
     // 100 TB that is 2× the heaviest subtree; materializing the filtered
     // summary (l_orderkey, l_suppkey — two longs per late line) computes
-    // it once. Lazy: materialization rides the first consumer.
+    // it once. Eager: a lazy checkpoint materializing inside a consumer's
+    // broadcast of the same lineage can deadlock Spark 4.1's scheduler.
     val late = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .filter(col("l_shipdate") > col("o_orderdate") + expr(s"INTERVAL $delayDays DAYS"))
       .select(col("l_orderkey"), col("l_suppkey"))
-      .localCheckpoint(false)
+      .localCheckpoint(true)
     // EXISTS another supplier's line on the same order — applied first so
     // the anti join's shuffled left input is the (small) late∧multi subset.
     // (Anti-first looks like it would let ReuseExchange share the late

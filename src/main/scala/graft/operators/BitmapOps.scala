@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
 
 import graft.Tables
+import graft.sources.StoreFiles
 import graft.functions.BitmapFunctions._
 import graft.functions.Cols.tsMs
 
@@ -141,8 +142,7 @@ object BitmapOps {
     * the tombstone mask (if any), count. */
   def bitmapStoreServe(spark: SparkSession, storeDir: String,
                        fromDay: Long, toDay: Long): DataFrame = {
-    val merged = spark.read.schema(storeSchema)
-      .parquet(s"$storeDir/bitmaps.parquet")
+    val merged = bitmapsOf(spark, storeDir)
       .filter(col("day_idx") >= fromDay && col("day_idx") <= toDay)
       .groupBy("event_type")
       .agg(bitmapOrAgg(col("bm")).as("bm"),
@@ -154,19 +154,16 @@ object BitmapOps {
       col("n_events"), col("n_days"))
   }
 
+  private def bitmapsOf(spark: SparkSession, storeDir: String): DataFrame =
+    StoreFiles.table(spark, s"$storeDir/bitmaps.parquet", Some(storeSchema))
+
   private def tombPath(storeDir: String) = s"$storeDir/tombstones.parquet"
 
-  /** The current tombstone bitmap, if any — existence probed through
-    * Hadoop's FileSystem (hdfs:// / s3a:// stores; the embDataTag
-    * discipline: java.io would silently read "absent" forever). */
+  /** The current tombstone bitmap, if any. */
   private def tombstoneOf(spark: SparkSession,
-                          storeDir: String): Option[Array[Byte]] = {
-    val p = new org.apache.hadoop.fs.Path(tombPath(storeDir))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else Some(spark.read.parquet(tombPath(storeDir))
-      .head().getAs[Array[Byte]]("tomb"))
-  }
+                          storeDir: String): Option[Array[Byte]] =
+    StoreFiles.optional(spark, tombPath(storeDir))
+      .map(_.head().getAs[Array[Byte]]("tomb"))
 
   /** A80g: USER TAKEDOWN for the bitmap store — the right-to-be-forgotten
     * operation a billing-grade distinct-users dashboard needs: the
@@ -185,35 +182,27 @@ object BitmapOps {
     userIds.foreach(bm.add)
     tombstoneOf(spark, storeDir).foreach(prev =>
       bm.or(graft.functions.LongBitmap.deserialize(prev)))
-    Seq(Tuple1(bm.serialize())).toDF("tomb")
-      .coalesce(1).write.mode("overwrite").parquet(tombPath(storeDir))
+    val tomb = Seq(Tuple1(bm.serialize())).toDF("tomb").coalesce(1)
+    StoreFiles.replace(spark, tombPath(storeDir))(tomb.write.parquet(_))
   }
 
   /** Fold the tombstone into rewritten partials and clear it: batches
     * OR-merge per (type, day), the mask is AND-NOT'd in, and the result
-    * lands as net batch 0 — byte-canonical serialization makes each
-    * rewritten partial EQUAL to one a store built without the forgotten
-    * users would hold (spec-pinned). The live view materializes BEFORE
-    * the overwrite (read-own-writes guard), and the tombstone deletes
-    * LAST (a crash between the two steps leaves a correct, still-masked
-    * store). */
+    * swaps in as net batch 0 ([[StoreFiles.replace]]) — byte-canonical
+    * serialization makes each rewritten partial EQUAL to one a store built
+    * without the forgotten users would hold (spec-pinned). The tombstone
+    * is removed LAST (a crash between the two steps leaves a correct,
+    * still-masked store). */
   def bitmapStoreCompact(spark: SparkSession, storeDir: String): Unit = {
     val tomb = tombstoneOf(spark, storeDir)
-    val live = spark.read.schema(storeSchema)
-      .parquet(s"$storeDir/bitmaps.parquet")
+    val live = bitmapsOf(spark, storeDir)
       .groupBy("event_type", "day_idx")
       .agg(bitmapOrAgg(col("bm")).as("bm"), sum(col("n_events")).as("n_events"))
     val masked = tomb.fold(live)(t =>
       live.withColumn("bm", bitmapAndNot(col("bm"), lit(t))))
-      .localCheckpoint(true) // read-own-writes: materialize, then overwrite
-    val conf = spark.sessionState.newHadoopConf()
-    val bmDir = new org.apache.hadoop.fs.Path(s"$storeDir/bitmaps.parquet")
-    val fs = bmDir.getFileSystem(conf) // Hadoop FS: hdfs://s3a:// stores
-    fs.delete(bmDir, true)
-    masked.coalesce(1).write.mode("overwrite")
-      .parquet(s"$storeDir/bitmaps.parquet/batch_id=0")
-    fs.delete(new org.apache.hadoop.fs.Path(tombPath(storeDir)), true)
-    ()
+    StoreFiles.replace(spark, s"$storeDir/bitmaps.parquet")(tmp =>
+      masked.coalesce(1).write.parquet(s"$tmp/batch_id=0"))
+    StoreFiles.remove(spark, tombPath(storeDir))
   }
 
   /** A80e gate entry: 80/20 split by event_id → base write + one ingest →

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.StoreFiles
 
 /** Corpus deduplication (C1–C4).
   *
@@ -248,7 +249,7 @@ object Dedup {
       (p.getAs[Int]("shingle_k"), p.getAs[Int]("num_hashes"), p.getAs[Int]("bands"))
     require(numHashes % bands == 0,
       s"bands=$bands must divide numHashes=$numHashes (trailing hashes would be silently un-banded)")
-    val storeSigs = spark.read.parquet(s"$storeDir/sigs.parquet")
+    val storeSigs = StoreFiles.table(spark, s"$storeDir/sigs.parquet")
     val batchSigs = minhashSigs(newDocs, shingleK, numHashes)
       .filter(col("sig").isNotNull)
       .dropDuplicates("doc_id") // a doubly-staged batch row must not land twice
@@ -336,7 +337,7 @@ object Dedup {
     * Returns the NEWLY tombstoned ids. */
   def signatureStoreForget(ids: DataFrame, storeDir: String): DataFrame = {
     val spark = ids.sparkSession
-    val present = spark.read.parquet(s"$storeDir/sigs.parquet")
+    val present = StoreFiles.table(spark, s"$storeDir/sigs.parquet")
       .select(col("doc_id"))
     val newTombs = ids.select(col("doc_id")).distinct()
       .join(present, Seq("doc_id"), "left_semi")
@@ -346,39 +347,33 @@ object Dedup {
     newTombs
   }
 
-  /** Fold tombstones into the signature store: rewrite sigs + bands to
-    * live rows and clear the tombstone set — after this a forgotten id may
-    * be re-ingested. Tombstones are deleted LAST, so a crash between the
-    * rewrites leaves every read path (masked or not) still correct on
-    * retry. Returns the number of documents dropped. */
+  /** Fold tombstones into the signature store: swap sigs + bands to live
+    * rows ([[StoreFiles.replace]]) and clear the tombstone set — after this
+    * a forgotten id may be re-ingested. Tombstones are removed LAST, so a
+    * crash between the swaps leaves every read path (masked or not) still
+    * correct on retry. Returns the number of documents dropped. */
   def signatureStoreCompact(spark: SparkSession, storeDir: String): Long = {
-    val tombs = sigTombstones(spark, storeDir).localCheckpoint(true)
-    val n = tombs.count()
+    val n = sigTombstones(spark, storeDir).count()
     if (n > 0) {
-      val liveS = liveStoreSigs(spark, storeDir).localCheckpoint(true)
-      val liveB = liveStoreBands(spark, storeDir).localCheckpoint(true)
-      liveB.write.mode("overwrite").parquet(s"$storeDir/bands.parquet")
-      liveS.write.mode("overwrite").parquet(s"$storeDir/sigs.parquet")
-      val p = new org.apache.hadoop.fs.Path(s"$storeDir/tombstones.parquet")
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+      StoreFiles.replace(spark, s"$storeDir/bands.parquet")(
+        liveStoreBands(spark, storeDir).write.parquet(_))
+      StoreFiles.replace(spark, s"$storeDir/sigs.parquet")(
+        liveStoreSigs(spark, storeDir).write.parquet(_))
+      StoreFiles.remove(spark, s"$storeDir/tombstones.parquet")
     }
     n
   }
 
-  private def sigTombstones(spark: SparkSession, storeDir: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(s"$storeDir/tombstones.parquet")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(path))
-      spark.read.parquet(s"$storeDir/tombstones.parquet").select(col("doc_id"))
-    else spark.range(0).select(col("id").as("doc_id"))
-  }
+  private def sigTombstones(spark: SparkSession, storeDir: String): DataFrame =
+    StoreFiles.optional(spark, s"$storeDir/tombstones.parquet")
+      .fold(spark.range(0).select(col("id").as("doc_id")))(_.select(col("doc_id")))
 
   private def liveStoreSigs(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(s"$storeDir/sigs.parquet")
+    StoreFiles.table(spark, s"$storeDir/sigs.parquet")
       .join(sigTombstones(spark, storeDir), Seq("doc_id"), "left_anti")
 
   private def liveStoreBands(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(s"$storeDir/bands.parquet")
+    StoreFiles.table(spark, s"$storeDir/bands.parquet")
       .join(sigTombstones(spark, storeDir), Seq("doc_id"), "left_anti")
 
   /** SimHash per doc via the native [[graft.functions.SimHashExpr]] kernel —
@@ -680,64 +675,20 @@ object Dedup {
   // s3a://), NEVER through a single-row DataFrame — a local-relation write
   // ships the bytes as one task's binary (TaskSetManager warnings at MB
   // filters, an unworkable task at GB production geometry). Meta (sizing
-  // params) stays a tiny parquet row beside it.
-  private def writeStoreBytes(spark: SparkSession, path: String,
-                              bytes: Array[Byte]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // temp-write + rename swap (r11 advice — same discipline as
-    // cdcCompact): this file IS the store, with no rebuild source, so a
-    // crash mid-write must never leave a truncated filter. The previous
-    // bytes stay on disk (as `.old` for one instant) until the new write
-    // is complete; FileSystem.rename failures surface as booleans, so
-    // each is checked. readStoreBytes recovers the one crash window
-    // (between the two renames) from `.old`.
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    fs.delete(tmp, true) // prior crashed attempt
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    if (fs.exists(p)) {
-      fs.delete(old, true)
-      require(fs.rename(p, old),
-        s"filter store swap: rename $p -> $old failed; store untouched")
-    }
-    require(fs.rename(tmp, p),
-      s"filter store swap: rename $tmp -> $p failed; prior bytes in $old")
-    fs.delete(old, true)
-    ()
-  }
-
+  // params) stays a tiny parquet row beside it. The file IS the store, with
+  // no rebuild source, so every rewrite swaps through
+  // StoreFiles.writeBytes: a crash mid-write never leaves a truncated filter.
   private def readStoreBytes(spark: SparkSession, path: String): Array[Byte] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) {
-      val old = new org.apache.hadoop.fs.Path(path + ".old")
-      val legacy = new org.apache.hadoop.fs.Path(
-        path.stripSuffix(".bin") + ".parquet")
-      if (fs.exists(old)) {
-        // writeStoreBytes crashed between its two renames: the previous
-        // store bytes are intact in `.old` — recover them
-        require(fs.rename(old, p),
-          s"filter store recovery: rename $old -> $p failed")
-      } else if (path.endsWith(".bin") && fs.exists(legacy)) {
-        // r11 advice: the store format changed incompatibly in r11
-        // (single-row parquet + putString(md5) -> raw .bin + meta +
-        // putLong(xxhash64(md5))); a stale directory must fail loudly,
-        // not with a raw missing-file error
-        sys.error(s"filter store at $path predates the r11 bin+meta " +
-          s"format (found legacy $legacy, whose putString keying is " +
-          "incompatible with the current xxhash64 keying): rebuild the " +
-          "store with writeBloomStore/writeCountingBloomStore")
-      }
-    }
-    val in = fs.open(p)
-    try {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      in.readFully(0, buf)
-      buf
-    } finally in.close()
+    val legacy = path.stripSuffix(".bin") + ".parquet"
+    // r11 advice: the store format changed incompatibly in r11 (single-row
+    // parquet + putString(md5) -> raw .bin + meta + putLong(xxhash64(md5)));
+    // a stale directory must fail loudly, not with a raw missing-file error
+    if (!StoreFiles.exists(spark, path) && StoreFiles.exists(spark, legacy))
+      sys.error(s"filter store at $path predates the r11 bin+meta " +
+        s"format (found legacy $legacy, whose putString keying is " +
+        "incompatible with the current xxhash64 keying): rebuild the " +
+        "store with writeBloomStore/writeCountingBloomStore")
+    StoreFiles.readBytes(spark, path)
   }
 
   private def writeFilterMeta(spark: SparkSession, path: String,
@@ -780,7 +731,7 @@ object Dedup {
                       fpp: Double = 0.01): Unit = {
     val spark = docs.sparkSession
     val bytes = buildBloomBytes(bloomKeys(docs), expectedItems, fpp)
-    writeStoreBytes(spark, s"$storeDir/bloom.bin", bytes)
+    StoreFiles.writeBytes(spark, s"$storeDir/bloom.bin", bytes)
     writeFilterMeta(spark, s"$storeDir/bloom_meta.parquet", expectedItems, fpp)
   }
 
@@ -820,7 +771,7 @@ object Dedup {
       new java.io.ByteArrayInputStream(batchBytes)))
     val bos = new java.io.ByteArrayOutputStream()
     merged.writeTo(bos)
-    writeStoreBytes(spark, s"$storeDir/bloom.bin", bos.toByteArray)
+    StoreFiles.writeBytes(spark, s"$storeDir/bloom.bin", bos.toByteArray)
     // r11 advice: a long-lived session ingesting many batches must not
     // accumulate MB-sized filter broadcasts and checkpoint blocks until
     // the GC-driven ContextCleaner runs — materialize the (per-source-
@@ -941,7 +892,7 @@ object Dedup {
     val bytes = bloomKeys(docs)
       .agg(cbfAgg(col("h"), m, k).as("f"))
       .head().getAs[Array[Byte]]("f")
-    writeStoreBytes(spark, s"$storeDir/cbloom.bin", bytes)
+    StoreFiles.writeBytes(spark, s"$storeDir/cbloom.bin", bytes)
     writeFilterMeta(spark, s"$storeDir/cbloom_meta.parquet", expectedItems, fpp)
   }
 
@@ -988,7 +939,7 @@ object Dedup {
         col("n_novel").cast("double") / col("n_docs").cast("double"))
     val batchBytes = keyed.agg(cbfAgg(col("h"), old.m, old.k).as("f"))
       .head().getAs[Array[Byte]]("f")
-    writeStoreBytes(spark, s"$storeDir/cbloom.bin",
+    StoreFiles.writeBytes(spark, s"$storeDir/cbloom.bin",
       graft.functions.CountingBloom.add(bytes, batchBytes))
     // free the filter broadcast + batch checkpoint eagerly (see bloomIngest)
     val result = out.localCheckpoint(true)
@@ -1013,7 +964,7 @@ object Dedup {
     val out = keyed.groupBy("source").agg(count(lit(1)).as("n_forgotten"))
     val batchBytes = keyed.agg(cbfAgg(col("h"), old.m, old.k).as("f"))
       .head().getAs[Array[Byte]]("f")
-    writeStoreBytes(spark, s"$storeDir/cbloom.bin",
+    StoreFiles.writeBytes(spark, s"$storeDir/cbloom.bin",
       graft.functions.CountingBloom.subtract(bytes, batchBytes))
     // free the batch checkpoint eagerly (see bloomIngest)
     val result = out.localCheckpoint(true)
@@ -1567,13 +1518,9 @@ object Dedup {
     out
   }
 
-  private def gramForgetLedger(spark: SparkSession, storeDir: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(s"$storeDir/forgotten.parquet")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(path)) spark.read.parquet(s"$storeDir/forgotten.parquet")
-    else spark.range(0).select(col("id").as("doc_id"),
-      col("id").as("forget_id"))
-  }
+  private def gramForgetLedger(spark: SparkSession, storeDir: String): DataFrame =
+    StoreFiles.optional(spark, s"$storeDir/forgotten.parquet").getOrElse(
+      spark.range(0).select(col("id").as("doc_id"), col("id").as("forget_id")))
 
   /** C54b: apply the cut — each doc's non-duplicated token segments
     * stitched back together (an in-row fold over the doc's own sorted

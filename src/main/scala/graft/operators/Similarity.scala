@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.StoreFiles
 import graft.functions.VectorFunctions._
 
 /** Embedding similarity search (C5–C7).
@@ -853,37 +854,36 @@ object Similarity {
 
   /** The persisted curve's recall at exactly (nprobe, k), if measured. */
   private def indexCurveRecall(spark: SparkSession, indexDir: String,
-                               nprobe: Int, k: Int): Option[Double] = {
-    val path = new org.apache.hadoop.fs.Path(s"$indexDir/recall.parquet")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) return None
-    val curve = spark.read.parquet(s"$indexDir/recall.parquet")
-    if (!curve.columns.contains("k")) return None
-    curve.filter(col("k") === k && col("nprobe") === nprobe)
-      .collect().headOption.map(_.getAs[Double]("recall"))
-  }
+                               nprobe: Int, k: Int): Option[Double] =
+    StoreFiles.optional(spark, s"$indexDir/recall.parquet")
+      .filter(_.columns.contains("k"))
+      .flatMap(_.filter(col("k") === k && col("nprobe") === nprobe)
+        .collect().headOption.map(_.getAs[Double]("recall")))
 
   /** Per-JVM cache of the curve-derived probe decision, keyed by
-    * (indexDir, targetRecall, k). The decision is INDEX metadata — a
-    * serving session resolves it once at index load, not with a
-    * recall.parquet read + collect on every query call (that per-call
-    * overhead was ~3 extra Spark jobs per query, the bulk of the r7
-    * emb_ivf_query slowdown vs the fixed-nprobe r6 path). Persisted
-    * indexes are immutable-by-convention (writers use a new data-tagged
-    * dir per source version), so path-keyed caching is sound. */
-  private val nprobeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double, Int), Int]()
+    * (recall.parquet path, its version, targetRecall, k). The decision is
+    * INDEX metadata — a serving session resolves it once per index
+    * version, not with a recall.parquet read + collect on every query call
+    * (that per-call overhead was ~3 extra Spark jobs per query, the bulk of
+    * the r7 emb_ivf_query slowdown vs the fixed-nprobe r6 path). The
+    * version ([[StoreFiles.version]], one stat per call) makes an index
+    * rewritten at the same path re-resolve. */
+  private val nprobeCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Option[Long], Double, Int), Int]()
 
-  /** PQ geometry (m = number of sub-quantizers) per persisted index — the
-    * same immutable-by-convention path-keyed caching as [[nprobeCache]]:
-    * r13, the `codebooks.agg(max(sub)).head()` lookup was one full driver
-    * job per SERVE call (~40 ms of pure latency at gate SF) re-proving a
+  /** PQ geometry (m = number of sub-quantizers) per persisted index
+    * version, keyed like [[nprobeCache]] on (codebooks path, version): r13,
+    * the `codebooks.agg(max(sub)).head()` lookup was one full driver job
+    * per SERVE call (~40 ms of pure latency at gate SF) re-proving a
     * constant of the index. */
   private val pqMCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private def indexPqM(indexDir: String, codebooks: DataFrame): Int =
-    pqMCache.computeIfAbsent(indexDir,
+    new java.util.concurrent.ConcurrentHashMap[(String, Option[Long]), Integer]()
+  private def indexPqM(spark: SparkSession, indexDir: String,
+                       codebooks: DataFrame): Int = {
+    val path = s"$indexDir/codebooks.parquet"
+    pqMCache.computeIfAbsent((path, StoreFiles.version(spark, path)),
       _ => codebooks.agg(max(col("sub"))).head().getInt(0) + 1).intValue()
+  }
 
   /** nprobe for a PERSISTED index at `targetRecall`: the smallest value
     * whose measured curve (`indexDir/recall.parquet`, written at build
@@ -892,19 +892,19 @@ object Similarity {
     * k=5 row must not size probes for a k=50 query. Falls back to the
     * generic [[defaultNprobe]] envelope when no curve exists (indexes
     * persisted before measurement existed) or when no row was measured at
-    * the query's k. Existence goes through Hadoop's FileSystem, not
-    * java.io — the index dir may be hdfs:// or s3a://. */
+    * the query's k. */
   private def indexNprobe(spark: SparkSession, indexDir: String, nlist: => Int,
-                          targetRecall: Double, k: Int): Int =
-    nprobeCache.computeIfAbsent((indexDir, targetRecall, k), _ =>
-      indexNprobeUncached(spark, indexDir, nlist, targetRecall, k))
+                          targetRecall: Double, k: Int): Int = {
+    val path = s"$indexDir/recall.parquet"
+    val version = StoreFiles.version(spark, path)
+    nprobeCache.computeIfAbsent((path, version, targetRecall, k), _ =>
+      if (version.isEmpty) defaultNprobe(nlist, targetRecall)
+      else indexNprobeUncached(spark, path, nlist, targetRecall, k))
+  }
 
-  private def indexNprobeUncached(spark: SparkSession, indexDir: String, nlist: Int,
+  private def indexNprobeUncached(spark: SparkSession, path: String, nlist: Int,
                                   targetRecall: Double, k: Int): Int = {
-    val path = new org.apache.hadoop.fs.Path(s"$indexDir/recall.parquet")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) return defaultNprobe(nlist, targetRecall)
-    val curve = spark.read.parquet(s"$indexDir/recall.parquet")
+    val curve = spark.read.parquet(path)
     if (!curve.columns.contains("k")) return defaultNprobe(nlist, targetRecall)
     val atK = curve.filter(col("k") === k)
       .orderBy("nprobe").collect() // ≤ nlist rows — bounded
@@ -1400,7 +1400,7 @@ object Similarity {
     val centroids = spark.read.parquet(s"$indexDir/centroids.parquet")
     val centsRow = centroids
       .agg(collect_list(struct(col("c_id"), col("cv"), col("cn"))).as("cents"))
-    val existing = spark.read.parquet(s"$indexDir/assignments.parquet")
+    val existing = StoreFiles.table(spark, s"$indexDir/assignments.parquet")
       .select(col("vec_id")).distinct()
     val assigned = withNorm(batch)
       .join(existing, Seq("vec_id"), "left_anti")
@@ -1429,7 +1429,7 @@ object Similarity {
     * ids. */
   def ivfDelete(spark: SparkSession, ids: DataFrame,
                 indexDir: String): DataFrame = {
-    val present = spark.read.parquet(s"$indexDir/assignments.parquet")
+    val present = StoreFiles.table(spark, s"$indexDir/assignments.parquet")
       .select(col("vec_id")).distinct()
     val newTombs = ids.select(col("vec_id")).distinct()
       .join(present, Seq("vec_id"), "left_semi")
@@ -1439,37 +1439,31 @@ object Similarity {
     newTombs
   }
 
-  /** Fold tombstones into the assignment table: rewrite it to live rows
-    * only and clear the tombstone set — after this, serving reads carry no
-    * anti-join and a formerly-deleted id may be re-ingested. The live view
-    * materializes BEFORE the overwrite (read-own-writes guard). Returns
-    * the number of rows dropped. */
+  /** Fold tombstones into the assignment table: swap it to live rows only
+    * ([[StoreFiles.replace]]) and clear the tombstone set — after this,
+    * serving reads carry no anti-join and a formerly-deleted id may be
+    * re-ingested. The live view is checkpointed because its count is read
+    * after the swap. Returns the number of rows dropped. */
   def ivfCompact(spark: SparkSession, indexDir: String): Long = {
-    val all = spark.read.parquet(s"$indexDir/assignments.parquet")
-    val before = all.count()
+    val path = s"$indexDir/assignments.parquet"
+    val before = StoreFiles.table(spark, path).count()
     val live = liveAssignments(spark, indexDir).localCheckpoint(true)
-    live.write.mode("overwrite").parquet(s"$indexDir/assignments.parquet")
-    val tombs = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones.parquet")
-    tombs.getFileSystem(spark.sessionState.newHadoopConf()).delete(tombs, true)
+    StoreFiles.replace(spark, path)(live.write.parquet(_))
+    StoreFiles.remove(spark, s"$indexDir/tombstones.parquet")
     before - live.count()
   }
 
   /** The tombstone set, or an empty (vec_id) table when none was ever
-    * written. Existence via Hadoop's FileSystem, not java.io — the index
-    * dir may be hdfs:// or s3a://. */
-  private def readTombstones(spark: SparkSession, indexDir: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones.parquet")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(path))
-      spark.read.parquet(s"$indexDir/tombstones.parquet").select(col("vec_id"))
-    else spark.range(0).select(col("id").as("vec_id"))
-  }
+    * written. */
+  private def readTombstones(spark: SparkSession, indexDir: String): DataFrame =
+    StoreFiles.optional(spark, s"$indexDir/tombstones.parquet")
+      .fold(spark.range(0).select(col("id").as("vec_id")))(_.select(col("vec_id")))
 
   /** The serving view of the assignment table: tombstoned ids masked out.
     * The tombstone side is deletion-sized — Spark broadcasts the anti-join
     * build side while small, exactly the wanted shape. */
   private def liveAssignments(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/assignments.parquet")
+    StoreFiles.table(spark, s"$indexDir/assignments.parquet")
       .join(readTombstones(spark, indexDir), Seq("vec_id"), "left_anti")
 
   /** Query a persisted IVF index: identical results to [[ivfTopK]] with the
@@ -1636,7 +1630,7 @@ object Similarity {
                          rerank: Int = 4, targetRecall: Double = 0.85): DataFrame = {
     val centroids = spark.read.parquet(s"$indexDir/centroids.parquet")
     val codebooks = spark.read.parquet(s"$indexDir/codebooks.parquet")
-    val m = indexPqM(indexDir, codebooks)
+    val m = indexPqM(spark, indexDir, codebooks)
     val probes =
       if (nprobe > 0) nprobe
       else indexNprobe(spark, indexDir, centroids.count().toInt, targetRecall, k)
@@ -2478,22 +2472,17 @@ object Similarity {
     * Scale shape: per iteration ONE shuffle join of the n·k edge list
     * against the n-row rank frontier + a dst-keyed partial-agg sum (the
     * label-prop discipline), dangling mass is a 1-row broadcast scalar,
-    * and the frontier LAZILY localCheckpoints every round (star-CC
-    * lineage truncation; the r11 overhead shave — see below). Nothing
-    * corpus-sized is ever collected or broadcast.
+    * and the frontier localCheckpoints every round (star-CC lineage
+    * truncation). Nothing corpus-sized is ever collected or broadcast.
     *
     * r11 fixed-overhead shave (VERDICT r10 #7 — the 4.4 s sf0.1 base was
     * 10 sequential checkpointed jobs of mostly scheduling cost): (a) the
     * dangling set is tagged ONCE as a boolean column riding the rank
     * frontier, so the per-iteration mass agg is a filter+sum on the
-    * checkpointed frontier instead of a semi-join against a second table;
-    * (b) every round's checkpoint is LAZY — lineage still truncates, but
-    * materialization rides the next round's dangling-mass broadcast
-    * instead of costing a dedicated eager job, so each iteration
-    * schedules ONE job, not two (measured 5.7 → 4.3 s on a like host;
-    * 3.9 → 2.8 s quiet). Both changes are value-neutral BY CONSTRUCTION:
-    * the decimal quantization makes every sum summation-order-free, so
-    * rank bytes are bit-identical iteration for iteration (spec-pinned). */
+    * checkpointed frontier instead of a semi-join against a second table.
+    * Value-neutral BY CONSTRUCTION: the decimal quantization makes every
+    * sum summation-order-free, so rank bytes are bit-identical iteration
+    * for iteration (spec-pinned). */
   private[graft] def pageRankOf(nodes: DataFrame, edges: DataFrame,
                                 iters: Int = 10,
                                 damping: Double = 0.85): DataFrame = {
@@ -2514,7 +2503,7 @@ object Similarity {
           Seq("id"), "left")
         .select(col("id"), col("has_out").isNull.as("dang"),
           lit(init).cast(dec).as("r"))
-        .localCheckpoint(false) // lazy: the first dm agg materializes it
+        .localCheckpoint(true)
       var i = 0
       while (i < iters) {
         val dm = ranks.filter(col("dang"))
@@ -2532,22 +2521,16 @@ object Similarity {
               lit(damping) * col("dm").cast("double") / n +
               coalesce(col("cs"), lit(0).cast(dec)).cast("double"))
               .cast(dec).as("r"))
-        // LAZY checkpoint: lineage still truncates (star-CC discipline),
-        // but materialization rides the NEXT job that touches the frontier
-        // — the next iteration's dangling-mass agg — instead of costing a
-        // dedicated eager job per iteration. Net: one scheduled job per
-        // iteration, not two, with zero recomputation (the first touch
-        // persists the RDD).
-        // r13 (VERDICT r12 #6): checkpoint cadence parameterized to A/B
-        // "fuse k iterations per plan segment" — an un-checkpointed
-        // frontier is consumed TWICE next round (dm agg + contrib join),
-        // so each skipped checkpoint duplicates that round's join subtree.
-        // Measured at sf0.1/local[32]: every=1 wins (see
-        // OPTIMIZATION_r13.md); the knob stays for cluster re-measurement.
+        // checkpoint every iteration: it truncates the lineage (star-CC
+        // discipline), and an un-checkpointed frontier is consumed TWICE
+        // next round (dm agg + contrib join), duplicating that round's join
+        // subtree — r13 measured every iteration fastest
+        // (OPTIMIZATION_r13.md). Eager, never lazy: a lazy checkpoint
+        // materializing inside the next round's broadcast of the same
+        // lineage deadlocks Spark 4.1's scheduler (RDD lock vs
+        // RDDCheckpointData lock, taken in opposite orders).
         i += 1
-        val every = ranks.sparkSession.conf
-          .getOption("spark.graft.solver.checkpointEvery").map(_.toInt).getOrElse(1)
-        if (i % every == 0 || i == iters) ranks = ranks.localCheckpoint(false)
+        ranks = ranks.localCheckpoint(true)
       }
       ranks.select(col("id").as("vec_id"), col("r").cast("double").as("pagerank"))
     } finally e.unpersist(blocking = false)

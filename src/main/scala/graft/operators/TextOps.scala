@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.StoreFiles
 import graft.functions.Cols.boundedWindow
 import graft.functions.TextFunctions._
 
@@ -2325,7 +2326,7 @@ object TextOps {
     // table can legitimately hold duplicates until the next compact — an
     // un-deduplicated join side would multiply `marked` rows and inflate
     // every byte count for that content
-    val storedRaw = spark.read.parquet(s"$storeDir/chunks.parquet")
+    val storedRaw = StoreFiles.table(spark, s"$storeDir/chunks.parquet")
       .select(col("chunk_md5")).distinct()
     val stored = tomb.fold(storedRaw)(t =>
         storedRaw.join(t.select("chunk_md5"), Seq("chunk_md5"), "left_anti"))
@@ -2342,18 +2343,26 @@ object TextOps {
       .withColumn("new_bytes", col("total_bytes") - col("known_bytes"))
       .withColumn("novelty",
         col("new_bytes").cast("double") / col("total_bytes").cast("double"))
-    marked.filter(!col("known"))
+    val added = marked.filter(!col("known"))
       .select(col("chunk_md5"), col("len")).distinct()
-      .write.mode("append").parquet(s"$storeDir/chunks.parquet")
-    // resurrection bookkeeping: hashes this batch re-added leave the
-    // tombstone (tombstones are takedown-sized — the rewrite is tiny)
-    tomb.foreach { t =>
-      val kept = t.join(marked.filter(!col("known"))
-          .select(col("chunk_md5")).distinct(),
-        Seq("chunk_md5"), "left_anti")
-        .localCheckpoint(true) // read-own-writes: materialize, then overwrite
-      kept.coalesce(1).write.mode("overwrite")
-        .parquet(cdcTombPath(storeDir))
+    def append(): Unit =
+      added.write.mode("append").parquet(s"$storeDir/chunks.parquet")
+    // with a standing tombstone the append and the resurrections commit as
+    // ONE tombstone swap: every hash about to append is tombstoned first
+    // (none is live, so the store serves the same), the append lands
+    // masked, and the second swap unmasks new and re-added hashes together
+    // — a crash in between serves the pre-batch store (tombstones are
+    // takedown-sized — the rewrites are tiny)
+    tomb.fold(append()) { t =>
+      val hashes = added.select(col("chunk_md5"))
+      StoreFiles.replace(spark, cdcTombPath(storeDir))(
+        t.select(col("chunk_md5")).unionByName(hashes).distinct()
+          .coalesce(1).write.parquet(_))
+      append()
+      StoreFiles.replace(spark, cdcTombPath(storeDir))(
+        StoreFiles.table(spark, cdcTombPath(storeDir))
+          .join(hashes, Seq("chunk_md5"), "left_anti")
+          .coalesce(1).write.parquet(_))
     }
     out
   }
@@ -2364,14 +2373,8 @@ object TextOps {
     s"$storeDir/tombstones.parquet"
 
   private def cdcTombstonesOf(spark: SparkSession,
-                              storeDir: String): Option[DataFrame] = {
-    // Hadoop FileSystem, not java.io: hdfs:// / s3a:// stores (the
-    // embDataTag discipline — java.io would read "absent" forever)
-    val p = new org.apache.hadoop.fs.Path(cdcTombPath(storeDir))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else Some(spark.read.parquet(cdcTombPath(storeDir)))
-  }
+                              storeDir: String): Option[DataFrame] =
+    StoreFiles.optional(spark, cdcTombPath(storeDir))
 
   /** C111e: CONTENT TAKEDOWN for the chunk store — the DMCA/GDPR answer
     * for byte-level dedup state, mirroring A80g's mask-now-rewrite-later
@@ -2400,8 +2403,8 @@ object TextOps {
     val merged = cdcTombstonesOf(spark, storeDir)
       .fold(newTomb)(t => t.select(col("chunk_md5")).unionByName(newTomb)
         .distinct())
-      .localCheckpoint(true) // read-own-writes: materialize, then overwrite
-    merged.coalesce(1).write.mode("overwrite").parquet(cdcTombPath(storeDir))
+    StoreFiles.replace(spark, cdcTombPath(storeDir))(
+      merged.coalesce(1).write.parquet(_))
     out
   }
 
@@ -2411,51 +2414,19 @@ object TextOps {
     * thousands of small files whose listing cost rides every probe). The
     * rewritten table is the live view (distinct chunks ANTI tombstone),
     * coalesced; on a disjoint-content corpus it equals a store built
-    * without the forgotten docs (spec-pinned as set equality). Crash-safe
-    * ordering (r11 self-review — the first cut deleted the live table
-    * BEFORE the rewrite, a window in which a crash lost the whole store):
-    * the rewrite lands in a TEMP sibling first, the swap is two renames
-    * (the chunk data exists on disk in some directory at every instant —
-    * never only in a writer's buffer), and the tombstone deletes LAST. A
-    * crash before the first rename leaves the old still-masked store; a
-    * crash after the second leaves the compacted one; the one instant
-    * between renames leaves the data in `.old` (recover by renaming it
-    * back — data loss is impossible, unlike the delete-first form). */
+    * without the forgotten docs (spec-pinned as set equality). The
+    * rewrite swaps in through [[StoreFiles.replace]] and the tombstone is
+    * removed LAST: a failed or interrupted swap keeps the tombstones, so
+    * taken-down content never reads "known" again. */
   def cdcCompact(spark: SparkSession, storeDir: String): Unit = {
     val tomb = cdcTombstonesOf(spark, storeDir)
-    val raw = spark.read.parquet(s"$storeDir/chunks.parquet")
+    val raw = StoreFiles.table(spark, s"$storeDir/chunks.parquet")
       .select(col("chunk_md5"), col("len")).distinct()
     val live = tomb.fold(raw)(t =>
         raw.join(t.select("chunk_md5"), Seq("chunk_md5"), "left_anti"))
-      .localCheckpoint(true) // read-own-writes: materialize, then rewrite
-    val conf = spark.sessionState.newHadoopConf()
-    val chunkDir = new org.apache.hadoop.fs.Path(s"$storeDir/chunks.parquet")
-    val tmpDir = new org.apache.hadoop.fs.Path(s"$storeDir/chunks.parquet.compacting")
-    val oldDir = new org.apache.hadoop.fs.Path(s"$storeDir/chunks.parquet.old")
-    val fs = chunkDir.getFileSystem(conf)
-    fs.delete(tmpDir, true); fs.delete(oldDir, true) // prior crashed attempts
-    live.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
-    // Hadoop FileSystem.rename reports most failures by RETURNING FALSE,
-    // not throwing (r11 advice): a failed swap must abort before the
-    // tombstone delete, or the old un-compacted chunks stay live while
-    // the tombstones that masked them vanish — taken-down content would
-    // read "known" again, violating the never-over-claim guarantee.
-    require(fs.rename(chunkDir, oldDir),
-      s"cdcCompact: rename $chunkDir -> $oldDir failed; store untouched, tombstones kept")
-    if (!fs.rename(tmpDir, chunkDir)) {
-      // restore the live table before failing — data is still in oldDir.
-      // The compensating rename can itself fail (the premise of this
-      // block); report which state the store actually landed in.
-      val restored = fs.rename(oldDir, chunkDir)
-      sys.error(s"cdcCompact: rename $tmpDir -> $chunkDir failed; " +
-        (if (restored) "old store restored, tombstones kept"
-         else s"restore ALSO failed — data intact in $oldDir, recover by renaming it to $chunkDir; tombstones kept"))
-    }
-    require(fs.exists(chunkDir),
-      s"cdcCompact: $chunkDir missing after swap; tombstones kept")
-    fs.delete(oldDir, true)
-    fs.delete(new org.apache.hadoop.fs.Path(cdcTombPath(storeDir)), true)
-    ()
+    StoreFiles.replace(spark, s"$storeDir/chunks.parquet")(
+      live.coalesce(1).write.parquet(_))
+    StoreFiles.remove(spark, cdcTombPath(storeDir))
   }
 
   // ---- BM25 retrieval (C72) ---------------------------------------------
@@ -2588,16 +2559,18 @@ object TextOps {
     * and the candidate pass all derive from it (the bm25Tf discipline).
     * `excludeBatch` lets a mutation's read side ignore its own partly
     * landed partition (crash-retry). */
-  private val bm25PostingsSchema =
-    "doc_id BIGINT, term STRING, tf BIGINT, batch_id BIGINT"
+  private val bm25PostingsSchema = org.apache.spark.sql.types.StructType
+    .fromDDL("doc_id BIGINT, term STRING, tf BIGINT, batch_id BIGINT")
+
+  // explicit schema: a store whose corpus was empty has zero partitions,
+  // where schema inference would fail; the declared schema also pins the
+  // store layout against drift
+  private def bm25Postings(spark: SparkSession, storeDir: String): DataFrame =
+    StoreFiles.table(spark, s"$storeDir/postings.parquet", Some(bm25PostingsSchema))
 
   private def bm25StoreTf(spark: SparkSession, storeDir: String,
                           excludeBatch: Option[Long] = None): DataFrame = {
-    // explicit schema: a store whose corpus was empty has zero partitions,
-    // where schema inference would fail; the declared schema also pins the
-    // store layout against drift
-    val raw = spark.read.schema(bm25PostingsSchema)
-      .parquet(s"$storeDir/postings.parquet")
+    val raw = bm25Postings(spark, storeDir)
     excludeBatch.fold(raw)(b => raw.filter(col("batch_id") =!= b))
       .groupBy("doc_id", "term").agg(sum(col("tf")).as("tf"))
       .filter(col("tf") =!= 0)
@@ -2616,8 +2589,7 @@ object TextOps {
     // admission check on RAW partition presence, not the net view: a
     // forgotten doc nets to zero but its rows remain until compact, so a
     // re-submission stays blocked — the C74/C75 "deletes are final" rule
-    val posted = spark.read.schema(bm25PostingsSchema)
-      .parquet(s"$storeDir/postings.parquet")
+    val posted = bm25Postings(spark, storeDir)
       .filter(col("batch_id") =!= batchId)
       .select(col("doc_id")).distinct()
     val batch = docs.filter(col("text").isNotNull)
@@ -2653,14 +2625,14 @@ object TextOps {
     neg.select(col("doc_id")).distinct()
   }
 
-  /** Fold every partition to a net batch 0 (dropping netted-out docs);
-    * after this, forgotten ids may be re-ingested. Returns the number of
-    * net postings rows kept. */
+  /** Fold every partition to a net batch 0 (dropping netted-out docs),
+    * swapped in through [[StoreFiles.replace]]; after this, forgotten ids
+    * may be re-ingested. Returns the number of net postings rows kept
+    * (`net` is checkpointed, so the count reads no store file). */
   def bm25Compact(spark: SparkSession, storeDir: String): Long = {
-    val net = bm25StoreTf(spark, storeDir) // checkpointed: safe to overwrite
-    net.withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").mode("overwrite")
-      .parquet(s"$storeDir/postings.parquet")
+    val net = bm25StoreTf(spark, storeDir)
+    StoreFiles.replace(spark, s"$storeDir/postings.parquet")(
+      net.withColumn("batch_id", lit(0L)).write.partitionBy("batch_id").parquet(_))
     net.count()
   }
 

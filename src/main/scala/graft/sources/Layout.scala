@@ -34,10 +34,11 @@ object Layout {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Read back a day range with partition pruning. */
+  /** Read back a day range with partition pruning (a day whose swap a
+    * crashed [[compactPartitions]] cut is read from its previous files). */
   def readEventsRange(spark: SparkSession, path: String,
                       fromDay: String, toDay: String): DataFrame =
-    spark.read.parquet(path)
+    StoreFiles.partitioned(spark, path)
       .filter(col("day") >= fromDay && col("day") <= toDay)
 
   /** Z-ordered layout: interleave the bits of TWO rank-normalized columns
@@ -189,26 +190,20 @@ object Layout {
       }
     }.start()
 
-  /** Compact every `day=` partition dir in place to ~`targetBytes` files
-    * (rewrite to a temp dir, swap). Returns dirs compacted. */
+  /** Compact every `day=` partition dir to ~`targetBytes` files, each
+    * swapped in through [[StoreFiles.replace]] (its hidden temp and `.old`
+    * siblings are invisible to partition discovery). Returns dirs
+    * compacted. */
   def compactPartitions(spark: SparkSession, path: String,
                         targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val root = new java.io.File(path)
-    val dayDirs = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("day="))
-    dayDirs.foreach { d =>
-      val tmp = new java.io.File(root, s".compact-${d.getName}")
-      compact(spark, d.toString, tmp.toString, targetBytes)
-      // fail LOUDLY if the swap can't complete — a silently half-swapped
-      // partition reads as an empty day, which is data loss to every query
-      d.listFiles().foreach(f =>
-        require(f.delete(), s"compaction: cannot delete ${f.getPath}"))
-      require(d.delete(), s"compaction: cannot remove ${d.getPath}")
-      require(tmp.renameTo(d), s"compaction: cannot swap ${tmp.getPath} -> ${d.getPath}")
-      // drop the _SUCCESS marker etc. left by the rewrite
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => !f.getName.endsWith(".parquet")).foreach(_.delete())
-    }
+    StoreFiles.settle(spark, path)
+    val root = new org.apache.hadoop.fs.Path(path)
+    val dayDirs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      .listStatus(root)
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("day="))
+      .map(_.getPath.toString)
+    dayDirs.foreach(d =>
+      StoreFiles.replace(spark, d)(compact(spark, d, _, targetBytes)))
     dayDirs.length
   }
 

@@ -115,8 +115,8 @@ class BitmapSpec extends SparkSuite {
     (1L to 100L).map(i => (i % 3, i % 40)).toDF("g", "id")
       .createOrReplaceTempView("bm_in")
     val out = spark.sql(
-      """SELECT bitmap_count(bitmap_or_agg(bm)) AS total,
-        |       bitmap_count(bitmap_and_agg(bm)) AS common
+      """SELECT roaring_count(roaring_or_agg(bm)) AS total,
+        |       roaring_count(roaring_and_agg(bm)) AS common
         |FROM (SELECT g, bitmap_agg(id) AS bm FROM bm_in GROUP BY g)""".stripMargin)
       .head()
     assert(out.getAs[Long]("total") === 40L)

@@ -33,4 +33,15 @@ class ExtensionsSpec extends SparkSuite {
     assert(r.getAs[Boolean]("has_sig"))
     assert(r.getAs[Boolean]("empty_is_null"))
   }
+
+  test("no graft function name is a Spark built-in; a colliding name is refused") {
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val shadowing = GraftFunctions.all.map(_._1)
+      .filter(FunctionRegistry.builtin.functionExists)
+    assert(shadowing.isEmpty, s"graft names Spark already ships: $shadowing")
+    val builtinName = GraftFunctions.all.head.copy(
+      _1 = new org.apache.spark.sql.catalyst.FunctionIdentifier("bitmap_count"))
+    intercept[IllegalArgumentException](
+      GraftFunctions.absentFromBuiltins(Seq(builtinName)))
+  }
 }

@@ -618,6 +618,22 @@ class SimilaritySpec extends SparkSuite {
     assert(pq == bf, s"only-ivfpq=${pq -- bf} only-brute=${bf -- pq}")
   }
 
+  test("persisted IVF-PQ index rewritten in place with a new m serves like a fresh one") {
+    // the PQ geometry and probe caches key on the index files' version, not
+    // the path alone: a rewrite at the same directory must not serve stale m
+    val idx = Files.createTempDirectory("graft-ivfpq-rewrite").toString
+    val fresh = Files.createTempDirectory("graft-ivfpq-fresh").toString
+    def serve(dir: String) =
+      Similarity.ivfPqTopKFromIndex(spark, sf, dir, nQueries = 10, k = 5).collect()
+        .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
+          r.getAs[Long]("rank"), r.getAs[Double]("cos_sim"))).toSet
+    Similarity.writeIvfPqIndex(spark, sf, idx, nQueries = 10, m = 8)
+    assert(serve(idx).nonEmpty)
+    Similarity.writeIvfPqIndex(spark, sf, idx, nQueries = 10, m = 4)
+    Similarity.writeIvfPqIndex(spark, sf, fresh, nQueries = 10, m = 4)
+    assert(serve(idx) == serve(fresh))
+  }
+
   test("persisted IVF-PQ index: query path matches live run; codes are m bytes per vector") {
     import java.nio.file.Files
     val idx = Files.createTempDirectory("graft-ivfpq-idx").toString
@@ -1224,6 +1240,22 @@ class SimilaritySpec extends SparkSuite {
     assert(star(3L) == star(4L) && star(4L) == star(5L))
     // mass conservation up to the per-step quantization slack
     assert(math.abs(star.values.sum - 1.0) < 1e-8, s"sum=${star.values.sum}")
+  }
+
+  test("pageRankOf: the 2-cycle case 50x in a row finishes under a timeout") {
+    // a lazy per-round checkpoint racing the next round's broadcast once
+    // deadlocked the scheduler here; every checkpoint is eager now
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.global
+    val runs = Future((1 to 50).map { _ =>
+      Similarity.pageRankOf(
+        Seq(1L, 2L).toDF("id"), Seq((1L, 2L), (2L, 1L)).toDF("src", "dst"))
+        .collect().map(_.getAs[Double]("pagerank")).toSeq
+    })
+    Await.result(runs, 10.minutes).foreach(r =>
+      assert(r.forall(x => math.abs(x - 0.5) < 1e-9), r))
   }
 
   test("pageRankOf: dangling node redistributes, isolated node keeps teleport") {

@@ -7,8 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * test run fast). */
 object SparkSuite {
   // GraftSession: tests run with the same extensions (AutoBarrierExplode,
-  // native function registration) as every shipped session.
-  lazy val spark: SparkSession = GraftSession.local(4)
+  // native function registration) as every shipped session. The `crash:`
+  // scheme is StoreCrashSpec's fault-injecting file system.
+  lazy val spark: SparkSession = GraftSession.local(4,
+    Map("spark.hadoop.fs.crash.impl" -> classOf[CrashFs].getName))
   val sf: String = "/root/testdata/sf0.001"
 }
 
