@@ -62,6 +62,10 @@ object GraftSession {
         (1L << 26).toString)
       .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
         (1L << 31).toString)
+      // every keyed stateful operator (graft.streaming.StepProcessor) keeps
+      // its state in column families, which only RocksDB provides
+      .config("spark.sql.streaming.stateStore.providerClass",
+        graft.streaming.StepProcessor.RocksDbProvider)
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
     extraConf.foreach { case (k, v) => b = b.config(k, v) }

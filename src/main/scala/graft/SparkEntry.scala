@@ -38,6 +38,20 @@ object SparkEntry {
       sig.foldLeft(1125899906842597L)((h, c) => 31 * h + c))
   }
 
+  /** The first-touch ANN index `name` for the embeddings under `dir`, kept
+    * under `root` per data version ([[embDataTag]]): built on the first call,
+    * served after. The build lands whole through [[graft.sources.StoreFiles]],
+    * so a reader — another process, or the call after a crashed build — sees
+    * no index or a complete one, never a half-written one. */
+  private[graft] def annIndex(spark: SparkSession, dir: String, name: String,
+                              build: (SparkSession, String, String) => Unit,
+                              root: String = sys.props("java.io.tmpdir")): String = {
+    val idx = s"$root/graft-$name-${embDataTag(spark, dir)}"
+    if (!graft.sources.StoreFiles.exists(spark, idx))
+      graft.sources.StoreFiles.replace(spark, idx)(build(spark, dir, _))
+    idx
+  }
+
   /** C12d planting helpers: xor masks with exactly d bits. `spreadMasks`
     * places flips round-robin across the four 16-bit bands — the layout
     * that DEFEATS 4-band blocking at d ≥ 4 (every band touched) while
@@ -5904,16 +5918,12 @@ object SparkEntry {
     // calls read it — so min-of-reps benches the QUERY path alone, the
     // number a deployed ANN service actually serves. Identity to the live
     // operators is spec-gated (SimilaritySpec persisted-index).
-    Entry("emb_pq_query", (s, d) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft-pq-m8k16-${embDataTag(s, d)}"
-      if (!new java.io.File(s"$idx/codes.parquet").exists) Similarity.writePqIndex(s, d, idx)
-      Similarity.pqTopKFromIndex(s, d, idx)
-    }, timed.copy(scale10 = FirstTouch)),
-    Entry("emb_ivf_query", (s, d) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft-ivf-n8-${embDataTag(s, d)}"
-      if (!new java.io.File(s"$idx/assignments.parquet").exists) Similarity.writeIvfIndex(s, d, idx)
-      Similarity.ivfTopKFromIndex(s, d, idx)
-    }, timed.copy(scale10 = FirstTouch, core = 28)),
+    Entry("emb_pq_query", (s, d) => Similarity.pqTopKFromIndex(s, d,
+      annIndex(s, d, "pq-m8k16", Similarity.writePqIndex(_, _, _))),
+      timed.copy(scale10 = FirstTouch)),
+    Entry("emb_ivf_query", (s, d) => Similarity.ivfTopKFromIndex(s, d,
+      annIndex(s, d, "ivf-n8", Similarity.writeIvfIndex(_, _, _))),
+      timed.copy(scale10 = FirstTouch, core = 28)),
     // exhaustive probes (nprobe = nlist): the IVF machinery must reproduce
     // brute force EXACTLY — oracle-gated end-to-end check of assignment,
     // probing and ranking
@@ -5976,16 +5986,10 @@ object SparkEntry {
     // C121: MMR representative-yet-diverse k-exemplar selection (greedy
     // over a TakeOrdered candidate head — rows-only, spec-reconciled)
     Entry("emb_mmr_select", (s, d) => Similarity.mmrSelect(s, d), timed),
-    Entry("emb_ivf_query_recall", (s, d) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft-ivf-n8-${embDataTag(s, d)}"
-      if (!new java.io.File(s"$idx/assignments.parquet").exists) Similarity.writeIvfIndex(s, d, idx)
-      Similarity.ivfQueryRecallGate(s, d, idx)
-    }),
-    Entry("emb_pq_query_recall", (s, d) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft-pq-m8k16-${embDataTag(s, d)}"
-      if (!new java.io.File(s"$idx/codes.parquet").exists) Similarity.writePqIndex(s, d, idx)
-      Similarity.pqQueryRecallGate(s, d, idx)
-    }),
+    Entry("emb_ivf_query_recall", (s, d) => Similarity.ivfQueryRecallGate(s, d,
+      annIndex(s, d, "ivf-n8", Similarity.writeIvfIndex(_, _, _)))),
+    Entry("emb_pq_query_recall", (s, d) => Similarity.pqQueryRecallGate(s, d,
+      annIndex(s, d, "pq-m8k16", Similarity.writePqIndex(_, _, _)))),
     // corpus-growth ingest: base index on the first 80% of corpus ids, the
     // last 20% ingested against the STORED centroids, then served
     // exhaustively — must hash-equal brute force over the FULL corpus
@@ -6111,11 +6115,9 @@ object SparkEntry {
     Entry("emb_pagerank", (s, d) => Similarity.pageRank(s, d), timed),
     // quantized serving path (IVF + int8 codes + float re-rank): rows-only
     // (quantized scoring isn't SQL-expressible); recall/identity spec-gated
-    Entry("emb_ivf_q", (s, d) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft-ivfq-n8-${embDataTag(s, d)}"
-      if (!new java.io.File(s"$idx/codes.parquet").exists) Similarity.writeIvfQIndex(s, d, idx)
-      Similarity.ivfQTopKFromIndex(s, d, idx)
-    }, timed.copy(scale10 = FirstTouch)),
+    Entry("emb_ivf_q", (s, d) => Similarity.ivfQTopKFromIndex(s, d,
+      annIndex(s, d, "ivfq-n8", Similarity.writeIvfQIndex(_, _, _))),
+      timed.copy(scale10 = FirstTouch)),
     // exhaustive probes + shortlist ≥ corpus: the float re-rank must erase
     // the quantization entirely — oracle-gated against the same brute-force
     // SQL as emb_ivf_exhaustive
@@ -6125,11 +6127,9 @@ object SparkEntry {
     // tables + float re-rank — the memory-bound FAISS layout at m bytes per
     // corpus vector): rows-only (ADC scoring isn't SQL-expressible);
     // recall/identity spec-gated
-    Entry("emb_ivfpq", (s, d) => {
-      val idx = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-n8m8k16-${embDataTag(s, d)}"
-      if (!new java.io.File(s"$idx/codes.parquet").exists) Similarity.writeIvfPqIndex(s, d, idx)
-      Similarity.ivfPqTopKFromIndex(s, d, idx)
-    }, timed.copy(scale10 = FirstTouch, core = 30)),
+    Entry("emb_ivfpq", (s, d) => Similarity.ivfPqTopKFromIndex(s, d,
+      annIndex(s, d, "ivfpq-n8m8k16", Similarity.writeIvfPqIndex(_, _, _))),
+      timed.copy(scale10 = FirstTouch, core = 30)),
     // exhaustive probes + shortlist ≥ corpus: the float re-rank must erase
     // coarse AND product quantization entirely — oracle-gated against the
     // same brute-force SQL as emb_ivf_exhaustive

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.util.sketch.BloomFilter
 import org.apache.spark.sql.types._
 import graft.operators.TextOps
 import graft.functions.TextFunctions.{fingerprint, qualityScore}
@@ -96,35 +97,32 @@ object DocPipeline {
                         expectedPerShard: Long = 1L << 17,
                         fpp: Double = 0.01): Dataset[ScreenVerdict] = {
     import docs.sparkSession.implicits._
-    docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), col("source"),
-        md5(expr("encode(text, 'UTF-8')")).as("k"))
-      .as[(Long, String, String)]
-      .groupByKey { case (_, _, k) => (k.hashCode & Int.MaxValue) % nShards }
-      .flatMapGroupsWithState[Array[Byte], ScreenVerdict](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        case (_, rows, state: GroupState[Array[Byte]]) =>
-          val bf = state.getOption
-            .map(b => org.apache.spark.util.sketch.BloomFilter.readFrom(
-              new java.io.ByteArrayInputStream(b)))
-            .getOrElse(org.apache.spark.util.sketch.BloomFilter.create(
-              expectedPerShard, fpp))
-          val out = rows.toSeq.sortBy(_._1).map { case (id, src, k) =>
-            val seen = bf.mightContainString(k)
-            bf.putString(k)
-            ScreenVerdict(id, src, seen, 0L)
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          bf.writeTo(bos)
-          state.update(bos.toByteArray)
-          out.map(_.copy(n_state_bytes = bos.size().toLong)).iterator
+    type Doc = (Long, String, String)
+    new StepProcessor[Int, Doc, Array[Byte], ScreenVerdict](Encoders.BINARY) {
+      override def order(rows: Seq[Doc]): Seq[Doc] = rows.sortBy(_._1)
+      def step(shard: Int, st: Option[Array[Byte]], rows: Seq[Doc], wm: Long,
+               fired: Boolean): (Option[Array[Byte]], Seq[ScreenVerdict]) = {
+        val bf = st.fold(BloomFilter.create(expectedPerShard, fpp))(b =>
+          BloomFilter.readFrom(new java.io.ByteArrayInputStream(b)))
+        val out = rows.map { case (id, src, k) =>
+          val seen = bf.mightContainString(k)
+          bf.putString(k)
+          ScreenVerdict(id, src, seen, 0L)
+        }
+        val bos = new java.io.ByteArrayOutputStream()
+        bf.writeTo(bos)
+        (Some(bos.toByteArray), out.map(_.copy(n_state_bytes = bos.size().toLong)))
       }
+    }.over(docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), col("source"), md5(expr("encode(text, 'UTF-8')")).as("k"))
+      .as[(Long, String, String)]
+      .groupByKey { case (_, _, k) => (k.hashCode & Int.MaxValue) % nShards }, OutputMode.Update)
   }
 
   def curateNeardupStream(docs: DataFrame, storeDir: String,
                           verdictDir: String, checkpoint: String,
                           minQuality: Double = 0.2, maxDigitRatio: Double = 0.3,
-                          maxTokenLen: Int = 25, threshold: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery =
+                          maxTokenLen: Int = 25, threshold: Double = 0.5): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>

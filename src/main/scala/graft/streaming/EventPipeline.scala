@@ -1,9 +1,9 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** The reference pipeline (producer → Kafka → consumer → Redis → dashboard,
@@ -16,11 +16,12 @@ import org.apache.spark.sql.types._
   *     → sinks: memory / parquet / foreachBatch upsert    (Redis SET + pub/sub)
   *
   * Scale: state is keyed by user (rate limit) or event id within the
-  * watermark horizon (dedup). Dedup, session, and anchored-rate-limit state
-  * is evicted by watermark/event-time timers; the plain rate limit and the
-  * z-score ring buffer keep ONE bounded record per key with no cross-key
-  * eviction (their scaladocs state the unbounded-churn mitigation). Same
-  * shape that runs on a 1000-executor cluster with RocksDB state. */
+  * watermark horizon (dedup). Dedup, session and both rate limits' state is
+  * evicted by the watermark or event-time timers, so a quiet user's record
+  * goes away; the z-score ring buffer keeps ONE bounded record per key with
+  * no cross-key eviction (its scaladoc states the unbounded-churn
+  * mitigation). Every keyed operator is a [[StepProcessor]] on RocksDB
+  * state, the shape that runs on a 1000-executor cluster. */
 object EventPipeline {
 
   case class Event(event_id: Long, ts: Timestamp, user_id: Long,
@@ -191,31 +192,16 @@ object EventPipeline {
     * count is gone; admitting blind could breach the cap) — and, crucially,
     * it does NOT reset the live window's count.
     *
-    * State is one (window, count) record per user with NO cross-key
-    * eviction — acceptable for bounded key spaces; a deployment with
-    * unbounded user churn runs [[rateLimitedAnchored]], whose event-time
-    * timers delete expired keys. (A processing-time timeout here would
-    * spin continuous no-data micro-batches under the default trigger —
-    * measured, not guessed.) */
+    * State is one (window, count) record per user, deleted by an event-time
+    * timer once the watermark passes the window's end (the reference's
+    * EXPIRE), so state tracks active users, not lifetime users. The timer
+    * fires on the input's own watermark (as [[deduped]] sets it); on input
+    * without one, state is never evicted. */
   def rateLimited(events: Dataset[Event], limit: Int = 5,
                   windowMs: Long = 60L * 60 * 1000): Dataset[Admitted] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[RateState, Admitted](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (_, batch, state: GroupState[RateState]) =>
-          val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var st = state.getOption.getOrElse(RateState(-1L, 0))
-          val out = sorted.map { e =>
-            val w = e.ts.getTime / windowMs * windowMs
-            if (w > st.windowStartMs) st = RateState(w, 0)
-            val ok = w >= st.windowStartMs && st.count < limit
-            if (ok) st = st.copy(count = st.count + 1)
-            Admitted(e.event_id, e.ts, e.user_id, e.event_type, e.value, ok)
-          }
-          state.update(st)
-          out.iterator
-      }
+    new RateLimitProcessor(limit, windowMs, anchored = false)
+      .over(events.groupByKey(_.user_id))
   }
 
   /** Anchored rolling rate limit — the exact Redis INCR+EXPIRE semantics of
@@ -226,20 +212,50 @@ object EventPipeline {
     * correctness never depends on timer order — while an event-time timer
     * clears expired per-key state (the memory-bound at scale: state lives
     * one window past the last active key, then is deleted).
-    *
-    * Requires the RocksDB state store provider (transformWithState uses
-    * state-store column families) — the production provider at scale.
     * Pass `watermark = None` when the input already carries one. */
   def rateLimitedAnchored(events: Dataset[Event], limit: Int = 5,
                           windowMs: Long = 60L * 60 * 1000,
                           watermark: Option[String] = Some("10 minutes")): Dataset[Admitted] = {
     import events.sparkSession.implicits._
-    watermark.fold(events)(w => events.withWatermark("ts", w))
-      .groupByKey(_.user_id)
-      .transformWithState(new AnchoredRateLimitProcessor(limit, windowMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append)
+    new RateLimitProcessor(limit, windowMs, anchored = true)
+      .over(watermark.fold(events)(w => events.withWatermark("ts", w)).groupByKey(_.user_id))
   }
+
+  /** The one processor of [[rateLimited]] and [[rateLimitedAnchored]]: state
+    * is the live window's (start, admitted count), and a timer at the
+    * window's end deletes it. The two differ only in the start of an
+    * event's window: epoch-aligned, or anchored at the event that opens it
+    * (an event before the live window's end counts into it, the INCR on the
+    * live key). */
+  class RateLimitProcessor(limit: Int, windowMs: Long, anchored: Boolean)
+      extends StepProcessor[Long, Event, RateState, Admitted](
+        Encoders.product[RateState], timed = true) {
+    override def order(rows: Seq[Event]): Seq[Event] = byTime(rows)
+    override def timerOf(s: RateState): Option[Long] = Some(s.windowStartMs + windowMs)
+    def step(user: Long, st: Option[RateState], rows: Seq[Event], wm: Long,
+             fired: Boolean): (Option[RateState], Seq[Admitted]) = {
+      var s = (if (fired) None else st).getOrElse(RateState(Long.MinValue, 0))
+      val out = rows.map { e =>
+        val t = e.ts.getTime
+        val w = if (!anchored) t / windowMs * windowMs
+          else if (t < s.windowStartMs + windowMs) s.windowStartMs else t
+        if (w > s.windowStartMs) s = RateState(w, 0)
+        val ok = w >= s.windowStartMs && s.count < limit
+        if (ok) s = s.copy(count = s.count + 1)
+        Admitted(e.event_id, e.ts, e.user_id, e.event_type, e.value, ok)
+      }
+      (Option.when(s.windowStartMs != Long.MinValue)(s), out)
+    }
+  }
+
+  /** (ts, event_id): the batch operators' in-window order. */
+  private def byTime(rows: Seq[Event]): Seq[Event] =
+    rows.sortBy(e => (e.ts.getTime, e.event_id))
+
+  /** (ts, A-before-B, event_id): the batch window's order for an A→B
+    * pattern, so a same-ms B sees its A. */
+  private def aThenB(rows: Seq[Event], second: String): Seq[Event] =
+    rows.sortBy(e => (e.ts.getTime, if (e.event_type == second) 1 else 0, e.event_id))
 
   /** A40-streaming: CEP pattern match, the streaming twin of
     * [[graft.operators.EventOps.patternMatch]] — per user, each
@@ -248,7 +264,7 @@ object EventPipeline {
     * many Bs, exactly the batch semantics).
     *
     * State is ONE (ts, event_id) record per user — the latest A seen — and
-    * is evicted by an event-time timeout once the watermark passes
+    * is evicted by an event-time timer once the watermark passes
     * a_ts + withinMs (no future in-watermark B can match it), so state
     * size tracks ACTIVE users, not lifetime users. In-order replay equals
     * the batch operator bit-for-bit (spec-gated); a cross-batch late A is
@@ -258,40 +274,31 @@ object EventPipeline {
                          withinMs: Long = 3600L * 1000,
                          watermark: Option[String] = Some("10 minutes")): Dataset[PatternMatch] = {
     import events.sparkSession.implicits._
-    watermark.fold(events)(w => events.withWatermark("ts", w))
-      .filter(e => e.event_type == first || e.event_type == second)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[PatternState, PatternMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (user, batch, state: GroupState[PatternState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            // same in-batch order as the batch window: (ts, A-before-B, id)
-            val sorted = batch.toSeq.sortBy(e =>
-              (e.ts.getTime, if (e.event_type == second) 1 else 0, e.event_id))
-            var st = state.getOption.orNull
-            val out = Seq.newBuilder[PatternMatch]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              if (e.event_type == first) {
-                if (st == null || t > st.aTsMs ||
-                    (t == st.aTsMs && e.event_id > st.aEventId))
-                  st = PatternState(t, e.event_id)
-              } else if (st != null && t >= st.aTsMs && t - st.aTsMs <= withinMs)
-                out += PatternMatch(user, st.aEventId, e.event_id,
-                  st.aTsMs, t, t - st.aTsMs)
-            }
-            if (st != null) {
-              state.update(st)
-              // strictly-greater-than-watermark guard: Spark rejects a
-              // timeout at or before the current watermark
-              state.setTimeoutTimestamp(
-                math.max(st.aTsMs + withinMs + 1,
-                  state.getCurrentWatermarkMs() + 1))
-            }
-            out.result().iterator
-          }
+    new PatternProcessor(first, second, withinMs).over(
+      watermark.fold(events)(w => events.withWatermark("ts", w))
+        .filter(e => e.event_type == first || e.event_type == second)
+        .groupByKey(_.user_id))
+  }
+
+  class PatternProcessor(first: String, second: String, withinMs: Long)
+      extends StepProcessor[Long, Event, PatternState, PatternMatch](
+        Encoders.product[PatternState], timed = true) {
+    override def order(rows: Seq[Event]): Seq[Event] = aThenB(rows, second)
+    override def timerOf(s: PatternState): Option[Long] = Some(s.aTsMs + withinMs + 1)
+    def step(user: Long, st: Option[PatternState], rows: Seq[Event], wm: Long,
+             fired: Boolean): (Option[PatternState], Seq[PatternMatch]) = {
+      var s = if (fired) None else st
+      val out = rows.flatMap { e =>
+        val t = e.ts.getTime
+        if (e.event_type == first) {
+          if (s.forall(a => t > a.aTsMs || (t == a.aTsMs && e.event_id > a.aEventId)))
+            s = Some(PatternState(t, e.event_id))
+          None
+        } else s.filter(a => t >= a.aTsMs && t - a.aTsMs <= withinMs)
+          .map(a => PatternMatch(user, a.aEventId, e.event_id, a.aTsMs, t, t - a.aTsMs))
       }
+      (s, out)
+    }
   }
 
   case class TransitionState(lastTsMs: Long, lastEventId: Long, lastType: String)
@@ -307,7 +314,7 @@ object EventPipeline {
     * batch operator's island semantics (an event AT the gap still chains).
     *
     * State per user is ONE record (last in-session event) evicted by an
-    * event-time timeout once the watermark passes last+gap — state tracks
+    * event-time timer once the watermark passes last+gap — state tracks
     * ACTIVE sessions only, the A40 discipline. In-batch order follows the
     * batch window's (ts, event_id); an in-watermark cross-batch regression
     * (an event older than the stored last) conservatively starts no
@@ -315,36 +322,33 @@ object EventPipeline {
   def transitionStream(events: Dataset[Event], gapMs: Long = 30L * 60 * 1000,
                        watermark: Option[String] = Some("10 minutes")): Dataset[Transition] = {
     import events.sparkSession.implicits._
-    watermark.fold(events)(w => events.withWatermark("ts", w))
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TransitionState, Transition](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (user, batch, state: GroupState[TransitionState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            var st = state.getOption.orNull
-            val out = Seq.newBuilder[Transition]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              if (st == null || t >= st.lastTsMs) {
-                if (st != null && t - st.lastTsMs <= gapMs)
-                  out += Transition(user, st.lastType, e.event_type,
-                    st.lastEventId, e.event_id, t)
-                st = TransitionState(t, e.event_id, e.event_type)
-              } // else: in-watermark disorder — never regress the anchor
-            }
-            if (st != null) {
-              state.update(st)
-              state.setTimeoutTimestamp(math.max(st.lastTsMs + gapMs + 1,
-                state.getCurrentWatermarkMs() + 1))
-            }
-            out.result().iterator
-          }
-      }
+    new TransitionProcessor(gapMs).over(
+      watermark.fold(events)(w => events.withWatermark("ts", w)).groupByKey(_.user_id))
   }
 
-  case class BurstState(counts: Map[Long, Long], nextWin: Long,
+  class TransitionProcessor(gapMs: Long)
+      extends StepProcessor[Long, Event, TransitionState, Transition](
+        Encoders.product[TransitionState], timed = true) {
+    override def order(rows: Seq[Event]): Seq[Event] = byTime(rows)
+    override def timerOf(s: TransitionState): Option[Long] = Some(s.lastTsMs + gapMs + 1)
+    def step(user: Long, st: Option[TransitionState], rows: Seq[Event], wm: Long,
+             fired: Boolean): (Option[TransitionState], Seq[Transition]) = {
+      var s = if (fired) None else st
+      val out = rows.flatMap { e =>
+        val t = e.ts.getTime
+        if (s.exists(t < _.lastTsMs)) None // in-watermark disorder: never regress the anchor
+        else {
+          val tr = s.filter(t - _.lastTsMs <= gapMs).map(l =>
+            Transition(user, l.lastType, e.event_type, l.lastEventId, e.event_id, t))
+          s = Some(TransitionState(t, e.event_id, e.event_type))
+          tr
+        }
+      }
+      (s, out)
+    }
+  }
+
+  case class BurstState(counts: Seq[(Long, Long)], nextWin: Long,
                         markerState: Boolean, inIsland: Boolean,
                         sawHot: Boolean, epId: Long, epStartWin: Long,
                         epLastWin: Long, epPeak: Long, epTotal: Long,
@@ -362,7 +366,7 @@ object EventPipeline {
     * same id/bounds/peak/total the batch [[graft.operators.EventOps]]
     * islanding assigns (island ids count EVERY state-1 island, including
     * hotless ones that are later dropped — the replay spec pins id
-    * parity). An event-time timeout at the next window boundary drives
+    * parity). An event-time timer at the next window boundary drives
     * finalization through quiet periods; state per type = the open
     * (unfinalized) windows plus one episode record, and the type key set
     * is schema-small, so state never scales with the corpus. */
@@ -370,176 +374,110 @@ object EventPipeline {
                   watermark: Option[String] = Some("10 minutes")): Dataset[Burst] = {
     require(lo <= hi, "lo must sit at or below hi")
     import events.sparkSession.implicits._
-    watermark.fold(events)(w => events.withWatermark("ts", w))
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[BurstState, Burst](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (tpe, batch, state: GroupState[BurstState]) =>
-          var st = state.getOption.getOrElse(BurstState(Map.empty,
-            Long.MinValue, markerState = false, inIsland = false,
-            sawHot = false, 0L, 0L, 0L, 0L, 0L, 0L))
-          batch.foreach { e =>
-            val w = Math.floorDiv(e.ts.getTime, winMs)
-            // windows the watermark already finalized never reopen
-            if (st.nextWin == Long.MinValue || w >= st.nextWin)
-              st = st.copy(counts =
-                st.counts.updated(w, st.counts.getOrElse(w, 0L) + 1L))
-          }
-          val wmWin = Math.floorDiv(state.getCurrentWatermarkMs(), winMs)
-          val out = Seq.newBuilder[Burst]
-          def closeIsland(): Unit = if (st.inIsland) {
-            if (st.sawHot)
-              out += Burst(tpe, st.epId, st.epStartWin * winMs,
-                (st.epLastWin + 1) * winMs, st.epWindows, st.epPeak, st.epTotal)
-            st = st.copy(inIsland = false, sawHot = false)
-          }
-          st.counts.keys.filter(_ < wmWin).toSeq.sorted.foreach { w =>
-            val c = st.counts(w)
-            val marker = if (c >= hi) true else if (c < lo) false
-              else st.markerState
-            if (marker) {
-              if (!(st.inIsland && w == st.epLastWin + 1)) {
-                closeIsland() // a gap among state-1 windows splits islands
-                st = st.copy(inIsland = true, sawHot = false,
-                  epId = st.epId + 1, epStartWin = w,
-                  epPeak = 0L, epTotal = 0L, epWindows = 0L)
-              }
-              st = st.copy(markerState = marker,
-                sawHot = st.sawHot || c >= hi, epLastWin = w,
-                epPeak = math.max(st.epPeak, c), epTotal = st.epTotal + c,
-                epWindows = st.epWindows + 1L)
-            } else {
-              closeIsland()
-              st = st.copy(markerState = marker)
-            }
-          }
-          // the successor window is finalized and EMPTY: nothing can
-          // extend this island any more — close it now, don't wait
-          if (st.inIsland && st.epLastWin + 1 < wmWin) closeIsland()
-          st = st.copy(counts = st.counts.filter(_._1 >= wmWin),
-            nextWin = math.max(st.nextWin, wmWin))
-          // epId monotonicity must survive quiet periods: keep the
-          // |types|-bounded state alive rather than evict-and-reset ids
-          state.update(st)
-          state.setTimeoutTimestamp((wmWin + 1L) * winMs)
-          out.result().iterator
+    new BurstProcessor(winMs, hi, lo).over(
+      watermark.fold(events)(w => events.withWatermark("ts", w)).groupByKey(_.event_type))
+  }
+
+  class BurstProcessor(winMs: Long, hi: Long, lo: Long)
+      extends StepProcessor[String, Event, BurstState, Burst](
+        Encoders.product[BurstState], timed = true) {
+    // the next window boundary drives finalization through quiet periods
+    override def timerOf(s: BurstState): Option[Long] = Some((s.nextWin + 1L) * winMs)
+    def step(tpe: String, st0: Option[BurstState], rows: Seq[Event], wm: Long,
+             fired: Boolean): (Option[BurstState], Seq[Burst]) = {
+      var st = st0.getOrElse(BurstState(Nil, Long.MinValue, markerState = false,
+        inIsland = false, sawHot = false, 0L, 0L, 0L, 0L, 0L, 0L))
+      // open window counts (Spark's state schema takes no map)
+      var counts = st.counts.toMap
+      rows.foreach { e =>
+        val w = Math.floorDiv(e.ts.getTime, winMs)
+        // windows the watermark already finalized never reopen
+        if (st.nextWin == Long.MinValue || w >= st.nextWin)
+          counts = counts.updated(w, counts.getOrElse(w, 0L) + 1L)
       }
+      val wmWin = Math.floorDiv(wm, winMs)
+      val out = Seq.newBuilder[Burst]
+      def closeIsland(): Unit = if (st.inIsland) {
+        if (st.sawHot)
+          out += Burst(tpe, st.epId, st.epStartWin * winMs,
+            (st.epLastWin + 1) * winMs, st.epWindows, st.epPeak, st.epTotal)
+        st = st.copy(inIsland = false, sawHot = false)
+      }
+      counts.keys.filter(_ < wmWin).toSeq.sorted.foreach { w =>
+        val c = counts(w)
+        val marker = if (c >= hi) true else if (c < lo) false else st.markerState
+        if (marker) {
+          if (!(st.inIsland && w == st.epLastWin + 1)) {
+            closeIsland() // a gap among state-1 windows splits islands
+            st = st.copy(inIsland = true, sawHot = false, epId = st.epId + 1,
+              epStartWin = w, epPeak = 0L, epTotal = 0L, epWindows = 0L)
+          }
+          st = st.copy(markerState = marker, sawHot = st.sawHot || c >= hi,
+            epLastWin = w, epPeak = math.max(st.epPeak, c), epTotal = st.epTotal + c,
+            epWindows = st.epWindows + 1L)
+        } else {
+          closeIsland()
+          st = st.copy(markerState = marker)
+        }
+      }
+      // the successor window is finalized and EMPTY: nothing can extend
+      // this island any more — close it now, don't wait
+      if (st.inIsland && st.epLastWin + 1 < wmWin) closeIsland()
+      // epId monotonicity must survive quiet periods: keep the
+      // |types|-bounded state alive rather than evict-and-reset ids
+      (Some(st.copy(counts = counts.filter(_._1 >= wmWin).toSeq.sorted,
+        nextWin = math.max(st.nextWin, wmWin))), out.result())
+    }
   }
 
   case class PendingA(aTsMs: Long, aEventId: Long)
+  case class Pending(items: List[PendingA])
   case class Dropout(user_id: Long, a_event_id: Long, a_ts_ms: Long)
 
   /** A40b-streaming: funnel dropout as a NEGATIVE pattern (Flink CEP's
     * notFollowedBy — the hard half of CEP, since "nothing arrived" is only
     * knowable once event time has provably passed): each A-type event
-    * registers an event-time timer at a_ts + withinMs; a B-type event
-    * at-or-after a pending A within the horizon rescues it (removes it
-    * silently); the timer firing — which Spark guarantees happens only
-    * once the WATERMARK passes the horizon — emits the dropout. A late B
-    * beyond the horizon does not rescue (matches the batch operator,
-    * which reports those as dropouts with the late conversion time).
+    * stays pending until a_ts + withinMs; a B-type event at-or-after a
+    * pending A within the horizon rescues it (removes it silently); an
+    * event-time timer at the earliest pending horizon — which Spark fires
+    * only once the WATERMARK passes it — emits every A whose horizon the
+    * watermark has passed as a dropout. A late B beyond the horizon does
+    * not rescue (matches the batch operator, which reports those as
+    * dropouts with the late conversion time).
     *
     * State per user = the As still inside their horizon (bounded by
     * arrival rate × withinMs) and is deleted by the very timers that
-    * emit — nothing outlives a_ts + withinMs + watermark delay. Requires
-    * RocksDB (transformWithState). Bounded replay emits exactly the batch
-    * [[graft.operators.EventOps.patternDropout]] id set (spec). */
+    * emit — nothing outlives a_ts + withinMs + watermark delay. Bounded
+    * replay emits exactly the batch [[graft.operators.EventOps
+    * .patternDropout]] id set (spec). */
   def patternDropoutStream(events: Dataset[Event], first: String = "click",
                            second: String = "purchase",
                            withinMs: Long = 3600L * 1000,
                            watermark: Option[String] = Some("10 minutes")): Dataset[Dropout] = {
     import events.sparkSession.implicits._
-    watermark.fold(events)(w => events.withWatermark("ts", w))
-      .filter(e => e.event_type == first || e.event_type == second)
-      .groupByKey(_.user_id)
-      .transformWithState(new DropoutProcessor(first, second, withinMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append)
+    new DropoutProcessor(first, second, withinMs).over(
+      watermark.fold(events)(w => events.withWatermark("ts", w))
+        .filter(e => e.event_type == first || e.event_type == second)
+        .groupByKey(_.user_id))
   }
 
   class DropoutProcessor(first: String, second: String, withinMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, Dropout] {
-    import org.apache.spark.sql.Encoders
-    @transient private var pending: org.apache.spark.sql.streaming.ListState[PendingA] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      pending = getHandle.getListState[PendingA]("pending",
-        Encoders.product[PendingA], org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-                                 timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[Dropout] = {
-      // same in-batch order as the batch window: (ts, A-before-B, id) —
-      // a same-ms B rescues its A
-      val sorted = rows.toSeq.sortBy(e =>
-        (e.ts.getTime, if (e.event_type == second) 1 else 0, e.event_id))
-      var ps = pending.get().toSeq
-      sorted.foreach { e =>
+      extends StepProcessor[Long, Event, Pending, Dropout](
+        Encoders.product[Pending], timed = true) {
+    override def order(rows: Seq[Event]): Seq[Event] = aThenB(rows, second)
+    override def timerOf(s: Pending): Option[Long] = Some(s.items.map(_.aTsMs).min + withinMs + 1)
+    def step(user: Long, st: Option[Pending], rows: Seq[Event], wm: Long,
+             fired: Boolean): (Option[Pending], Seq[Dropout]) = {
+      var ps = st.fold(List.empty[PendingA])(_.items)
+      rows.foreach { e =>
         val t = e.ts.getTime
-        if (e.event_type == first) {
-          ps :+= PendingA(t, e.event_id)
-          getHandle.registerTimer(t + withinMs + 1)
-        } else
-          ps = ps.filterNot(p => p.aTsMs <= t && t - p.aTsMs <= withinMs)
+        if (e.event_type == first) ps :+= PendingA(t, e.event_id)
+        else ps = ps.filterNot(p => p.aTsMs <= t && t - p.aTsMs <= withinMs)
       }
-      if (ps.isEmpty) pending.clear() else pending.put(ps.toArray)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: Long,
-                                    timerValues: org.apache.spark.sql.streaming.TimerValues,
-                                    expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Dropout] = {
-      val fire = expiredTimerInfo.getExpiryTimeInMs
-      val (dead, alive) = pending.get().toSeq
-        .partition(p => p.aTsMs + withinMs + 1 <= fire)
-      if (alive.isEmpty) pending.clear() else pending.put(alive.toArray)
-      dead.sortBy(p => (p.aTsMs, p.aEventId))
-        .map(p => Dropout(key, p.aEventId, p.aTsMs)).iterator
-    }
-  }
-
-  /** StatefulProcessor for [[rateLimitedAnchored]]: ValueState holds
-    * (windowStartMs anchored at first event, admitted count); a timer at
-    * windowStart+windowMs deletes the key's state like Redis EXPIRE. */
-  class AnchoredRateLimitProcessor(limit: Int, windowMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, Admitted] {
-    import org.apache.spark.sql.Encoders
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[RateState] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[RateState]("anchored", Encoders.product[RateState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-                                 timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[Admitted] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var s = if (st.exists()) st.get() else RateState(Long.MinValue, 0)
-      val out = sorted.map { e =>
-        val t = e.ts.getTime
-        if (s.windowStartMs == Long.MinValue || t >= s.windowStartMs + windowMs) {
-          if (s.windowStartMs != Long.MinValue)
-            getHandle.deleteTimer(s.windowStartMs + windowMs)
-          s = RateState(t, 0) // first event anchors the window (INCR creates)
-          getHandle.registerTimer(t + windowMs) // the EXPIRE
-        }
-        val ok = s.count < limit
-        if (ok) s = s.copy(count = s.count + 1)
-        Admitted(e.event_id, e.ts, e.user_id, e.event_type, e.value, ok)
-      }
-      st.update(s)
-      out.iterator
-    }
-
-    override def handleExpiredTimer(key: Long,
-                                    timerValues: org.apache.spark.sql.streaming.TimerValues,
-                                    expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Admitted] = {
-      // EXPIRE fired: the key's window has passed — drop its state (a fresh
-      // event will re-anchor). Guard on the CURRENT window in case the key
-      // re-anchored after this timer was set.
-      if (st.exists() && expiredTimerInfo.getExpiryTimeInMs >= st.get().windowStartMs + windowMs)
-        st.clear()
-      Iterator.empty
+      // past the watermark no B can rescue an A any more
+      val (dead, alive) = ps.partition(p => fired && p.aTsMs + withinMs + 1 <= wm)
+      (Option.when(alive.nonEmpty)(Pending(alive)),
+        dead.sortBy(p => (p.aTsMs, p.aEventId)).map(p => Dropout(user, p.aEventId, p.aTsMs)))
     }
   }
 
@@ -554,70 +492,47 @@ object EventPipeline {
     * by construction: a gap wholly inside one micro-batch emits its
     * silence+recovery in-row at the identical timestamps the timer path
     * would have produced, a gap the watermark proves first emits silence
-    * via the timer and recovery on resume, and stale timers (re-anchored
-    * by a newer event) no-op via the expiry==last+silenceMs guard — so a
-    * bounded replay equals the batch [[graft.operators.EventOps
-    * .silenceAlerts]] report (spec). State = ONE (lastTs, alerted) record
-    * per event type — never corpus- or user-scaled. In-watermark
-    * disorder: a late event with ts ≤ lastTs never regresses the anchor
-    * (the transitionStream discipline). */
+    * via the timer and recovery on resume, and the timer moves with the
+    * anchor (a newer event supersedes it) — so a bounded replay equals
+    * the batch [[graft.operators.EventOps.silenceAlerts]] report (spec).
+    * State = ONE (lastTs, alerted) record per event type — never corpus-
+    * or user-scaled. In-watermark disorder: a late event with ts ≤ lastTs
+    * never regresses the anchor (the transitionStream discipline). */
   def silenceStream(events: Dataset[Event], silenceMs: Long = 3600000L,
                     watermark: Option[String] = Some("10 minutes")): Dataset[Silence] = {
     import events.sparkSession.implicits._
-    watermark.fold(events)(w => events.withWatermark("ts", w))
-      .groupByKey(_.event_type)
-      .transformWithState(new SilenceProcessor(silenceMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append)
+    new SilenceProcessor(silenceMs).over(
+      watermark.fold(events)(w => events.withWatermark("ts", w)).groupByKey(_.event_type))
   }
 
   class SilenceProcessor(silenceMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Event, Silence] {
-    import org.apache.spark.sql.Encoders
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[SilenceState] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[SilenceState]("silence",
-        Encoders.product[SilenceState], org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[Event],
-                                 timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[Silence] = {
-      val sorted = rows.map(_.ts.getTime).toSeq.sorted
-      var out = List.empty[Silence]
-      var s = if (st.exists()) Some(st.get()) else None
-      sorted.foreach { t =>
+      extends StepProcessor[String, Event, SilenceState, Silence](
+        Encoders.product[SilenceState], timed = true) {
+    override def order(rows: Seq[Event]): Seq[Event] = rows.sortBy(_.ts.getTime)
+    override def timerOf(s: SilenceState): Option[Long] =
+      Option.when(!s.alerted)(s.lastTsMs + silenceMs)
+    def step(key: String, st: Option[SilenceState], rows: Seq[Event], wm: Long,
+             fired: Boolean): (Option[SilenceState], Seq[Silence]) = {
+      var s = st
+      val out = Seq.newBuilder[Silence]
+      if (fired) s.foreach { c => // the watermark proved the gap
+        out += Silence(key, "silence", c.lastTsMs + silenceMs, c.lastTsMs)
+        s = Some(c.copy(alerted = true))
+      }
+      rows.foreach { e =>
+        val t = e.ts.getTime
         s = s match {
-          case Some(SilenceState(last, alerted)) =>
-            if (t - last > silenceMs) {
-              // the gap closed inside this batch: emit what the timer
-              // would have (unless it already fired), then the recovery
-              if (!alerted) out :+= Silence(key, "silence", last + silenceMs, last)
-              out :+= Silence(key, "recovery", t, last)
-              Some(SilenceState(t, false))
-            } else Some(SilenceState(math.max(last, t), alerted))
-          case None => Some(SilenceState(t, false))
+          case Some(SilenceState(last, alerted)) if t - last > silenceMs =>
+            // the gap closed inside this batch: emit what the timer would
+            // have (unless it already fired), then the recovery
+            if (!alerted) out += Silence(key, "silence", last + silenceMs, last)
+            out += Silence(key, "recovery", t, last)
+            Some(SilenceState(t, alerted = false))
+          case Some(SilenceState(last, alerted)) => Some(SilenceState(math.max(last, t), alerted))
+          case None => Some(SilenceState(t, alerted = false))
         }
       }
-      val fin = s.get
-      st.update(fin)
-      if (!fin.alerted) getHandle.registerTimer(fin.lastTsMs + silenceMs)
-      out.iterator
-    }
-
-    override def handleExpiredTimer(key: String,
-                                    timerValues: org.apache.spark.sql.streaming.TimerValues,
-                                    expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Silence] = {
-      val fire = expiredTimerInfo.getExpiryTimeInMs
-      if (st.exists()) {
-        val cur = st.get()
-        // stale timers from superseded anchors no-op
-        if (!cur.alerted && fire == cur.lastTsMs + silenceMs) {
-          st.update(SilenceState(cur.lastTsMs, true))
-          return Iterator.single(Silence(key, "silence", fire, cur.lastTsMs))
-        }
-      }
-      Iterator.empty
+      (s, out.result())
     }
   }
 
@@ -638,55 +553,31 @@ object EventPipeline {
     * days) record per user — open days are bounded by the watermark
     * horizon; the firstDay long lives for the user's lifetime (the
     * zscoreAlertStream unbounded-churn caveat applies: bound total state
-    * by sharding or snapshot trims). Duplicate timers are impossible
-    * (a day registers once, on entering the pending set) and a fired
-    * day leaves pending, making the emission exactly-once. */
+    * by sharding or snapshot trims). The timer sits at the end of the
+    * earliest pending day, and a closed day leaves pending, making the
+    * emission exactly-once. */
   def firstSeenStream(events: Dataset[Event],
                       watermark: String = "10 minutes"): Dataset[SeenDay] = {
     import events.sparkSession.implicits._
-    events.withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .transformWithState(new FirstSeenProcessor,
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append)
+    new FirstSeenProcessor().over(events.withWatermark("ts", watermark).groupByKey(_.user_id))
   }
 
   class FirstSeenProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, SeenDay] {
-    import org.apache.spark.sql.Encoders
+      extends StepProcessor[Long, Event, FirstSeen, SeenDay](
+        Encoders.product[FirstSeen], timed = true) {
     private val DayMs = 86400000L
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[FirstSeen] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[FirstSeen]("firstseen",
-        Encoders.product[FirstSeen], org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-                                 timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[SeenDay] = {
-      val days = rows.map(e => Math.floorDiv(e.ts.getTime, DayMs) * DayMs).toSet
-      if (days.nonEmpty) {
-        val s0 = if (st.exists()) st.get() else FirstSeen(Long.MaxValue, Nil)
-        val fresh = days -- s0.pending.toSet
-        fresh.foreach(d => getHandle.registerTimer(d + DayMs))
-        st.update(FirstSeen(math.min(s0.firstDayMs, days.min),
-          (s0.pending.toSet ++ days).toList.sorted))
+    override def timerOf(s: FirstSeen): Option[Long] = s.pending.headOption.map(_ + DayMs)
+    def step(user: Long, st: Option[FirstSeen], rows: Seq[Event], wm: Long,
+             fired: Boolean): (Option[FirstSeen], Seq[SeenDay]) = {
+      val s = st.getOrElse(FirstSeen(Long.MaxValue, Nil))
+      if (fired) { // the watermark closed these days
+        val (closed, open) = s.pending.partition(_ + DayMs <= wm)
+        (Some(s.copy(pending = open)), closed.map(d => SeenDay(d, user, d == s.firstDayMs)))
+      } else {
+        val days = rows.map(e => Math.floorDiv(e.ts.getTime, DayMs) * DayMs)
+        (Some(FirstSeen(math.min(s.firstDayMs, days.min),
+          (s.pending ++ days).distinct.sorted)), Nil)
       }
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: Long,
-                                    timerValues: org.apache.spark.sql.streaming.TimerValues,
-                                    expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[SeenDay] = {
-      val d = expiredTimerInfo.getExpiryTimeInMs - DayMs
-      if (st.exists()) {
-        val s = st.get()
-        if (s.pending.contains(d)) {
-          st.update(s.copy(pending = s.pending.filterNot(_ == d)))
-          return Iterator.single(SeenDay(d, key, d == s.firstDayMs))
-        }
-      }
-      Iterator.empty
     }
   }
 
@@ -708,30 +599,20 @@ object EventPipeline {
   def zscoreAlertStream(events: Dataset[Event], lookback: Int = 20,
                         zThreshold: Double = 2.5): Dataset[ZAlert] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new ZScoreProcessor(lookback, zThreshold),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append)
+    new ZScoreProcessor(lookback, zThreshold).over(events.groupByKey(_.user_id))
   }
 
   class ZScoreProcessor(lookback: Int, zThreshold: Double)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, ZAlert] {
-    import org.apache.spark.sql.Encoders
-    @transient private var buf: org.apache.spark.sql.streaming.ValueState[ZBuffer] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      buf = getHandle.getValueState[ZBuffer]("zbuf", Encoders.product[ZBuffer],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+      extends StepProcessor[Long, Event, ZBuffer, ZAlert](Encoders.product[ZBuffer]) {
+    override def order(rows: Seq[Event]): Seq[Event] = byTime(rows)
 
     // DECIMAL(28,12) HALF_UP — the exact value Spark's decimal cast feeds
     // the batch operator's Σx/Σx², so stream and batch agree bit-for-bit
     private def d12(v: Double): java.math.BigDecimal =
       java.math.BigDecimal.valueOf(v).setScale(12, java.math.RoundingMode.HALF_UP)
 
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-                                 timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[ZAlert] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+    def step(user: Long, st: Option[ZBuffer], rows: Seq[Event], wm: Long,
+             fired: Boolean): (Option[ZBuffer], Seq[ZAlert]) = {
       // ring buffer as a deque + RUNNING exact-decimal moments: decimal
       // add/subtract is exact, so maintaining Σx and Σx² incrementally
       // (add the arrival, subtract the eviction) is bit-identical to the
@@ -739,12 +620,12 @@ object EventPipeline {
       // (key, batch) instead of O(lookback) BigDecimal work per EVENT,
       // which was the measured cost of adding this third stateful operator
       val values = new scala.collection.mutable.ArrayDeque[Double](lookback + 1)
-      if (buf.exists()) values.appendAll(buf.get().values)
+      st.foreach(b => values.appendAll(b.values))
       val zero = java.math.BigDecimal.ZERO
       var s1 = zero; var s2 = zero
       values.foreach { v => s1 = s1.add(d12(v)); s2 = s2.add(d12(v * v)) }
       val out = scala.collection.mutable.ListBuffer[ZAlert]()
-      sorted.foreach { e =>
+      rows.foreach { e =>
         val n = values.length
         if (n >= 2) {
           val s1d = s1.doubleValue
@@ -763,8 +644,7 @@ object EventPipeline {
           s1 = s1.subtract(d12(old)); s2 = s2.subtract(d12(old * old))
         }
       }
-      buf.update(ZBuffer(values.toList))
-      out.iterator
+      (Some(ZBuffer(values.toList)), out.toList)
     }
   }
 
@@ -851,40 +731,26 @@ object EventPipeline {
     spark.createDataFrame(rows.asJava, schema)
   }
 
-  /** Latest-value-per-key as an arbitrary-state streaming operator using the
-    * Spark 4 transformWithState API (RocksDB-backed `ValueState`, TTL'd like
-    * the reference's Redis keys). Emits an update row whenever a key's
-    * latest value changes. */
+  /** Latest-value-per-key as an arbitrary-state streaming operator (the
+    * reference's `SET event:{id}` as keyed state). Emits an update row
+    * whenever a key's latest value changes. */
   def latestPerKey(events: Dataset[Event]): Dataset[KeyLatest] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new LatestProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update)
+    new LatestProcessor().over(events.groupByKey(_.user_id), OutputMode.Update)
   }
 
   case class KeyLatest(user_id: Long, ts_ms: Long, event_id: Long, value: Double)
 
   /** StatefulProcessor keeping the max-(ts, event_id) event per key. (A
-    * production deployment would add TTLConfig + TimeMode.ProcessingTime for
-    * Redis-like key expiry; TimeMode.None keeps bounded test runs quiescent.) */
+    * production deployment would add an event-time timer for Redis-like key
+    * expiry; no timer keeps bounded test runs quiescent.) */
   class LatestProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, KeyLatest] {
-    import org.apache.spark.sql.Encoders
-    @transient private var latest: org.apache.spark.sql.streaming.ValueState[KeyLatest] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      latest = getHandle.getValueState[KeyLatest]("latest", Encoders.product[KeyLatest],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-                                 timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[KeyLatest] = {
-      val prev = if (latest.exists()) Some(latest.get()) else None
-      val newest = (rows.map(e => KeyLatest(key, e.ts.getTime, e.event_id, e.value)) ++
-        prev.iterator).maxBy(k => (k.ts_ms, k.event_id))
-      if (!prev.contains(newest)) { latest.update(newest); Iterator.single(newest) }
-      else Iterator.empty
+      extends StepProcessor[Long, Event, KeyLatest, KeyLatest](Encoders.product[KeyLatest]) {
+    def step(user: Long, prev: Option[KeyLatest], rows: Seq[Event], wm: Long,
+             fired: Boolean): (Option[KeyLatest], Option[KeyLatest]) = {
+      val newest = (rows.map(e => KeyLatest(user, e.ts.getTime, e.event_id, e.value)) ++
+        prev).maxBy(k => (k.ts_ms, k.event_id))
+      (Some(newest), Option.when(!prev.contains(newest))(newest))
     }
   }
 
@@ -1138,25 +1004,22 @@ object EventPipeline {
     * persists, so the stream's answer after a bounded replay equals a
     * single-buffer batch sketch over the identical prefix — in the
     * under-capacity regime that is the EXACT per-type top-k, which is the
-    * spec's oracle. No timeout: heavy-hitter state is the product, not a
+    * spec's oracle. No timer: heavy-hitter state is the product, not a
     * session — m entries per type forever. */
   def heavyHittersStream(events: Dataset[Event], k: Int = 10,
                          capacity: Int = 64): Dataset[HeavyHitter] = {
     import events.sparkSession.implicits._
     import graft.functions.SpaceSaving
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState[Array[Byte], HeavyHitter](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        case (tpe, batch, state: GroupState[Array[Byte]]) =>
-          val s = state.getOption.map(SpaceSaving.deserialize)
-            .getOrElse(new SpaceSaving(capacity))
-          batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            .foreach(e => s.add(e.user_id))
-          state.update(s.serialize())
-          s.sorted().take(k).zipWithIndex.map { case ((key, c, err), i) =>
-            HeavyHitter(tpe, i + 1, key, c, c - err, s.total)
-          }.iterator
+    new StepProcessor[String, Event, Array[Byte], HeavyHitter](Encoders.BINARY) {
+      override def order(rows: Seq[Event]): Seq[Event] = byTime(rows)
+      def step(tpe: String, st: Option[Array[Byte]], rows: Seq[Event], wm: Long,
+               fired: Boolean): (Option[Array[Byte]], Seq[HeavyHitter]) = {
+        val s = st.fold(new SpaceSaving(capacity))(SpaceSaving.deserialize)
+        rows.foreach(e => s.add(e.user_id))
+        (Some(s.serialize()), s.sorted().take(k).zipWithIndex.toSeq.map {
+          case ((key, c, err), i) => HeavyHitter(tpe, i + 1, key, c, c - err, s.total) })
       }
+    }.over(events.groupByKey(_.event_type), OutputMode.Update)
   }
 
   case class LiveQuantile(event_type: String, n: Long,
@@ -1177,18 +1040,15 @@ object EventPipeline {
                      capacity: Int = 256): Dataset[LiveQuantile] = {
     import events.sparkSession.implicits._
     import graft.functions.KllDoubles
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState[Array[Byte], LiveQuantile](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        case (tpe, batch, state: GroupState[Array[Byte]]) =>
-          val s = state.getOption.map(KllDoubles.deserialize)
-            .getOrElse(new KllDoubles(capacity))
-          batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            .foreach(e => s.add(e.value))
-          state.update(s.serialize())
-          Iterator(LiveQuantile(tpe, s.total,
-            s.quantile(0.5), s.quantile(0.95)))
+    new StepProcessor[String, Event, Array[Byte], LiveQuantile](Encoders.BINARY) {
+      override def order(rows: Seq[Event]): Seq[Event] = byTime(rows)
+      def step(tpe: String, st: Option[Array[Byte]], rows: Seq[Event], wm: Long,
+               fired: Boolean): (Option[Array[Byte]], Seq[LiveQuantile]) = {
+        val s = st.fold(new KllDoubles(capacity))(KllDoubles.deserialize)
+        rows.foreach(e => s.add(e.value))
+        (Some(s.serialize()), Seq(LiveQuantile(tpe, s.total, s.quantile(0.5), s.quantile(0.95))))
       }
+    }.over(events.groupByKey(_.event_type), OutputMode.Update)
   }
 
   case class LiveDistinct(event_type: String, distinct_users: Double,
@@ -1223,39 +1083,33 @@ object EventPipeline {
   def distinctEnrichedStream(events: Dataset[Event],
                              capacity: Int = 1 << 14): Dataset[EventDistinct] = {
     import events.sparkSession.implicits._
-    import graft.functions.ThetaSet
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState[Array[Byte], EventDistinct](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (tpe, batch, state: GroupState[Array[Byte]]) =>
-          val s = state.getOption.map(ThetaSet.deserialize)
-            .getOrElse(new ThetaSet(capacity))
-          val evs = batch.toSeq
-          evs.foreach(e => s.add(
-            org.apache.spark.sql.catalyst.expressions.XXH64
-              .hashLong(e.user_id, 42L)))
-          state.update(s.serialize())
-          val est = s.estimate
-          evs.iterator.map(e => EventDistinct(e.event_id, e.ts, e.user_id,
-            e.event_type, e.value, est))
+    new StepProcessor[String, Event, Array[Byte], EventDistinct](Encoders.BINARY) {
+      def step(tpe: String, st: Option[Array[Byte]], rows: Seq[Event], wm: Long,
+               fired: Boolean): (Option[Array[Byte]], Seq[EventDistinct]) = {
+        val s = thetaFold(st, capacity, rows)
+        (Some(s.serialize()), rows.map(e =>
+          EventDistinct(e.event_id, e.ts, e.user_id, e.event_type, e.value, s.estimate)))
       }
+    }.over(events.groupByKey(_.event_type))
   }
 
   def thetaStream(events: Dataset[Event],
                   capacity: Int = 1 << 14): Dataset[LiveDistinct] = {
     import events.sparkSession.implicits._
-    import graft.functions.ThetaSet
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState[Array[Byte], LiveDistinct](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        case (tpe, batch, state: GroupState[Array[Byte]]) =>
-          val s = state.getOption.map(ThetaSet.deserialize)
-            .getOrElse(new ThetaSet(capacity))
-          batch.foreach(e => s.add(
-            org.apache.spark.sql.catalyst.expressions.XXH64
-              .hashLong(e.user_id, 42L)))
-          state.update(s.serialize())
-          Iterator(LiveDistinct(tpe, s.estimate, s.size.toLong))
+    new StepProcessor[String, Event, Array[Byte], LiveDistinct](Encoders.BINARY) {
+      def step(tpe: String, st: Option[Array[Byte]], rows: Seq[Event], wm: Long,
+               fired: Boolean): (Option[Array[Byte]], Seq[LiveDistinct]) = {
+        val s = thetaFold(st, capacity, rows)
+        (Some(s.serialize()), Seq(LiveDistinct(tpe, s.estimate, s.size.toLong)))
       }
+    }.over(events.groupByKey(_.event_type), OutputMode.Update)
+  }
+
+  /** A type's theta sketch with `rows`' users folded in. */
+  private def thetaFold(st: Option[Array[Byte]], capacity: Int,
+                        rows: Seq[Event]): graft.functions.ThetaSet = {
+    val s = st.fold(new graft.functions.ThetaSet(capacity))(graft.functions.ThetaSet.deserialize)
+    rows.foreach(e => s.add(org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(e.user_id, 42L)))
+    s
   }
 }

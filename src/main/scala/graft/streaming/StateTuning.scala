@@ -3,27 +3,26 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 
 /** State-store tuning for a deployed stream — the knobs the streaming bench
-  * sets inline, as a reusable scoped facade. Rationale per knob:
+  * sets inline, as a reusable scoped facade. The RocksDB provider is always
+  * set: every [[StepProcessor]] needs it (it also bounds heap and restores
+  * fast). Rationale per knob:
   *
   *   - `statePartitions`: state-store COMMITS per trigger scale with
   *     partitions × stateful operators, pure overhead above the stream's
   *     key cardinality — size to keys, not to the batch shuffle default.
   *     Fixed at the first checkpoint for the life of the query.
-  *   - `rocksDb`: the provider for production state (bounded heap, fast
-  *     restore; required by transformWithState operators).
   *   - `changelogCheckpointing`: commit ships the per-batch delta instead
   *     of re-snapshotting every store — the per-trigger latency knob.
+  *   - `trackTotalRows`: RocksDB counts state rows (`numRowsTotal`) at a
+  *     read per write.
   *
   * `withTuning` scopes the confs to a block and restores prior values, so
   * one session can run differently-tuned streams without leakage. */
 final case class StateTuning(
     statePartitions: Int = 4,
-    rocksDb: Boolean = true,
     changelogCheckpointing: Boolean = true,
     trackTotalRows: Boolean = true) {
 
-  private val RocksProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   private val Keys = Seq(
     "spark.sql.shuffle.partitions",
     "spark.sql.streaming.stateStore.providerClass",
@@ -33,16 +32,11 @@ final case class StateTuning(
   /** Apply to the session; returns the prior values for [[restore]]. */
   def apply(spark: SparkSession): Map[String, Option[String]] = {
     val prior = Keys.map(k => k -> spark.conf.getOption(k)).toMap
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    if (rocksDb) {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksProvider)
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        changelogCheckpointing.toString)
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        trackTotalRows.toString)
-    }
+    val Seq(partitions, provider, changelog, totalRows) = Keys
+    spark.conf.set(partitions, statePartitions.toString)
+    spark.conf.set(provider, StepProcessor.RocksDbProvider)
+    spark.conf.set(changelog, changelogCheckpointing.toString)
+    spark.conf.set(totalRows, trackTotalRows.toString)
     prior
   }
 

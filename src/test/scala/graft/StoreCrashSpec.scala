@@ -219,6 +219,27 @@ class StoreCrashSpec extends SparkSuite {
     }
   }
 
+  test("first-touch ANN index: a build crashed in its data write is rebuilt whole by the next call") {
+    val root = Files.createTempDirectory("graft-crash-ann")
+    def index(at: Path) =
+      SparkEntry.annIndex(spark, sf, "pq", Similarity.writePqIndex(_, _, _), s"crash://$at")
+    def serve(idx: String) = rows(Similarity.pqTopKFromIndex(spark, sf, idx))
+    try {
+      val want = serve(index(root.resolve("clean")))
+      val cut = root.resolve("cut")
+      // the crash hits the write of the index's last table
+      val fired = new java.util.concurrent.atomic.AtomicBoolean()
+      val first = Try(watched(cut.toString, (op, p) =>
+        if (op == "create" && p.contains("/codes.parquet/") && !fired.getAndSet(true))
+          throw new CrashFs.Crash(s"$op $p"))(index(cut)))
+      assert(fired.get && first.isFailure, "the build was not cut")
+      assert(!graft.sources.StoreFiles.exists(spark,
+        s"crash://$cut/graft-pq-${SparkEntry.embDataTag(spark, sf)}"),
+        "a half-built index is visible")
+      assert(serve(index(cut)) == want, "the next call serves other than an uninterrupted build")
+    } finally SparkEntry.deleteDir(root.toString)
+  }
+
   cases.foreach(c =>
     test(s"${c.name}: a crash or a read at any commit step sees pre- or post-op; a re-run converges") {
       crashMatrix(c)

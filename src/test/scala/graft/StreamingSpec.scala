@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.EventPipeline
@@ -237,7 +238,7 @@ class StreamingSpec extends SparkSuite {
     assert(rows.forall(_.getAs[Double]("quality") >= 0.2))
   }
 
-  test("C113s bloom screen: corpus-lifetime seen/novel across batches in constant state; in-batch dups caught; doc_id order") { withRocksDB {
+  test("C113s bloom screen: corpus-lifetime seen/novel across batches in constant state; in-batch dups caught; doc_id order") {
     import graft.streaming.DocPipeline
     val src = Files.createTempDirectory("graft-bloomscr-src").toString
     val chk = Files.createTempDirectory("graft-bloomscr-chk").toString
@@ -262,7 +263,7 @@ class StreamingSpec extends SparkSuite {
     // constant state: the bit array never grows with history
     assert(rows.values.map(_._2).toSet.size == 1, rows.values.toString)
     spark.catalog.dropTempView("bloomscr_out")
-  }}
+  }
 
   test("streaming curation gate: dedup state survives restart from checkpoint") {
     import graft.streaming.DocPipeline
@@ -403,27 +404,22 @@ class StreamingSpec extends SparkSuite {
   test("transformWithState latest-per-key: updates only on newer events") {
     val src = Files.createTempDirectory("graft-tws-src").toString
     val chk = Files.createTempDirectory("graft-tws-chk").toString
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      writeBatch(src, "b1", Seq(
-        Event(1, ts(0), 1, "click", 10.0), Event(2, ts(5), 1, "view", 20.0)))
-      val in = EventPipeline.fileSource(spark, src).as[Event]
-      val q = EventPipeline.latestPerKey(in).toDF()
-        .writeStream.format("memory").queryName("tws_out")
-        .outputMode(OutputMode.Update)
-        .option("checkpointLocation", chk).start()
-      q.processAllAvailable()
-      // an OLDER event for user 1 must NOT emit an update; a new user must
-      writeBatch(src, "b2", Seq(
-        Event(3, ts(2), 1, "error", 99.0), Event(4, ts(1), 2, "click", 5.0)))
-      q.processAllAvailable(); q.stop()
-      val rows = spark.table("tws_out").collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("event_id")))
-      assert(rows.count(_._1 == 1L) == 1, s"stale event emitted: ${rows.toSeq}")
-      assert(rows.contains((1L, 2L)) && rows.contains((2L, 4L)))
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    writeBatch(src, "b1", Seq(
+      Event(1, ts(0), 1, "click", 10.0), Event(2, ts(5), 1, "view", 20.0)))
+    val in = EventPipeline.fileSource(spark, src).as[Event]
+    val q = EventPipeline.latestPerKey(in).toDF()
+      .writeStream.format("memory").queryName("tws_out")
+      .outputMode(OutputMode.Update)
+      .option("checkpointLocation", chk).start()
+    q.processAllAvailable()
+    // an OLDER event for user 1 must NOT emit an update; a new user must
+    writeBatch(src, "b2", Seq(
+      Event(3, ts(2), 1, "error", 99.0), Event(4, ts(1), 2, "click", 5.0)))
+    q.processAllAvailable(); q.stop()
+    val rows = spark.table("tws_out").collect()
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("event_id")))
+    assert(rows.count(_._1 == 1L) == 1, s"stale event emitted: ${rows.toSeq}")
+    assert(rows.contains((1L, 2L)) && rows.contains((2L, 4L)))
   }
 
   test("A16: alert stream + latest-per-key upsert store") {
@@ -496,16 +492,7 @@ class StreamingSpec extends SparkSuite {
       s"idle restart disturbed the store: $store")
   }
 
-  // transformWithState uses state-store column families, which the default
-  // HDFS-backed provider lacks — RocksDB is the production provider anyway
-  private def withRocksDB[T](f: => T): T = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("anchored TTL rate limit: window starts at first event, unlike tumbling") { withRocksDB {
+  test("anchored TTL rate limit: window starts at first event, unlike tumbling") {
     // window = 60 min. First event at 10:20 anchors [10:20, 11:20); the
     // tumbling variant's window is the epoch-aligned hour [10:00, 11:00).
     // The 11:05 event is INSIDE the anchored window (rejected: count full)
@@ -541,35 +528,72 @@ class StreamingSpec extends SparkSuite {
     assert(!anch(100L), s"anchored window [10:20,11:20) must reject 11:05: $anch")
     assert(tumb(100L), s"tumbling window [11:00,12:00) must admit 11:05: $tumb")
     assert(anch(101L), s"11:25 re-anchors a fresh window: $anch")
-  } }
+  }
 
-  test("anchored rate limit state survives a query restart from checkpoint") { withRocksDB {
-    val src = Files.createTempDirectory("graft-anchr-src").toString
-    val chk = Files.createTempDirectory("graft-anchr-chk").toString
-    val out = Files.createTempDirectory("graft-anchr-out").toString + "/rows"
+  test("rate limit state survives a query restart, anchored and tumbling") {
     def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    // parquet sink: the memory sink cannot recover from a checkpoint
-    def startQuery() = EventPipeline.rateLimitedAnchored(
-      EventPipeline.fileSource(spark, src).as[Event], limit = 5,
-      watermark = Some("0 seconds")).toDF()
-      .writeStream.format("parquet").option("path", out)
+    // after the restart, the probe lands inside the RESTORED window whose
+    // count is full — must be rejected. Lost state would open a fresh
+    // window at the probe and admit it.
+    val kinds = Seq[(String, DataFrame => Dataset[EventPipeline.Admitted], Timestamp)](
+      // 11:05 is inside the anchored window [10:20, 11:20)
+      ("anchored", in => EventPipeline.rateLimitedAnchored(in.as[Event], limit = 5,
+        watermark = Some("0 seconds")), t(11, 5)),
+      // 10:50 is inside the tumbling window [10:00, 11:00)
+      ("tumbling", in => EventPipeline.rateLimited(
+        in.withWatermark("ts", "0 seconds").as[Event], limit = 5), t(10, 50)))
+    kinds.foreach { case (kind, limited, probe) =>
+      val src = Files.createTempDirectory(s"graft-rater-$kind-src").toString
+      val chk = Files.createTempDirectory(s"graft-rater-$kind-chk").toString
+      val out = Files.createTempDirectory(s"graft-rater-$kind-out").toString + "/rows"
+      // parquet sink: the memory sink cannot recover from a checkpoint
+      def startQuery() = limited(EventPipeline.fileSource(spark, src)).toDF()
+        .writeStream.format("parquet").option("path", out)
+        .outputMode(OutputMode.Append).option("checkpointLocation", chk).start()
+
+      writeBatch(src, "b1", (0 until 5).map(i => Event(i, t(10, 20 + i), 1, "click", 1.0)))
+      val q1 = startQuery()
+      q1.processAllAvailable(); q1.stop()
+
+      writeBatch(src, "b2", Seq(Event(100, probe, 1, "click", 1.0)))
+      val q2 = startQuery()
+      q2.processAllAvailable(); q2.stop()
+      val admitted = spark.read.parquet(out).collect()
+        .map(r => r.getAs[Long]("event_id") -> r.getAs[Boolean]("admitted")).toMap
+      assert(!admitted(100L), s"$kind: state lost across restart: $admitted")
+      assert((0 until 5).forall(i => admitted(i.toLong)), s"$kind: $admitted")
+    }
+  }
+
+  test("tumbling rate limit: a quiet user's state is deleted once the watermark passes its window") {
+    val src = Files.createTempDirectory("graft-churn-src").toString
+    val chk = Files.createTempDirectory("graft-churn-chk").toString
+    def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
+    // 20 users each send one event in the 10:00 window, then go quiet;
+    // user 1000 moves the watermark past 11:00, then user 1000 and the
+    // returning user 1 are the only active users of the 11:00 window
+    writeBatch(src, "b1", (1 to 20).map(u => Event(u, t(10, u), u, "click", 1.0)))
+    val q = EventPipeline.rateLimited(EventPipeline.fileSource(spark, src)
+        .withWatermark("ts", "0 seconds").as[Event], limit = 1)
+      .toDF().writeStream.format("memory").queryName("churn_out")
       .outputMode(OutputMode.Append).option("checkpointLocation", chk).start()
-
-    writeBatch(src, "b1", (0 until 5).map(i => Event(i, t(10, 20 + i), 1, "click", 1.0)))
-    val q1 = startQuery()
-    q1.processAllAvailable(); q1.stop()
-
-    // restart; the 11:05 event is inside the RESTORED anchored window
-    // [10:20, 11:20) whose count is full — must be rejected. Lost state
-    // would re-anchor at 11:05 and admit it.
-    writeBatch(src, "b2", Seq(Event(100, t(11, 5), 1, "click", 1.0)))
-    val q2 = startQuery()
-    q2.processAllAvailable(); q2.stop()
-    val admitted = spark.read.parquet(out).collect()
+    def stateRows() = q.lastProgress.stateOperators.head.numRowsTotal
+    q.processAllAvailable()
+    assert(stateRows() == 20L)
+    writeBatch(src, "b2", Seq(Event(100, t(11, 30), 1000, "click", 1.0)))
+    q.processAllAvailable()
+    writeBatch(src, "b3", Seq(Event(101, t(11, 40), 1000, "click", 1.0),
+      Event(102, t(11, 45), 1, "click", 1.0)))
+    q.processAllAvailable(); q.stop()
+    assert(stateRows() == 2L, s"quiet users kept their state: ${q.lastProgress.json}")
+    val admitted = spark.table("churn_out").collect()
       .map(r => r.getAs[Long]("event_id") -> r.getAs[Boolean]("admitted")).toMap
-    assert(!admitted(100L), s"state lost across restart: $admitted")
-    assert((0 until 5).forall(i => admitted(i.toLong)))
-  } }
+    // the returning user opens a fresh window; user 1000's second event
+    // meets its cap of one
+    assert(admitted.size == 23 && (1 to 20).forall(i => admitted(i.toLong)), admitted.toString)
+    assert(admitted(100L) && !admitted(101L) && admitted(102L), admitted.toString)
+    spark.catalog.dropTempView("churn_out")
+  }
 
   test("config facade parses the reference's config.yaml surface") {
     import graft.streaming.PipelineConfig
@@ -609,7 +633,7 @@ class StreamingSpec extends SparkSuite {
     assert(bad.length == 1 && bad.head.isNullAt(0))
   }
 
-  test("configured pipeline: config-driven dedup -> anchored rate limit -> alerts") { withRocksDB {
+  test("configured pipeline: config-driven dedup -> anchored rate limit -> alerts") {
     import graft.streaming.PipelineConfig
     val src = Files.createTempDirectory("graft-cfg-src").toString
     val chk = Files.createTempDirectory("graft-cfg-chk").toString
@@ -626,9 +650,9 @@ class StreamingSpec extends SparkSuite {
     q.processAllAvailable(); q.stop()
     val ids = spark.table("cfg_alerts").collect().map(_.getAs[Long]("event_id")).toSet
     assert(ids == Set(1L, 2L), s"got $ids")
-  } }
+  }
 
-  test("streaming z-score alerts equal the batch operator on a bounded replay") { withRocksDB {
+  test("streaming z-score alerts equal the batch operator on a bounded replay") {
     // constructed series: steady values with planted spikes per user
     val rnd = new scala.util.Random(7)
     val events = for { u <- 1L to 3L; i <- 0 until 80 } yield {
@@ -661,9 +685,9 @@ class StreamingSpec extends SparkSuite {
       s"alert sets diverge: only-batch=${batch.keySet -- streamed.keySet} only-stream=${streamed.keySet -- batch.keySet}")
     streamed.foreach { case (id, z) => assert(z == batch(id), s"z mismatch for $id: $z vs ${batch(id)}") }
     assert(batch.nonEmpty, "constructed series produced no alerts — test is vacuous")
-  } }
+  }
 
-  test("streaming dropout: event-time timers emit exactly the batch dropout set") { withRocksDB {
+  test("streaming dropout: event-time timers emit exactly the batch dropout set") {
     val t0 = 1700000000000L
     val min = 60000L
     def e(id: Long, tMs: Long, u: Long, typ: String) =
@@ -705,7 +729,7 @@ class StreamingSpec extends SparkSuite {
     // the split really exercised cross-batch rescue: click 7 sits in b1,
     // its rescuing purchase 8 in b2, and 7 was NOT emitted
     assert(b1.exists(_.event_id == 7L) && b2.exists(_.event_id == 8L))
-  } }
+  }
 
   test("streaming pattern match equals the batch operator on a time-ordered replay") {
     // planted clicks/purchases per user, with matches that must CROSS the
@@ -792,7 +816,7 @@ class StreamingSpec extends SparkSuite {
       "no transition crossed the micro-batch boundary — split is vacuous")
   }
 
-  test("ignition: 100 raw JSON records through the complete consumer — admitted/dropped/dead-letter counts") { withRocksDB {
+  test("ignition: 100 raw JSON records through the complete consumer — admitted/dropped/dead-letter counts") {
     import graft.streaming.PipelineConfig
     // the reference consumer loop end-to-end minus the broker socket (no
     // kafka artifact exists in this sandbox — SURVEY A29): decode →
@@ -836,7 +860,7 @@ class StreamingSpec extends SparkSuite {
     val ids = spark.table("ign_alerts").collect().map(_.getAs[Long]("event_id")).toSet
     val expected = (for { u <- 1L to 4L; i <- 0 until 5 } yield u * 100 + i).toSet
     assert(ids == expected, s"admitted set diverged: got $ids")
-  } }
+  }
 
   test("dead-letter split: malformed payloads route to rejects with reasons, valid flow on") {
     val good =
@@ -1013,8 +1037,7 @@ class StreamingSpec extends SparkSuite {
     import graft.streaming.StateTuning
     val priorParts = spark.conf.get("spark.sql.shuffle.partitions")
     val priorProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val tuning = StateTuning(statePartitions = 2, rocksDb = true,
-      changelogCheckpointing = true)
+    val tuning = StateTuning(statePartitions = 2, changelogCheckpointing = true)
     val src = Files.createTempDirectory("graft-tune-src").toString
     val chk = Files.createTempDirectory("graft-tune-chk").toString
     writeBatch(src, "b1", Seq(
@@ -1091,7 +1114,7 @@ class StreamingSpec extends SparkSuite {
       (2 * H, 4L, 1L, 1)), s"got $got")
   }
 
-  test("silenceStream: bounded replay emits exactly the batch silence/recovery set") { withRocksDB {
+  test("silenceStream: bounded replay emits exactly the batch silence/recovery set") {
     val S = 3600000L // 1h threshold
     val base = 1700000000000L
     def e(id: Long, ms: Long, tpe: String) =
@@ -1137,9 +1160,9 @@ class StreamingSpec extends SparkSuite {
     val streamed = spark.table("silence_alerts").collect().map(keyOf).toSet
     assert(streamed == batch,
       s"only-batch=${batch -- streamed} only-stream=${streamed -- batch}")
-  } }
+  }
 
-  test("firstSeenStream: day-close verdicts equal the batch new/returning grid") { withRocksDB {
+  test("firstSeenStream: day-close verdicts equal the batch new/returning grid") {
     val D = 86400000L
     val base = 20000L * D
     def e(id: Long, day: Long, k: Long, u: Long) =
@@ -1182,7 +1205,7 @@ class StreamingSpec extends SparkSuite {
     val agg = rows.groupBy(_._1).map { case (day, rs) =>
       (day, rs.size.toLong, rs.count(_._3).toLong, rs.count(!_._3).toLong) }.toSet
     assert(agg == batch, s"stream=$agg batch=$batch")
-  } }
+  }
 
   test("sloBurnStream: closed-hour alert set equals the batch multiwindow report") {
     val H = 3600000L
@@ -1372,7 +1395,7 @@ class StreamingSpec extends SparkSuite {
       s"stream/batch divergence: $out vs $batch")
   }
 
-  test("A90 stream: the day-close live forecast equals the batch forecaster bit-for-bit") { withRocksDB {
+  test("A90 stream: the day-close live forecast equals the batch forecaster bit-for-bit") {
     val D = 86400000L
     def e(id: Long, day: Int, k: Long) =
       Event(id, new Timestamp(day * D + k), k % 50, "a", 1.0)
@@ -1403,9 +1426,9 @@ class StreamingSpec extends SparkSuite {
     val batch = key(graft.operators.EventOps.hwForecast(spark, batchDir).collect())
     assert(stream == batch && stream.nonEmpty,
       s"stream ${stream.size} vs batch ${batch.size}")
-  }}
+  }
 
-  test("A89 stream: live heavy hitters carry state across batches; exact under capacity") { withRocksDB {
+  test("A89 stream: live heavy hitters carry state across batches; exact under capacity") {
     val B = 1700000000000L
     def e(id: Long, k: Long, u: Long, t: String) =
       Event(id, new Timestamp(B + k), u, t, 1.0)
@@ -1445,9 +1468,9 @@ class StreamingSpec extends SparkSuite {
       all.filter(t => t._1 == "click" && t._2 == n).map(t => (t._3, t._4, t._5, t._6)).toSet }
     assert(lastClick == Set((1, 5L, 2L, 2L)))
     spark.catalog.dropTempView("hh_live")
-  }}
+  }
 
-  test("A96 stream: live quantiles carry KLL state across batches; exact-regime emissions equal the batch rank rule") { withRocksDB {
+  test("A96 stream: live quantiles carry KLL state across batches; exact-regime emissions equal the batch rank rule") {
     val B = 1700000000000L
     def e(id: Long, k: Long, t: String, v: Double) =
       Event(id, new Timestamp(B + k), 1L, t, v)
@@ -1484,7 +1507,7 @@ class StreamingSpec extends SparkSuite {
       all.filter(t => t._1 == "click" && t._2 == n).map(t => (t._2, t._3, t._4)).toSet }
     assert(lastClick == Set((2L, 10.0, 20.0)), lastClick.toString)
     spark.catalog.dropTempView("kllq_live")
-  }}
+  }
 
   test("A101s theta stream: live distinct equals batch COUNT(DISTINCT) across batches; re-seen users never inflate") {
     val src = Files.createTempDirectory("graft-theta-src").toString
