@@ -66,6 +66,10 @@ object GraftSession {
       // its state in column families, which only RocksDB provides
       .config("spark.sql.streaming.stateStore.providerClass",
         graft.streaming.StepProcessor.RocksDbProvider)
+      // streaming checkpoints write through the `file:` FileContext; this one
+      // sets permissions and checks for symlinks without starting processes
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.streaming.NioLocalFs].getName)
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
     extraConf.foreach { case (k, v) => b = b.config(k, v) }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native dot product over two array<double> columns.
   *
@@ -275,27 +275,6 @@ case class TopCosBucketsExpr(vec: Expression, nrm: Expression,
     copy(vec = newFirst, nrm = newSecond, cents = newThird)
 }
 
-/** prefix_any_equal(a, b, n): does ANY of the first n elements match
-  * between two array<long> columns? The LSH first-collision dedup predicate
-  * (a pair colliding in several bands is emitted only by its lowest
-  * colliding band — earlier-band equality means "someone else emits this
-  * pair"). The declarative form `exists(zip_with(slice(a,1,n), slice(b,1,n),
-  * _===_), c=>c)` is a HigherOrderFunction chain: CodegenFallback, so it
-  * didn't just allocate three arrays per candidate row — it broke
-  * WholeStageCodegen for the ENTIRE join→filter→cosine stage, dropping the
-  * native dot kernel back to interpreted eval (measured r10: 5.6 s → 1.3 s
-  * on the sf0.1 lsh_auto pipeline from this one substitution). NULL inputs
-  * yield NULL (filter-false), matching the HOF form at the TOP level;
-  * element-level nulls read as raw storage (0L), not SQL null — the
-  * band-key domain is non-null by construction (rhpSign nulls whole
-  * signatures and callers filter those rows), so don't reuse this kernel
-  * on arrays with meaningful null elements. RAGGED inputs fail loudly
-  * (ADVICE r10): the HOF form this kernel replaced zip_with-pads the
-  * short side with null and returns null/drop, while a prefix compare
-  * over the common length would return false/keep — rather than silently
-  * diverge, unequal lengths throw (signature arrays are equal-length by
-  * construction; a future caller with ragged arrays must not inherit
-  * either semantics blind). */
 /** rhp_sign_array(vec, bits, bands): ALL `bands` band signatures of the
   * sign-LSH scheme in ONE compiled pass — element b equals
   * rhp_sign(vec, bits, b·bits) bit-for-bit (same XXH64-parity Rademacher
@@ -415,62 +394,7 @@ case class RhpSignArrayExpr(child: Expression, bits: Int, bands: Int)
     copy(child = newChild)
 }
 
-case class PrefixAnyEqualExpr(first: Expression, second: Expression,
-                              third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes: Seq[GraftShims.AbstractType] =
-    Seq(ArrayType(LongType), ArrayType(LongType), IntegerType)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean =
-    first.nullable || second.nullable || third.nullable
-  override def prettyName: String = "prefix_any_equal"
-
-  override def nullSafeEval(a: Any, b: Any, n: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements())
-      throw new IllegalArgumentException(
-        s"prefix_any_equal: ragged inputs (${x.numElements()} vs " +
-          s"${y.numElements()} elements) — signature arrays must be equal-length")
-    val lim = math.min(n.asInstanceOf[Int], x.numElements())
-    var i = 0
-    while (i < lim) {
-      if (x.getLong(i) == y.getLong(i)) return true
-      i += 1
-    }
-    false
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, n) => {
-      val i = ctx.freshName("i")
-      val lim = ctx.freshName("lim")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  throw new IllegalArgumentException(
-         |    "prefix_any_equal: ragged inputs (" + $a.numElements() + " vs " +
-         |    $b.numElements() + " elements) — signature arrays must be equal-length");
-         |}
-         |int $lim = java.lang.Math.min($n, $a.numElements());
-         |${ev.value} = false;
-         |for (int $i = 0; $i < $lim; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) { ${ev.value} = true; break; }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): PrefixAnyEqualExpr =
-    copy(first = f, second = s, third = t)
-}
-
 object VectorExpressions {
-  /** In-row first-collision predicate (see [[PrefixAnyEqualExpr]]). */
-  def prefixAnyEqual(a: Column, b: Column, n: Column): Column =
-    GraftShims.toColumn(PrefixAnyEqualExpr(GraftShims.toExpression(a),
-      GraftShims.toExpression(b), GraftShims.toExpression(n)))
-
   /** Column-level API for the codegen'd dot product (inputs must already be
     * array<double> — see VectorFunctions.toDouble). */
   def vecDot(a: Column, b: Column): Column =

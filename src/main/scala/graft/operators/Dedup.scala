@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.sources.StoreFiles
@@ -11,13 +11,14 @@ import graft.sources.StoreFiles
   * map-side partial aggregation (only the digest + representative id ship,
   * never the text twice). Near-dup (MinHash/SimHash) avoids the O(n²) pair
   * space by LSH banding: candidates meet only inside identical-band buckets,
-  * a key-partitioned self-join.
+  * found by a key-partitioned self-join or, for [[minhashLsh]], inside each
+  * bucket by the block-pair kernel.
   *
   * MinHash/SimHash signatures are computed by the native kernels in
   * graft.functions.TextHashExpressions — one compiled pass per document,
-  * map-only (no shuffle until the LSH band join), which is the 100 TB
+  * map-only (no shuffle until the LSH banding), which is the 100 TB
   * shape: signature computation scales with input bytes, and the only
-  * exchange carries (doc_id, band, bucket) triples.
+  * exchange carries one row per (document, band).
   *
   * Degenerate docs: the signature kernels yield NULL for zero-token
   * documents, and every LSH path filters them out before banding — empty
@@ -85,26 +86,26 @@ object Dedup {
       graft.functions.TextHashExpressions.minhashSig(col("text"), shingleK, n).as("sig"))
 
   /** C2: MinHash + LSH near-dup pairs with verified signature similarity.
-    * bands × rows = signature length; identical band hash → candidate. */
+    * bands × rows = signature length; identical band hash → candidate.
+    * Candidates are verified inside their (band, bucket) by the block-pair
+    * kernel ([[graft.plans.BlockPairs]]): each banded row carries its
+    * signature and every band's bucket, a pair sharing several bands is
+    * emitted once (by its lowest), and `est_jaccard` is its signature
+    * agreement. The signatures are computed once and shuffled once, one
+    * row per (document, band). */
   def minhashLsh(spark: SparkSession, dir: String,
                  shingleK: Int = 3, numHashes: Int = 16, bands: Int = 4,
                  threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0,
       s"bands=$bands must divide numHashes=$numHashes (trailing hashes would be silently un-banded)")
-    val rows = numHashes / bands
-    val sigs = minhashSigs(Tables.documents(spark, dir), shingleK, numHashes)
-      .filter(col("sig").isNotNull).cache()
-    val banded = bandedOf(sigs, bands, rows)
-    val cand = banded.as("a").join(banded.as("b"), Seq("band", "bucket"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b")).distinct()
-    val verified = cand
-      .join(sigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sigs.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), "id_b")
-      .withColumn("est_jaccard",
-        graft.functions.TextHashExpressions.sigAgree(col("sig_a"), col("sig_b"))
-          .cast("double") / numHashes)
-    verified.filter(col("est_jaccard") >= threshold)
+    val banded = minhashSigs(Tables.documents(spark, dir), shingleK, numHashes)
+      .filter(col("sig").isNotNull)
+      .select(col("doc_id"), col("sig"), bandKeys(bands, numHashes / bands).as("keys"))
+      .select(col("doc_id"), col("sig"), col("keys"), // _outer: see lshPairsOf
+        posexplode_outer(col("keys")).as(Seq("band", "bucket")))
+    graft.plans.BlockPairs(banded, Seq("band", "bucket"), "doc_id",
+      graft.plans.BlockPairs.Agreement("sig", numHashes), threshold, "est_jaccard",
+      Some(graft.plans.BlockPairs.FirstCollision("band", "keys")))
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
   }
 
@@ -134,9 +135,7 @@ object Dedup {
     val sigs = minhashSigs(docs, shingleK, numHashes)
       .filter(col("sig").isNotNull)
       .crossJoin(broadcast(cut)).cache()
-    val banded = sigs.select(col("doc_id"), col("cut"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows)), b))))
+    val banded = sigs.select(col("doc_id"), col("cut"), posexplode(bandKeys(bands, rows)))
       .toDF("doc_id", "cut", "band", "bucket")
     val existingB = banded.filter(col("doc_id") < col("cut"))
       .select(col("doc_id"), col("band"), col("bucket"))
@@ -160,12 +159,16 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
   }
 
+  /** A signature's LSH bucket in every band: element b hashes the band's
+    * `rows`-long minhash slice (seeded by b). */
+  private def bandKeys(bands: Int, rows: Int): Column =
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows)), b))
+
   /** Banded LSH keys for a signature table: one (doc_id, band, bucket) row
-    * per band, bucket = hash of the band's minhash slice. */
+    * per band. */
   private def bandedOf(sigs: DataFrame, bands: Int, rows: Int): DataFrame =
-    sigs.select(col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows)), b))))
+    sigs.select(col("doc_id"), posexplode(bandKeys(bands, rows)))
       .toDF("doc_id", "band", "bucket")
 
   /** Persist the near-dup signature store: `storeDir/sigs.parquet`

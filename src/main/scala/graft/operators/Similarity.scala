@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.BlockPairs
 import graft.sources.StoreFiles
 import graft.functions.VectorFunctions._
 
@@ -118,7 +119,9 @@ object Similarity {
 
   /** C6: near-duplicate embedding pairs above a cosine threshold, blocked by
     * label (the generator's cluster id) to stay sub-quadratic; exact within
-    * blocks — which makes it the ORACLE-CHECKABLE BASELINE, not the scale
+    * blocks (the block-pair kernel, [[graft.plans.BlockPairs]], scores each
+    * label's pairs in place) — which makes it the ORACLE-CHECKABLE BASELINE
+    * of that kernel, not the scale
     * path: with a fixed label set, within-block pair volume grows with
     * (n/|labels|)², and the r6 10×-distinct rehearsal measured ~18× wall at
     * 10× data. Production near-dup mining at scale is [[lshNeardupPairsAuto]]
@@ -130,12 +133,7 @@ object Similarity {
       .select(col("vec_id"), col("label"), toDouble(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
       .filter(col("nrm") > 0.0) // zero vector: cosine undefined (see withNorm)
-    val a = emb.select(col("label"), col("vec_id").as("id_a"), col("v").as("v_a"), col("nrm").as("n_a"))
-    val b = emb.select(col("label"), col("vec_id").as("id_b"), col("v").as("v_b"), col("nrm").as("n_b"))
-    a.join(b, Seq("label")).filter(col("id_a") < col("id_b"))
-      .select(col("label"), col("id_a"), col("id_b"),
-        (dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b"))).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
+    BlockPairs(emb, Seq("label"), "vec_id", BlockPairs.Cosine("v", "nrm"), threshold, "cos_sim")
   }
 
   /** C36: embedding keep-list — near-duplicate vectors collapsed to one
@@ -159,9 +157,9 @@ object Similarity {
     * never ships with the generator's cluster labels. One compiled pass
     * computes a sign signature per vector ([[graft.functions.RhpSignExpr]];
     * deterministic hash-derived hyperplanes, zero coordination), banding
-    * turns candidate generation into a key-partitioned self-join (identical
-    * shape to MinHash-LSH dedup), and candidates are verified with the
-    * exact codegen'd cosine — output precision is exact, recall is the
+    * makes each (band, bucket) a block whose pairs are verified in place by
+    * the block-pair kernel (as in MinHash-LSH dedup), with the exact
+    * cosine — output precision is exact, recall is the
     * standard sign-LSH collision bound (1−θ/π per bit). Defaults (16
     * planes, 4-bit bands) target high-similarity near-dup mining; lower
     * thresholds want more bands of fewer bits. */
@@ -173,27 +171,6 @@ object Similarity {
       bits = numPlanes / bands, bands = bands)
   }
 
-  /** Shared sign-LSH candidate+verify core. Band b's bucket is its OWN
-    * `bits`-plane signature at plane offset b·bits — bit-identical to
-    * slicing one long signature while the offsets stay under 64, but the
-    * band count is unbounded (the planes are a global deterministic
-    * sequence, not a 64-bit word).
-    *
-    * The candidate stream never hits a sort or a second shuffle — both
-    * matter at ~n·bands·occupancy candidates (~1e9 at the r8 100×
-    * rehearsal, where each in turn ran the host's disk dry):
-    *  - dedup is FIRST-COLLISION, not `distinct()`: a pair colliding in
-    *    several bands is emitted only by its lowest colliding band — a
-    *    map-side filter comparing the two rows' band-signature prefixes
-    *    (a global distinct is a full sort of the candidate stream);
-    *  - verification is IN-ROW, not a join back to the vector table:
-    *    banded rows carry (v, nrm) through the band join, so the exact
-    *    cosine is a codegen'd expression on the joined row (joining
-    *    candidates back to the corpus would shuffle+sort the candidate
-    *    stream twice more).
-    * Total shuffle volume is O(n·bands·(dim+bands)) — the banded sides
-    * of one join — regardless of how many candidates the buckets
-    * generate. */
   /** Band b's signature at `bits` planes. Up to 60 bits it is one long from
     * the plane-offset kernel; past 60 it becomes an ARRAY of ≤60-bit words
     * over consecutive plane offsets — a multi-word band key, joinable and
@@ -238,45 +215,44 @@ object Similarity {
     * `bsigs(0).isNotNull` filter never dropped them there (bsigs(0) is a
     * non-null ARRAY of null words), so they survived into occupancy
     * counts, grouped together on the null-word bucket; the vector-null
-    * filter here drops them. PAIR output is unchanged (null buckets never
-    * equi-join), but candidate-count estimates over corpora containing
-    * null vectors differ — deliberately: a row with no vector has no
-    * bucket, and counting it as occupancy was the bug, not the fix. */
+    * filter here drops them. PAIR output is unchanged (a row with no
+    * vector has no cosine, so it never paired), but candidate-count
+    * estimates over corpora containing null vectors differ — deliberately:
+    * a row with no vector has no bucket, and counting it as occupancy was
+    * the bug, not the fix. */
   private[graft] def withBandSigs(embN: DataFrame, bits: Int, bands: Int): DataFrame =
     embN.filter(col("v").isNotNull && size(col("v")) > 0)
       .withColumn("bsigs", bandSigs(bits, bands))
 
+  /** Shared sign-LSH candidate+verify core. Band b's bucket is its OWN
+    * `bits`-plane signature at plane offset b·bits — bit-identical to
+    * slicing one long signature while the offsets stay under 64, but the
+    * band count is unbounded (the planes are a global deterministic
+    * sequence, not a 64-bit word).
+    *
+    * Candidates are verified inside their bucket by the block-pair kernel
+    * ([[graft.plans.BlockPairs]]): the banded rows (id, vector, norm and
+    * every band key) are hash-partitioned by (band, bucket) and each bucket
+    * is held once, so a candidate pair never becomes a row. A pair that
+    * collides in several bands is emitted only by its lowest (the
+    * first-collision rule compares the two rows' earlier band keys), and
+    * each emitted pair carries its exact cosine. Shuffle volume is
+    * O(n·bands·(dim+bands)), one row per (vector, band), whatever the
+    * buckets' occupancy; CPU is the candidate pairs' dot products. */
   private[graft] def lshPairsOf(embN: DataFrame, threshold: Double,
                                 bits: Int, bands: Int): DataFrame = {
-    val emb = withBandSigs(embN, bits, bands)
-      .cache() // signatures computed once, read by both self-join sides
-    val banded = emb
-      .select(col("vec_id"), col("v"), col("nrm"), col("bsigs"), posexplode(col("bsigs")))
-      .toDF("vec_id", "v", "nrm", "bsigs", "band", "bucket")
-    // first-collision dedup: a NATIVE prefix predicate for the common
-    // single-word band regime (bits ≤ 60 → bsigs: array<long>). The
-    // declarative exists(zip_with(slice…)) form is kept only for the
-    // multi-word wide-band regime (bits > 60 → array<array<long>>, i.e.
-    // corpora past ~2^60·occupancy vectors) — as a HigherOrderFunction it
-    // is CodegenFallback and broke WholeStageCodegen for the whole
-    // join→filter→cosine stage, interpreting the dot kernel too
-    // (measured r10: 5.6 s → 1.3 s at sf0.1 from this substitution alone)
-    val earlierBandCollides =
-      if (bits <= 60)
-        graft.functions.VectorExpressions.prefixAnyEqual(
-          col("a.bsigs"), col("b.bsigs"), col("band"))
-      else exists(
-        zip_with(slice(col("a.bsigs"), lit(1), col("band")),
-                 slice(col("b.bsigs"), lit(1), col("band")),
-                 (x, y) => x === y),
-        c => c)
-    banded.as("a").join(banded.as("b"), Seq("band", "bucket"))
-      .filter(col("a.vec_id") < col("b.vec_id"))
-      // cheap int-prefix filter before the 64-float dot product
-      .filter(!earlierBandCollides)
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        (dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
+    // longs per band key: one up to 60 bits, else one per 60-bit word
+    val words = (bits + 59) / 60
+    val keys = if (words == 1) col("bsigs") else flatten(col("bsigs"))
+    val banded = withBandSigs(embN, bits, bands)
+      // _outer: a plain posexplode makes the optimizer infer a non-empty
+      // filter on the signature and run its kernel again below (bsigs is
+      // never null or empty here)
+      .select(col("vec_id"), col("v"), col("nrm"), keys.as("keys"),
+        posexplode_outer(col("bsigs")).as(Seq("band", "bucket")))
+    BlockPairs(banded, Seq("band", "bucket"), "vec_id", BlockPairs.Cosine("v", "nrm"),
+      threshold, "cos_sim", Some(BlockPairs.FirstCollision("band", "keys", words)))
+      .select(col("id_a"), col("id_b"), col("cos_sim"))
   }
 
   /** C6c: SCALE-ADAPTIVE sign-LSH near-dup pairs — the r6 scale rehearsal's
@@ -325,7 +301,7 @@ object Similarity {
   /** Measured LSH-auto volumes — the direct evidence behind the "candidates
     * stay linear" sizing claim, runnable at any pair of scales (the
     * occupancy-pinning math predicts candidates ∝ n; this measures them):
-    * (n, bits, bands, candidate pair rows the band join generates
+    * (n, bits, bands, candidate pairs the buckets hold
     * = Σ_{band,bucket} c·(c−1)/2, and the verified output pairs at the
     * threshold). Output pairs are a property of the CORPUS (how many true
     * near-dups exist), not the scheme — if the corpus's cluster structure
@@ -713,7 +689,7 @@ object Similarity {
 
   /** C6b recall floor (VERDICT r10 #6): `emb_lsh_auto` is the production
     * near-dup default but until r11 carried only a planted-recovery spec,
-    * no in-gate floor — a band-join or sizing regression would pass the
+    * no in-gate floor — a bucket-pairing or sizing regression would pass the
     * driver gate silently. This entry measures delivered PAIR recall
     * against the exact cosine enumeration at gate SF (the
     * lshEmpiricalRecall instrument, 500-2000 vectors → ≤2M exact pairs)
@@ -727,7 +703,7 @@ object Similarity {
     * ×0.85 margin because the theoretical number is the AT-threshold
     * worst case while the measured set includes pairs just above it
     * (delivered: 0.864 at sf0.001, 0.983 at sf0.01 — r11 probe). A broken
-    * band join scores ~0; a mis-sized scheme undershoots the margin. */
+    * bucket pairing scores ~0; a mis-sized scheme undershoots the margin. */
   def lshRecallGate(spark: SparkSession, dir: String,
                     threshold: Double = 0.4): DataFrame = {
     import spark.implicits._
@@ -737,7 +713,7 @@ object Similarity {
     require(recall >= floor,
       f"emb_lsh_auto delivered pair recall $recall%.4f (hit $found of $nTrue " +
         f"true pairs at cos>=$threshold) undercuts its sizing floor $floor%.4f " +
-        f"(bits=$bits bands=$bands) — the band join or sizing regressed")
+        f"(bits=$bits bands=$bands) — the bucket pairing or sizing regressed")
     Seq(("emb_lsh_auto", threshold, nTrue, found, recall, floor,
         bits.toLong, bands.toLong))
       .toDF("path", "threshold", "n_true", "n_hit", "recall", "floor",
@@ -808,7 +784,7 @@ object Similarity {
       // the distribution-aware expectation that adjudicates the measured
       // count (at 2^30-sized schemes the expected hit count on a gate
       // corpus is fractional; measured 0 must read as CONSISTENT, not
-      // broken, and a band-join bug still shows as measured ≪ expected)
+      // broken, and a bucket-pairing bug still shows as measured ≪ expected)
       val pBand = pow(
         lit(1.0) - acos(least(lit(1.0), greatest(lit(-1.0), col("cos_sim"))))
           / lit(math.Pi), lit(bits))
@@ -2019,8 +1995,9 @@ object Similarity {
     * Scale: clustering cost is [[embClusters]]'s (broadcast-centroid passes,
     * no pairwise work); within-cluster pair volume is Σ (cluster size)² —
     * the paper's regime sizes k ∝ √n so expected cluster size stays
-    * O(√n); duplicate groups collapse via the same star-CC rounds as the
-    * document keep-list. Rows-only (Lloyd's is not SQL-expressible); the
+    * O(√n); a duplicate group never leaves its cluster, so the block-pair
+    * kernel finds the groups inside each cluster (union-find over its
+    * pairs) and no connected-components rounds run. Rows-only (Lloyd's is not SQL-expressible); the
     * spec plants duplicate groups across well-separated clusters and checks
     * collapse + canonical choice. */
   def semDedup(spark: SparkSession, dir: String, k: Int = 10,
@@ -2037,20 +2014,14 @@ object Similarity {
                                 threshold: Double, lloydIters: Int): DataFrame = {
     val assign = buildIvfIndex(corpus, k, lloydIters, Some(seedsFor(corpus, k)))._2
       .select(col("vec_id"), col("bucket").as("cluster"))
-    val emb = corpus.join(assign, "vec_id")
-    val a = emb.select(col("cluster"), col("vec_id").as("id_a"),
-      col("v").as("v_a"), col("nrm").as("n_a"))
-    val b = emb.select(col("cluster"), col("vec_id").as("id_b"),
-      col("v").as("v_b"), col("nrm").as("n_b"))
-    val pairs = a.join(b, Seq("cluster")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b"))).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
-    val cc = Dedup.clustersFromPairsStars(pairs.select(col("id_a"), col("id_b")))
+    // every duplicate pair lies inside one cluster, so its duplicate groups
+    // (connected components) are found there too
+    val groups = BlockPairs.components(corpus.join(assign, "vec_id"), Seq("cluster"),
+      "vec_id", BlockPairs.Cosine("v", "nrm"), threshold)
     assign
-      .join(cc.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
+      .join(groups.select(col("id").as("vec_id"), col("root")), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster"),
-        coalesce(col("cluster_id"), col("vec_id")).as("canonical_id"))
+        coalesce(col("root"), col("vec_id")).as("canonical_id"))
       .withColumn("keep", col("vec_id") === col("canonical_id"))
   }
 

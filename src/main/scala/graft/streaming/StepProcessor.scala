@@ -52,7 +52,7 @@ abstract class StepProcessor[K, V, S, O](state: Encoder[S], timed: Boolean = fal
     run(key, Nil, timers, fired = true)
 
   private def run(key: K, rows: Seq[V], timers: TimerValues, fired: Boolean): Iterator[O] = {
-    val before = if (value.exists()) Some(value.get()) else None
+    val before = Option(value.get()) // one read: exists() is itself a get
     val (after, out) = step(key, before, rows, timers.getCurrentWatermarkInMs(), fired)
     if (after != before) after.fold(value.clear())(value.update)
     val (was, now) = (before.flatMap(timerOf), after.flatMap(timerOf))

@@ -37,4 +37,21 @@ object GraftShims {
                        builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(id, info, builder)
+
+  /** A DataFrame over a logical plan graft builds itself (a plan node a
+    * graft strategy executes). */
+  def ofRows(spark: SparkSession,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Adds a planner strategy to the session once (live sessions too, like
+    * [[registerFunction]]). */
+  def addStrategy(spark: SparkSession,
+                  strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
+    val exp = spark.asInstanceOf[classic.SparkSession].experimental
+    exp.synchronized {
+      if (!exp.extraStrategies.contains(strategy))
+        exp.extraStrategies = exp.extraStrategies :+ strategy
+    }
+  }
 }

@@ -19,43 +19,6 @@ class SimilaritySpec extends SparkSuite {
     both.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
   }
 
-  test("PrefixAnyEqualExpr equals the HOF first-collision predicate on random band keys") {
-    import org.apache.spark.sql.functions._
-    // random long-array pairs with planted prefix matches at every offset
-    val rnd = new scala.util.Random(7)
-    val rows = (0 until 500).map { i =>
-      val n = 1 + rnd.nextInt(6)
-      val a = Array.fill(n)(rnd.nextLong() % 4) // small domain → real collisions
-      val b = Array.fill(n)(rnd.nextLong() % 4)
-      (a, b, rnd.nextInt(n + 1))
-    }
-    val df = rows.toDF("a", "b", "n")
-    val both = df.select(
-      graft.functions.VectorExpressions.prefixAnyEqual(col("a"), col("b"), col("n")).as("native"),
-      exists(zip_with(slice(col("a"), lit(1), col("n")),
-        slice(col("b"), lit(1), col("n")), (x, y) => x === y), c => c).as("hof"))
-      .collect()
-    both.foreach(r => assert(r.getBoolean(0) == r.getBoolean(1)))
-    // null propagation matches the HOF form (filter-false either way)
-    val nulls = Seq((Some(Array(1L)), Option.empty[Array[Long]], 1))
-      .toDF("a", "b", "n")
-      .select(graft.functions.VectorExpressions
-        .prefixAnyEqual(col("a"), col("b"), col("n")).as("v")).collect()
-    assert(nulls.head.isNullAt(0))
-    // ragged inputs FAIL LOUDLY (ADVICE r10): the HOF form null-pads and
-    // drops while a common-prefix compare would keep — a silent divergence
-    // trap for any future caller; the kernel refuses instead
-    val ragged = intercept[Exception] {
-      Seq((Array(1L, 2L), Array(1L), 2)).toDF("a", "b", "n")
-        .select(graft.functions.VectorExpressions
-          .prefixAnyEqual(col("a"), col("b"), col("n")).as("v")).collect()
-    }
-    def rootMsg(t: Throwable): String =
-      (Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .flatMap(e => Option(e.getMessage)).toSeq.mkString(" | "))
-    assert(rootMsg(ragged).contains("ragged"), rootMsg(ragged))
-  }
-
   private lazy val dir: String = {
     val d = Files.createTempDirectory("graft-sim").toString
     // orthogonal unit basis + a near-copy of e0
