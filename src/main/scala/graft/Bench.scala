@@ -21,23 +21,21 @@ object Bench {
     * 100× rehearsal (doc_token_count ratio 1.0 at 100× data); the noop
     * write evaluates every output column and discards rows executor-side
     * — no driver collect, no disk. */
-  private[graft] def materialize(df: DataFrame): Unit =
+  private[graft] def materialize(df: DataFrame): Unit = {
+    served = df
     df.write.mode("overwrite").format("noop").save()
+  }
+  private var served: DataFrame = _
 
-  /** Between-rep hygiene (r13, VERDICT r12 #1): `clearCache()` only drops
-    * CacheManager entries — the block-manager blocks behind every
-    * `localCheckpoint`ed DataFrame an operator RETURNS are invisible to it
-    * and accumulated across the whole 246-entry run (the r12 driver log
-    * shows RDD ids past 54k). A deployment frees a served result's
-    * checkpoint when it drops the reference (GraftShims.unpersistCheckpoint
-    * — the operators already do this for their internal intermediates);
-    * the bench re-establishes exactly that per-query hygiene between reps
-    * so rep N+1 never pays rep N's undead blocks. Runs OUTSIDE the timed
-    * region. */
-  private[graft] def releaseLeaked(spark: SparkSession): Unit = {
+  /** Between-rep hygiene, so rep N+1 never pays rep N's blocks: drop the
+    * CacheManager's entries and free the pins the last materialized result
+    * reads, as a deployment frees a served result when it drops it. Every
+    * other intermediate was released by its operator's own scope
+    * ([[Pins]]). Runs OUTSIDE the timed region. */
+  private[graft] def releaseServed(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    Pins.release(served)
+    served = null
   }
 
   /** Aggregate CPU throughput probe (r13, VERDICT r12 #3a): N concurrent
@@ -139,7 +137,7 @@ object Bench {
         try { materialize(fn(spark, "/root/testdata/sf0.001")) }
         catch { case _: Throwable => }
       }
-      releaseLeaked(spark)
+      releaseServed(spark)
     }
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
@@ -190,7 +188,7 @@ object Bench {
         if (qi % 10 == 0 && qi > 0) decadeCalib += calibMs()
         registry.benchFn(name).map { fn =>
           val times = (1 to reps).map { _ =>
-            releaseLeaked(spark)
+            releaseServed(spark)
             val t0 = System.nanoTime()
             try { materialize(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
             catch { case e: Throwable =>
@@ -286,7 +284,7 @@ object Bench {
             val maxTries = if (hostDegraded) wantReps else wantReps + 2
             while (allTimes.length < maxTries && quietTimes.length < wantReps) {
               val pre = spin
-              releaseLeaked(spark)
+              releaseServed(spark)
               val t0 = System.nanoTime()
               val t = try { materialize(fn(spark, dst)); Some((System.nanoTime() - t0) / 1e9) }
                 catch { case e: Throwable =>
@@ -369,7 +367,7 @@ object Bench {
               System.err.println(f"[bench] scale10 readjudication of $name waiting for quiet window (calib $pre%.0f ms)")
               Thread.sleep(10000); pre = calibMs()
             }
-            releaseLeaked(spark)
+            releaseServed(spark)
             val t0 = System.nanoTime()
             val retry = try { materialize(fn(spark, dst)); Some((System.nanoTime() - t0) / 1e9) }
               catch { case e: Throwable =>
@@ -511,7 +509,7 @@ object BenchScale {
       val fn = registry.benchFn(name).getOrElse(
         sys.error(s"unknown bench query: $name"))
       val times = (1 to reps).map { _ =>
-        Bench.releaseLeaked(spark)
+        Bench.releaseServed(spark)
         val t0 = System.nanoTime()
         try { Bench.materialize(fn(spark, dir)); Some((System.nanoTime() - t0) / 1e9) }
         catch { case e: Throwable =>

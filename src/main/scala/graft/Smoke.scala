@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Smoke main: runs the flagship SparkEntry.entry the way the driver does
-  * and prints its row count + first rows. */
+/** Smoke main: runs the flagship SparkEntry.entry in the session users run
+  * ([[GraftSession.local]]) and prints its row count + first rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     println(s"entry rows=${df.count()}")

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.operators._
+import graft.Pins.Pinning
 import BenchForm._
 import Scale10._
 
@@ -526,12 +527,12 @@ object SparkEntry {
     catch { case _: Throwable => }
   }
 
-  /** Run `body` on a fresh temp directory, deleted when it returns: a
-    * store-backed entry's result must be materialized (checkpointed)
-    * inside `body`. */
+  /** Run `body` as one [[Pins.scope]] on a fresh temp directory, deleted
+    * when it returns: a store-backed entry's result must be pinned inside
+    * `body`. */
   private def withTempDir[T](prefix: String)(body: String => T): T = {
     val dir = Files.createTempDirectory(prefix).toString
-    try body(dir) finally deleteDir(dir)
+    try Pins.scope(body(dir)) finally deleteDir(dir)
   }
 
   /** A. event-stream operators: the reference consumer's dedup, rate
@@ -586,8 +587,7 @@ object SparkEntry {
           .agg(count(lit(1)).as("n_events"),
             countDistinct(col("user_id")).as("n_users"),
             graft.functions.Cols.dsum(col("value")).as("sum_value"),
-            graft.functions.Cols.tsMs(max(col("ts"))).as("max_ts_ms"))
-          .localCheckpoint(true)
+            graft.functions.Cols.tsMs(max(col("ts"))).as("max_ts_ms")).pin()
       }
     }, timed,
       s"""SELECT event_type, count(*) AS n_events, count(DISTINCT user_id) AS n_users,
@@ -1088,8 +1088,7 @@ object SparkEntry {
           .head()
         val (d0, d1) = if (b.isNullAt(0)) (0L, 0L)
           else (b.getAs[Long]("d0"), b.getAs[Long]("d1"))
-        graft.operators.BitmapOps.bitmapStoreServe(s, store, d0, d1)
-          .localCheckpoint(true)
+        graft.operators.BitmapOps.bitmapStoreServe(s, store, d0, d1).pin()
       }
     },
       storeServed((s, d) => {
@@ -1115,8 +1114,7 @@ object SparkEntry {
         withTempDir("graft-bench-bmfwork") { work =>
           copyDir(base, work)
           graft.operators.BitmapOps.bitmapStoreForget(s, work, ids)
-          graft.operators.BitmapOps.bitmapStoreServe(s, work, d0, d1)
-            .localCheckpoint(true)
+          graft.operators.BitmapOps.bitmapStoreServe(s, work, d0, d1).pin()
         }
       }),
       // A80g: id-attributable counts masked, anonymous aggregates untouched
@@ -2637,11 +2635,9 @@ object SparkEntry {
       hhExactSql),
     // A89c: store-served full-range top-k must equal the exact twin's
     // oracle (under-capacity regime: merged partials are provably exact)
-    Entry("ev_hh_store", (s, d) => {
-      withTempDir("graft-hhs") { tmp =>
-        Sketches.writeHeavyHitterStore(s, d, tmp)
-        Sketches.heavyHittersFromStore(s, tmp).localCheckpoint(true)
-      }
+    Entry("ev_hh_store", (s, d) => withTempDir("graft-hhs") { tmp =>
+      Sketches.writeHeavyHitterStore(s, d, tmp)
+      Sketches.heavyHittersFromStore(s, tmp).pin()
     }, timed,
       // A89c: the store-served full-range top-k must reproduce the same
       // exact ranking (merged under-capacity partials are provably exact)
@@ -2649,11 +2645,9 @@ object SparkEntry {
     Entry("ev_quantiles_exact", (s, d) => Sketches.exactQuantiles(s, d), timed, quantilesExactSql),
     // A96c: store-served full-range quantiles — under-capacity daily
     // partials merge to the exact multiset, sharing the A27 oracle
-    Entry("ev_quantile_store", (s, d) => {
-      withTempDir("graft-qsk") { tmp =>
-        Sketches.writeQuantileStore(s, d, tmp)
-        Sketches.quantilesFromStore(s, tmp).localCheckpoint(true)
-      }
+    Entry("ev_quantile_store", (s, d) => withTempDir("graft-qsk") { tmp =>
+      Sketches.writeQuantileStore(s, d, tmp)
+      Sketches.quantilesFromStore(s, tmp).pin()
     },
       storeServed((s, d) => {
         val dir = cachedStore(s"qsk:$d", tmp =>
@@ -3908,11 +3902,9 @@ object SparkEntry {
     // C117b: the same adjudication served from the persisted signature
     // store — candidates from stored bands, zero re-shingling; must be
     // row-identical to doc_rouge_pairs (spec-pinned)
-    Entry("doc_rouge_store", (s, d) => {
-      withTempDir("graft-rgs") { tmp =>
-        Dedup.writeSignatureStore(graft.Tables.documents(s, d), tmp)
-        Dedup.rougePairsFromStore(s, d, tmp).localCheckpoint(true)
-      }
+    Entry("doc_rouge_store", (s, d) => withTempDir("graft-rgs") { tmp =>
+      Dedup.writeSignatureStore(graft.Tables.documents(s, d), tmp)
+      Dedup.rougePairsFromStore(s, d, tmp).pin()
     }),
     // C2m: measured minhash recall + estimator MAE vs the exact Jaccard
     // enumeration (gate-SF instrument — the lshEmpiricalRecall discipline)
@@ -4642,11 +4634,9 @@ object SparkEntry {
     // C53d: encode from the persisted production-scale merge table (r12,
     // VERDICT r11 #3) — the write is gate-covered here; the bench serves
     // from a cached store (train once, encode many)
-    Entry("doc_bpe_store", (s, d) => {
-      withTempDir("graft-bpes") { tmp =>
-        TextOps.writeBpeStoreFast(graft.Tables.documents(s, d), tmp)
-        TextOps.bpeEncodeFromStore(s, d, tmp).localCheckpoint(true)
-      }
+    Entry("doc_bpe_store", (s, d) => withTempDir("graft-bpes") { tmp =>
+      TextOps.writeBpeStoreFast(graft.Tables.documents(s, d), tmp)
+      TextOps.bpeEncodeFromStore(s, d, tmp).pin()
     },
       storeServed((s, d) => {
         val dir = cachedStore(s"bpes:$d", tmp =>
@@ -4695,8 +4685,7 @@ object SparkEntry {
           QualityModel.writeQualityModel(docs.filter(col("doc_id") < cut),
             store)
           QualityModel.qualityScoreIncremental(
-            docs.filter(col("doc_id") >= cut), store)
-            .localCheckpoint(true) // materialize before the store dies
+            docs.filter(col("doc_id") >= cut), store).pin() // materialize before the store dies
         }
       }
     },
@@ -4985,7 +4974,7 @@ object SparkEntry {
         withTempDir("graft-dsirstore") { store =>
           Dsir.writeDsirStore(docs, col("source") === "src0", store)
           Dsir.dsirScoreIncremental(docs.filter(col("doc_id") >= cut), store)
-            .localCheckpoint(true) // materialize before the store dies
+            .pin() // materialize before the store dies
         }
       }
     }),
@@ -5295,11 +5284,9 @@ object SparkEntry {
     Entry("doc_unigram_encode", (s, d) => TextOps.unigramEncode(s, d)),
     // C103c: encode from the persisted piece table — must reproduce the
     // direct encode bit-for-bit (frozen-vocabulary contract)
-    Entry("doc_unigram_store", (s, d) => {
-      withTempDir("graft-unis") { tmp =>
-        TextOps.writeUnigramStore(graft.Tables.documents(s, d), tmp)
-        TextOps.unigramEncodeFromStore(s, d, tmp).localCheckpoint(true)
-      }
+    Entry("doc_unigram_store", (s, d) => withTempDir("graft-unis") { tmp =>
+      TextOps.writeUnigramStore(graft.Tables.documents(s, d), tmp)
+      TextOps.unigramEncodeFromStore(s, d, tmp).pin()
     },
       storeServed((s, d) => {
         val dir = cachedStore(s"unis:$d", tmp =>
@@ -5318,12 +5305,9 @@ object SparkEntry {
     Entry("doc_cdc_stats", (s, d) => TextOps.cdcStats(s, d), timed),
     // C110c: encode from the persisted WordPiece vocabulary — must equal
     // the direct train+encode bit-for-bit (frozen-vocabulary contract)
-    Entry("doc_wordpiece_store", (s, d) => {
-      withTempDir("graft-wps") { tmp =>
-        TextOps.writeWordpieceStore(graft.Tables.documents(s, d), tmp)
-        TextOps.wordpieceEncodeFromStore(s, d, tmp)
-          .localCheckpoint(true)
-      }
+    Entry("doc_wordpiece_store", (s, d) => withTempDir("graft-wps") { tmp =>
+      TextOps.writeWordpieceStore(graft.Tables.documents(s, d), tmp)
+      TextOps.wordpieceEncodeFromStore(s, d, tmp).pin()
     },
       storeServed((s, d) => {
         val dir = cachedStore(s"wps:$d", tmp =>
@@ -5334,61 +5318,48 @@ object SparkEntry {
     // C113: Bloom membership store — built on the even docs, the odd docs
     // screened as a batch (organic exact dups land in n_seen; novel is
     // exact, seen may over-count by <= fpp)
-    Entry("doc_bloom_store", (s, d) => {
-      withTempDir("graft-bloom") { tmp =>
-        val docs = graft.Tables.documents(s, d)
-        graft.operators.Dedup.writeBloomStore(docs.filter(
-          org.apache.spark.sql.functions.col("doc_id") % 2 === 0), tmp)
-        graft.operators.Dedup.bloomIngest(docs.filter(
-          org.apache.spark.sql.functions.col("doc_id") % 2 === 1), tmp)
-          .localCheckpoint(true)
-      }
+    Entry("doc_bloom_store", (s, d) => withTempDir("graft-bloom") { tmp =>
+      val docs = graft.Tables.documents(s, d)
+      graft.operators.Dedup.writeBloomStore(docs.filter(
+        org.apache.spark.sql.functions.col("doc_id") % 2 === 0), tmp)
+      graft.operators.Dedup.bloomIngest(docs.filter(
+        org.apache.spark.sql.functions.col("doc_id") % 2 === 1), tmp).pin()
     }, timed),
     // C113b: counting-Bloom lifecycle — build on the even docs, take the
     // id%4==0 slice DOWN (the deletion C113 can't do), then screen the
     // odd batch against the reduced store
-    Entry("doc_cbloom_store", (s, d) => {
-      withTempDir("graft-cbloom") { tmp =>
-        import org.apache.spark.sql.functions.col
-        val docs = graft.Tables.documents(s, d)
-        graft.operators.Dedup.writeCountingBloomStore(
-          docs.filter(col("doc_id") % 2 === 0), tmp)
-        graft.operators.Dedup.countingBloomForget(
-          docs.filter(col("doc_id") % 4 === 0), tmp)
-          .localCheckpoint(true)
-        graft.operators.Dedup.countingBloomIngest(
-          docs.filter(col("doc_id") % 2 === 1), tmp)
-          .localCheckpoint(true)
-      }
+    Entry("doc_cbloom_store", (s, d) => withTempDir("graft-cbloom") { tmp =>
+      import org.apache.spark.sql.functions.col
+      val docs = graft.Tables.documents(s, d)
+      graft.operators.Dedup.writeCountingBloomStore(
+        docs.filter(col("doc_id") % 2 === 0), tmp)
+      graft.operators.Dedup.countingBloomForget(
+        docs.filter(col("doc_id") % 4 === 0), tmp).pin()
+      graft.operators.Dedup.countingBloomIngest(
+        docs.filter(col("doc_id") % 2 === 1), tmp).pin()
     }, timed),
     // C111c: chunk store + incremental batch accounting — store built on
     // the even docs, the odd docs arrive as a crawl batch (organic dups
     // and shared boilerplate produce the known/new split)
-    Entry("doc_cdc_store", (s, d) => {
-      withTempDir("graft-cdcs") { tmp =>
-        val docs = graft.Tables.documents(s, d)
-        TextOps.writeCdcStore(docs.filter(
-          org.apache.spark.sql.functions.col("doc_id") % 2 === 0), tmp)
-        TextOps.cdcIngest(docs.filter(
-          org.apache.spark.sql.functions.col("doc_id") % 2 === 1), tmp)
-          .localCheckpoint(true)
-      }
+    Entry("doc_cdc_store", (s, d) => withTempDir("graft-cdcs") { tmp =>
+      val docs = graft.Tables.documents(s, d)
+      TextOps.writeCdcStore(docs.filter(
+        org.apache.spark.sql.functions.col("doc_id") % 2 === 0), tmp)
+      TextOps.cdcIngest(docs.filter(
+        org.apache.spark.sql.functions.col("doc_id") % 2 === 1), tmp).pin()
     }, timed),
     // C111e store lifecycle (r11, VERDICT r10 #8): takedown tombstone →
     // re-arrival under the STANDING mask (reads novel, resurrects) →
     // compact (fold + clear) → a fresh odd-docs ingest against the
     // rewritten store; returns the final ingest report
-    Entry("doc_cdc_forget", (s, d) => {
-      withTempDir("graft-cdcf") { tmp =>
-        import org.apache.spark.sql.functions.col
-        val docs = graft.Tables.documents(s, d)
-        TextOps.writeCdcStore(docs.filter(col("doc_id") % 2 === 0), tmp)
-        TextOps.cdcForget(docs.filter(col("doc_id") % 4 === 0), tmp)
-        TextOps.cdcIngest(docs.filter(col("doc_id") % 4 === 0), tmp)
-        TextOps.cdcCompact(s, tmp)
-        TextOps.cdcIngest(docs.filter(col("doc_id") % 2 === 1), tmp)
-          .localCheckpoint(true)
-      }
+    Entry("doc_cdc_forget", (s, d) => withTempDir("graft-cdcf") { tmp =>
+      import org.apache.spark.sql.functions.col
+      val docs = graft.Tables.documents(s, d)
+      TextOps.writeCdcStore(docs.filter(col("doc_id") % 2 === 0), tmp)
+      TextOps.cdcForget(docs.filter(col("doc_id") % 4 === 0), tmp)
+      TextOps.cdcIngest(docs.filter(col("doc_id") % 4 === 0), tmp)
+      TextOps.cdcCompact(s, tmp)
+      TextOps.cdcIngest(docs.filter(col("doc_id") % 2 === 1), tmp).pin()
     },
       // r12 (VERDICT r11 #4): the gate entry keeps the FULL lifecycle
       // (write+forget+ingest+compact+ingest — correctness must cover every
@@ -5699,11 +5670,9 @@ object SparkEntry {
         |FROM j""".stripMargin),
     // C76 persisted postings store: serve-from-store must be bit-equal to
     // the direct path (same oracle)
-    Entry("doc_bm25_store", (s, d) => {
-      withTempDir("graft-bm25s") { tmp =>
-        TextOps.writeBm25Store(graft.Tables.documents(s, d), tmp)
-        TextOps.bm25FromStore(s, tmp).localCheckpoint(true)
-      }
+    Entry("doc_bm25_store", (s, d) => withTempDir("graft-bm25s") { tmp =>
+      TextOps.writeBm25Store(graft.Tables.documents(s, d), tmp)
+      TextOps.bm25FromStore(s, tmp).pin()
     },
       storeServed((s, d) => {
         val dir = cachedStore(s"bm25s:$d", tmp =>
@@ -5741,14 +5710,12 @@ object SparkEntry {
     // C108b: the bake-off served from the two persisted tokenizer stores
     // (train once at store-write, compare without retraining) — must be
     // bit-equal to doc_tok_compare under the same training parameters.
-    Entry("doc_tok_compare_store", (s, d) => {
-      withTempDir("graft-toks") { tmp =>
-        val docs = graft.Tables.documentsSpread(s, d)
-        graft.operators.TextOps.writeBpeStore(docs, s"$tmp/bpe", nMerges = 64)
-        graft.operators.TextOps.writeUnigramStore(docs, s"$tmp/uni")
-        graft.operators.TextOps.tokCompareFromStores(
-          s, d, s"$tmp/bpe", s"$tmp/uni").localCheckpoint(true)
-      }
+    Entry("doc_tok_compare_store", (s, d) => withTempDir("graft-toks") { tmp =>
+      val docs = graft.Tables.documentsSpread(s, d)
+      graft.operators.TextOps.writeBpeStore(docs, s"$tmp/bpe", nMerges = 64)
+      graft.operators.TextOps.writeUnigramStore(docs, s"$tmp/uni")
+      graft.operators.TextOps.tokCompareFromStores(
+        s, d, s"$tmp/bpe", s"$tmp/uni").pin()
     },
       storeServed((s, d) => {
         val dir = cachedStore(s"toks:$d", tmp => {
@@ -6009,7 +5976,7 @@ object SparkEntry {
             idx, nQueries = 10, nlist = 8, lloydIters = 1)
           Similarity.ivfIngest(s, emb.filter(col("vec_id") >= cut), idx)
           Similarity.ivfTopKFromIndex(s, d, idx,
-            nprobe = Int.MaxValue).localCheckpoint(true)
+            nprobe = Int.MaxValue).pin()
         }
       }
     },
@@ -6025,7 +5992,7 @@ object SparkEntry {
           graft.operators.Similarity.ivfIngest(
             s, emb.filter(col("vec_id") >= cut), work)
           graft.operators.Similarity.ivfTopKFromIndex(s, d, work,
-            nprobe = Int.MaxValue).localCheckpoint(true)
+            nprobe = Int.MaxValue).pin()
         }
       }), bruteTopkSql),
     // C74: delete lifecycle — tombstone a deterministic corpus subset,
@@ -6046,7 +6013,7 @@ object SparkEntry {
             emb.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
             idx)
           Similarity.ivfTopKFromIndex(s, d, idx,
-            nprobe = Int.MaxValue).localCheckpoint(true)
+            nprobe = Int.MaxValue).pin()
         }
       }
     },
@@ -6060,7 +6027,7 @@ object SparkEntry {
           graft.operators.Similarity.ivfDelete(
             s, emb.filter(col("vec_id") % 10 === 3).select(col("vec_id")), work)
           graft.operators.Similarity.ivfTopKFromIndex(s, d, work,
-            nprobe = Int.MaxValue).localCheckpoint(true)
+            nprobe = Int.MaxValue).pin()
         }
       }), bruteTopkDeleteSql),
     // C56: MIPS — exact brute force (gated), the norm-augmented IVF probe
@@ -6241,8 +6208,7 @@ object SparkEntry {
           .map(x => x.copy(media_id = x.media_id + 10000000L))
         graft.multimodal.Multimodal.writePhashStore(m, tmp)
         graft.multimodal.Multimodal.ingestPhashes(dup, tmp)
-        graft.multimodal.Multimodal.phashPairsFromStore(s, tmp)
-          .localCheckpoint(true)
+        graft.multimodal.Multimodal.phashPairsFromStore(s, tmp).pin()
       }
     },
       storeServed((s, d) => {
@@ -6257,9 +6223,9 @@ object SparkEntry {
     // bands — the adversarial layout for 4-band blocking, provably
     // harmless to 8-band). Every planted pair must surface with its exact
     // distance; rows-only (banding is blocking, not SQL).
-    Entry("mm_phash_pairs_r7", (s, d) => {
+    Entry("mm_phash_pairs_r7", (s, d) => Pins.scope {
       val h = graft.multimodal.Multimodal.phashes(
-        graft.multimodal.Multimodal.mediaTable(s, d)).localCheckpoint(true)
+        graft.multimodal.Multimodal.mediaTable(s, d)).pin()
       graft.multimodal.Multimodal.phashPairsRadius(
         h.unionByName(phashTwins(h, 20000000L, spreadMasks(7))), maxDist = 7)
     }),
@@ -6269,9 +6235,9 @@ object SparkEntry {
     // past r=3) and band-concentrated (always found), so the curve reads
     // 1.0 through r=3 — the pigeonhole guarantee — and a real, non-trivial
     // fraction beyond it.
-    Entry("mm_phash_recall_curve", (s, d) => {
+    Entry("mm_phash_recall_curve", (s, d) => Pins.scope {
       val h = graft.multimodal.Multimodal.phashes(
-        graft.multimodal.Multimodal.mediaTable(s, d)).localCheckpoint(true)
+        graft.multimodal.Multimodal.mediaTable(s, d)).pin()
       val planted = h
         .unionByName(phashTwins(h, 20000000L, spreadMasks(8)))
         .unionByName(phashTwins(h, 40000000L, concMasks(8)))

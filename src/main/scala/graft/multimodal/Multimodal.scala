@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Pins._
 import graft.Tables
 
 /** C12: multimodal columns — images/audio/video as opaque binary columns
@@ -167,7 +168,7 @@ object Multimodal {
     * shuffles on (band, chunk) — near-dup clusters collide, unrelated
     * noise spreads over 4·2¹⁶ buckets. */
   def phashPairs(media: Dataset[Media], maxDist: Int = 3): DataFrame =
-    pairsOfHashes(phashes(media).localCheckpoint(true), maxDist)
+    pairsOfHashes(phashes(media).pin(), maxDist)
 
   /** The banded pairing kernel over any (media_id, phash) table — shared
     * by the decode-path [[phashPairs]], the store-served
@@ -230,7 +231,7 @@ object Multimodal {
     * the 16-byte/row hash table — an instrument for gate/rehearsal scales
     * (hashes, never pixels; 2000 rows = 2M cheap xors), not a production
     * default. */
-  def phashRecallCurve(h: DataFrame, maxRadius: Int = 8): DataFrame = {
+  def phashRecallCurve(h: DataFrame, maxRadius: Int = 8): DataFrame = scope {
     val spark = h.sparkSession
     import spark.implicits._
     val par = spark.sparkContext.defaultParallelism
@@ -256,7 +257,7 @@ object Multimodal {
       .withColumn("found", lit(true))
     val marked = truePairs.join(cand, Seq("id_a", "id_b"), "left")
       .select(col("dist"), coalesce(col("found"), lit(false)).as("found"))
-      .localCheckpoint(true) // ≤ true-pair rows; re-read per radius below
+      .pin() // ≤ true-pair rows; re-read per radius below
     spark.range(1, maxRadius + 1L).select(col("id").as("radius"))
       .join(marked, marked("dist") <= col("radius"), "left")
       .groupBy("radius")

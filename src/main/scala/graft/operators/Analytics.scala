@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Pins._
 import graft.Tables
 import graft.functions.Cols._
 
@@ -441,7 +442,7 @@ object Analytics {
     * anywhere. Adapted predicate (schema has no commit/receipt dates): a line
     * is "late" when it shipped > `delayDays` after the order date. */
   def q21WaitingSuppliers(spark: SparkSession, dir: String,
-                          delayDays: Int = 100, k: Int = 20): DataFrame = {
+                          delayDays: Int = 100, k: Int = 20): DataFrame = scope {
     val ord = Tables.orders(spark, dir)
       .filter(col("o_orderstatus") === "F")
       .select(col("o_orderkey"), col("o_orderdate"))
@@ -459,8 +460,7 @@ object Analytics {
     // broadcast of the same lineage can deadlock Spark 4.1's scheduler.
     val late = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .filter(col("l_shipdate") > col("o_orderdate") + expr(s"INTERVAL $delayDays DAYS"))
-      .select(col("l_orderkey"), col("l_suppkey"))
-      .localCheckpoint(true)
+      .select(col("l_orderkey"), col("l_suppkey")).pin()
     // EXISTS another supplier's line on the same order — applied first so
     // the anti join's shuffled left input is the (small) late∧multi subset.
     // (Anti-first looks like it would let ReuseExchange share the late
@@ -782,7 +782,7 @@ object Analytics {
   def kAnonymity(spark: SparkSession, dir: String): DataFrame = {
     def audit(entity: String, df: DataFrame, qi: Seq[Column]): DataFrame =
       df.select(concat_ws("\u0001",
-          qi.map(c => coalesce(c.cast("string"), lit(" "))): _*).as("qi"))
+          qi.map(c => coalesce(c.cast("string"), lit("\u0000"))): _*).as("qi"))
         .groupBy("qi").agg(count(lit(1)).as("cnt"))
         .agg(sum(col("cnt")).cast("long").as("n_rows"),
           count(lit(1)).as("n_groups"),
@@ -938,7 +938,7 @@ object Analytics {
     * Scale: two scans (one per half-assignment pass folded into one scan
     * + the bucket pass), a ≤types×9 edge table joined as an in-row array
     * (broadcast), one (type, bin) partial agg, a ≤types rollup. */
-  def psi(spark: SparkSession, dir: String): DataFrame = {
+  def psi(spark: SparkSession, dir: String): DataFrame = scope {
     val ev = psiEvents(spark, dir)
     val mid = ev.groupBy("event_type")
       .agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
@@ -961,7 +961,7 @@ object Analytics {
     * every term finite); a type with no reference history drops — there
     * is no baseline to fit edges on. */
   def psiCalendar(spark: SparkSession, dir: String,
-                  windowDays: Int = 7): DataFrame = {
+                  windowDays: Int = 7): DataFrame = scope {
     val ev = psiEvents(spark, dir)
     val anchor = ev.agg(max(col("d")).as("d_max"))
     psiFromHalves(ev.crossJoin(broadcast(anchor))
@@ -973,10 +973,9 @@ object Analytics {
       .select(col("event_type"), col("value"),
         expr("unix_millis(cast(ts as timestamp_ltz)) div 86400000").as("d"))
 
-  private def psiFromHalves(split: DataFrame): DataFrame = {
+  private def psiFromHalves(split: DataFrame): DataFrame = scope {
     val dec = DecimalType(18, 9)
-    val halves = split
-      .localCheckpoint(true) // feeds the edge fit and the bucket pass
+    val halves = split.pin() // feeds the edge fit and the bucket pass
     val wOrd = Window.partitionBy("event_type").orderBy(col("value"))
     val wAll = Window.partitionBy("event_type")
     val edges = halves.filter(col("is_ref"))
@@ -1125,14 +1124,13 @@ object Analytics {
     *
     * Scale: one scan → (type, dow) partial agg (≤ types×7 keys); the
     * dense fill and both marginals are windows over the summary. */
-  def chi2(spark: SparkSession, dir: String): DataFrame = {
+  def chi2(spark: SparkSession, dir: String): DataFrame = scope {
     val counts = Tables.events(spark, dir)
       .select(col("event_type"),
         expr("(unix_millis(cast(ts as timestamp_ltz)) div 86400000 + 4) % 7")
           .as("dow"))
       .groupBy("event_type", "dow")
-      .agg(count(lit(1)).as("o"))
-      .localCheckpoint(true) // ≤ types×7 rows feed BOTH the distinct-types
+      .agg(count(lit(1)).as("o")).pin() // ≤ types×7 rows feed BOTH the distinct-types
                              // branch and the join — one corpus scan total
     val dense = counts.select("event_type").distinct()
       .crossJoin(broadcast(

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Pins._
 import graft.Tables
 import graft.sources.StoreFiles
 
@@ -51,12 +52,12 @@ object Dedup {
     * the pairs WITHIN ITS OWN source set (an in-row combination explode
     * bounded by the catalog² — never a gram×gram join); per-source
     * distinct totals ride the same census. Output |sources|²-bounded. */
-  def sourceOverlap(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
+  def sourceOverlap(spark: SparkSession, dir: String, k: Int = 3): DataFrame = scope {
     val fpSrc = Tables.documentsSpread(spark, dir)
       .select(col("source"), explode(graft.functions.Barrier.noInline(
         graft.functions.TextHashExpressions.shingleHashes(col("text"), k))).as("fp"))
       .distinct() // one row per (gram, source)
-      .localCheckpoint(true) // feeds totals + the pair fan-out
+      .pin() // feeds totals + the pair fan-out
     val totals = fpSrc.groupBy("source").agg(count(lit(1)).as("n_fps"))
     val pairs = fpSrc.groupBy("fp")
       .agg(sort_array(collect_set(col("source"))).as("srcs"))
@@ -127,14 +128,14 @@ object Dedup {
 
   private[graft] def minhashLshIncrementalOf(docs: DataFrame, shingleK: Int = 3,
                                              numHashes: Int = 16, bands: Int = 4,
-                                             threshold: Double = 0.5): DataFrame = {
+                                             threshold: Double = 0.5): DataFrame = scope {
     require(numHashes % bands == 0,
       s"bands=$bands must divide numHashes=$numHashes (trailing hashes would be silently un-banded)")
     val rows = numHashes / bands
     val cut = docs.agg(expr("max(doc_id) * 8 div 10").as("cut"))
     val sigs = minhashSigs(docs, shingleK, numHashes)
       .filter(col("sig").isNotNull)
-      .crossJoin(broadcast(cut)).cache()
+      .crossJoin(broadcast(cut)).pin()
     val banded = sigs.select(col("doc_id"), col("cut"), posexplode(bandKeys(bands, rows)))
       .toDF("doc_id", "cut", "band", "bucket")
     val existingB = banded.filter(col("doc_id") < col("cut"))
@@ -178,20 +179,18 @@ object Dedup {
     * encode-once pattern the ANN indexes use). */
   def writeSignatureStore(docs: DataFrame, storeDir: String,
                           shingleK: Int = 3, numHashes: Int = 16,
-                          bands: Int = 4): Unit = {
+                          bands: Int = 4): Unit = scope {
     val spark = docs.sparkSession
     val sigs = minhashSigs(docs, shingleK, numHashes)
-      .filter(col("sig").isNotNull).cache()
-    try {
-      sigs.write.mode("overwrite").parquet(s"$storeDir/sigs.parquet")
-      bandedOf(sigs, bands, numHashes / bands)
-        .write.mode("overwrite").parquet(s"$storeDir/bands.parquet")
-      // LSH params ARE the store's identity: a mismatched ingest would hash
-      // different slices and silently lose recall — persist + enforce
-      import spark.implicits._
-      Seq((shingleK, numHashes, bands)).toDF("shingle_k", "num_hashes", "bands")
-        .write.mode("overwrite").parquet(s"$storeDir/params.parquet")
-    } finally sigs.unpersist(blocking = false)
+      .filter(col("sig").isNotNull).cached()
+    sigs.write.mode("overwrite").parquet(s"$storeDir/sigs.parquet")
+    bandedOf(sigs, bands, numHashes / bands)
+      .write.mode("overwrite").parquet(s"$storeDir/bands.parquet")
+    // LSH params ARE the store's identity: a mismatched ingest would hash
+    // different slices and silently lose recall — persist + enforce
+    import spark.implicits._
+    Seq((shingleK, numHashes, bands)).toDF("shingle_k", "num_hashes", "bands")
+      .write.mode("overwrite").parquet(s"$storeDir/params.parquet")
   }
 
   /** One ingest cycle against the persisted store: signature + band the NEW
@@ -207,7 +206,7 @@ object Dedup {
     * once land `verified` transactionally before re-running). Returns the
     * verified pairs. */
   def minhashLshIngest(newDocs: DataFrame, storeDir: String,
-                       threshold: Double = 0.5): DataFrame = {
+                       threshold: Double = 0.5): DataFrame = scope {
     val spark = newDocs.sparkSession
     val (numHashes, batchSigs, batchBands) = sigBandBatch(newDocs, storeDir)
     // pairing reads MASK tombstoned docs (C75); the admission anti-join in
@@ -229,7 +228,7 @@ object Dedup {
           .cast("double") / numHashes)
       .filter(col("est_jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
-      .localCheckpoint(true) // materialize BEFORE the store grows below
+      .pin() // materialize BEFORE the store grows below
     appendSigBands(storeDir, batchSigs, batchBands)
     verified
   }
@@ -245,7 +244,7 @@ object Dedup {
     * "already present"); checkpointing truncates the lineage so the batch
     * is pinned before the store mutates. */
   private def sigBandBatch(newDocs: DataFrame,
-                           storeDir: String): (Int, DataFrame, DataFrame) = {
+                           storeDir: String): (Int, DataFrame, DataFrame) = scope {
     val spark = newDocs.sparkSession
     val p = spark.read.parquet(s"$storeDir/params.parquet").head()
     val (shingleK, numHashes, bands) =
@@ -256,9 +255,8 @@ object Dedup {
     val batchSigs = minhashSigs(newDocs, shingleK, numHashes)
       .filter(col("sig").isNotNull)
       .dropDuplicates("doc_id") // a doubly-staged batch row must not land twice
-      .join(storeSigs.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    val batchBands = bandedOf(batchSigs, bands, numHashes / bands).localCheckpoint(true)
+      .join(storeSigs.select(col("doc_id")), Seq("doc_id"), "left_anti").pin()
+    val batchBands = bandedOf(batchSigs, bands, numHashes / bands).pin()
     (numHashes, batchSigs, batchBands)
   }
 
@@ -283,7 +281,7 @@ object Dedup {
     * ingest-and-pair call returns ZERO pairs for a batch the crashed
     * attempt already appended (every doc skips the anti-join), silently
     * disabling near-dup detection on exactly the re-run path. */
-  def ingestSignatures(newDocs: DataFrame, storeDir: String): Unit = {
+  def ingestSignatures(newDocs: DataFrame, storeDir: String): Unit = scope {
     val (_, batchSigs, batchBands) = sigBandBatch(newDocs, storeDir)
     appendSigBands(storeDir, batchSigs, batchBands)
   }
@@ -338,14 +336,14 @@ object Dedup {
     * a forgotten id is a no-op rather than a silent resurrection.
     * Idempotent: already-tombstoned / never-stored ids append nothing.
     * Returns the NEWLY tombstoned ids. */
-  def signatureStoreForget(ids: DataFrame, storeDir: String): DataFrame = {
+  def signatureStoreForget(ids: DataFrame, storeDir: String): DataFrame = scope {
     val spark = ids.sparkSession
     val present = StoreFiles.table(spark, s"$storeDir/sigs.parquet")
       .select(col("doc_id"))
     val newTombs = ids.select(col("doc_id")).distinct()
       .join(present, Seq("doc_id"), "left_semi")
       .join(sigTombstones(spark, storeDir), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true) // materialize before the append
+      .pin() // materialize before the append
     newTombs.write.mode("append").parquet(s"$storeDir/tombstones.parquet")
     newTombs
   }
@@ -412,19 +410,19 @@ object Dedup {
     * oversized buckets; exact hamming verification keeps output identical
     * for any cap. */
   private[graft] def simhashPairsFromSigs(sigs: DataFrame, maxDist: Int = 3,
-                                          bucketCap: Int = 1000): DataFrame = {
+                                          bucketCap: Int = 1000): DataFrame = scope {
     // the 4×16 blocking below guarantees recall only to hamming 3
     // (pigeonhole: 4 chunks tolerate 3 errors) — wider radii re-block on
     // maxDist+1-chunk granularity instead of silently losing pairs
     require(maxDist <= 15, s"radius $maxDist > 15: 16×4-bit blocking ceiling")
     if (maxDist > 3) return simhashPairsWide(sigs, maxDist)
-    // cached: consumed by the bucket census AND the join branches — without
+    // pinned: consumed by the bucket census AND the join branches — without
     // it each branch re-runs the scan + signature kernel. 4 fixed-width rows
-    // per doc, spillable at scale.
+    // per doc.
     val chunked = sigs.select(col("doc_id"), col("sh"),
       posexplode(transform(sequence(lit(0), lit(3)),
         c => call_function("shiftright", col("sh"), c * 16).bitwiseAND(0xFFFFL))))
-      .toDF("doc_id", "sh", "chunk", "bucket").cache()
+      .toDF("doc_id", "sh", "chunk", "bucket").pin()
 
     def pairsOn(df: DataFrame, keys: Seq[String]): DataFrame = {
       val a = df.select(keys.map(col) ++ Seq(col("doc_id").as("id_a"), col("sh").as("sh_a")): _*)
@@ -536,14 +534,14 @@ object Dedup {
     * Rounds end in `localCheckpoint` to truncate lineage. At convergence
     * the edge set is a star forest: every node points at its component
     * minimum. */
-  private[graft] def clustersFromPairsStars(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+  private[graft] def clustersFromPairsStars(pairs: DataFrame, maxIters: Int = 20): DataFrame = scope {
     var e = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+      .filter(col("src") =!= col("dst")).distinct().pin()
     var eCount = e.count()
     var iters = 0
     var done = eCount == 0
     while (!done && iters < maxIters) {
-      val next = star(star(e, large = true), large = false).localCheckpoint()
+      val next = star(star(e, large = true), large = false).pin()
       val nextCount = next.count()
       // both sides are DISTINCT edge sets, so equal counts + one empty
       // one-sided difference ⟺ set equality: the count over the just-
@@ -552,6 +550,7 @@ object Dedup {
       // candidate-converged rounds pay the set-difference job (the r3
       // symmetric exceptAll pair ran two of them every round).
       done = nextCount == eCount && next.exceptAll(e).isEmpty
+      e.unpin()
       e = next
       eCount = nextCount
       iters += 1
@@ -568,12 +567,12 @@ object Dedup {
     * star algorithm is the shipped path. Each iteration ends in
     * `localCheckpoint`, truncating lineage so deep components don't grow
     * the plan tree. */
-  private[graft] def clustersFromPairs(pairs: DataFrame, maxIters: Int = 10): DataFrame = {
+  private[graft] def clustersFromPairs(pairs: DataFrame, maxIters: Int = 10): DataFrame = scope {
     val edges = pairs
       .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .toDF("src", "dst").cache()
+      .toDF("src", "dst").cached()
     var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
+      .withColumn("label", col("id")).pin()
     var iters = 0
     var done = false
     while (!done && iters < maxIters) {
@@ -582,11 +581,11 @@ object Dedup {
         .groupBy(col("src").as("id")).agg(min(col("label")).as("nbr_label"))
       val next = labels.join(prop, Seq("id"), "left")
         .select(col("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-        .localCheckpoint()
+          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label")).pin()
       val changed = next.withColumnRenamed("label", "new_label")
         .join(labels, Seq("id"))
         .filter(col("new_label") =!= col("label")).count()
+      labels.unpin()
       labels = next
       done = changed == 0
       iters += 1
@@ -596,7 +595,7 @@ object Dedup {
 
   /** C16: the dedup keep-list — one canonical doc per near-dup cluster (the
     * cluster minimum), singleton docs keep themselves. */
-  def keepList(spark: SparkSession, dir: String): DataFrame = {
+  def keepList(spark: SparkSession, dir: String): DataFrame = scope {
     val docs = Tables.documents(spark, dir).select("doc_id")
     val clusters = neardupClusters(spark, dir)
     docs.join(clusters.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
@@ -612,7 +611,7 @@ object Dedup {
     * per-cluster sort. Singleton docs are their own canonical. Output one
     * row per doc: (doc_id, canonical_id, keep). */
   def keepListByQuality(spark: SparkSession, dir: String,
-                        threshold: Double = 0.5): DataFrame = {
+                        threshold: Double = 0.5): DataFrame = scope {
     val q = TextOps.quality(spark, dir).select(col("doc_id"), col("quality"))
     val clusters = neardupClusters(spark, dir, threshold = threshold)
       .withColumnRenamed("id", "doc_id")
@@ -748,7 +747,7 @@ object Dedup {
     * cost: one batch scan + one KB-to-MB-sized store rewrite — ZERO reads
     * of prior corpus data, at any history length (the property the
     * hash-list store can't have). */
-  def bloomIngest(batch: DataFrame, storeDir: String): DataFrame = {
+  def bloomIngest(batch: DataFrame, storeDir: String): DataFrame = scope {
     val spark = batch.sparkSession
     val meta = spark.read.parquet(s"$storeDir/bloom_meta.parquet").head()
     val bytes = readStoreBytes(spark, s"$storeDir/bloom.bin")
@@ -758,7 +757,7 @@ object Dedup {
     val keyed = bloomKeys(batch)
       .withColumn("seen",
         graft.functions.TextHashExpressions.bloomContains(col("h"), bfBcast))
-      .localCheckpoint(true) // the report and the fold-in both consume it
+      .pin() // the report and the fold-in both consume it
     val out = keyed.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         count(when(col("seen"), lit(1))).as("n_seen"),
@@ -775,12 +774,10 @@ object Dedup {
     val bos = new java.io.ByteArrayOutputStream()
     merged.writeTo(bos)
     StoreFiles.writeBytes(spark, s"$storeDir/bloom.bin", bos.toByteArray)
-    // r11 advice: a long-lived session ingesting many batches must not
-    // accumulate MB-sized filter broadcasts and checkpoint blocks until
-    // the GC-driven ContextCleaner runs — materialize the (per-source-
-    // sized) report off the checkpoint, then free both eagerly
-    val result = out.localCheckpoint(true)
-    org.apache.spark.sql.GraftShims.unpersistCheckpoint(keyed)
+    // a long-lived ingest session must not hold MB-sized filter broadcasts
+    // until the GC-driven ContextCleaner runs: free it once the (per-source-
+    // sized) report is pinned (the scope frees the checkpoint)
+    val result = out.pin()
     bfBcast.destroy()
     result
   }
@@ -913,7 +910,7 @@ object Dedup {
     * "distinct new texts". Callers wanting distinct-text novelty dedup
     * the batch by hash first (doc_dedup_exact) — composing the two
     * operators, not a second mode here. */
-  def countingBloomIngest(batch: DataFrame, storeDir: String): DataFrame = {
+  def countingBloomIngest(batch: DataFrame, storeDir: String): DataFrame = scope {
     import graft.functions.CountingBloomFunctions._
     val spark = batch.sparkSession
     val bytes = readStoreBytes(spark, s"$storeDir/cbloom.bin")
@@ -933,7 +930,7 @@ object Dedup {
       graft.functions.CountingBloom.deserialize(bytes))
     val keyed = bloomKeys(batch)
       .withColumn("seen", cbfContains(col("h"), cbfBcast))
-      .localCheckpoint(true) // the report and the fold-in both consume it
+      .pin() // the report and the fold-in both consume it
     val out = keyed.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         count(when(col("seen"), lit(1))).as("n_seen"),
@@ -944,9 +941,8 @@ object Dedup {
       .head().getAs[Array[Byte]]("f")
     StoreFiles.writeBytes(spark, s"$storeDir/cbloom.bin",
       graft.functions.CountingBloom.add(bytes, batchBytes))
-    // free the filter broadcast + batch checkpoint eagerly (see bloomIngest)
-    val result = out.localCheckpoint(true)
-    org.apache.spark.sql.GraftShims.unpersistCheckpoint(keyed)
+    // free the filter broadcast eagerly (see bloomIngest)
+    val result = out.pin()
     cbfBcast.destroy()
     result
   }
@@ -958,21 +954,18 @@ object Dedup {
     * Callers pass docs from the authoritative store (the C30/C113
     * pairing) — subtracting a never-inserted key corrupts the filter,
     * the published caveat. Returns per-source forget counts. */
-  def countingBloomForget(batch: DataFrame, storeDir: String): DataFrame = {
+  def countingBloomForget(batch: DataFrame, storeDir: String): DataFrame = scope {
     import graft.functions.CountingBloomFunctions._
     val spark = batch.sparkSession
     val bytes = readStoreBytes(spark, s"$storeDir/cbloom.bin")
     val old = graft.functions.CountingBloom.deserialize(bytes)
-    val keyed = bloomKeys(batch).localCheckpoint(true)
+    val keyed = bloomKeys(batch).pin()
     val out = keyed.groupBy("source").agg(count(lit(1)).as("n_forgotten"))
     val batchBytes = keyed.agg(cbfAgg(col("h"), old.m, old.k).as("f"))
       .head().getAs[Array[Byte]]("f")
     StoreFiles.writeBytes(spark, s"$storeDir/cbloom.bin",
       graft.functions.CountingBloom.subtract(bytes, batchBytes))
-    // free the batch checkpoint eagerly (see bloomIngest)
-    val result = out.localCheckpoint(true)
-    org.apache.spark.sql.GraftShims.unpersistCheckpoint(keyed)
-    result
+    out.pin()
   }
 
   /** C4: exact word-n-gram Jaccard over ALL pairs sharing at least one
@@ -1042,7 +1035,7 @@ object Dedup {
     * corpus regeneration). */
   def minhashRecall(spark: SparkSession, dir: String, shingleK: Int = 3,
                     numHashes: Int = 16, bands: Int = 4,
-                    threshold: Double = 0.5): DataFrame = {
+                    threshold: Double = 0.5): DataFrame = scope {
     val dec = org.apache.spark.sql.types.DecimalType(18, 9)
     val truth = ngramJaccard(spark, dir, shingleK, threshold)
     val est = minhashLsh(spark, dir, shingleK, numHashes, bands, threshold)
@@ -1062,8 +1055,7 @@ object Dedup {
       .select(col("true_pairs"), col("found_pairs"),
         round(col("recall"), 6).as("recall"),
         round(col("est_mae"), 6).as("est_mae"),
-        lit(floor).as("floor"))
-      .localCheckpoint(true) // the floor check and the gate both read it
+        lit(floor).as("floor")).pin() // the floor check and the gate both read it
     val head = out.head()
     if (!head.isNullAt(head.fieldIndex("recall")))
       require(head.getAs[Double]("recall") >= floor,
@@ -1426,7 +1418,7 @@ object Dedup {
     * df payload: a retried ingest (same batchId) reproduces identical
     * spans and leaves the store as if run once. */
   def dupSpansIncremental(batch: DataFrame, storeDir: String, batchId: Long,
-                          minDf: Int = 3): DataFrame = {
+                          minDf: Int = 3): DataFrame = scope {
     require(batchId > 0L, "batchId 0 is the initial writeGramStore corpus")
     val spark = batch.sparkSession
     val k = spark.read.parquet(s"$storeDir/params.parquet")
@@ -1442,8 +1434,7 @@ object Dedup {
     // failure mode) — pin the admitted batch before the store mutates
     val docs = batch.filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"))
-      .join(seen, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+      .join(seen, Seq("doc_id"), "left_anti").pin()
     val wins = gramWins(docs, k)
     val batchDf = wins.groupBy("fp")
       .agg(countDistinct(col("doc_id")).as("df"))
@@ -1459,7 +1450,7 @@ object Dedup {
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("n_spans"), lit(0L)).as("n_spans"),
         coalesce(col("cut_tokens"), lit(0L)).as("cut_tokens"))
-      .localCheckpoint(true) // materialize BEFORE the store mutates
+      .pin() // materialize BEFORE the store mutates
     batchDf.withColumn("batch_id", lit(batchId))
       .write.partitionBy("batch_id").mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -1493,7 +1484,7 @@ object Dedup {
     * final" rule; a store rebuild is the re-admission path). Returns the
     * doc ids subtracted this call. */
   def gramStoreForget(forgotten: DataFrame, storeDir: String,
-                      forgetId: Long): DataFrame = {
+                      forgetId: Long): DataFrame = scope {
     require(forgetId > 0L, "forgetId must be positive (lands as batch_id = -forgetId)")
     val spark = forgotten.sparkSession
     val k = spark.read.parquet(s"$storeDir/params.parquet")
@@ -1505,15 +1496,14 @@ object Dedup {
     val docs = forgotten.filter(col("text").isNotNull)
       .select(col("doc_id"), col("text")).dropDuplicates("doc_id")
       .join(admitted, Seq("doc_id"), "left_semi")
-      .join(alreadyForgot, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true) // pin before the store mutates
+      .join(alreadyForgot, Seq("doc_id"), "left_anti").pin() // pin before the store mutates
     gramWins(docs, k)
       .groupBy("fp").agg((-countDistinct(col("doc_id"))).as("df"))
       .withColumn("batch_id", lit(-forgetId))
       .write.partitionBy("batch_id").mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .parquet(s"$storeDir/dfs.parquet")
-    val out = docs.select(col("doc_id")).localCheckpoint(true)
+    val out = docs.select(col("doc_id")).pin()
     out.withColumn("forget_id", lit(forgetId))
       .write.partitionBy("forget_id").mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

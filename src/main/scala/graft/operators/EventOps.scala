@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pins._
 import graft.Tables
 import graft.functions.Cols._
 
@@ -185,7 +186,7 @@ object EventOps {
     * order by event_id (a same-ms later-id click after a view counts,
     * latency 0). */
   def funnelLatency(spark: SparkSession, dir: String,
-                    idBucket: Long = 64): DataFrame = {
+                    idBucket: Long = 64): DataFrame = scope {
     val run = Window.partitionBy("user_id").orderBy(col("ts_ms"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val u = Tables.events(spark, dir)
@@ -201,8 +202,7 @@ object EventOps {
       .agg(min(when(col("event_type") === "view", col("ts_ms"))).as("v"),
         min(col("c_q")).as("c"),
         min(when(col("event_type") === "purchase" &&
-          col("c_run").isNotNull, col("ts_ms"))).as("p"))
-      .localCheckpoint()
+          col("c_run").isNotNull, col("ts_ms"))).as("p")).pin()
     def pick(q: Double, out: String) =
       max(when(col("rank") === ceil(col("n") * q).cast("long"), col("lat")))
         .as(out)
@@ -313,15 +313,14 @@ object EventOps {
     * rank — all longs. Gap identity = the BUYING event's id (ties in the
     * rank order break deterministically). */
   def purchaseCadence(spark: SparkSession, dir: String,
-                      idBucket: Long = 64): DataFrame = {
+                      idBucket: Long = 64): DataFrame = scope {
     val byUser = Window.partitionBy("user_id").orderBy(col("ts_ms"), col("event_id"))
     val gaps = Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id"), tsMs(col("ts")).as("ts_ms"))
       .withColumn("gap", col("ts_ms") - lag(col("ts_ms"), 1).over(byUser))
       .filter(col("gap").isNotNull)
-      .select(col("user_id"), col("event_id"), col("gap"))
-      .localCheckpoint()
+      .select(col("user_id"), col("event_id"), col("gap")).pin()
     val n = gaps.agg(count(lit(1)).as("n"),
       countDistinct(col("user_id")).as("n_repeat_buyers"))
     def pick(q: Double, out: String) =
@@ -394,15 +393,14 @@ object EventOps {
     * ONE (user, day) distinct shuffle; lag/lead ride the same user
     * partitioning; the churn attribution and the day join are
     * summary-level; counts exact longs, the ratio one IEEE division. */
-  def growthAccounting(spark: SparkSession, dir: String): DataFrame = {
+  def growthAccounting(spark: SparkSession, dir: String): DataFrame = scope {
     val byUser = Window.partitionBy("user_id").orderBy("day_idx")
     val grid = Tables.events(spark, dir)
       .select(col("user_id"), tsMs(col("ts")).as("ms"))
       .select(col("user_id"), expr("ms div 86400000").as("day_idx"))
       .distinct()
       .withColumn("prev", lag(col("day_idx"), 1).over(byUser))
-      .withColumn("next", lead(col("day_idx"), 1).over(byUser))
-      .localCheckpoint()
+      .withColumn("next", lead(col("day_idx"), 1).over(byUser)).pin()
     val maxDay = grid.agg(max(col("day_idx")).as("max_day"))
     val active = grid.groupBy("day_idx")
       .agg(count(when(col("prev").isNull, lit(1))).as("n_new"),
@@ -820,12 +818,12 @@ object EventOps {
     * census, and pairs cross exactly one (from, to) join before the
     * user-keyed mean. Per-transition −ln P as DECIMAL(18,9) — exact,
     * order-independent, engine-portable. */
-  def userLl(spark: SparkSession, dir: String): DataFrame = {
+  def userLl(spark: SparkSession, dir: String): DataFrame = scope {
     val pairs = transitionPairs(spark, dir)
     // checkpointed: the census feeds its own per-from totals AND the score
     // join — without it each derived branch replays the corpus window
     val census = pairs.groupBy("from_type", "to_type")
-      .agg(count(lit(1)).as("n_ab")).localCheckpoint(true)
+      .agg(count(lit(1)).as("n_ab")).pin()
     val byFrom = census.groupBy("from_type").agg(sum(col("n_ab")).as("n_from"))
     val vocab = Tables.events(spark, dir)
       .agg(countDistinct(col("event_type")).cast("double").as("n_types"))
@@ -1437,7 +1435,7 @@ object EventOps {
 
   /** The A95 decomposition over an already-dense (event_type, lo, ys)
     * table — separable for the planted-series spec. */
-  private[graft] def seasonalFromDense(dense: DataFrame): DataFrame = {
+  private[graft] def seasonalFromDense(dense: DataFrame): DataFrame = scope {
     val dec = org.apache.spark.sql.types.DecimalType(18, 9)
     val interior = dense
       .filter(size(col("ys")) >= 14)
@@ -1451,8 +1449,7 @@ object EventOps {
         (col("lo") + col("r.t").cast("long") - 1).as("day_idx"),
         col("r.y").as("y"), (col("r.s7") / lit(7.0)).as("trend"),
         (lit(7.0) * col("r.y") - col("r.s7")).cast("long").as("dnum"))
-      .withColumn("dow", col("day_idx") % 7)
-      .localCheckpoint(true) // feeds the DOW census and the final join
+      .withColumn("dow", col("day_idx") % 7).pin() // feeds the DOW census and the final join
     val seas = interior.groupBy("event_type", "dow")
       .agg((sum(col("dnum")).cast("double") /
         (lit(7.0) * count(lit(1)).cast("double"))).cast(dec).as("mean_dec"))
@@ -1489,7 +1486,7 @@ object EventOps {
     *
     * Scale: rides A95's one-shuffle summary; the strength agg is a
     * ≤types-row rollup. */
-  def seasonalStrength(spark: SparkSession, dir: String): DataFrame = {
+  def seasonalStrength(spark: SparkSession, dir: String): DataFrame = scope {
     val dec9 = org.apache.spark.sql.types.DecimalType(18, 9)
     val decI = org.apache.spark.sql.types.DecimalType(38, 0)
     def q(c: org.apache.spark.sql.Column) =
@@ -1542,8 +1539,8 @@ object EventOps {
     * and the flag pass reuse it, the madAlert discipline); rank windows
     * partition by the low-cardinality type key. */
   def seasonalAnomalies(spark: SparkSession, dir: String,
-                        k: Double = 3.0): DataFrame = {
-    val comp = seasonalDecompose(spark, dir).localCheckpoint(true)
+                        k: Double = 3.0): DataFrame = scope {
+    val comp = seasonalDecompose(spark, dir).pin()
     def rankMedian(df: DataFrame, valueCol: String, out: String): DataFrame = {
       val w = Window.partitionBy("event_type")
         .orderBy(col(valueCol), col("day_idx"))
@@ -1554,7 +1551,7 @@ object EventOps {
         .select(col("event_type"), col(valueCol).as(out))
     }
     val med = rankMedian(comp.select(col("event_type"), col("day_idx"),
-      col("resid")), "resid", "med").localCheckpoint(true)
+      col("resid")), "resid", "med").pin()
     val withMed = comp.join(broadcast(med), Seq("event_type"))
       .withColumn("absdev", abs(col("resid") - col("med")))
     val mad = rankMedian(withMed.select(col("event_type"), col("day_idx"),
@@ -1756,7 +1753,7 @@ object EventOps {
     * ≤weeks summary (broadcast scalar join back). */
   def experimentSegments(spark: SparkSession, dir: String,
                          salt: String = "exp1",
-                         minPurchases: Long = 14): DataFrame = {
+                         minPurchases: Long = 14): DataFrame = scope {
     // 28,9: the weights are 1/var ~ O(n) — DECIMAL(18,9)'s 10^9 integer
     // ceiling would overflow at planetary per-segment populations
     val dec = org.apache.spark.sql.types.DecimalType(28, 9)
@@ -1781,7 +1778,7 @@ object EventOps {
       .withColumn("var_i",
         col("rate_a") * (lit(1.0) - col("rate_a")) / col("n_a").cast("double") +
           col("rate_b") * (lit(1.0) - col("rate_b")) / col("n_b").cast("double"))
-      .localCheckpoint(true) // summary; the Q fold and the output share it
+      .pin() // summary; the Q fold and the output share it
     val q = cells.filter(col("var_i") > 0.0)
       .withColumn("w", lit(1.0) / col("var_i"))
       .agg(count(lit(1)).as("k"),
@@ -1825,13 +1822,12 @@ object EventOps {
     * and the user total all derive from it); the fit folds over
     * ≤ maxOffset summary rows. */
   def retentionFit(spark: SparkSession, dir: String,
-                   maxOffset: Int = 30): DataFrame = {
+                   maxOffset: Int = 30): DataFrame = scope {
     val dec = org.apache.spark.sql.types.DecimalType(18, 9)
     val ud = Tables.events(spark, dir)
       .select(col("user_id"), tsMs(col("ts")).as("ms"))
       .select(col("user_id"), expr("ms div 86400000").as("day"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct().pin()
     val nUsers = broadcast(
       ud.agg(countDistinct(col("user_id")).as("n_users")))
     val pts = ud
@@ -2192,13 +2188,12 @@ object EventOps {
     * in-row `aggregate` fold over the day-sorted series, never a driver
     * collect). Gap days are simply absent from the series (consistent with
     * A50); a deployment wanting zero-filled days densifies upstream. */
-  def cusum(spark: SparkSession, dir: String): DataFrame = {
+  def cusum(spark: SparkSession, dir: String): DataFrame = scope {
     // ≤|types|·days summary, checkpointed so the med/mad branches and
     // the fold input don't each replay the corpus scan
     val daily = Tables.events(spark, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("y"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("y")).pin()
     // exact rank-selected median of a summary-level column (≤|types|·days
     // rows — the sort window runs on the daily summary, not the corpus)
     def rankMedian(df: DataFrame, valueCol: String, out: String): DataFrame = {
@@ -2260,7 +2255,7 @@ object EventOps {
     * data. Two per-type sort windows over the corpus + a broadcast-sized
     * (type → med, mad) join; the window partitions by the
     * low-cardinality type key, same scale shape as exactQuantiles. */
-  def madAlert(spark: SparkSession, dir: String, k: Double = 3.0): DataFrame = {
+  def madAlert(spark: SparkSession, dir: String, k: Double = 3.0): DataFrame = scope {
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     def rankMedian(df: DataFrame, valueCol: String, out: String): DataFrame = {
@@ -2276,7 +2271,7 @@ object EventOps {
     // localCheckpoint pins the summary so the mad branch and the flag
     // pass don't each replay that window (explain'd: 4 corpus scans
     // without it, the 3 inherent to two-level exact order stats with it)
-    val med = rankMedian(ev, "value", "med").localCheckpoint()
+    val med = rankMedian(ev, "value", "med").pin()
     val withMed = ev.join(broadcast(med), Seq("event_type"))
       .withColumn("absdev", abs(col("value") - col("med")))
     val mad = rankMedian(
@@ -2329,15 +2324,14 @@ object EventOps {
       .drop("g_id", "off")
   }
 
-  def rfm(spark: SparkSession, dir: String, idBucket: Long = 64): DataFrame = {
+  def rfm(spark: SparkSession, dir: String, idBucket: Long = 64): DataFrame = scope {
     val dec = org.apache.spark.sql.types.DecimalType(18, 9)
     val users = Tables.events(spark, dir)
       .groupBy("user_id")
       .agg(max(tsMs(col("ts"))).as("last_ms"),
         count(lit(1)).as("frequency"),
         coalesce(sum(when(col("event_type") === "purchase",
-          col("value").cast(dec))), lit(0).cast(dec)).as("mon"))
-      .localCheckpoint()
+          col("value").cast(dec))), lit(0).cast(dec)).as("mon")).pin()
     val ranked = rankBy(rankBy(rankBy(users,
       "last_ms", "r_rank", idBucket), "frequency", "f_rank", idBucket),
       "mon", "m_rank", idBucket)
@@ -2369,15 +2363,14 @@ object EventOps {
     * cross-engine: counts are longs and each survival step is the same
     * IEEE multiply of the same two doubles the oracle's recursive CTE
     * computes (multiplication by the 1.0 seed is exact). */
-  def survival(spark: SparkSession, dir: String): DataFrame = {
+  def survival(spark: SparkSession, dir: String): DataFrame = scope {
     // users-sized summary, checkpointed so the scalar branch and the
     // census don't each replay the corpus scan (the madAlert discipline)
     val u = Tables.events(spark, dir)
       .select(col("user_id"), tsMs(col("ts")).as("ms"))
       .select(col("user_id"), expr("ms div 86400000").as("day"))
       .groupBy("user_id")
-      .agg(min(col("day")).as("fd"), max(col("day")).as("ld"))
-      .localCheckpoint()
+      .agg(min(col("day")).as("fd"), max(col("day")).as("ld")).pin()
     val scal = u.agg(max(col("ld")).as("max_day"),
       count(lit(1)).as("n_users"))
     u.crossJoin(broadcast(scal)) // single row: constant-size
@@ -2911,7 +2904,7 @@ object EventOps {
     // checkpointed: rankBy's two branches (rows + offsets) and the
     // callers' scalar branches would each replay the corpus scan
     rankBy(Tables.events(spark, dir).groupBy("user_id")
-      .agg(count(lit(1)).as("n_events")).localCheckpoint(),
+      .agg(count(lit(1)).as("n_events")).pin(),
       "n_events", "rank", idBucket)
 
   /** A63: activity-concentration Lorenz deciles — "do 1% of users generate
@@ -2924,7 +2917,7 @@ object EventOps {
     * decile rollup + cumsum run on a ≤10-row summary. Shares are single
     * IEEE divisions of exact longs — hash-exact. */
   def concentration(spark: SparkSession, dir: String,
-                    idBucket: Long = 64): DataFrame = {
+                    idBucket: Long = 64): DataFrame = scope {
     val ranked = activityRanked(spark, dir, idBucket)
     val scal = ranked.agg(count(lit(1)).as("n_users"),
       sum(col("n_events")).as("total_events"))
@@ -2998,15 +2991,14 @@ object EventOps {
     * pick is a single summary agg row. Never-converting users are
     * excluded (their ttc is undefined); n_converted reports the base. */
   def timeToConvert(spark: SparkSession, dir: String,
-                    idBucket: Long = 64): DataFrame = {
+                    idBucket: Long = 64): DataFrame = scope {
     val conv = Tables.events(spark, dir)
       .groupBy("user_id")
       .agg(min(tsMs(col("ts"))).as("first_ms"),
         min(when(col("event_type") === "purchase", tsMs(col("ts"))))
           .as("first_p"))
       .filter(col("first_p").isNotNull)
-      .select(col("user_id"), (col("first_p") - col("first_ms")).as("ttc"))
-      .localCheckpoint()
+      .select(col("user_id"), (col("first_p") - col("first_ms")).as("ttc")).pin()
     val n = conv.agg(count(lit(1)).as("n"))
     def pick(q: Double, out: String) =
       max(when(col("rank") === ceil(col("n") * q).cast("long"), col("ttc")))
@@ -3029,13 +3021,12 @@ object EventOps {
     * is epoch-day mod 7 (engine-portable — no dayofweek() convention to
     * match). Corpus work = ONE (type, day) partial agg (checkpointed);
     * medians and the flag pass run on the ≤types·days summary. */
-  def dowAnomaly(spark: SparkSession, dir: String, k: Long = 3): DataFrame = {
+  def dowAnomaly(spark: SparkSession, dir: String, k: Long = 3): DataFrame = scope {
     val daily = Tables.events(spark, dir)
       .select(col("event_type"), tsMs(col("ts")).as("ms"))
       .groupBy(col("event_type"), expr("ms div 86400000").as("day_idx"))
       .agg(count(lit(1)).as("y"))
-      .withColumn("dow", expr("day_idx % 7"))
-      .localCheckpoint()
+      .withColumn("dow", expr("day_idx % 7")).pin()
     def rankMedian(df: DataFrame, valueCol: String, out: String): DataFrame = {
       val w = Window.partitionBy("event_type", "dow")
         .orderBy(col(valueCol), col("day_idx"))
@@ -3137,7 +3128,7 @@ object EventOps {
       .withColumn("n_returning", col("dau") - col("n_new"))
   }
 
-  def gini(spark: SparkSession, dir: String, idBucket: Long = 64): DataFrame = {
+  def gini(spark: SparkSession, dir: String, idBucket: Long = 64): DataFrame = scope {
     val dec = "DECIMAL(38,0)"
     activityRanked(spark, dir, idBucket)
       .agg(count(lit(1)).as("n_users"),
@@ -3248,11 +3239,10 @@ object EventOps {
     * decimal sums — so the DuckDB recursive-CTE oracle stays hash-green,
     * which is itself the proof of bit-identity); ≤types output rows. */
   def absorption(spark: SparkSession, dir: String,
-                 target: String = "purchase", iters: Int = 30): DataFrame = {
+                 target: String = "purchase", iters: Int = 30): DataFrame = scope {
     import spark.implicits._
     val occ = Tables.events(spark, dir)
-      .groupBy(col("event_type")).agg(count(lit(1)).as("n_occ"))
-      .localCheckpoint(true)
+      .groupBy(col("event_type")).agg(count(lit(1)).as("n_occ")).pin()
     val edges = transitionCounts(spark, dir)
       .join(occ.select(col("event_type").as("from_type"), col("n_occ")),
         "from_type")
@@ -3445,7 +3435,7 @@ object EventOps {
     * shuffle on summary-sized keys; broadcast N scalar; ≤ types²
     * output rows. */
   def assocRules(spark: SparkSession, dir: String,
-                 minSupport: Long = 2): DataFrame = {
+                 minSupport: Long = 2): DataFrame = scope {
     val ut = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type")).distinct()
     val n = ut.select(countDistinct(col("user_id")).as("n_users"))
@@ -3499,7 +3489,7 @@ object EventOps {
     * the pair join is summary×summary (≤ types² rows each carrying one
     * horizon-length array); every lag numerator is an in-row zip_with
     * fold. ≤ types²×(2·maxLag+1) output rows at any corpus size. */
-  def ccf(spark: SparkSession, dir: String, maxLag: Int = 7): DataFrame = {
+  def ccf(spark: SparkSession, dir: String, maxLag: Int = 7): DataFrame = scope {
     val daily = Tables.events(spark, dir)
       .select(col("event_type"), tsMs(col("ts")).as("ms"))
       .groupBy(col("event_type"), expr("ms div 86400000").as("day_idx"))
@@ -3522,7 +3512,7 @@ object EventOps {
         """aggregate(ds, CAST(0 AS DECIMAL(38,0)),
           |  (a, x) -> CAST(a + x * x AS DECIMAL(38,0)))""".stripMargin))
       .select(col("event_type"), col("n"), col("ds"), col("den"))
-      .localCheckpoint(true) // both sides of the pair join read this summary
+      .pin() // both sides of the pair join read this summary
     val a = dense.select(col("event_type").as("type_a"), col("n"),
       col("ds").as("da"), col("den").as("den_a"))
     val b = dense.select(col("event_type").as("type_b"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pins._
 import graft.Tables
 import graft.plans.BlockPairs
 import graft.sources.StoreFiles
@@ -67,7 +68,7 @@ object Similarity {
     * θ-matches living in unprobed buckets (the C7 recall trade). */
   def rangeQueryIvf(spark: SparkSession, dir: String, nQueries: Int = 10,
                     threshold: Double = 0.3, nlist: Int = 8,
-                    nprobe: Int = 3, lloydIters: Int = 1): DataFrame = {
+                    nprobe: Int = 3, lloydIters: Int = 1): DataFrame = scope {
     val emb = withNorm(Tables.embeddings(spark, dir))
     val corpus = emb.filter(col("vec_id") >= nQueries)
     val (centroids, bucketed) = buildIvfIndex(corpus, nlist, lloydIters)
@@ -142,7 +143,7 @@ object Similarity {
     * star-CC rounds, min-id canonical, singletons keep themselves. The
     * dedup decision a curation pipeline applies to redundant embeddings. */
   def embKeepList(spark: SparkSession, dir: String,
-                  threshold: Double = 0.9): DataFrame = {
+                  threshold: Double = 0.9): DataFrame = scope {
     val pairs = neardupPairs(spark, dir, threshold).select(col("id_a"), col("id_b"))
     val clusters = Dedup.clustersFromPairsStars(pairs)
     Tables.embeddings(spark, dir).select(col("vec_id"))
@@ -336,7 +337,7 @@ object Similarity {
                                         threshold: Double,
                                         targetRecall: Double = 0.9,
                                         targetOccupancy: Int = 64,
-                                        maxBands: Int = 32): (Long, Long, Double, Int, Int) = {
+                                        maxBands: Int = 32): (Long, Long, Double, Int, Int) = scope {
     val embN = withNorm(Tables.embeddings(spark, dir))
     val n = math.max(1L, embN.count())
     val (bits, bands) = lshAutoParams(n, threshold, targetRecall,
@@ -360,11 +361,9 @@ object Similarity {
     // the dominant cost of emb_lsh_recall). ≤ true-pair rows, ids only.
     val exact = a.join(b, col("id_a") < col("id_b"))
       .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold)
-      .select(col("id_a"), col("id_b"))
-      .localCheckpoint(true)
+      .select(col("id_a"), col("id_b")).pin()
     val nTrue = exact.count()
     val found = exact.join(lsh, Seq("id_a", "id_b"), "left_semi").count()
-    org.apache.spark.sql.GraftShims.unpersistCheckpoint(exact)
     (nTrue, found, if (nTrue == 0) 1.0 else found.toDouble / nTrue, bits, bands)
   }
 
@@ -411,11 +410,11 @@ object Similarity {
     * ≤shortlist rows per query per map task (same shape as [[cosineTopK]]).
     * Exact re-rank touches only shortlist·queries vectors. */
   def pqTopK(spark: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
-             m: Int = 8, ksub: Int = 16, shortlist: Int = 64): DataFrame = {
+             m: Int = 8, ksub: Int = 16, shortlist: Int = 64): DataFrame = scope {
     val emb = pqNormalized(Tables.embeddings(spark, dir))
     val corpus = emb.filter(col("vec_id") >= nQueries)
     val (codebooks, codes) = buildPqIndex(corpus, m, ksub)
-    pqQuery(emb.filter(col("vec_id") < nQueries), corpus, codebooks, codes.cache(),
+    pqQuery(emb.filter(col("vec_id") < nQueries), corpus, codebooks, codes.pin(),
       m, k, shortlist)
   }
 
@@ -448,9 +447,9 @@ object Similarity {
     * ([[writePqIndex]]) — at 100 TB the corpus is encoded ONCE (the
     * expensive pass) and every query session reads m ints/vector. */
   private[graft] def buildPqIndex(corpus: DataFrame, m: Int = 8,
-                                  ksub: Int = 16): (DataFrame, DataFrame) = {
+                                  ksub: Int = 16): (DataFrame, DataFrame) = scope {
     val dsub = dsubOf(corpus, m)
-    val corpusSub = pqSubrows(corpus, m, dsub).cache()
+    val corpusSub = pqSubrows(corpus, m, dsub).pin()
     // deterministic seeding: ksub hash-ranked subvectors per subspace...
     val seedW = Window.partitionBy(col("sub"))
       .orderBy(md5(col("vec_id").cast("string").cast("binary")), col("vec_id"))
@@ -505,7 +504,7 @@ object Similarity {
     * `indexDir/codes.parquet` (m ints per corpus vector — the memory-bound
     * representation a 100 TB ANN deployment stores instead of raw floats). */
   def writePqIndex(spark: SparkSession, dir: String, indexDir: String,
-                   nQueries: Int = 10, m: Int = 8, ksub: Int = 16): Unit = {
+                   nQueries: Int = 10, m: Int = 8, ksub: Int = 16): Unit = scope {
     val corpus = pqNormalized(Tables.embeddings(spark, dir))
       .filter(col("vec_id") >= nQueries)
     val (codebooks, codes) = buildPqIndex(corpus, m, ksub)
@@ -573,7 +572,7 @@ object Similarity {
     * the queried k's rows. */
   private[graft] def measureRecallCurve(rawQueries: DataFrame, bucketed: DataFrame,
                                         centroids: DataFrame,
-                                        ks: Seq[Int] = Seq(1, 5, 10, 20)): DataFrame = {
+                                        ks: Seq[Int] = Seq(1, 5, 10, 20)): DataFrame = scope {
     require(ks.nonEmpty && ks.forall(_ > 0), s"ks must be positive: $ks")
     val spark = rawQueries.sparkSession
     import spark.implicits._
@@ -592,8 +591,7 @@ object Similarity {
       .select(col("q_id"), col("c_id").as("bucket"),
         row_number().over(bw).as("brank"))
     val ranked = trueTop.join(bucketRank, Seq("q_id", "bucket"))
-      .select(col("brank"), col("rnk"))
-      .localCheckpoint(true) // kMax·|sample| rows; re-used per k below
+      .select(col("brank"), col("rnk")).pin() // kMax·|sample| rows; re-used per k below
     // a true neighbor at brute-force rank r contributes to every k >= r
     val perK = ranked.crossJoin(broadcast(ks.toDF("k")))
       .filter(col("rnk") <= col("k"))
@@ -624,7 +622,7 @@ object Similarity {
     * can't flap the gate. */
   private[graft] def recallFloorReport(spark: SparkSession, path: String,
                                        approx: DataFrame, exact: DataFrame,
-                                       k: Int, floor: Double): DataFrame = {
+                                       k: Int, floor: Double): DataFrame = scope {
     import spark.implicits._
     val e = exact.select(col("q_id"), col("vec_id"))
     val nTrue = e.count()
@@ -643,7 +641,7 @@ object Similarity {
     * below the envelope the operator's own `defaultNprobe` sizing promises
     * means assignment/probing broke, not that the corpus got unlucky (the
     * envelope is the measured MINIMUM across SFs and nlists). */
-  def ivfRecallGate(spark: SparkSession, dir: String): DataFrame = {
+  def ivfRecallGate(spark: SparkSession, dir: String): DataFrame = scope {
     val floor = envelopeFloor(nprobe = 3, nlist = 8)
     recallFloorReport(spark, "emb_ivf_topk", ivfTopK(spark, dir),
       cosineTopK(spark, dir), k = 5, floor = floor)
@@ -654,7 +652,7 @@ object Similarity {
     * measureRecallCurve is exact for the query sample, so delivered recall
     * below the curve means the serving path lost or misrouted a bucket. */
   def ivfQueryRecallGate(spark: SparkSession, dir: String,
-                         indexDir: String): DataFrame = {
+                         indexDir: String): DataFrame = scope {
     val k = 5
     val nlist = spark.read.parquet(s"$indexDir/centroids.parquet").count().toInt
     val probes = indexNprobe(spark, indexDir, nlist, targetRecall = 0.85, k)
@@ -677,15 +675,17 @@ object Similarity {
     * corpus regeneration. */
   val PqRecallFloor = 0.40
 
-  def pqRecallGate(spark: SparkSession, dir: String): DataFrame =
+  def pqRecallGate(spark: SparkSession, dir: String): DataFrame = scope {
     recallFloorReport(spark, "emb_pq_topk", pqTopK(spark, dir),
       cosineTopK(spark, dir), k = 5, floor = PqRecallFloor)
+  }
 
   def pqQueryRecallGate(spark: SparkSession, dir: String,
-                        indexDir: String): DataFrame =
+                        indexDir: String): DataFrame = scope {
     recallFloorReport(spark, "emb_pq_query",
       pqTopKFromIndex(spark, dir, indexDir),
       cosineTopK(spark, dir), k = 5, floor = PqRecallFloor)
+  }
 
   /** C6b recall floor (VERDICT r10 #6): `emb_lsh_auto` is the production
     * near-dup default but until r11 carried only a planted-recovery spec,
@@ -705,7 +705,7 @@ object Similarity {
     * (delivered: 0.864 at sf0.001, 0.983 at sf0.01 — r11 probe). A broken
     * bucket pairing scores ~0; a mis-sized scheme undershoots the margin. */
   def lshRecallGate(spark: SparkSession, dir: String,
-                    threshold: Double = 0.4): DataFrame = {
+                    threshold: Double = 0.4): DataFrame = scope {
     import spark.implicits._
     val (nTrue, found, recall, bits, bands) =
       lshEmpiricalRecall(spark, dir, threshold)
@@ -753,7 +753,7 @@ object Similarity {
                    targetRecall: Double = 0.9,
                    targetOccupancy: Int = 64,
                    caps: Seq[Int] = Seq(16, 32, 64, 128),
-                   simScales: Seq[Long] = Seq(0L, 1L << 20, 1L << 30)): DataFrame = {
+                   simScales: Seq[Long] = Seq(0L, 1L << 20, 1L << 30)): DataFrame = scope {
     import spark.implicits._
     val embN = withNorm(Tables.embeddings(spark, dir))
     val n = math.max(1L, embN.count())
@@ -767,7 +767,7 @@ object Similarity {
         dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .filter(col("cos_sim") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos_sim"))
-      .localCheckpoint(true) // ≤ true-pair rows (ids+cos); re-read per scale
+      .pin() // ≤ true-pair rows (ids+cos); re-read per scale
     val rows = simScales.map(s => if (s == 0L) n else s).distinct.flatMap { simN =>
       val (bits, needed) = lshAutoParams(simN, threshold, targetRecall,
         targetOccupancy, Int.MaxValue)
@@ -796,13 +796,18 @@ object Similarity {
             zip_with(col("sa"), col("sb"), (x, y) => x === y), true)
             .as("first_hit"),
           pBand.as("p_band"))
+      // each pair's term is quantized to DECIMAL before the sum (the
+      // pageRankOf discipline): an exact decimal sum is summation-order-free,
+      // so the expectation does not depend on the partitioning
+      def exactSum(term: Column): Column = coalesce(
+        sum(term.cast(org.apache.spark.sql.types.DecimalType(28, 18))).cast("double"), lit(0.0))
       val aggRow = marked.agg(count(lit(1)).as("n_true"),
         capEff.flatMap { case (c, eff) =>
           val pHit = lit(1.0) - pow(lit(1.0) - col("p_band"), lit(eff))
           Seq(
             count(when(col("first_hit").between(1, eff), lit(1))).as(s"f_$c"),
-            coalesce(sum(pHit), lit(0.0)).as(s"e_$c"),
-            coalesce(sum(pHit * (lit(1.0) - pHit)), lit(0.0)).as(s"v_$c"))
+            exactSum(pHit).as(s"e_$c"),
+            exactSum(pHit * (lit(1.0) - pHit)).as(s"v_$c"))
         }: _*).head()
       val nTrue = aggRow.getAs[Long]("n_true")
       capEff.map { case (c, eff) =>
@@ -815,7 +820,6 @@ object Similarity {
           math.sqrt(aggRow.getAs[Double](s"v_$c")))
       }
     }
-    org.apache.spark.sql.GraftShims.unpersistCheckpoint(truePairs)
     rows.toDF("sim_n", "bits", "max_bands", "bands", "bands_needed",
       "recall_theory", "n_true", "n_found", "recall_measured",
       "n_expected", "sd_expected")
@@ -896,7 +900,7 @@ object Similarity {
     * centroid, queries probe `nprobe` nearest buckets only. Size `nprobe`
     * with [[defaultNprobe]] from a recall target. */
   def ivfTopK(spark: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
-              nlist: Int = 8, nprobe: Int = 3, lloydIters: Int = 1): DataFrame = {
+              nlist: Int = 8, nprobe: Int = 3, lloydIters: Int = 1): DataFrame = scope {
     val emb = withNorm(Tables.embeddings(spark, dir))
     val corpus = emb.filter(col("vec_id") >= nQueries)
     val (centroids, bucketed) = buildIvfIndex(corpus, nlist, lloydIters)
@@ -907,7 +911,7 @@ object Similarity {
     * (centroids (c_id, cv, cn), bucketed (bucket, vec_id, v, nrm)). */
   private[graft] def buildIvfIndex(corpus: DataFrame, nlist: Int,
                                    lloydIters: Int,
-                                   seedsOpt: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+                                   seedsOpt: Option[DataFrame] = None): (DataFrame, DataFrame) = scope {
     // assignment of every corpus vector: MAP-ONLY in-row argmax against the
     // centroid table aggregated to one broadcast row (TopCosBucketsExpr).
     // The declarative form (crossJoin → n·k rows → per-vector max-struct
@@ -944,7 +948,7 @@ object Similarity {
         .withColumn("cn", norm(col("cv")))
       // k-row table: truncate the per-iteration lineage (same pattern as
       // star-CC rounds) so iteration i never re-executes iterations 0..i-1
-      centroids = means.localCheckpoint(true)
+      centroids = means.pin(replacing = centroids)
       iter += 1
     }
     (centroids, assign(centroids))
@@ -958,15 +962,12 @@ object Similarity {
     * work at any corpus size. Rows-only (Lloyd's is not SQL-expressible);
     * the spec checks recovery of the planted `label` structure. */
   def embClusters(spark: SparkSession, dir: String, k: Int = 10,
-                  lloydIters: Int = 4): DataFrame = {
-    // cached: the seeding sample + every Lloyd pass re-reads the corpus.
-    // Unpersisted after the (materializing) build so the cache doesn't
-    // outlive the loop — the returned assignment re-scans parquet once.
-    val corpus = withNorm(Tables.embeddings(spark, dir)).cache()
-    try {
-      buildIvfIndex(corpus, k, lloydIters, Some(seedsFor(corpus, k)))._2
-        .select(col("vec_id"), col("bucket").as("cluster"))
-    } finally corpus.unpersist(blocking = false)
+                  lloydIters: Int = 4): DataFrame = scope {
+    // cached: the seeding sample + every Lloyd pass re-reads the corpus;
+    // the returned assignment re-scans parquet once.
+    val corpus = withNorm(Tables.embeddings(spark, dir)).cached()
+    buildIvfIndex(corpus, k, lloydIters, Some(seedsFor(corpus, k)))._2
+      .select(col("vec_id"), col("bucket").as("cluster"))
   }
 
   /** C120 (r12): per-label CENTROID-DISTANCE quality audit — the
@@ -991,7 +992,7 @@ object Similarity {
     * it while small), and a label-partitioned rank window over ≤n rows.
     * No driver collect, no pair product. */
   def centroidQuality(spark: SparkSession, dir: String,
-                      outlierFrac: Double = 0.05): DataFrame = {
+                      outlierFrac: Double = 0.05): DataFrame = scope {
     import org.apache.spark.sql.expressions.Window
     // ONE materialized census: both the centroid pass and the distance
     // join read it — without the checkpoint Spark re-runs the parquet
@@ -1000,8 +1001,7 @@ object Similarity {
       .select(col("vec_id"), col("label"),
         posexplode(col("embedding")).as(Seq("d", "xf")))
       .select(col("vec_id"), col("label"), col("d"),
-        round(col("xf").cast("double") * lit(1e6), 0).cast("long").as("xi"))
-      .localCheckpoint(true)
+        round(col("xf").cast("double") * lit(1e6), 0).cast("long").as("xi")).pin()
     val wd = Window.partitionBy(col("label"), col("d")).orderBy(col("xi"))
     val cent = x
       .withColumn("rn", row_number().over(wd))
@@ -1023,8 +1023,7 @@ object Similarity {
       .withColumn("n", count(lit(1)).over(Window.partitionBy(col("label"))))
       .select(col("vec_id"), col("label"), col("dist2q"),
         (col("r") <= ceil(col("n") * lit(outlierFrac))).as("is_outlier"))
-      .localCheckpoint(true) // ≤ n rows; frees the n·dim census below
-    org.apache.spark.sql.GraftShims.unpersistCheckpoint(x)
+      .pin() // ≤ n rows; the scope then frees the n·dim census
     out
   }
 
@@ -1199,7 +1198,7 @@ object Similarity {
     * beyond the φ scalar and the weight aggregate). */
   private[graft] def kmeansParSeeds(corpus: DataFrame, k: Int,
                                     rounds: Int = 5,
-                                    oversample: Int = 2): DataFrame = {
+                                    oversample: Int = 2): DataFrame = scope {
     val spark = corpus.sparkSession
     val ell = math.max(1, oversample * k)
     def centsRowOf(cents: DataFrame) =
@@ -1208,8 +1207,7 @@ object Similarity {
     // farthest-point sweep's candidate head)
     var seeds = corpus
       .orderBy(md5(col("vec_id").cast("string").cast("binary"))).limit(1)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-      .localCheckpoint(true)
+      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn")).pin()
     var r = 0
     while (r < rounds) {
       // d(v) = 1 − cos(v, nearest seed): nearest id via the map-only kernel,
@@ -1232,7 +1230,7 @@ object Similarity {
         val drawn = withCost
           .filter(u < least(lit(1.0), lit(ell.toDouble) * col("cost") / lit(phi)))
           .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-        seeds = seeds.unionByName(drawn).dropDuplicates("c_id").localCheckpoint(true)
+        seeds = seeds.unionByName(drawn).dropDuplicates("c_id").pin(replacing = seeds)
       }
       r += 1
     }
@@ -1326,7 +1324,7 @@ object Similarity {
     * form the ingest gate builds its base index from. */
   private[graft] def writeIvfIndexFrom(raw: DataFrame, indexDir: String,
                                        nQueries: Int, nlist: Int,
-                                       lloydIters: Int): Unit = {
+                                       lloydIters: Int): Unit = scope {
     val emb = withNorm(raw)
     // cache the corpus for the build (r12, the embClusters discipline —
     // seeding + each Lloyd pass + the final assignment re-read it; without
@@ -1334,21 +1332,17 @@ object Similarity {
     // materialize the final assignment ONCE: it feeds both the
     // assignments write and the recall-curve scoring pass below, which as
     // lazy plans each re-ran the whole assignment.
-    val corpus = emb.filter(col("vec_id") >= nQueries).cache()
-    try {
-      val (centroids, bucketedLazy) = buildIvfIndex(corpus, nlist, lloydIters)
-      val bucketed = bucketedLazy.localCheckpoint(true)
-      try {
-        centroids.write.mode("overwrite").parquet(s"$indexDir/centroids.parquet")
-        bucketed.select(col("bucket"), col("vec_id"))
-          .write.mode("overwrite").parquet(s"$indexDir/assignments.parquet")
-        // the index's own recall curve, measured at build time — a few cheap
-        // sample queries against the freshly-bucketed corpus, persisted so
-        // query sessions size nprobe from THIS index, not an extrapolation
-        measureRecallCurve(emb.filter(col("vec_id") < nQueries), bucketed, centroids)
-          .write.mode("overwrite").parquet(s"$indexDir/recall.parquet")
-      } finally org.apache.spark.sql.GraftShims.unpersistCheckpoint(bucketed)
-    } finally corpus.unpersist(blocking = false)
+    val corpus = emb.filter(col("vec_id") >= nQueries).cached()
+    val (centroids, bucketedLazy) = buildIvfIndex(corpus, nlist, lloydIters)
+    val bucketed = bucketedLazy.pin()
+    centroids.write.mode("overwrite").parquet(s"$indexDir/centroids.parquet")
+    bucketed.select(col("bucket"), col("vec_id"))
+      .write.mode("overwrite").parquet(s"$indexDir/assignments.parquet")
+    // the index's own recall curve, measured at build time — a few cheap
+    // sample queries against the freshly-bucketed corpus, persisted so
+    // query sessions size nprobe from THIS index, not an extrapolation
+    measureRecallCurve(emb.filter(col("vec_id") < nQueries), bucketed, centroids)
+      .write.mode("overwrite").parquet(s"$indexDir/recall.parquet")
   }
 
   /** C71: corpus-growth ingest for the persisted IVF index — the daily
@@ -1372,7 +1366,7 @@ object Similarity {
     * changes scores, only which buckets are probed — the gate proves the
     * grown index serves the full corpus bit-equal to brute force). */
   def ivfIngest(spark: SparkSession, batch: DataFrame,
-                indexDir: String): DataFrame = {
+                indexDir: String): DataFrame = scope {
     val centroids = spark.read.parquet(s"$indexDir/centroids.parquet")
     val centsRow = centroids
       .agg(collect_list(struct(col("c_id"), col("cv"), col("cn"))).as("cents"))
@@ -1384,8 +1378,7 @@ object Similarity {
       .select(graft.functions.VectorExpressions
           .topCosBuckets(col("v"), col("nrm"), col("cents"), 1)
           .getItem(0).as("bucket"),
-        col("vec_id"))
-      .localCheckpoint(true)
+        col("vec_id")).pin()
     assigned.write.mode("append").parquet(s"$indexDir/assignments.parquet")
     assigned
   }
@@ -1404,13 +1397,13 @@ object Similarity {
     * genuinely gone and may be re-ingested. Returns the NEWLY tombstoned
     * ids. */
   def ivfDelete(spark: SparkSession, ids: DataFrame,
-                indexDir: String): DataFrame = {
+                indexDir: String): DataFrame = scope {
     val present = StoreFiles.table(spark, s"$indexDir/assignments.parquet")
       .select(col("vec_id")).distinct()
     val newTombs = ids.select(col("vec_id")).distinct()
       .join(present, Seq("vec_id"), "left_semi")
       .join(readTombstones(spark, indexDir), Seq("vec_id"), "left_anti")
-      .localCheckpoint(true) // materialize before the append (no read-own-writes)
+      .pin() // materialize before the append (no read-own-writes)
     newTombs.write.mode("append").parquet(s"$indexDir/tombstones.parquet")
     newTombs
   }
@@ -1420,10 +1413,10 @@ object Similarity {
     * serving reads carry no anti-join and a formerly-deleted id may be
     * re-ingested. The live view is checkpointed because its count is read
     * after the swap. Returns the number of rows dropped. */
-  def ivfCompact(spark: SparkSession, indexDir: String): Long = {
+  def ivfCompact(spark: SparkSession, indexDir: String): Long = scope {
     val path = s"$indexDir/assignments.parquet"
     val before = StoreFiles.table(spark, path).count()
-    val live = liveAssignments(spark, indexDir).localCheckpoint(true)
+    val live = liveAssignments(spark, indexDir).pin()
     StoreFiles.replace(spark, path)(live.write.parquet(_))
     StoreFiles.remove(spark, s"$indexDir/tombstones.parquet")
     before - live.count()
@@ -1498,10 +1491,10 @@ object Similarity {
     * (bucket, vec_id, codes tinyint[m]) — m BYTES per corpus vector, the
     * densest serving representation here. */
   private[graft] def buildIvfPqIndex(corpus: DataFrame, nlist: Int, m: Int,
-                                     ksub: Int, lloydIters: Int): (DataFrame, DataFrame, DataFrame) = {
+                                     ksub: Int, lloydIters: Int): (DataFrame, DataFrame, DataFrame) = scope {
     require(ksub <= 128, s"ksub=$ksub must fit a signed byte code (≤128)")
     val (centroids, bucketed) = buildIvfIndex(corpus, nlist, lloydIters)
-    val resid = ivfResiduals(bucketed, centroids).localCheckpoint(true)
+    val resid = ivfResiduals(bucketed, centroids).pin()
     val (codebooks, codeRows) = buildPqIndex(resid, m, ksub)
     val codes = codeRows
       .groupBy("vec_id")
@@ -1569,7 +1562,7 @@ object Similarity {
     * IS brute force (the `emb_ivfpq_exhaustive` oracle twin). */
   def ivfPqTopK(spark: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
                 nlist: Int = 8, nprobe: Int = 3, m: Int = 8, ksub: Int = 16,
-                rerank: Int = 4, lloydIters: Int = 1): DataFrame = {
+                rerank: Int = 4, lloydIters: Int = 1): DataFrame = scope {
     val emb = withNorm(Tables.embeddings(spark, dir))
     val corpus = emb.filter(col("vec_id") >= nQueries)
     val (centroids, codebooks, codes) = buildIvfPqIndex(corpus, nlist, m, ksub, lloydIters)
@@ -1583,7 +1576,7 @@ object Similarity {
     * the memory-bound serving table). Encode-once/query-many. */
   def writeIvfPqIndex(spark: SparkSession, dir: String, indexDir: String,
                       nQueries: Int = 10, nlist: Int = 8, m: Int = 8,
-                      ksub: Int = 16, lloydIters: Int = 1): Unit = {
+                      ksub: Int = 16, lloydIters: Int = 1): Unit = scope {
     val emb = withNorm(Tables.embeddings(spark, dir))
     val corpus = emb.filter(col("vec_id") >= nQueries)
     val (centroids, codebooks, codes) = buildIvfPqIndex(corpus, nlist, m, ksub, lloydIters)
@@ -1717,51 +1710,49 @@ object Similarity {
   def embPca(spark: SparkSession, dir: String, outDim: Int = 8): DataFrame =
     embPcaOf(Tables.embeddings(spark, dir), outDim)
 
-  private[graft] def embPcaOf(emb: DataFrame, outDim: Int): DataFrame = {
+  private[graft] def embPcaOf(emb: DataFrame, outDim: Int): DataFrame = scope {
     val spark = emb.sparkSession
     val e = emb.select(col("vec_id"), toDouble(col("embedding")).as("v"),
-      col("label")).filter(size(col("v")) > 0).cache()
-    try {
-      val muRows = e.select(posexplode(col("v")).as(Seq("i", "x")))
-        .groupBy("i").agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-        .orderBy("i").collect()
-      if (muRows.isEmpty)
-        return e.select(col("vec_id"),
-          col("v").as("projected"), col("label")).limit(0)
-      val d = muRows.length
-      val n = muRows.head.getAs[Long]("n").toDouble
-      val mu = muRows.map(r => r.getAs[Double]("s") / n)
-      val muLit = org.apache.spark.sql.functions.typedlit(mu.toSeq)
-      // centered Gram: in-row pair fan-out, ≤d² shuffle keys
-      val g = e
-        .select(posexplode(col("v")).as(Seq("i", "xi")), col("v"))
-        .select(col("i"),
-          (col("xi") - element_at(muLit, col("i") + 1)).as("ci"),
-          posexplode(col("v")).as(Seq("j", "xj")))
-        .select(col("i"), col("j"),
-          (col("ci") * (col("xj") - element_at(muLit, col("j") + 1))).as("p"))
-        .groupBy("i", "j").agg(sum(col("p")).as("g"))
-        .collect()
-      val gram = Array.ofDim[Double](d, d)
-      g.foreach(r => gram(r.getAs[Int]("i"))(r.getAs[Int]("j")) =
-        r.getAs[Double]("g") / n)
-      val (eigVals, eigVecs) = jacobiEigen(gram)
-      val r = math.min(outDim, d)
-      val order = eigVals.indices.sortBy(i => (-eigVals(i), i)).take(r)
-      val comps = order.map { idx =>
-        val w = eigVecs.map(_(idx))
-        // deterministic sign: the largest-|entry| coordinate is positive
-        val m = w.indices.maxBy(i => (math.abs(w(i)), -i))
-        if (w(m) < 0) w.map(x => -x) else w
-      }
-      val proj = array(comps.map { w =>
-        val wl = org.apache.spark.sql.functions.typedlit(w.toSeq)
-        val bias = w.indices.iterator.map(i => w(i) * mu(i)).sum
-        dot(col("v"), wl) - lit(bias)
-      }: _*)
-      e.select(col("vec_id"), proj.as("projected"), col("label"))
-        .localCheckpoint(true) // materialize before the cache is released
-    } finally e.unpersist(blocking = false)
+      col("label")).filter(size(col("v")) > 0).cached()
+    val muRows = e.select(posexplode(col("v")).as(Seq("i", "x")))
+      .groupBy("i").agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
+      .orderBy("i").collect()
+    if (muRows.isEmpty)
+      return e.select(col("vec_id"),
+        col("v").as("projected"), col("label")).limit(0)
+    val d = muRows.length
+    val n = muRows.head.getAs[Long]("n").toDouble
+    val mu = muRows.map(r => r.getAs[Double]("s") / n)
+    val muLit = org.apache.spark.sql.functions.typedlit(mu.toSeq)
+    // centered Gram: in-row pair fan-out, ≤d² shuffle keys
+    val g = e
+      .select(posexplode(col("v")).as(Seq("i", "xi")), col("v"))
+      .select(col("i"),
+        (col("xi") - element_at(muLit, col("i") + 1)).as("ci"),
+        posexplode(col("v")).as(Seq("j", "xj")))
+      .select(col("i"), col("j"),
+        (col("ci") * (col("xj") - element_at(muLit, col("j") + 1))).as("p"))
+      .groupBy("i", "j").agg(sum(col("p")).as("g"))
+      .collect()
+    val gram = Array.ofDim[Double](d, d)
+    g.foreach(r => gram(r.getAs[Int]("i"))(r.getAs[Int]("j")) =
+      r.getAs[Double]("g") / n)
+    val (eigVals, eigVecs) = jacobiEigen(gram)
+    val r = math.min(outDim, d)
+    val order = eigVals.indices.sortBy(i => (-eigVals(i), i)).take(r)
+    val comps = order.map { idx =>
+      val w = eigVecs.map(_(idx))
+      // deterministic sign: the largest-|entry| coordinate is positive
+      val m = w.indices.maxBy(i => (math.abs(w(i)), -i))
+      if (w(m) < 0) w.map(x => -x) else w
+    }
+    val proj = array(comps.map { w =>
+      val wl = org.apache.spark.sql.functions.typedlit(w.toSeq)
+      val bias = w.indices.iterator.map(i => w(i) * mu(i)).sum
+      dot(col("v"), wl) - lit(bias)
+    }: _*)
+    e.select(col("vec_id"), proj.as("projected"), col("label"))
+      .pin() // materialize before the cache is released
   }
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix — returns
@@ -1939,7 +1930,7 @@ object Similarity {
     * I/O is dominated by codes, not vectors. */
   def ivfQTopK(spark: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
                nlist: Int = 8, nprobe: Int = 3, rerank: Int = 4,
-               lloydIters: Int = 1): DataFrame = {
+               lloydIters: Int = 1): DataFrame = scope {
     val emb = withNorm(Tables.embeddings(spark, dir))
     val corpus = emb.filter(col("vec_id") >= nQueries)
     val (centroids, bucketed) = buildIvfIndex(corpus, nlist, lloydIters)
@@ -1954,7 +1945,7 @@ object Similarity {
     * compact serving table). Encode-once/query-many, like [[writeIvfIndex]],
     * but the query path no longer joins the full float corpus. */
   def writeIvfQIndex(spark: SparkSession, dir: String, indexDir: String,
-                     nQueries: Int = 10, nlist: Int = 8, lloydIters: Int = 1): Unit = {
+                     nQueries: Int = 10, nlist: Int = 8, lloydIters: Int = 1): Unit = scope {
     val emb = withNorm(Tables.embeddings(spark, dir))
     val corpus = emb.filter(col("vec_id") >= nQueries)
     val (centroids, bucketed) = buildIvfIndex(corpus, nlist, lloydIters)
@@ -2001,10 +1992,8 @@ object Similarity {
     * spec plants duplicate groups across well-separated clusters and checks
     * collapse + canonical choice. */
   def semDedup(spark: SparkSession, dir: String, k: Int = 10,
-               threshold: Double = 0.9, lloydIters: Int = 4): DataFrame = {
-    val corpus = withNorm(Tables.embeddings(spark, dir)).cache()
-    try semDedupOf(corpus, k, threshold, lloydIters)
-    finally corpus.unpersist(blocking = false)
+               threshold: Double = 0.9, lloydIters: Int = 4): DataFrame = scope {
+    semDedupOf(withNorm(Tables.embeddings(spark, dir)).cached(), k, threshold, lloydIters)
   }
 
   /** [[semDedup]] over an already-normed (and ideally cached) corpus — the
@@ -2058,7 +2047,7 @@ object Similarity {
     * result provably equals [[mipsTopK]] (every bucket probed, exact
     * re-score) — that twin is the oracle gate for this path. */
   def mipsIvfTopK(spark: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
-                  nlist: Int = 8, nprobe: Int = 3, lloydIters: Int = 1): DataFrame = {
+                  nlist: Int = 8, nprobe: Int = 3, lloydIters: Int = 1): DataFrame = scope {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), toDouble(col("embedding")).as("v0"))
       .withColumn("n0", norm(col("v0")))
@@ -2140,14 +2129,13 @@ object Similarity {
     * oracle-able base, like emb_cosine_topk); at corpus scale the same
     * vote runs on [[knnGraphIvf]]'s blocked graph — the vote and the
     * accuracy fold are summary-sized either way (≤ labels² rows). */
-  def knnLabelEval(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def knnLabelEval(spark: SparkSession, dir: String, k: Int = 5): DataFrame = scope {
     // every NONZERO-NORM vector is classified (zero-norm rows have no
     // cosine neighborhood — excluded from all cosine paths here, same as
     // the graph itself). Checkpointed: both the neighbor join and the
     // truth join read this 2-column projection.
     val labels = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label").cast("long").as("label"))
-      .localCheckpoint(true)
+      .select(col("vec_id"), col("label").cast("long").as("label")).pin()
     val votes = knnGraph(spark, dir, k)
       .join(labels.select(col("vec_id"), col("label").as("n_label")), "vec_id")
       .groupBy(col("q_id"), col("n_label"))
@@ -2190,7 +2178,7 @@ object Similarity {
     * tighten as they multiply, so the nearest-nprobe geometry keeps
     * covering the true neighborhood for clustered data. */
   def knnGraphIvf(spark: SparkSession, dir: String, k: Int = 5,
-                  nlist: Int = 0, nprobe: Int = 3, lloydIters: Int = 1): DataFrame = {
+                  nlist: Int = 0, nprobe: Int = 3, lloydIters: Int = 1): DataFrame = scope {
     val emb = withNorm(Tables.embeddings(spark, dir))
     val nl =
       if (nlist > 0) nlist
@@ -2248,7 +2236,7 @@ object Similarity {
     * side so wedges stay ≤ n·k², linear in n at fixed k — and close by
     * one key-partitioned semi-join against the edge list. Never an n²
     * pair pass. */
-  def triangles(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def triangles(spark: SparkSession, dir: String, k: Int = 5): DataFrame = scope {
     val emb = withNorm(Tables.embeddings(spark, dir))
     trianglesFromKnn(emb, knnGraphOf(emb, k))
   }
@@ -2261,20 +2249,19 @@ object Similarity {
     * gating the wedge/closure/rollup machinery over the probed plumbing. */
   def trianglesIvf(spark: SparkSession, dir: String, k: Int = 5,
                    nlist: Int = 0, nprobe: Int = 3,
-                   lloydIters: Int = 1): DataFrame =
+                   lloydIters: Int = 1): DataFrame = scope {
     trianglesFromKnn(withNorm(Tables.embeddings(spark, dir)),
       knnGraphIvf(spark, dir, k, nlist, nprobe, lloydIters))
+  }
 
   def trianglesIvfExhaustive(spark: SparkSession, dir: String,
                              k: Int = 5, nlist: Int = 8,
-                             lloydIters: Int = 1): DataFrame =
+                             lloydIters: Int = 1): DataFrame = scope {
     trianglesFromKnn(withNorm(Tables.embeddings(spark, dir)),
       knnGraphIvfExhaustive(spark, dir, k, nlist, lloydIters))
+  }
 
-  private[graft] def trianglesOf(emb: DataFrame, k: Int): DataFrame =
-    trianglesFromKnn(emb, knnGraphOf(emb, k))
-
-  private def trianglesFromKnn(emb: DataFrame, graph: DataFrame): DataFrame = {
+  private def trianglesFromKnn(emb: DataFrame, graph: DataFrame): DataFrame = scope {
     val knn = graph.select(col("q_id"), col("vec_id"))
     // mutual edges in canonical a<b orientation: (a,b) directed both ways
     val edges = knn.as("x")
@@ -2282,7 +2269,7 @@ object Similarity {
         col("x.q_id") === col("y.vec_id") && col("x.vec_id") === col("y.q_id"))
       .filter(col("x.q_id") < col("x.vec_id"))
       .select(col("x.q_id").as("a"), col("x.vec_id").as("b"))
-      .localCheckpoint(true) // wedges, closure, and degrees all read it
+      .pin() // wedges, closure, and degrees all read it
     val wedges = edges.as("e1")
       .join(edges.as("e2"), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("a"), col("e1.b").as("b"), col("e2.b").as("c"))
@@ -2324,13 +2311,11 @@ object Similarity {
     * per cluster, so pruneFrac = 0 is the identity and singleton clusters
     * always survive. */
   def embPrototypes(spark: SparkSession, dir: String, k: Int = 10,
-                    pruneFrac: Double = 0.3, lloydIters: Int = 4): DataFrame = {
-    val corpus = withNorm(Tables.embeddings(spark, dir)).cache()
-    try {
-      val (centroids, bucketed) =
-        buildIvfIndex(corpus, k, lloydIters, Some(seedsFor(corpus, k)))
-      prototypesOf(bucketed, centroids, pruneFrac)
-    } finally corpus.unpersist(blocking = false)
+                    pruneFrac: Double = 0.3, lloydIters: Int = 4): DataFrame = scope {
+    val corpus = withNorm(Tables.embeddings(spark, dir)).cached()
+    val (centroids, bucketed) =
+      buildIvfIndex(corpus, k, lloydIters, Some(seedsFor(corpus, k)))
+    prototypesOf(bucketed, centroids, pruneFrac)
   }
 
   private[graft] def prototypesOf(bucketed: DataFrame, centroids: DataFrame,
@@ -2358,21 +2343,17 @@ object Similarity {
     * prototypicality scores rank genuine redundancy, not copy count. */
   def embD4(spark: SparkSession, dir: String, k: Int = 10,
             dedupThreshold: Double = 0.9, pruneFrac: Double = 0.3,
-            lloydIters: Int = 4): DataFrame = {
+            lloydIters: Int = 4): DataFrame = scope {
     // ONE cached corpus read feeds both stages (the r8 candidate): the
     // dedup pass and the post-dedup re-cluster share the normed corpus;
     // the survivor set is just a filter over it
-    val full = withNorm(Tables.embeddings(spark, dir)).cache()
-    try {
-      val survivors = semDedupOf(full, k, dedupThreshold, lloydIters)
-        .filter(col("keep")).select(col("vec_id"))
-      val corpus = full.join(survivors, "vec_id").cache()
-      try {
-        val (centroids, bucketed) =
-          buildIvfIndex(corpus, k, lloydIters, Some(seedsFor(corpus, k)))
-        prototypesOf(bucketed, centroids, pruneFrac)
-      } finally corpus.unpersist(blocking = false)
-    } finally full.unpersist(blocking = false)
+    val full = withNorm(Tables.embeddings(spark, dir)).cached()
+    val survivors = semDedupOf(full, k, dedupThreshold, lloydIters)
+      .filter(col("keep")).select(col("vec_id"))
+    val corpus = full.join(survivors, "vec_id").cached()
+    val (centroids, bucketed) =
+      buildIvfIndex(corpus, k, lloydIters, Some(seedsFor(corpus, k)))
+    prototypesOf(bucketed, centroids, pruneFrac)
   }
 
   /** C63: label propagation over the k-NN graph (Zhu & Ghahramani 2002,
@@ -2392,36 +2373,32 @@ object Similarity {
     * rounds. Ties break toward the SMALLER label (max of negated id),
     * deterministic at any partitioning. */
   def labelProp(spark: SparkSession, dir: String, k: Int = 5, iters: Int = 3,
-                seedMod: Long = 10, nlist: Int = 0, nprobe: Int = 3): DataFrame = {
+                seedMod: Long = 10, nlist: Int = 0, nprobe: Int = 3): DataFrame = scope {
     val edges = knnGraphIvf(spark, dir, k, nlist, nprobe)
-      .select(col("q_id"), col("vec_id").as("nbr_id"), col("cos_sim")).cache()
-    try {
-      var labels = Tables.embeddings(spark, dir)
+      .select(col("q_id"), col("vec_id").as("nbr_id"), col("cos_sim")).cached()
+    var labels = Tables.embeddings(spark, dir)
+      .select(col("vec_id"),
+        when(col("vec_id") % seedMod === 0, col("label")).as("lab"),
+        (col("vec_id") % seedMod === 0).as("seed")).pin()
+    var i = 0
+    while (i < iters) {
+      val votes = edges
+        .join(labels.select(col("vec_id").as("nbr_id"), col("lab").as("nbr_lab")),
+          "nbr_id")
+        .filter(col("nbr_lab").isNotNull)
+        .groupBy(col("q_id"), col("nbr_lab"))
+        .agg(sum(col("cos_sim")).as("w"))
+        .groupBy("q_id")
+        .agg(max(struct(col("w"), (-col("nbr_lab")).as("neg_lab"))).as("best"))
+        .select(col("q_id").as("vec_id"), (-col("best.neg_lab")).as("new_lab"))
+      labels = labels.join(votes, Seq("vec_id"), "left")
         .select(col("vec_id"),
-          when(col("vec_id") % seedMod === 0, col("label")).as("lab"),
-          (col("vec_id") % seedMod === 0).as("seed"))
-        .localCheckpoint()
-      var i = 0
-      while (i < iters) {
-        val votes = edges
-          .join(labels.select(col("vec_id").as("nbr_id"), col("lab").as("nbr_lab")),
-            "nbr_id")
-          .filter(col("nbr_lab").isNotNull)
-          .groupBy(col("q_id"), col("nbr_lab"))
-          .agg(sum(col("cos_sim")).as("w"))
-          .groupBy("q_id")
-          .agg(max(struct(col("w"), (-col("nbr_lab")).as("neg_lab"))).as("best"))
-          .select(col("q_id").as("vec_id"), (-col("best.neg_lab")).as("new_lab"))
-        labels = labels.join(votes, Seq("vec_id"), "left")
-          .select(col("vec_id"),
-            when(col("seed"), col("lab"))
-              .otherwise(coalesce(col("new_lab"), col("lab"))).as("lab"),
-            col("seed"))
-          .localCheckpoint()
-        i += 1
-      }
-      labels.select(col("vec_id"), col("lab").as("label_pred"), col("seed"))
-    } finally edges.unpersist(blocking = false)
+          when(col("seed"), col("lab"))
+            .otherwise(coalesce(col("new_lab"), col("lab"))).as("lab"),
+          col("seed")).pin(replacing = labels)
+      i += 1
+    }
+    labels.select(col("vec_id"), col("lab").as("label_pred"), col("seed"))
   }
 
   // ---- PageRank centrality over the k-NN graph (C73) ---------------------
@@ -2456,7 +2433,7 @@ object Similarity {
     * for iteration (spec-pinned). */
   private[graft] def pageRankOf(nodes: DataFrame, edges: DataFrame,
                                 iters: Int = 10,
-                                damping: Double = 0.85): DataFrame = {
+                                damping: Double = 0.85): DataFrame = scope {
     val dec = org.apache.spark.sql.types.DecimalType(28, 12)
     val n = nodes.count()
     if (n == 0) return nodes.select(col("id").as("vec_id"),
@@ -2466,45 +2443,42 @@ object Similarity {
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val e = edges.join(outdeg, "src")
       .select(col("src"), col("dst"), (lit(1.0) / col("outdeg")).as("w"))
-      .cache()
-    try {
-      // dangling flag tagged once; rides the frontier thereafter
-      var ranks = nodes
-        .join(e.select(col("src").as("id"), lit(true).as("has_out")).distinct(),
-          Seq("id"), "left")
-        .select(col("id"), col("has_out").isNull.as("dang"),
-          lit(init).cast(dec).as("r"))
-        .localCheckpoint(true)
-      var i = 0
-      while (i < iters) {
-        val dm = ranks.filter(col("dang"))
-          .agg(coalesce(sum(col("r")), lit(0).cast(dec)).as("dm"))
-        val contrib = e
-          .join(ranks.select(col("id").as("src"), col("r")), "src")
-          .select(col("dst"),
-            (col("r").cast("double") * col("w") * lit(damping)).cast(dec).as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("cs"))
-        ranks = ranks
-          .join(contrib.select(col("dst").as("id"), col("cs")), Seq("id"), "left")
-          .crossJoin(broadcast(dm)) // single row: constant-size broadcast
-          .select(col("id"), col("dang"),
-            (lit((1.0 - damping) / n) +
-              lit(damping) * col("dm").cast("double") / n +
-              coalesce(col("cs"), lit(0).cast(dec)).cast("double"))
-              .cast(dec).as("r"))
-        // checkpoint every iteration: it truncates the lineage (star-CC
-        // discipline), and an un-checkpointed frontier is consumed TWICE
-        // next round (dm agg + contrib join), duplicating that round's join
-        // subtree — r13 measured every iteration fastest
-        // (OPTIMIZATION_r13.md). Eager, never lazy: a lazy checkpoint
-        // materializing inside the next round's broadcast of the same
-        // lineage deadlocks Spark 4.1's scheduler (RDD lock vs
-        // RDDCheckpointData lock, taken in opposite orders).
-        i += 1
-        ranks = ranks.localCheckpoint(true)
-      }
-      ranks.select(col("id").as("vec_id"), col("r").cast("double").as("pagerank"))
-    } finally e.unpersist(blocking = false)
+      .cached()
+    // dangling flag tagged once; rides the frontier thereafter
+    var ranks = nodes
+      .join(e.select(col("src").as("id"), lit(true).as("has_out")).distinct(),
+        Seq("id"), "left")
+      .select(col("id"), col("has_out").isNull.as("dang"),
+        lit(init).cast(dec).as("r")).pin()
+    var i = 0
+    while (i < iters) {
+      val dm = ranks.filter(col("dang"))
+        .agg(coalesce(sum(col("r")), lit(0).cast(dec)).as("dm"))
+      val contrib = e
+        .join(ranks.select(col("id").as("src"), col("r")), "src")
+        .select(col("dst"),
+          (col("r").cast("double") * col("w") * lit(damping)).cast(dec).as("c"))
+        .groupBy("dst").agg(sum(col("c")).as("cs"))
+      val next = ranks
+        .join(contrib.select(col("dst").as("id"), col("cs")), Seq("id"), "left")
+        .crossJoin(broadcast(dm)) // single row: constant-size broadcast
+        .select(col("id"), col("dang"),
+          (lit((1.0 - damping) / n) +
+            lit(damping) * col("dm").cast("double") / n +
+            coalesce(col("cs"), lit(0).cast(dec)).cast("double"))
+            .cast(dec).as("r"))
+      // checkpoint every iteration: it truncates the lineage (star-CC
+      // discipline), and an un-checkpointed frontier is consumed TWICE
+      // next round (dm agg + contrib join), duplicating that round's join
+      // subtree — r13 measured every iteration fastest
+      // (OPTIMIZATION_r13.md). Eager, never lazy: a lazy checkpoint
+      // materializing inside the next round's broadcast of the same
+      // lineage deadlocks Spark 4.1's scheduler (RDD lock vs
+      // RDDCheckpointData lock, taken in opposite orders).
+      i += 1
+      ranks = next.pin(replacing = ranks)
+    }
+    ranks.select(col("id").as("vec_id"), col("r").cast("double").as("pagerank"))
   }
 
   /** C73 gate entry: PageRank centrality of every corpus vector over the
@@ -2515,7 +2489,7 @@ object Similarity {
     * bucketed IVF path (never all-pairs), nodes = the full corpus (zero
     * vectors enter as dangling teleport targets, still well-defined). */
   def pageRank(spark: SparkSession, dir: String, k: Int = 5,
-               iters: Int = 10): DataFrame = {
+               iters: Int = 10): DataFrame = scope {
     val edges = knnGraphIvf(spark, dir, k)
       .select(col("q_id").as("src"), col("vec_id").as("dst"))
     val nodes = Tables.embeddings(spark, dir).select(col("vec_id").as("id"))
@@ -2588,7 +2562,7 @@ object Similarity {
     * the withNorm discipline; a query whose slice is zero-norm drops out
     * of that width's denominator `n_q`. */
   def truncAudit(spark: SparkSession, dir: String, nQueries: Int = 10,
-                 k: Int = 5, widths: Seq[Int] = Seq(8, 16, 32)): DataFrame = {
+                 k: Int = 5, widths: Seq[Int] = Seq(8, 16, 32)): DataFrame = scope {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
       .filter(col("v").isNotNull)
@@ -2615,7 +2589,7 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("trunc_dim"), col("q_id"), col("vec_id"), col("rank"))
-      .localCheckpoint(true) // ≤ widths·queries·k rows; read twice below
+      .pin() // ≤ widths·queries·k rows; read twice below
     val full = ranked
       .withColumn("max_w", max(col("trunc_dim")).over(
         Window.partitionBy(col("q_id"))))
@@ -2707,7 +2681,7 @@ object Similarity {
   /** C96 gate entry: build-or-reuse the standard n8 index on the sf dir,
     * audit it. Rows-only (Lloyd assignment isn't SQL-expressible); the
     * invariants (totals reconcile, skew ≥ 1) are spec-gated. */
-  def ivfBalanceFor(spark: SparkSession, dir: String): DataFrame = {
+  def ivfBalanceFor(spark: SparkSession, dir: String): DataFrame = scope {
     val idx = java.nio.file.Files.createTempDirectory("graft-ivf-bal").toString
     writeIvfIndex(spark, dir, idx)
     ivfBalance(spark, idx)
@@ -2894,7 +2868,7 @@ object Similarity {
     * keeps the loop's lineage flat (the star-CC discipline); the corpus
     * is read once, in stage 1. */
   def mmrTopK(spark: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
-              lambda: Double = 0.7, shortlist: Int = 50): DataFrame = {
+              lambda: Double = 0.7, shortlist: Int = 50): DataFrame = scope {
     require(lambda >= 0 && lambda <= 1, "lambda must be in [0,1]")
     val emb = withNorm(Tables.embeddings(spark, dir))
     val queries = emb.filter(col("vec_id") < nQueries)
@@ -2905,8 +2879,7 @@ object Similarity {
       .select(col("q_id"), col("vec_id"), col("v"), col("nrm"),
         (dot(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("cos_sim"))
       .withColumn("srank", row_number().over(w)).filter(col("srank") <= shortlist)
-      .drop("srank").withColumn("red", lit(0.0))
-      .localCheckpoint(true)
+      .drop("srank").withColumn("red", lit(0.0)).pin()
     val mmrW = Window.partitionBy(col("q_id"))
       .orderBy(col("mmr_score").desc, col("vec_id"))
     val picks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -2915,8 +2888,7 @@ object Similarity {
         lit(lambda) * col("cos_sim") - lit(1 - lambda) * col("red"))
       val pick = scored.withColumn("rn", row_number().over(mmrW))
         .filter(col("rn") === 1).drop("rn", "red")
-        .withColumn("sel_rank", lit(step.toLong))
-        .localCheckpoint(true) // nQueries rows
+        .withColumn("sel_rank", lit(step.toLong)).pin() // nQueries rows
       picks += pick.select(col("q_id"), col("sel_rank"), col("vec_id"),
         col("cos_sim"), col("mmr_score"))
       val pickedVecs = pick.select(col("q_id"), col("vec_id").as("p_id"),
@@ -2926,8 +2898,7 @@ object Similarity {
         .filter(col("vec_id") =!= col("p_id"))
         .withColumn("red", greatest(col("red"),
           dot(col("v"), col("pv")) / (col("nrm") * col("pn"))))
-        .drop("p_id", "pv", "pn")
-        .localCheckpoint(true)
+        .drop("p_id", "pv", "pn").pin(replacing = remaining)
     }
     picks.reduce(_ unionByName _)
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.CountMinSketch
+import graft.Pins._
 import graft.Tables
 
 /** Sketch/approximate operators — the cardinality and heavy-hitter toolkit
@@ -329,13 +330,13 @@ object Sketches {
     * interval arithmetic from the serialized sketch fields and checks the
     * true count lands inside the z=3 bars on a planted stream. */
   def thetaCi(spark: SparkSession, dir: String, capacity: Int = 64,
-              z: Double = 3.0): DataFrame = {
+              z: Double = 3.0): DataFrame = scope {
     import graft.functions.ThetaFunctions._
     val sk = Tables.events(spark, dir)
       .select(col("event_type"), xxhash64(col("user_id")).as("h"))
       .groupBy("event_type")
       .agg(thetaAgg(col("h"), capacity).as("sk"))
-      .localCheckpoint(true) // per-type rows AND the all-types merge read it
+      .pin() // per-type rows AND the all-types merge read it
     val perType = sk.select(col("event_type"),
       graft.functions.ThetaFunctions.thetaCi(col("sk"), z).as("ci"))
     val allTypes = sk.agg(thetaMergeAgg(col("sk"), capacity).as("sk"))
@@ -349,13 +350,13 @@ object Sketches {
   }
 
   def thetaOverlap(spark: SparkSession, dir: String,
-                   capacity: Int = 1 << 14): DataFrame = {
+                   capacity: Int = 1 << 14): DataFrame = scope {
     import graft.functions.ThetaFunctions._
     val sk = Tables.events(spark, dir)
       .select(col("event_type"), xxhash64(col("user_id")).as("h"))
       .groupBy("event_type")
       .agg(thetaAgg(col("h"), capacity).as("sk"))
-      .localCheckpoint(true) // both sides of the pair join read this summary
+      .pin() // both sides of the pair join read this summary
     val a = sk.select(col("event_type").as("type_a"), col("sk").as("sk_a"))
     val b = sk.select(col("event_type").as("type_b"), col("sk").as("sk_b"))
     a.join(b, col("type_a") < col("type_b"))

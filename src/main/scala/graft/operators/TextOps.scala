@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pins._
 import graft.Tables
 import graft.sources.StoreFiles
 import graft.functions.Cols.boundedWindow
@@ -353,7 +354,7 @@ object TextOps {
     * path keeps its SQL oracle: minhash isn't DuckDB-expressible). */
   def curateNearDup(spark: SparkSession, dir: String, minQuality: Double = 0.2,
                     maxDigitRatio: Double = 0.3, maxTokenLen: Int = 25,
-                    threshold: Double = 0.5): DataFrame = {
+                    threshold: Double = 0.5): DataFrame = scope {
     val nd = graft.operators.Dedup.keepListByQuality(spark, dir, threshold)
       .select(col("doc_id"), col("keep").as("nd_keep"))
     curateImpl(spark, dir, ndKeep = Some(nd), minQuality, maxDigitRatio, maxTokenLen)
@@ -368,7 +369,7 @@ object TextOps {
     * O(corpus bytes) — the artifact a 100 TB owner keeps hot between
     * nightly ingests. */
   def writeCurateStore(docs: DataFrame, storeDir: String, shingleK: Int = 3,
-                       numHashes: Int = 16, bands: Int = 4): Unit = {
+                       numHashes: Int = 16, bands: Int = 4): Unit = scope {
     graft.operators.Dedup.writeSignatureStore(docs, storeDir, shingleK, numHashes, bands)
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"), fingerprint(col("text")).as("fp"))
@@ -408,7 +409,7 @@ object TextOps {
     * store's own append ordering makes its retry safe). */
   def curateIncremental(batch: DataFrame, storeDir: String,
                         minQuality: Double = 0.2, maxDigitRatio: Double = 0.3,
-                        maxTokenLen: Int = 25, threshold: Double = 0.5): DataFrame = {
+                        maxTokenLen: Int = 25, threshold: Double = 0.5): DataFrame = scope {
     val spark = batch.sparkSession
     val storeFps = spark.read.parquet(s"$storeDir/fps.parquet")
     // pin the admitted batch BEFORE the store mutates below (same
@@ -417,8 +418,7 @@ object TextOps {
       .filter(col("text").isNotNull)
       .dropDuplicates("doc_id")
       .withColumn("fp", fingerprint(col("text")))
-      .join(storeFps.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+      .join(storeFps.select(col("doc_id")), Seq("doc_id"), "left_anti").pin()
     // signature append first (idempotent per doc id), then pairs from the
     // PERSISTED store — identical on a clean run, and the only source that
     // still sees the batch's near-dups when a crashed earlier attempt
@@ -469,7 +469,7 @@ object TextOps {
       .withColumn("keep", col("drop_reason").isNull)
       .withColumn("split", when(col("keep"), splitOf(col("doc_id"))))
       .select(col("doc_id"), col("keep"), col("drop_reason"), col("split"))
-      .localCheckpoint(true) // materialize BEFORE the admission marker lands
+      .pin() // materialize BEFORE the admission marker lands
     // digest append LAST: the admission marker commits this batch as done
     docs.select(col("doc_id"), col("fp"))
       .write.mode("append").parquet(s"$storeDir/fps.parquet")
@@ -870,7 +870,7 @@ object TextOps {
     * seqLen/bucketSize come from the store's own `params.parquet` — a
     * caller cannot mis-pack against it (a differing seqLen would compute
     * the base offset with the wrong stride and emit inconsistent spans). */
-  def packIncremental(batch: DataFrame, storeDir: String): DataFrame = {
+  def packIncremental(batch: DataFrame, storeDir: String): DataFrame = scope {
     val p = batch.sparkSession.read.parquet(s"$storeDir/params.parquet").head()
     val (seqLen, bucketSize) =
       (p.getAs[Long]("seq_len"), p.getAs[Long]("bucket_size"))
@@ -881,7 +881,7 @@ object TextOps {
       .head().getLong(0)
     val fresh = batch
       .join(manifest.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-    val spans = packOfFrom(fresh, seqLen, bucketSize, base).localCheckpoint(true)
+    val spans = packOfFrom(fresh, seqLen, bucketSize, base).pin()
     spans.write.mode("append").parquet(s"$storeDir/manifest.parquet")
     spans
   }
@@ -1475,10 +1475,10 @@ object TextOps {
     * key is NULL and try_element_at yields NULL — append branch again. */
   private def mergeBatch(syms: Column, pairs: Seq[(String, String)]): Column = {
     val pairKey = map(pairs.flatMap { case (a, b) =>
-      Seq(lit(a + " " + b), lit(a + b)) }: _*)
+      Seq(lit(a + "\u0000" + b), lit(a + b)) }: _*)
     aggregate(syms, array().cast("array<string>"), (acc, x) => {
       val merged = try_element_at(pairKey,
-        concat(get(acc, size(acc) - 1), lit(" "), x))
+        concat(get(acc, size(acc) - 1), lit("\u0000"), x))
       when(merged.isNotNull,
         concat(slice(acc, lit(1), size(acc) - 1), array(merged)))
         .otherwise(concat(acc, array(x)))
@@ -1536,14 +1536,13 @@ object TextOps {
     bpeTrainOf(Tables.documents(spark, dir), nMerges, minFreq)
 
   private[graft] def bpeTrainOf(docs: DataFrame, nMerges: Int,
-                                minFreq: Long): DataFrame = {
+                                minFreq: Long): DataFrame = scope {
     val spark = docs.sparkSession
     var words = docs.filter(col("text").isNotNull)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      .select(charSyms(col("w")).as("syms"), col("freq"))
-      .localCheckpoint(true)
+      .select(charSyms(col("w")).as("syms"), col("freq")).pin()
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var rank = 0
     var done = false
@@ -1564,7 +1563,7 @@ object TextOps {
         rank += 1
         merges += ((rank, a, b, n))
         words = words.withColumn("syms", mergeOnce(col("syms"), a, b))
-        if (rank % BpeCheckpointEvery == 0) words = words.localCheckpoint(true)
+        if (rank % BpeCheckpointEvery == 0) words = words.pin(replacing = words)
       }
     }
     import spark.implicits._
@@ -1593,15 +1592,14 @@ object TextOps {
     bpeTrainBatchedOf(Tables.documents(spark, dir), nMerges, minFreq, batchCap)
 
   private[graft] def bpeTrainBatchedOf(docs: DataFrame, nMerges: Int,
-                                       minFreq: Long, batchCap: Int): DataFrame = {
+                                       minFreq: Long, batchCap: Int): DataFrame = scope {
     require(batchCap >= 1, "batchCap must be >= 1")
     val spark = docs.sparkSession
     var words = docs.filter(col("text").isNotNull)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      .select(charSyms(col("w")).as("syms"), col("freq"))
-      .localCheckpoint(true)
+      .select(charSyms(col("w")).as("syms"), col("freq")).pin()
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var rank = 0
     var done = false
@@ -1633,7 +1631,7 @@ object TextOps {
         }
         words = words
           .withColumn("syms", mergeBatch(col("syms"), batch.result()))
-          .localCheckpoint(true) // one materialization per batch
+          .pin(replacing = words) // one materialization per batch
       }
     }
     import spark.implicits._
@@ -1650,7 +1648,7 @@ object TextOps {
     * tokens; AQE broadcasts it while small) + a partial-agg count per doc.
     * Docs with no words (null/empty text) are absent from the output. */
   def bpeEncode(spark: SparkSession, dir: String, nMerges: Int = 20,
-                minFreq: Long = 2): DataFrame = {
+                minFreq: Long = 2): DataFrame = scope {
     val docs = Tables.documents(spark, dir)
     val ms = bpeTrainOf(docs, nMerges, minFreq).collect()
       .sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
@@ -1685,7 +1683,7 @@ object TextOps {
     * rank order, so store-served segmentation is bit-equal to the
     * training-time segmentation (same contract as C103c). */
   def bpeEncodeFromStore(spark: SparkSession, dir: String,
-                         storeDir: String): DataFrame = {
+                         storeDir: String): DataFrame = scope {
     val ms = spark.read.parquet(s"$storeDir/merges.parquet").collect()
       .sortBy(_.getAs[Int]("rank"))
       .map(r => (r.getAs[String]("left"), r.getAs[String]("right"))).toSeq
@@ -1693,7 +1691,7 @@ object TextOps {
   }
 
   private[graft] def bpeEncodeWith(docs: DataFrame,
-                                   merges: Seq[(String, String)]): DataFrame = {
+                                   merges: Seq[(String, String)]): DataFrame = scope {
     var vocab = docs.filter(col("text").isNotNull)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0).distinct()
@@ -1703,7 +1701,7 @@ object TextOps {
     // application — a 256-merge table applies in ~dozens of scans, not 256
     disjointChunks(merges).zipWithIndex.foreach { case (chunk, i) =>
       vocab = vocab.withColumn("syms", mergeBatch(col("syms"), chunk))
-      if ((i + 1) % BpeCheckpointEvery == 0) vocab = vocab.localCheckpoint(true)
+      if ((i + 1) % BpeCheckpointEvery == 0) vocab = vocab.pin(replacing = vocab)
     }
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
@@ -1805,13 +1803,13 @@ object TextOps {
     * (count desc, piece) PLUS every single character (coverage — a word
     * must always be segmentable). */
   private[graft] def uniSeed(words: DataFrame, maxPieceLen: Int,
-                             seedSize: Int): DataFrame = {
+                             seedSize: Int): DataFrame = scope {
     val subs = words.select(col("freq"), explode(expr(
       s"""flatten(transform(sequence(1, length(w)), i ->
          |  transform(sequence(i, least(i + ${maxPieceLen - 1}, length(w))), e ->
          |    substring(w, i, e - i + 1))))""".stripMargin)).as("piece"))
       .groupBy("piece").agg(sum(col("freq")).as("cnt"))
-      .localCheckpoint(true) // the top-k and the char branch share it
+      .pin() // the top-k and the char branch share it
     // the substring census is CORPUS-VOCAB-scale: the cut must be a
     // bounded TakeOrdered (each partition keeps seedSize), never a global
     // rank window (single-reducer sort at 10⁹ candidates)
@@ -1828,8 +1826,8 @@ object TextOps {
     * hard-EM objective the spec pins. */
   private[graft] def uniRound(words: DataFrame, pieces: DataFrame,
                               maxPieceLen: Int, vocabSize: Int)
-      : (DataFrame, java.math.BigDecimal) = {
-    val seg = uniSegment(words, pieces, maxPieceLen).localCheckpoint(true)
+      : (DataFrame, java.math.BigDecimal) = scope {
+    val seg = uniSegment(words, pieces, maxPieceLen).pin()
     val ll = seg.agg(sum(col("ll") *
         col("freq").cast(org.apache.spark.sql.types.DecimalType(10, 0))))
       .head().getDecimal(0)
@@ -1845,7 +1843,7 @@ object TextOps {
     val kept = all.withColumn("r", row_number().over(w))
       .filter(col("r") <= vocabSize || length(col("piece")) === 1)
       .select(col("piece"), col("cnt"))
-    (uniScored(kept).localCheckpoint(true), ll)
+    (uniScored(kept).pin(), ll)
   }
 
   /** C103: UNIGRAM-LM tokenizer training (Kudo, ACL 2018 — the
@@ -1877,12 +1875,14 @@ object TextOps {
 
   private[graft] def unigramTrainOf(docs: DataFrame, vocabSize: Int,
                                     seedSize: Int, maxPieceLen: Int,
-                                    rounds: Int): DataFrame = {
-    val words = uniWordCensus(docs).localCheckpoint(true)
-    var pieces = uniScored(uniSeed(words, maxPieceLen, seedSize))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds)
-      pieces = uniRound(words, pieces, maxPieceLen, vocabSize)._1
+                                    rounds: Int): DataFrame = scope {
+    val words = uniWordCensus(docs).pin()
+    var pieces = uniScored(uniSeed(words, maxPieceLen, seedSize)).pin()
+    for (_ <- 1 to rounds) {
+      val next = uniRound(words, pieces, maxPieceLen, vocabSize)._1
+      pieces.unpin()
+      pieces = next
+    }
     val w = boundedWindow(col("cnt").desc, col("piece")) // candidate-piece census
     pieces
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -1897,7 +1897,7 @@ object TextOps {
     * work is one explode + a word-key join + a per-doc partial agg. */
   def unigramEncode(spark: SparkSession, dir: String, vocabSize: Int = 512,
                     seedSize: Int = 2048, maxPieceLen: Int = 8,
-                    rounds: Int = 3): DataFrame = {
+                    rounds: Int = 3): DataFrame = scope {
     val docs = Tables.documents(spark, dir)
     val pieces = unigramTrainOf(docs, vocabSize, seedSize, maxPieceLen, rounds)
       .select(col("piece"), col("score").cast(UniDec).as("sc"))
@@ -1922,7 +1922,7 @@ object TextOps {
     * contract (distinct words segment once, corpus work = explode + word
     * join + per-doc agg), the vocabulary frozen at store write. */
   def unigramEncodeFromStore(spark: SparkSession, dir: String,
-                             storeDir: String): DataFrame = {
+                             storeDir: String): DataFrame = scope {
     val stored = spark.read.parquet(s"$storeDir/pieces.parquet")
     val maxLen = stored.agg(max(col("max_len"))).head().getInt(0)
     unigramEncodeWith(Tables.documents(spark, dir),
@@ -1930,12 +1930,11 @@ object TextOps {
   }
 
   private[graft] def unigramEncodeWith(docs: DataFrame, pieces: DataFrame,
-                                       maxPieceLen: Int): DataFrame = {
+                                       maxPieceLen: Int): DataFrame = scope {
     val vocab = uniWordCensus(docs) // distinct corpus words, freq unused here
     val seg = uniSegment(vocab, pieces, maxPieceLen)
       .select(col("w"), size(col("pieces")).cast("long").as("n_pieces"),
-        col("ll"))
-      .localCheckpoint(true)
+        col("ll")).pin()
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
@@ -2000,14 +1999,13 @@ object TextOps {
     wordpieceTrainOf(Tables.documents(spark, dir), nMerges, minFreq)
 
   private[graft] def wordpieceTrainOf(docs: DataFrame, nMerges: Int,
-                                      minFreq: Long): DataFrame = {
+                                      minFreq: Long): DataFrame = scope {
     val spark = docs.sparkSession
     var words = docs.filter(col("text").isNotNull)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      .select(wpSyms(col("w")).as("syms"), col("freq"))
-      .localCheckpoint(true)
+      .select(wpSyms(col("w")).as("syms"), col("freq")).pin()
     val merges = Seq.newBuilder[(Int, String, String, Long, Double)]
     var rank = 0
     var done = false
@@ -2036,7 +2034,7 @@ object TextOps {
         rank += 1
         merges += ((rank, a, b, r.getAs[Long]("n"), r.getAs[Double]("score")))
         words = words.withColumn("syms", wpMergeOnce(col("syms"), a, b))
-        if (rank % BpeCheckpointEvery == 0) words = words.localCheckpoint(true)
+        if (rank % BpeCheckpointEvery == 0) words = words.pin(replacing = words)
       }
     }
     import spark.implicits._
@@ -2060,7 +2058,7 @@ object TextOps {
     * + per-doc partial agg. Output: (doc_id, n_words, n_wp_tokens,
     * n_unk_words) — UNK words count 1 token. */
   def wordpieceEncode(spark: SparkSession, dir: String, nMerges: Int = 32,
-                      minFreq: Long = 2, maxWordLen: Int = 32): DataFrame = {
+                      minFreq: Long = 2, maxWordLen: Int = 32): DataFrame = scope {
     val docs = Tables.documents(spark, dir)
     wordpieceEncodeWith(docs, wordpieceVocabOf(docs,
       wordpieceTrainOf(docs, nMerges, minFreq)), maxWordLen)
@@ -2080,7 +2078,7 @@ object TextOps {
   }
 
   private[graft] def wordpieceEncodeWith(docs: DataFrame, vocab: DataFrame,
-                                         maxWordLen: Int): DataFrame = {
+                                         maxWordLen: Int): DataFrame = scope {
     val words = docs.filter(col("text").isNotNull)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0).distinct()
@@ -2118,8 +2116,7 @@ object TextOps {
       .join(segShort.unionByName(longWords), Seq("w"), "left")
       .select(col("w"),
         coalesce(col("n_pieces"), lit(1L)).as("n_pieces"),
-        coalesce(col("is_unk"), lit(true)).as("is_unk"))
-      .localCheckpoint(true)
+        coalesce(col("is_unk"), lit(true)).as("is_unk")).pin()
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
@@ -2146,7 +2143,7 @@ object TextOps {
     * to the training-time encode when the store was trained on the same
     * corpus with the same parameters (spec-pinned). */
   def wordpieceEncodeFromStore(spark: SparkSession, dir: String,
-                               storeDir: String): DataFrame = {
+                               storeDir: String): DataFrame = scope {
     val stored = spark.read.parquet(s"$storeDir/wp_vocab.parquet")
     val maxLen = stored.agg(max(col("max_word_len"))).head().getInt(0)
     wordpieceEncodeWith(Tables.documents(spark, dir),
@@ -2252,11 +2249,11 @@ object TextOps {
     * one IEEE division of exact longs; percentiles are the A27 rank rule
     * ((len, doc_id, chunk_idx) order). */
   def cdcStats(spark: SparkSession, dir: String, maskBits: Int = 6,
-               minLen: Int = 16, maxLen: Int = 256): DataFrame = {
+               minLen: Int = 16, maxLen: Int = 256): DataFrame = scope {
     val docs = Tables.documents(spark, dir)
     val chunks = cdcChunksOf(docs, maskBits, minLen, maxLen)
       .join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .localCheckpoint(true) // feeds the rank windows and the rollup
+      .pin() // feeds the rank windows and the rollup
     val w = Window.partitionBy("source")
       .orderBy(col("len"), col("doc_id"), col("chunk_idx"))
     val nW = Window.partitionBy("source")
@@ -2309,7 +2306,7 @@ object TextOps {
     * Scale: batch-sized chunking (map-only kernel), one hash join of
     * 16-byte keys against the store (AQE broadcasts the smaller side),
     * a ≤sources rollup, and an append of only the new hashes. */
-  def cdcIngest(batch: DataFrame, storeDir: String): DataFrame = {
+  def cdcIngest(batch: DataFrame, storeDir: String): DataFrame = scope {
     val spark = batch.sparkSession
     val p = spark.read.parquet(s"$storeDir/params.parquet").head()
     val chunks = cdcChunksOf(batch, p.getAs[Int]("mask_bits"),
@@ -2333,7 +2330,7 @@ object TextOps {
       .select(col("chunk_md5"), lit(true).as("known"))
     val marked = chunks.join(stored, Seq("chunk_md5"), "left")
       .withColumn("known", coalesce(col("known"), lit(false)))
-      .localCheckpoint(true) // the stats read and the append both consume it
+      .pin() // the stats read and the append both consume it
     val out = marked.groupBy("source")
       .agg(count(lit(1)).as("n_chunks"),
         sum(col("len")).cast("long").as("total_bytes"),
@@ -2390,13 +2387,13 @@ object TextOps {
     * under-claiming briefly, never over-claiming. Idempotent and
     * cumulative: new forgets union into the standing tombstone. Returns
     * per-source tombstoned-chunk counts. */
-  def cdcForget(batch: DataFrame, storeDir: String): DataFrame = {
+  def cdcForget(batch: DataFrame, storeDir: String): DataFrame = scope {
     val spark = batch.sparkSession
     val p = spark.read.parquet(s"$storeDir/params.parquet").head()
     val chunks = cdcChunksOf(batch, p.getAs[Int]("mask_bits"),
         p.getAs[Int]("min_len"), p.getAs[Int]("max_len"))
       .join(batch.select(col("doc_id"), col("source")), "doc_id")
-      .localCheckpoint(true) // the report and the tombstone both consume it
+      .pin() // the report and the tombstone both consume it
     val out = chunks.groupBy("source")
       .agg(countDistinct(col("chunk_md5")).as("n_chunks_tombstoned"))
     val newTomb = chunks.select(col("chunk_md5")).distinct()
@@ -2468,8 +2465,7 @@ object TextOps {
   private def bm25Tf(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")).pin()
 
   private def bm25Core(tf: DataFrame, queries: DataFrame,
                        topK: Int, k1: Double, b: Double): DataFrame = {
@@ -2569,12 +2565,11 @@ object TextOps {
     StoreFiles.table(spark, s"$storeDir/postings.parquet", Some(bm25PostingsSchema))
 
   private def bm25StoreTf(spark: SparkSession, storeDir: String,
-                          excludeBatch: Option[Long] = None): DataFrame = {
+                          excludeBatch: Option[Long] = None): DataFrame = scope {
     val raw = bm25Postings(spark, storeDir)
     excludeBatch.fold(raw)(b => raw.filter(col("batch_id") =!= b))
       .groupBy("doc_id", "term").agg(sum(col("tf")).as("tf"))
-      .filter(col("tf") =!= 0)
-      .localCheckpoint()
+      .filter(col("tf") =!= 0).pin()
   }
 
   /** Post a new batch's documents into the store (partition `batchId`).
@@ -2583,7 +2578,7 @@ object TextOps {
     * uncompacted doc stays out (the C74/C75 "deletes are final" rule…
     * after [[bm25Compact]] its net rows are gone and it may return).
     * Returns the newly posted doc ids. */
-  def bm25Ingest(docs: DataFrame, storeDir: String, batchId: Long): DataFrame = {
+  def bm25Ingest(docs: DataFrame, storeDir: String, batchId: Long): DataFrame = scope {
     require(batchId > 0L, "batchId 0 is the initial writeBm25Store corpus")
     val spark = docs.sparkSession
     // admission check on RAW partition presence, not the net view: a
@@ -2594,8 +2589,7 @@ object TextOps {
       .select(col("doc_id")).distinct()
     val batch = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), col("text")).dropDuplicates("doc_id")
-      .join(posted, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true) // pin before the store mutates
+      .join(posted, Seq("doc_id"), "left_anti").pin() // pin before the store mutates
     batch
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -2611,13 +2605,12 @@ object TextOps {
     * retries and re-requests by construction. Returns the ids that had
     * live postings to remove. */
   def bm25StoreForget(ids: DataFrame, storeDir: String,
-                      forgetId: Long): DataFrame = {
+                      forgetId: Long): DataFrame = scope {
     require(forgetId > 0L, "forgetId lands as batch_id = -forgetId")
     val spark = ids.sparkSession
     val neg = bm25StoreTf(spark, storeDir, Some(-forgetId))
       .join(ids.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("term"), (-col("tf")).as("tf"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), col("term"), (-col("tf")).as("tf")).pin()
     neg.withColumn("batch_id", lit(-forgetId))
       .write.partitionBy("batch_id").mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -2629,7 +2622,7 @@ object TextOps {
     * swapped in through [[StoreFiles.replace]]; after this, forgotten ids
     * may be re-ingested. Returns the number of net postings rows kept
     * (`net` is checkpointed, so the count reads no store file). */
-  def bm25Compact(spark: SparkSession, storeDir: String): Long = {
+  def bm25Compact(spark: SparkSession, storeDir: String): Long = scope {
     val net = bm25StoreTf(spark, storeDir)
     StoreFiles.replace(spark, s"$storeDir/postings.parquet")(
       net.withColumn("batch_id", lit(0L)).write.partitionBy("batch_id").parquet(_))
@@ -2668,7 +2661,7 @@ object TextOps {
     * over tf; the per-(query, doc) sum reuses the doc_id partitioning and
     * the final top-k is a rank-pushdown window (WindowGroupLimit). */
   def qlmSearch(spark: SparkSession, dir: String, topK: Int = 10,
-                mu: Double = 300.0): DataFrame = {
+                mu: Double = 300.0): DataFrame = scope {
     val tf = bm25Tf(Tables.documents(spark, dir))
     qlmCore(tf, derivedQueries(tf), topK, mu)
   }
@@ -2733,7 +2726,7 @@ object TextOps {
     * rows per query. The corpus is touched only by the underlying
     * retrievers, which share one postings build here. */
   def hybridRrf(spark: SparkSession, dir: String, topK: Int = 10,
-                kappa: Int = 60, mu: Double = 300.0): DataFrame = {
+                kappa: Int = 60, mu: Double = 300.0): DataFrame = scope {
     val tf = bm25Tf(Tables.documents(spark, dir))
     val q = derivedQueries(tf)
     rrfOf(Seq(bm25Core(tf, q, topK, 1.2, 0.75), qlmCore(tf, q, topK, mu)),
@@ -2784,14 +2777,14 @@ object TextOps {
     * size. The corpus is touched only by the underlying retrievers,
     * which share one postings build. */
   def rankTau(spark: SparkSession, dir: String, topK: Int = 10,
-              mu: Double = 300.0): DataFrame = {
+              mu: Double = 300.0): DataFrame = scope {
     val tf = bm25Tf(Tables.documents(spark, dir))
     val q = derivedQueries(tf)
     tauOf(bm25Core(tf, q, topK, 1.2, 0.75), qlmCore(tf, q, topK, mu), topK)
   }
 
   /** Generic τ-b kernel over two (query_id, doc_id, rank) rankings. */
-  private[graft] def tauOf(a: DataFrame, b: DataFrame, topK: Int): DataFrame = {
+  private[graft] def tauOf(a: DataFrame, b: DataFrame, topK: Int): DataFrame = scope {
     // the union table is summary-sized but sits on TOP of two full
     // retrieval plans — checkpoint so the pair self-join and the
     // per-query census don't each replay both retrievers
@@ -2803,8 +2796,7 @@ object TextOps {
       .withColumn("ra", coalesce(col("rank_a"), lit(topK + 1).cast("long")))
       .withColumn("rb", coalesce(col("rank_b"), lit(topK + 1).cast("long")))
       .select(col("query_id"), col("doc_id"), col("in_both"),
-        col("ra"), col("rb"))
-      .localCheckpoint()
+        col("ra"), col("rb")).pin()
     val census = u.groupBy("query_id").agg(
       count(lit(1)).as("n_union"),
       count(when(col("in_both"), lit(1))).as("overlap"))
@@ -2921,7 +2913,7 @@ object TextOps {
     * Scale: the three batteries are each map-only (their contract); the
     * matrix is one doc_id join + ONE global agg (7 exact counts) feeding
     * three summary rows — ratios are IEEE divisions of exact longs. */
-  def filterAgreement(spark: SparkSession, dir: String): DataFrame = {
+  def filterAgreement(spark: SparkSession, dir: String): DataFrame = scope {
     val g = gopherRules(spark, dir)
       .select(col("doc_id"), coalesce(col("keep"), lit(false)).as("kg"))
     val c = c4Clean(spark, dir)
@@ -2938,7 +2930,7 @@ object TextOps {
         count(when(col("kc") && col("kf"), lit(1))).as("ncf"))
       .filter(col("n_docs") > 0)
       // one summary row, three projections — never three corpus scans
-      .localCheckpoint(true)
+      .pin()
     def pair(a: String, b: String, na: String, nb: String, nab: String) =
       s.select(lit(a).as("filter_a"), lit(b).as("filter_b"), col("n_docs"),
         col(nab).as("both_keep"),
@@ -3035,16 +3027,14 @@ object TextOps {
     * partial-agg shuffle; scalars broadcast; the final cut is a bounded
     * TakeOrdered (never a global rank window over the pair census). */
   def pmiPairs(spark: SparkSession, dir: String, window: Int = 2,
-               minCount: Long = 5, k: Int = 50): DataFrame = {
+               minCount: Long = 5, k: Int = 50): DataFrame = scope {
     require(window == 2, "the zip_with pair expansion is written for window 2")
     val dec = org.apache.spark.sql.types.DecimalType(18, 9)
     val toks = Tables.documents(spark, dir)
       .filter(col("text").isNotNull)
-      .select(expr("filter(split(text, ' '), w -> length(w) > 0)").as("ts"))
-      .localCheckpoint(true)
+      .select(expr("filter(split(text, ' '), w -> length(w) > 0)").as("ts")).pin()
     val uni = toks.select(explode(col("ts")).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true) // census feeds both scalars and two joins
+      .groupBy("tok").agg(count(lit(1)).as("n")).pin() // census feeds both scalars and two joins
     val nTok = broadcast(uni.agg(sum(col("n")).as("nt")))
     // P derives from array lengths — never a checkpoint of the
     // corpus-sized pair stream just to count it
@@ -3126,7 +3116,7 @@ object TextOps {
     * statistic one fixed IEEE tree over the exact sums — hash-exact;
     * zero-variance metrics read NULL on both engines. ONE corpus scan →
     * one 10-sum summary row → 3 output rows. */
-  def metricCorr(spark: SparkSession, dir: String): DataFrame = {
+  def metricCorr(spark: SparkSession, dir: String): DataFrame = scope {
     val dec = org.apache.spark.sql.types.DecimalType(18, 9)
     val dec2 = org.apache.spark.sql.types.DecimalType(28, 6)
     val d = Tables.documents(spark, dir).filter(col("text").isNotNull)
@@ -3147,7 +3137,7 @@ object TextOps {
       .filter(col("n") > 0)
       // one summary row feeding three projections — materialized so the
       // per-pair branches don't each replay the corpus scan
-      .localCheckpoint(true)
+      .pin()
     def pair(name: String, sx: String, sy: String, sxx: String, syy: String,
              sxy: String) =
       s.select(lit(name).as("pair"), col("n"),
@@ -3363,7 +3353,7 @@ object TextOps {
     * per output row), so the result hash-matches any engine. Groups with a
     * single class yield NULL (AUC undefined), never a division artifact. */
   private[graft] def aucOf(df: DataFrame, group: Seq[String],
-                           score: String, label: String): DataFrame = {
+                           score: String, label: String): DataFrame = scope {
     val gcols = group.map(col)
     // the census is the sole corpus consumer; every later branch (bucket
     // offsets, the prefix join) derives from it — localCheckpoint so the
@@ -3373,8 +3363,7 @@ object TextOps {
       .groupBy((gcols :+ col(score)): _*)
       .agg(sum(when(col(label), 1L).otherwise(0L)).as("n_pos"),
         sum(when(col(label), 0L).otherwise(1L)).as("n_neg"))
-      .withColumn("g", floor(col(score) * 1024).cast("long"))
-      .localCheckpoint(true)
+      .withColumn("g", floor(col(score) * 1024).cast("long")).pin()
     val offsets = census.groupBy((gcols :+ col("g")): _*)
       .agg(sum(col("n_neg")).as("bneg"))
       .withColumn("offset", coalesce(sum(col("bneg")).over(
@@ -3498,14 +3487,14 @@ object TextOps {
     * summary offset window per source → in-bucket row_number), and the
     * quantile is a conditional max over rank = ⌈q·n⌉. Ties order by
     * (quality, doc_id) — fully deterministic. */
-  def qualityQuantiles(spark: SparkSession, dir: String): DataFrame = {
+  def qualityQuantiles(spark: SparkSession, dir: String): DataFrame = scope {
     val scored = qualityWithVerdict(spark, dir)
       .select(col("doc_id"), col("source"), col("quality"))
       .withColumn("g", floor(col("quality") * 1024).cast("long"))
     // ONE bucket census feeds both the offsets and the per-source totals
     // (checkpointed: without it each branch re-scans the corpus)
     val bucketCensus = scored.groupBy("source", "g")
-      .agg(count(lit(1)).as("sz")).localCheckpoint(true)
+      .agg(count(lit(1)).as("sz")).pin()
     val offsets = bucketCensus
       .withColumn("offset", coalesce(sum(col("sz")).over(
         Window.partitionBy("source").orderBy("g")
@@ -3564,7 +3553,7 @@ object TextOps {
     * the V-row vocab (AQE broadcasts it), and coverage is one
     * integer-sums groupBy — ratios as single IEEE divisions per output
     * row, oracle-portable. */
-  def vocabCoverage(spark: SparkSession, dir: String, topV: Long = 1000): DataFrame = {
+  def vocabCoverage(spark: SparkSession, dir: String, topV: Long = 1000): DataFrame = scope {
     val docs = Tables.documents(spark, dir)
     // ONE corpus scan: the (source, term) census is checkpointed and the
     // GLOBAL term census derives from it by summing over sources — the
@@ -3572,8 +3561,7 @@ object TextOps {
     // (measured 6 parquet scans; now the scan happens exactly once)
     val census = docs.filter(col("text").isNotNull)
       .select(col("source"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("source", "term").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+      .groupBy("source", "term").agg(count(lit(1)).as("cnt")).pin()
     val tc = census.groupBy("term").agg(sum(col("cnt")).as("n_occurrences"))
     // two-level exact top-V rank (the vocabOf scheme, census-side)
     val keyed = tc.withColumn("pfx", substring(col("term"), 1, 1))
@@ -3687,7 +3675,7 @@ object TextOps {
     * term-keyed partial agg; both histograms are ≤10-key folds and the
     * running sums range over ≤10 rows. Growing the corpus never
     * reshuffles old assignments — first-doc ids are immutable. */
-  def heapsCurve(spark: SparkSession, dir: String): DataFrame = {
+  def heapsCurve(spark: SparkSession, dir: String): DataFrame = scope {
     val tf = bm25Tf(Tables.documents(spark, dir))
     val docTok = tf.groupBy("doc_id").agg(sum(col("tf")).as("n_tok"))
     val span = broadcast(docTok.agg(

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Pins._
 
 /** Batch file-format surface beyond parquet: schema-ENFORCED CSV and JSONL
   * readers with corrupt-record dead-lettering, and ORC as a lossless
@@ -58,8 +59,8 @@ object Formats {
     * path (both parquet, append — the retryable-ingest convention), from
     * ONE materialized parse. Returns (nGood, nDead). */
   def ingest(parsed: DataFrame, goodPath: String,
-             deadPath: String): (Long, Long) = {
-    val p = parsed.localCheckpoint(true)
+             deadPath: String): (Long, Long) = scope {
+    val p = parsed.pin()
     val good = p.filter(col("_corrupt").isNull).drop("_corrupt")
     val dead = p.filter(col("_corrupt").isNotNull)
       .select(col("_corrupt").as("raw"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
+import graft.Pins._
 
 /** The reference pipeline (producer → Kafka → consumer → Redis → dashboard,
   * /root/reference/auto_kafka_redis.py) re-expressed as Structured Streaming:
@@ -126,18 +127,15 @@ object EventPipeline {
     * effectively-once output on top of foreachBatch's at-least-once calls. */
   def deadLetterSink(raw: DataFrame, validPath: String,
                      rejectPath: String): StreamingQuery =
-    raw.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      batch.persist()
-      try {
-        val (valid, rejects) = deadLetterSplit(batch)
-        Seq((valid, validPath), (rejects, rejectPath)).foreach { case (df, path) =>
-          df.withColumn("batch_id", lit(batchId))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(path)
-        }
-      } finally { batch.unpersist(); () }
-    }.start()
+    raw.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) => scope {
+      val (valid, rejects) = deadLetterSplit(batch.cached())
+      Seq((valid, validPath), (rejects, rejectPath)).foreach { case (df, path) =>
+        df.withColumn("batch_id", lit(batchId))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id").parquet(path)
+      }
+    }}.start()
 
   /** The whole reference consumer topology from one config: dedup within the
     * configured TTL → anchored per-user rate limit → alert rows. Source-

@@ -15,19 +15,11 @@ object GraftShims {
     * instead of executor ClassCastExceptions). */
   type AbstractType = org.apache.spark.sql.types.AbstractDataType
 
-  /** Free the block-manager blocks behind a `localCheckpoint`ed Dataset
-    * (r11 advice: `Dataset.unpersist` routes through the CacheManager,
-    * which does not know checkpoint RDDs — a long-lived session ingesting
-    * many batches otherwise accumulates checkpoint blocks until the
-    * GC-driven ContextCleaner happens to run). Walks the analyzed plan
-    * for the LogicalRDD leaves a checkpoint produces and unpersists their
-    * backing RDDs directly. */
-  def unpersistCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
+  /** Free the blocks of a persisted RDD without `RDD.unpersist`, which
+    * warns on every locally checkpointed RDD that its truncated lineage
+    * cannot be recomputed; `graft.Pins` only releases what nothing reads. */
+  def unpersistQuietly(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** Register a native function on a LIVE session (getOrCreate ignores
     * extensions when a session already exists — tests and REPLs need this). */

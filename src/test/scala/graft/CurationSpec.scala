@@ -16,11 +16,23 @@ class CurationSpec extends SparkSuite {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty
 
+  // beyond the curation pass: the entries whose operators checkpoint in a
+  // loop, train, ingest into a store, or cached an intermediate for good
+  private val leakChecked = entries ++ Seq("emb_pagerank", "doc_unigram_train",
+    "emb_mmr", "emb_ivf_ingest", "emb_pq_topk", "doc_dedup_simhash")
+
+  // a call leaves only what its result reads: every other checkpoint and
+  // every cache is released by the operators' own scopes
   test("no Dataset cache outlives a curation call") {
     spark.catalog.clearCache()
-    entries.foreach { name =>
-      SparkEntry.queries(name)(spark, sf).collect()
+    leakChecked.foreach { name =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = SparkEntry.queries(name)(spark, sf)
+      out.collect()
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before -- Pins.reads(out)
       assert(cacheEmpty, s"$name left a Dataset cache")
+      assert(left.isEmpty, s"$name left ${left.size} persistent RDDs its result does not read")
+      Pins.release(out)
     }
   }
 

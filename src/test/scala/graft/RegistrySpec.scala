@@ -40,4 +40,17 @@ class RegistrySpec extends AnyFunSuite {
       assert(taken == (1 to taken.size))
     }
   }
+
+  // a raw control byte makes grep and ripgrep take a source file for binary
+  // and skip it silently; a string literal spells it as an escape instead
+  test("no source file under src/ holds a control byte other than tab, LF or CR") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src")).iterator.asScala
+      .filter(java.nio.file.Files.isRegularFile(_)).toSeq
+    assert(files.exists(_.toString.endsWith("Pins.scala")), "run from the repository root")
+    val bad = files.filter { p =>
+      java.nio.file.Files.readAllBytes(p).exists(b => b >= 0 && b < 0x20 && b != '\t' && b != '\n' && b != '\r')
+    }
+    assert(bad.isEmpty, s"control bytes in: ${bad.mkString(", ")}")
+  }
 }

@@ -1577,6 +1577,23 @@ class SimilaritySpec extends SparkSuite {
       s"curve (${g32.nTrue}, ${g32.found}) != empirical ($nTrueE, $foundE)")
   }
 
+  // the corpus is repartitioned before the sums, so a float sum would follow
+  // the input's file layout; the decimal-quantized sums must not
+  test("lsh band curve: expectations are bit-equal whatever the file layout of the corpus") {
+    def curveOf(files: Int): Seq[(Long, Long, Double, Double)] = {
+      val d = Files.createTempDirectory("graft-lsh-curve").toString
+      Tables.embeddings(spark, sf).repartition(files, col("vec_id")).sortWithinPartitions("vec_id")
+        .write.parquet(s"$d/embeddings.parquet")
+      Similarity.lshBandCurve(spark, d).collect().toSeq
+        .map(r => (r.getAs[Long]("sim_n"), r.getAs[Long]("max_bands"),
+          r.getAs[Double]("n_expected"), r.getAs[Double]("sd_expected")))
+        .sortBy(r => (r._1, r._2))
+    }
+    val one = curveOf(1)
+    assert(one.exists(_._3 > 0.0))
+    assert(curveOf(5) == one)
+  }
+
   test("centroid quality: bit-equal to an independent in-memory integer-median computation; top-5% flag exact") {
     val got = Similarity.centroidQuality(spark, sf).collect()
       .map(r => r.getAs[Long]("vec_id") ->

@@ -5,7 +5,8 @@ sorted, values compared exactly — stricter than any sane driver hash).
 
 Every entry Verify lists in entries.json is declared: one that wrote no
 output (it threw) fails as MISSING_OUTPUT, and an empty declared set fails
-the run."""
+the run. An entry that left persistent RDDs its result does not read, or a
+Dataset cache, in Verify's leaks.json fails as LEAKED."""
 import sys, os, json, glob
 import duckdb
 import pandas as pd
@@ -20,6 +21,7 @@ for t in TABLES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+leaks = json.load(open(f"{out_dir}/leaks.json"))
 declared = set(json.load(open(f"{out_dir}/entries.json"))) | set(oracle)
 if not declared:
     print("no entries declared: nothing was checked")
@@ -75,6 +77,9 @@ w = max(len(n) for n in declared)
 nok = 0
 for name in sorted(declared):
     r = results.get(name, "MISSING_OUTPUT")
+    leak = leaks.get(name, {"rdds": 0, "cache": False})
+    if leak["rdds"] or leak["cache"]:
+        r = f"LEAKED rdds={leak['rdds']} cache={leak['cache']}; {r}"
     flag = "PASS" if r.startswith(("OK", "ROWS_ONLY")) else "FAIL"
     if flag == "FAIL":
         nok += 1
